@@ -2,7 +2,7 @@
 
 entry(spark)  — flagship pricing-summary query at sf0.001.
 queries()     — full registry from ibd_pipeline_spark.queries.
-oracle_sql()  — DuckDB oracles for every SQL-expressible query.
+oracle_sql()  — DuckDB oracles for every query.
 """
 
 from __future__ import annotations
@@ -32,15 +32,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2, in
+    sorted-name order."""
     from ibd_pipeline_spark.queries import all_queries
 
     return all_queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted for non-SQL ops:
-    LSH banding, SimHash blocking, ANN — those get rows-only checks)."""
+    """DuckDB-equivalent SQL per query, in sorted-name order; every
+    query has one (tests/test_oracle_parity.py)."""
     from ibd_pipeline_spark.queries import all_oracles
 
     return all_oracles()

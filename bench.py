@@ -4,11 +4,11 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
-Two tiers (r09): the curated HEADLINE set (volume-doing queries,
-best-of-3, round-comparable "value"/subtotals) plus the full-registry
-tail (everything else, one timed run each) so no query is
-regression-blind; tail alarms use wider thresholds since both sides
-of a tail ratio are single runs.
+Two parts: the curated HEADLINE list (volume-doing queries, the r01
+set first and best-of-3, the rest best-of-2; their sum is the printed
+"value") plus the full-registry tail (everything else, one timed run
+each) so no query is regression-blind; tail alarms use wider
+thresholds since both sides of a tail ratio are single runs.
 
 Each query is forced end-to-end with the noop sink (full computation,
 no driver collect — the reference's collect() bottleneck,
@@ -23,8 +23,8 @@ this script. The PRINTED line is kept compact (r01-era per-query map
 + totals + regression summary) because the driver records only the
 last 2000 bytes of stdout: the r02–r04 60-query lines overflowed that
 window and landed as parsed=null. Previous-round timings are loaded
-from the committed BENCH_FULL.json when present, else reconstructed
-from the newest BENCH_r{N}.json tail fragment by regex.
+from BENCH_COMMITTED.json (else a leftover BENCH_FULL.json) when its
+scale factor matches the run's.
 """
 
 from __future__ import annotations
@@ -78,11 +78,11 @@ HEADLINE_R01 = [
     "weather_synth_throughput",
 ]
 
-# Round-2 additions: a representative per family that round 1 left
-# unbenchmarked, plus the new composite queries. Coverage queries that
-# bound their input to a few hundred rows (scalar_* samples) are still
-# excluded — they measure task-launch overhead, not the engine.
-HEADLINE_R02 = [
+# The rest of the timed headline: queries that do real volume work.
+# Input-bounded coverage queries (scalar_* samples, the oracle-bounded
+# calibration and audit slices) stay out — they measure task-launch
+# overhead, not the engine — and ride the full-registry tail instead.
+HEADLINE = HEADLINE_R01 + [
     # analytic windows: the value-based frame variants
     "window_time_range_frame",
     # UDF family: Arrow scalar + grouped-map paths at volume
@@ -121,12 +121,6 @@ HEADLINE_R02 = [
     # gaps-and-islands streaks + corrupt-record quarantine
     "window_activity_streaks",
     "scalar_json_quarantine",
-]
-
-# Round-4 additions: the LLM-data operators that do real volume work
-# (the per-row-only members of the family are covered by
-# text_repetition_ratio as a representative).
-HEADLINE_R04 = [
     # shingle explode → broadcast overlap join (decontamination)
     "text_decontaminate_ngram_overlap",
     # two-pass token scoring (vocab agg + broadcast re-join)
@@ -148,12 +142,6 @@ HEADLINE_R04 = [
     "train_e2e_pipeline",
     # second iterative op (power iteration + label propagation)
     "dedup_pagerank_canonical",
-]
-
-# Round-5 additions that do real volume work (the input-bounded
-# coverage queries — scalar_string_reshape ≤100 rows, unpivot ≤200,
-# join_null_safe_eq ≤500 — stay out per the round-2 rule).
-HEADLINE_R05 = [
     # adjacent-pair explode → hash agg (the BPE merge-step plan)
     "train_bpe_pair_counts",
     # word explode → two-level agg
@@ -184,12 +172,6 @@ HEADLINE_R05 = [
     "events_anomaly_rolling_zscore",
     # two-decimal-accumulator weighted mean
     "agg_weighted_stats",
-]
-
-# Round-5 wave-3 additions (same volume rule; recursive_cte /
-# window_running_distinct / the nation-lateral stay out as
-# input-bounded coverage queries).
-HEADLINE_R05W3 = [
     # global cumulative-ECDF window over the distinct-value frame
     "stats_ks_two_sample",
     # global rank window over the pooled sample (tie-corrected U)
@@ -264,12 +246,6 @@ HEADLINE_R05W3 = [
     "train_dataset_card",
     # per-day sketch agg + windowed HLL unions (rolling actives)
     "events_rolling_active_users",
-]
-
-# Round-6 additions (same volume rule; the oracle-bounded calibration
-# slices — dedup_minhash_jaccard_estimate at 400 docs,
-# similarity_knn_label_confusion at 200 vectors — stay out).
-HEADLINE_R06 = [
     # 4-rotation banded self-join + Hamming verify
     "dedup_simhash_multitable",
     # corpus-stat broadcast + per-doc higher-order tf scoring + top-k
@@ -295,9 +271,6 @@ HEADLINE_R06 = [
     # k x power-iteration with deflation — previously unbenchmarked;
     # surfaced at 22 s, now 7 s after the r06 cadence/early-exit fix
     "similarity_pca_top_k",
-]
-
-HEADLINE_R08 = [
     # day-grain MA/seasonal windows over the daily aggregate
     "events_seasonal_decompose",
     # md5-portable LSH (bounded slice) + two-sided source rollup
@@ -345,13 +318,6 @@ HEADLINE_R08 = [
     # corpus + an iterative CC — ~10 s of mostly fixed per-round
     # scheduler cost at sf0.1. Its stages are benchmarked separately:
     # dedup_minhash_lsh, dedup_cluster_components.)
-]
-
-# Round-9 additions that do real volume work (bounded audit slices —
-# inverted-index cosine at 300 docs, Fellegi–Sunter at 500,
-# silhouette at 200 vectors, image entropy at 48 fixed assets — ride
-# the full-registry tail instead, per the round-2 rule).
-HEADLINE_R09 = [
     # one 3-weight prefix-sum scan + rn self-join (earth mover drift)
     "stats_wasserstein_drift",
     # contingency agg + broadcast margins (MI + Cramér's V)
@@ -368,9 +334,6 @@ HEADLINE_R09 = [
     "maintenance_deletion_vectors",
     # QI group-size aggregates (privacy audits share one scan shape)
     "quality_k_anonymity",
-]
-
-HEADLINE_R10 = [
     # frequency-ordered prefix join + exact set verify (PPJoin)
     "dedup_prefix_filter_jaccard",
     # broadcast 128-row centroid fan-out + struct-min codes (PQ)
@@ -380,18 +343,6 @@ HEADLINE_R10 = [
     # first-occurrence vocab buckets + window-free cumsum (Heaps)
     "text_heaps_law",
 ]
-
-HEADLINE = (
-    HEADLINE_R01
-    + HEADLINE_R02
-    + HEADLINE_R04
-    + HEADLINE_R05
-    + HEADLINE_R05W3
-    + HEADLINE_R06
-    + HEADLINE_R08
-    + HEADLINE_R09
-    + HEADLINE_R10
-)
 
 
 def main() -> None:
@@ -463,7 +414,7 @@ def main() -> None:
     r01_set = set(HEADLINE_R01)
     for name in HEADLINE:
         # r01 set keeps best-of-3 (the round-1-comparable record);
-        # later headline tiers run best-of-2 — with ~150 headline
+        # the rest of the headline runs best-of-2 — with ~150 headline
         # queries the third run was pure wall-clock (r09: total bench
         # wall was approaching 20 min), and the adaptive re-measure
         # below still grows the sample whenever the result looks like
@@ -657,13 +608,9 @@ COMMITTED_PATH = Path(__file__).resolve().parent / "BENCH_COMMITTED.json"
 
 
 def _load_prev_timings() -> dict[str, float]:
-    """Previous-round per-query timings: the committed quiet-run
-    reference (BENCH_COMMITTED.json) when present, else a leftover
-    BENCH_FULL.json, else the newest BENCH_r{N}.json — whose
-    2000-byte tail fragment may hold a truncated JSON line, recovered
-    per-query by regex."""
-    import re
-
+    """Previous-round per-query timings at this scale factor: the
+    committed quiet-run reference (BENCH_COMMITTED.json) when present,
+    else a leftover BENCH_FULL.json, else none."""
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     for path in (COMMITTED_PATH, FULL_PATH):
         if not path.exists():
@@ -678,34 +625,6 @@ def _load_prev_timings() -> dict[str, float]:
                 return {k: float(v) for k, v in q.items()}
         except (ValueError, TypeError):
             pass
-    if sf != "0.1":
-        return {}  # driver BENCH_r records are sf0.1 — not comparable
-    here = Path(__file__).resolve().parent
-    for p in sorted(here.glob("BENCH_r*.json"), reverse=True):
-        try:
-            d = json.loads(p.read_text())
-        except ValueError:
-            continue
-        parsed = d.get("parsed") or {}
-        if parsed.get("queries"):
-            return {k: float(v) for k, v in parsed["queries"].items()}
-        tail = d.get("tail", "")
-        # The fragment may include the vs_r01 ratio map after the
-        # timings — regex over that would overwrite real timings with
-        # ratios, so cut it (and everything after) off first.
-        for marker in ('"vs_r01"', '"regressions"', '"vs_prev"'):
-            idx = tail.find(marker)
-            if idx != -1:
-                tail = tail[:idx]
-        found = {
-            m.group(1): float(m.group(2))
-            for m in re.finditer(r'"([a-z0-9_]+)":\s*([0-9]+\.[0-9]+)', tail)
-        }
-        # Drop non-timing scalars that match the pattern (sf, value).
-        found.pop("sf", None)
-        found.pop("value", None)
-        if len(found) >= 10:
-            return found
     return {}
 
 

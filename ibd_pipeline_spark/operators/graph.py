@@ -51,6 +51,14 @@ def _checkpointer(df: DataFrame, checkpoint_dir: "str | None"):
     return RoundCheckpointer(df.sparkSession, checkpoint_dir)
 
 
+def _driver_rows(df: DataFrame, max_rows: int) -> "list | None":
+    """The rows of `df` when there are at most `max_rows` of them,
+    else None — the size probe of the driver solves below, one job
+    that reads at most max_rows + 1 rows."""
+    rows = df.limit(max_rows + 1).collect()
+    return rows if len(rows) <= max_rows else None
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -254,7 +262,7 @@ def label_propagation(
     label: str = "label",
     max_iter: int = 5,
     checkpoint_dir: str | None = None,
-    driver_solve: "bool | None" = None,
+    driver_solve: bool = True,
     max_driver_edges: int = 65536,
 ) -> DataFrame:
     """Semi-supervised label propagation over undirected `edges`:
@@ -303,19 +311,17 @@ def label_propagation(
     # the loop exits early on an unchanged state, which can only skip
     # no-op rounds. Set driver_solve=False for genuinely large graphs
     # (the distributed loop below is unchanged).
-    if driver_solve is None or driver_solve:
-        erows = (
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .limit(max_driver_edges + 1)
-            .collect()
+    if driver_solve:
+        erows = _driver_rows(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+            max_driver_edges,
         )
-        if len(erows) <= max_driver_edges:
-            srows = (
-                seeds.select(F.col(vertex).alias("v"), F.col(label).alias("lbl"))
-                .limit(max_driver_edges + 1)
-                .collect()
+        if erows is not None:
+            srows = _driver_rows(
+                seeds.select(F.col(vertex).alias("v"), F.col(label).alias("lbl")),
+                max_driver_edges,
             )
-            if len(srows) <= max_driver_edges:
+            if srows is not None:
                 sym_set: set = set()
                 for r in erows:
                     sym_set.add((r["a"], r["b"]))
@@ -388,11 +394,6 @@ def label_propagation(
                     ],
                     schema,
                 )
-        if driver_solve:
-            raise ValueError(
-                f"driver_solve=True but the graph exceeds "
-                f"max_driver_edges={max_driver_edges}"
-            )
         # fall through to the distributed loop
 
     ckpt = _checkpointer(edges, checkpoint_dir)
@@ -476,7 +477,7 @@ def markov_stationary(
     prob: str = "p",
     iters: int = 16,
     checkpoint_dir: str | None = None,
-    driver_solve: "bool | None" = None,
+    driver_solve: bool = True,
     max_driver_edges: int = 65536,
 ) -> DataFrame:
     """Stationary distribution of a (row-stochastic) Markov chain by
@@ -517,17 +518,16 @@ def markov_stationary(
     # model-state-sized, the distributed work is the caller's
     # transition-count aggregation, and the per-round DataFrame
     # join+checkpoint loop is pure scheduling overhead at this size.
-    if driver_solve is None or driver_solve:
-        rows = (
+    if driver_solve:
+        rows = _driver_rows(
             transitions.select(
                 F.col(src).alias("s"),
                 F.col(dst).alias("d"),
                 F.col(prob).cast("double").alias("w"),
-            )
-            .limit(max_driver_edges + 1)
-            .collect()
+            ),
+            max_driver_edges,
         )
-        if len(rows) <= max_driver_edges:
+        if rows is not None:
             edges = sorted(
                 ((r["s"], r["d"], r["w"]) for r in rows),
                 key=lambda e: (str(e[1]), str(e[0])),
@@ -574,11 +574,6 @@ def markov_stationary(
                     key=lambda kv: str(kv[0]),
                 ),
                 schema,
-            )
-        if driver_solve:
-            raise ValueError(
-                f"driver_solve=True but the chain exceeds "
-                f"max_driver_edges={max_driver_edges}"
             )
         # fall through to the distributed loop
 
@@ -659,7 +654,7 @@ def absorption_probability(
     prob: str = "p",
     iters: int = 16,
     checkpoint_dir: str | None = None,
-    driver_solve: "bool | None" = None,
+    driver_solve: bool = True,
     max_driver_edges: int = 65536,
 ) -> DataFrame:
     """Absorption probability of a Markov chain: for every TRANSIENT
@@ -705,17 +700,16 @@ def absorption_probability(
 
     import pyspark.sql.functions as F
 
-    if driver_solve is None or driver_solve:
-        rows = (
+    if driver_solve:
+        rows = _driver_rows(
             transitions.select(
                 F.col(src).alias("s"),
                 F.col(dst).alias("d"),
                 F.col(prob).cast("double").alias("w"),
-            )
-            .limit(max_driver_edges + 1)
-            .collect()
+            ),
+            max_driver_edges,
         )
-        if len(rows) <= max_driver_edges:
+        if rows is not None:
             tgt_set = {r["state"] for r in targets.collect()}
             edges: dict[str, list] = {}
             for r in sorted(rows, key=lambda r: (str(r["s"]), str(r["d"]))):
@@ -745,11 +739,6 @@ def absorption_probability(
             )
             return transitions.sparkSession.createDataFrame(
                 out_rows, schema
-            )
-        if driver_solve:
-            raise ValueError(
-                f"driver_solve=True but the chain exceeds "
-                f"max_driver_edges={max_driver_edges}"
             )
         # fall through to the distributed loop
 

@@ -2,11 +2,10 @@
 
 Each query is registered with a decorator; the driver contract
 (``__spark_entry__.py``) exposes exactly this registry. Queries are
-callables ``(spark, sf_dir) -> DataFrame``; most also carry an
+callables ``(spark, sf_dir) -> DataFrame``; each also carries an
 equivalent ANSI-SQL oracle string that DuckDB runs on the same parquet
-tables for differential correctness (SURVEY.md §5.1). Ops whose
-semantics aren't SQL-expressible (e.g. MinHash LSH banding, ANN
-search) register without an oracle and get a rows-only check.
+tables for differential correctness (SURVEY.md §5.1).
+tests/test_oracle_parity.py checks that no query lacks one.
 
 Column-name contract: every computed column is aliased identically in
 the Spark code and the oracle SQL — the driver sorts columns by name
@@ -110,690 +109,17 @@ def query(
     return deco
 
 
-# ---------------------------------------------------------------------------
-# Driver-attestation rotation.
-#
-# The correctness driver verifies a fixed-size prefix of the registry
-# (round 1 attested exactly the first 50 entries in insertion order;
-# see CORRECTNESS_r01.json — its keys are the registry's first 50).
-# To get a green driver row for EVERY query across rounds, the registry
-# is re-ordered each round so the not-yet-attested queries occupy the
-# prefix. Queries attested green in an earlier round move to the back;
-# their evidence lives in that round's CORRECTNESS_r{N}.json.
-#
-# Round-5 ordering: _DRIVER_PRIORITY (the r04 backlog + two
-# re-attests) → _ROUND5_NEW (this round's additions) → _ATTESTED
-# (r01–r04 green history) → any remaining registrations. The window
-# is sized so every query without a green row sits inside the first
-# 50 (tools/attestation_status.py prints the accounting).
-# ---------------------------------------------------------------------------
-# ---------------------------------------------------------------------------
-# ROUND-6 WINDOW PREFIX.
-# The 37 round-5 wave-3/4 additions that never received a driver
-# CORRECTNESS row (they registered after the r05 snapshot filled its
-# 50-slot window; all are locally oracle-green or rows-only by design
-# with property tests — see VERDICT.md round 5 "What's missing" §1).
-# They occupy the r06 prefix so the driver attests them this round.
-# _ROUND6_NEW (this round's additions, ≤13 so the prefix stays ≤50)
-# follows; everything with a green r01–r05 row moves behind the window.
-# ---------------------------------------------------------------------------
-_R06_UNATTESTED: list[str] = [
-    "window_running_distinct",
-    "stats_ks_two_sample",
-    "stats_chi_square_independence",
-    "stats_mann_whitney_u",
-    "events_ewma_daily",
-    "sketch_cms_heavy_hitters",
-    "sketch_bloom_contamination_gate",
-    "sketch_hll_daily_union",
-    "train_contamination_containment",
-    "text_boilerplate_sentences",
-    "similarity_pca_top_component",
-    "train_logreg_quality_gate",
-    "train_weighted_sample_ares",
-    "train_nucleus_topp_per_source",
-    "join_bloom_prefiltered",
-    "quality_snapshot_diff",
-    "train_bpe_learn_apply",
-    "events_funnel_ordered_steps",
-    "dedup_label_propagation",
-    "events_linear_interpolate_gaps",
-    "quality_freshness_sla",
-    "text_zipf_fit",
-    "events_asof_nearest",
-    "events_new_vs_returning",
-    "analytics_market_basket_pairs",
-    "quality_activity_gini",
-    "events_markov_stationary",
-    "train_epoch_waterfill",
-    "multimodal_phash_near_dup",
-    "maintenance_incremental_join_view",
-    "maintenance_compaction_plan",
-    "quality_column_entropy",
-    "text_ngram_novelty",
-    "dedup_incremental_lsh",
-    "train_dataset_card",
-    "similarity_pca_top_k",
-    "events_rolling_active_users",
-]
-
-# Round-6 additions (new registrations this round). Capped at 13 so
-# that 37 + 13 = 50 — the whole prefix fits the driver window and every
-# entry here gets a green row in CORRECTNESS_r06.json.
-_ROUND6_NEW: list[str] = [
-    "dedup_simhash_multitable",
-    "dedup_minhash_jaccard_estimate",
-    "text_bm25_ranking",
-    "profile_key_skew",
-    "events_funnel_latency",
-    "similarity_quantize_int8",
-    "dedup_quality_survivor",
-    "quality_order_reconciliation",
-    "events_inter_arrival_stats",
-    "similarity_knn_label_confusion",
-    "events_value_winsorize",
-    "quality_referential_orphans",
-    "events_stickiness_ratio",
-]
-
-# ----------------------------------------------------------------------
-# ROUND-11 WINDOW PREFIX. Three rows-only → full-oracle conversions
-# (portable-HLL rollup; fixed-point Lloyd k-means; fixed-point GD
-# logreg — the r10 conversion pattern), the microsecond-exact
-# nearest-as-of pair (ADVICE r10: gap semantics changed on BOTH
-# engines), the Fano single-hour NULL guard, and the three dedup
-# queries rewired onto the shared session-cached signature state
-# (plans changed; values didn't — evidence must postdate anyway).
-# Computed mechanically by tools/attestation_status.py;
-# tests/test_attestation.py gates drift.
-# ----------------------------------------------------------------------
-# ----------------------------------------------------------------------
-# ROUND-13 WINDOW PREFIX. The r13 additions (waves 1-8; count is
-# len(_ROUND13_NEW) — don't hardcode it), all never-attested; no r13 change
-# touched an attested query's values (the markov srcs hoist, bench
-# rerun guard, similarity TypeError guard, and quantiles alarm guard
-# are value-neutral; the POT threshold resize happened inside this
-# round, pre-attestation), so _ROUND13_PRIORITY is empty.
-# Computed mechanically by tools/attestation_status.py;
-# tests/test_attestation.py gates drift.
-# ----------------------------------------------------------------------
-# ----------------------------------------------------------------------
-# ROUND-14 WINDOW PREFIX. Two value-affecting r14 changes, both from
-# ADVICE r13: stats_page_trend_test moved to Friedman mid-ranks for
-# tied cell means (page_l bigint → double, values change whenever
-# ties occur) and quality_encoding_damage's oracle regex fixed from
-# the RE2 byte-spelling '\xEF\xBF\xBD' (matched the mojibake string
-# 'ï¿½', not U+FFFD) to the code-point escape '\x{FFFD}' — values
-# identical on the clean fixtures, but the attested SQL text changed,
-# so the evidence must postdate the oracle. _ROUND14_NEW grows with
-# this round's additions. Computed mechanically by
-# tools/attestation_status.py; tests/test_attestation.py gates drift.
-# ----------------------------------------------------------------------
-_ROUND15_PRIORITY: list[str] = []
-
-_ROUND15_NEW: list[str] = [
-    "dedup_lsh_calibration",
-    "io_proto_payload_roundtrip",
-    "io_proto_malformed_audit",
-    "io_avro_logical_roundtrip",
-    "io_proto_embedding_roundtrip",
-    "sketch_error_calibration",
-]
-
-_ROUND14_PRIORITY: list[str] = [
-    "stats_page_trend_test",
-    "quality_encoding_damage",
-]
-
-_ROUND14_NEW: list[str] = [
-    "io_avro_payload_roundtrip",
-    "io_avro_malformed_audit",
-    "multimodal_video_quality_gates",
-    "multimodal_video_gate_summary",
-    "stats_cliffs_delta",
-    "stats_quade_test",
-    "graph_edge_triangle_support",
-    "text_mendenhall_word_length",
-    "text_burrows_delta",
-    "quality_luhn_card_audit",
-    "stats_dunn_posthoc",
-    "dedup_lsh_band_planning",
-    "similarity_ivf_recall_curve",
-    "multimodal_video_motion_energy",
-    "graph_ktruss_peel",
-    "text_langid_confusion_eval",
-    "events_session_gap_sensitivity",
-    "io_avro_schema_dispatch",
-]
-
-_ROUND13_PRIORITY: list[str] = []
-
-_ROUND13_NEW: list[str] = [
-    "multimodal_audio_quality_gates",
-    "multimodal_audio_gate_summary",
-    "multimodal_audio_spectral",
-    "stats_cochran_q",
-    "stats_wilcoxon_signed_rank",
-    "stats_jonckheere_terpstra",
-    "text_yule_k_simpson",
-    "text_flesch_reading_ease",
-    "analytics_theil_index",
-    "privacy_randomized_response",
-    "events_variance_ratio",
-    "dedup_lsh_recall_eval",
-    "events_seasonal_strength_anova",
-    "graph_jaccard_link_prediction",
-    "analytics_price_index_fisher",
-    "ab_diff_in_diff",
-    "events_decay_halflife_fit",
-    "stats_conover_squared_ranks",
-    "text_char_trigram_entropy",
-    "stats_capture_recapture",
-    "stats_pot_gpd_moments",
-    "graph_rich_club_coefficient",
-    "similarity_knn_label_eval",
-    "train_rendezvous_sharding",
-    "sketch_sample_sum_estimator",
-    "stats_deming_regression",
-    "stats_rayleigh_hour_uniformity",
-    "quality_monotonic_violations",
-    "quality_encoding_damage",
-    "stats_page_trend_test",
-    "train_sampling_ess",
-    "stats_sign_test",
-]
-
-_ROUND12_PRIORITY: list[str] = [
-    # rows-only -> hash-attested conversion (the registry's LAST
-    # no_oracle row): deterministic envelope over the synth pipeline
-    "weather_synth_throughput",
-    # r12 rewrites: evidence must postdate the semantics/plan change
-    "stats_kruskal_wallis",  # sanitized pivot + df-generalized p
-    "similarity_ann_lsh",  # one-parse expr bucket bank + broadcast
-    "similarity_ann_ivf",  # explicit broadcast_queries
-    "dedup_semantic_clusters",  # semdedup_pairs operator refactor
-    "similarity_ndcg_eval",  # literal_barrier helper
-    "similarity_jl_projection",  # literal_barrier helper
-    "train_dsir_importance",  # literal_barrier helper
-    # r12 window migrations (off the unpartitioned-window allow-list)
-    "train_bpe_pair_counts",
-    "stats_chi_square_independence",
-    "text_zipf_fit",
-]
-
-_ROUND12_NEW: list[str] = [
-    "stats_jarque_bera",
-    "stats_cohens_d",
-    "stats_grubbs_outlier",
-    "stats_g_test_independence",
-    "ab_odds_ratio_woolf",
-    "ab_mcnemar_paired",
-    "stats_mood_median",
-    "stats_cramer_von_mises",
-    "ab_mantel_haenszel",
-    "stats_friedman_test",
-    "sketch_kmv_distinct_intersect",
-    "graph_transitivity_global",
-    "analytics_hhi_concentration",
-    "stats_durbin_watson",
-    "events_best_split_sse",
-    "text_mattr_diversity",
-    "privacy_dp_noisy_counts",
-    "graph_label_propagation",
-    "analytics_skyline_pareto",
-    "train_bigram_perplexity",
-    "stats_runs_test",
-    "stats_benjamini_yekutieli",
-    "stats_anderson_darling_2samp",
-    "search_mmr_rerank",
-    "search_query_likelihood",
-    "stats_bartlett_test",
-    "analytics_association_rules",
-    "stats_combined_pvalues",
-    "stats_breusch_pagan",
-    "stats_chow_test",
-    "analytics_abc_classification",
-    "stats_cohens_kappa",
-]
-
-_ROUND11_PRIORITY: list[str] = [
-    # rows-only -> hash-attested conversions (oracle upgrades)
-    "sketch_hll_daily_union",
-    "similarity_kmeans_clusters",
-    "train_logreg_quality_gate",
-    "similarity_pca_top_component",
-    "similarity_pca_top_k",
-    # r11 rewrites: evidence must postdate the semantics/plan change
-    "join_asof_nearest_tolerance",  # micros-exact gaps (ADVICE r10)
-    "events_asof_nearest",  # same family, same upgrade
-    "events_fano_burstiness",  # single-hour NULL, not NaN
-    "dedup_minhash_lsh",  # shared keeper reps + session state
-    "dedup_near_dup_prune",  # same
-    "dedup_incremental_lsh",  # session state
-    "dedup_embedding_cosine",  # broadcast verify + precomputed norms
-    # r11 window migrations: month-partitioned stitch/padding replaced
-    # the unpartitioned day-frame windows (operators/calendar.py)
-    "events_ewma_daily",
-    "events_cusum_changepoint",
-    "events_seasonal_decompose",
-    "events_anomaly_rolling_zscore",
-    "events_period_over_period",
-    "stats_kaplan_meier",
-    "events_linear_interpolate_gaps",
-]
-
-# Round-11 additions (new registrations this round).
-_ROUND11_NEW: list[str] = [
-    "similarity_mips_topk",
-    "similarity_jl_projection",
-    "graph_adamic_adar",
-    "events_interval_union_time",
-    "sample_consistent_hash_join",
-    "stats_nelson_aalen",
-    "stats_cochran_armitage",
-    "stats_page_hinkley",
-    "ab_msprt_always_valid",
-    "events_double_smoothing_forecast",
-    "events_hurst_exponent",
-    "ab_tost_equivalence",
-    "stats_wilson_ci",
-    "text_rake_keyphrases",
-    "graph_clustering_coefficient",
-    "stats_welch_ttest",
-    "stats_kendall_tau",
-    "analytics_cohort_retention",
-    "dedup_ngram_coverage",
-    "stats_poisson_rate_ztest",
-    "search_hybrid_rrf",
-    "similarity_ndcg_eval",
-    # wave 5 (round11c.py) — window lands at exactly 50
-    "train_dsir_importance",
-    "stats_logrank_test",
-    "stats_kruskal_wallis",
-    "stats_ljung_box",
-    "stats_holm_bonferroni",
-    "graph_degree_assortativity",
-    "text_good_turing_vocab",
-    "ab_post_stratification",
-    "dedup_semantic_clusters",
-]
-
-# ----------------------------------------------------------------------
-# ROUND-10 WINDOW PREFIX: queries whose attestation evidence must
-# POSTDATE the round-10 rewrites. Three rows-only → full-oracle
-# conversions (rolling actives now linear-counting hash-attested;
-# both ANN queries now run deterministic SQL-replayable mechanics),
-# the approx-percentile pair (oracle slimmed in lockstep with the
-# exact-buffer removal / prefix-sum convergence), plus this round's
-# new registrations via _ROUND10_NEW. Computed mechanically by
-# tools/attestation_status.py; tests/test_attestation.py gates drift.
-# ----------------------------------------------------------------------
-_ROUND10_PRIORITY: list[str] = [
-    # rows-only -> hash-attested conversions (oracle upgrades)
-    "events_rolling_active_users",
-    "similarity_ann_lsh",
-    "similarity_ann_ivf",
-    # r10 rewrites: evidence must postdate the plan change
-    "stats_approx_percentiles",  # median_exact dropped from plan+oracle
-    "stats_percentiles",  # converged onto the prefix-sum scan
-    "dedup_minhash_jaccard_estimate",  # one-md5-per-shingle CW mixing
-]
-
-# Round-10 additions (new registrations this round).
-_ROUND10_NEW: list[str] = [
-    "stats_spearman_corr",
-    "stats_trimmed_mean",
-    "stats_anova_oneway",
-    "ab_srm_check",
-    "maintenance_file_overlap_depth",
-    "dedup_prefix_filter_jaccard",
-    "similarity_pq_codes",
-    "analytics_shapley_attribution",
-    "text_heaps_law",
-    "stats_levene_test",
-    "similarity_ivfpq_topk",
-    "stats_mann_kendall",
-    "stats_benjamini_hochberg",
-    "join_asof_nearest_tolerance",
-    "events_fano_burstiness",
-    "ab_power_mde",
-    "sample_priority_subset_sums",
-    "stats_gumbel_return_level",
-    "graph_kcore_peel",
-]
-
-# ----------------------------------------------------------------------
-# ROUND-9 WINDOW PREFIX: every oracle-backed query whose LATEST driver
-# row is missing (21 late-r8 registrations, snapshot raced their
-# registration) or stale `no_oracle` (3 dedup queries whose oracles
-# landed in r8 after their last driver attempt). Computed mechanically
-# by tools/attestation_status.py:needs_attestation() and pinned here;
-# tests/test_attestation.py fails if this list ever drifts from the
-# computed one or if any member falls outside the 50-slot window.
-# All 24 were verified hash-green at sf0.001 by the round-8 judge.
-# ----------------------------------------------------------------------
-_ROUND9_PRIORITY: list[str] = [
-    "events_seasonal_decompose",
-    "events_cusum_changepoint",
-    "dedup_source_overlap_matrix",
-    "profile_join_size_estimate",
-    "events_forecast_backtest",
-    "dedup_blocking_quality",
-    "similarity_kcenter_diverse",
-    "events_top_paths",
-    "stats_theil_sen_trend",
-    "sketch_audience_overlap",
-    "analytics_mix_shift_decompose",
-    "events_time_weighted_avg",
-    "profile_functional_dependencies",
-    "stats_weighted_median",
-    "dedup_sorted_neighborhood",
-    "train_quantile_normalize",
-    "text_distinctive_terms",
-    "events_trend_per_type",
-    "ab_cuped_variance_reduction",
-    "stats_weighted_quartiles",
-    "ab_ratio_metric_delta",
-    # stale `no_oracle` rows (r04/r05) predating their r8 oracles
-    "dedup_pagerank_canonical",
-    "dedup_near_dup_prune",
-    "dedup_embedding_cosine",
-    # r09 rewrites (rank-from-prefix-sum replaced the serial support
-    # window): evidence must postdate the rewrite
-    "stats_ks_two_sample",
-    "stats_mann_whitney_u",
-    # r09 oracle upgrades (rows-only -> guarantee-attested): the
-    # estimator's accuracy contract is now part of the driver hash
-    "stats_approx_percentiles",
-    "agg_approx_distinct",
-    # r09 rewrite: explode-based winnowing (the 745 s nested-lambda
-    # fix) — evidence must postdate the rewrite
-    "text_winnowing_fingerprints",
-]
-
-# Round-9 additions (new registrations this round). 28 + len ≤ 50 so
-# the whole prefix fits the driver window.
-_ROUND9_NEW: list[str] = [
-    "stats_wasserstein_drift",
-    "stats_mutual_information",
-    "quality_k_anonymity",
-    "maintenance_deletion_vectors",
-    "text_pmi_collocations",
-    "text_jensen_shannon_sources",
-    "stats_kaplan_meier",
-    "train_neyman_allocation",
-    "similarity_inverted_index_cosine",
-    "dedup_fellegi_sunter_linkage",
-    "similarity_silhouette_labels",
-    "multimodal_image_entropy",
-    "analytics_markov_attribution",
-    "join_banded_range",
-    "quality_l_diversity",
-    "quality_t_closeness",
-    "events_value_psi_binned",
-    "stats_bootstrap_ci",
-    "stats_autocorrelation_daily",
-]
-
-# ----------------------------------------------------------------------
-# ROUND-8 WINDOW PREFIX: the queries whose attestation evidence must
-# POSTDATE the round-8 rewrites. The three with_global_row_number
-# consumers (racy-helper fix + RFM/curriculum/gini rewrites off
-# unpartitioned windows), the SimHash pair now carrying md5-portable
-# oracles, the new linear-counting estimator, and the multimodal pair
-# now running REAL PNG decode (rows-only by design, but the run itself
-# must be fresh).
-# ----------------------------------------------------------------------
-_ROUND8_PRIORITY: list[str] = [
-    "zorder_rowgroup_skipping",
-    "window_ntile_percent",
-    "customer_rfm_segments",
-    "train_curriculum_schedule",
-    "quality_activity_gini",
-    "dedup_simhash",
-    "dedup_simhash_multitable",
-    "sketch_lc_weekly_union",
-    "text_winnowing_fingerprints",
-    "dedup_minhash_lsh",
-    "dedup_incremental_lsh",
-    "multimodal_feature_extract",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    "multimodal_video_metadata",
-    "multimodal_audio_features",
-    "multimodal_metadata_profile",
-]
-
-_DRIVER_PRIORITY: list[str] = [
-    # ------------------------------------------------------------------
-    # ROUND-5 WINDOW PREFIX.
-    # The 14 round-4 additions that never got a driver row (queued
-    # behind the r04 50-slot window; all locally oracle-green or
-    # rows-only by design), then the two re-attests: agg_count_if_bool
-    # (r04 hash-FAIL — DuckDB count_if HUGEINT→float64 dtype trap,
-    # oracle now CASTs to BIGINT) and weather_sim_golden (previously
-    # rows-only; now carries a VALUES-literal oracle of the seeded
-    # generator's expected output). Round-5 additions follow via
-    # _ROUND5_NEW; everything attested green in r01–r04 moves to the
-    # back — its evidence lives in that round's CORRECTNESS_r{N}.json.
-    # ------------------------------------------------------------------
-    "train_conversation_assembly",
-    "train_lang_balanced_quota",
-    "similarity_kmeans_clusters",
-    "quality_expectations_audit",
-    "profile_table_columns",
-    "gdpr_delete_propagation",
-    "join_point_in_time_scd2",
-    "join_salted_hot_key",
-    "train_chunk_documents",
-    "quality_psi_drift",
-    "events_period_over_period",
-    "ab_test_proportion_ztest",
-    "train_e2e_pipeline",
-    "dedup_pagerank_canonical",
-    "agg_count_if_bool",
-    "weather_sim_golden",
-]
-
-# Round-5 additions (new registrations) slot in right after the
-# backlog so they land inside the 50-slot window too.
-_ROUND5_NEW: list[str] = [
-    # relational5 — SQL-surface widening
-    "agg_mode_per_group",
-    "agg_pivot_priority",
-    "unpivot_part_measures",
-    "join_null_safe_eq",
-    "agg_corr_regression",
-    "agg_bitwise_flags",
-    "scalar_string_reshape",
-    # analytics2 — behavioral sequences & segmentation
-    "events_transition_matrix",
-    "events_heavy_hitters",
-    "customer_rfm_segments",
-    "events_late_arrival_audit",
-    # llmdata2 — corpus curation round 5
-    "train_bpe_pair_counts",
-    "train_source_temperature",
-    "train_split_three_way",
-    "text_vocab_hapax_stats",
-    "text_length_percentiles",
-    "dedup_cluster_size_stats",
-    "train_interleave_roundrobin",
-    # dim-wise centroid primitive (similarity.py)
-    "similarity_centroid_dims",
-    # quality round 5 (quality.py)
-    "quality_benford_digits",
-    "quality_mad_outliers",
-    "scalar_datetime_arith",
-    "agg_string_concat_group",
-    "events_bounce_rate",
-    "profile_key_candidates",
-    "text_repeated_span_detection",
-    "dedup_near_dup_prune",
-    "text_bigram_logprob_score",
-    "events_anomaly_rolling_zscore",
-    "agg_weighted_stats",
-]
-
-# Round-5 wave-3+ additions (waves 3-7 of the round-5 session,
-# registered after the r05 driver snapshot window filled; they queue
-# immediately behind it and rotate into the r06 prefix — except the
-# head of this list, which backfills the current window's tail where
-# already-attested entries were padding it). The r06 rotation should
-# move everything here without a green r05 row into the prefix.
-_ROUND5_WAVE3: list[str] = [
-    # relational6 — Spark 4 SQL surface
-    "recursive_cte_supplier_tree",
-    "join_lateral_topn_per_nation",
-    "join_values_inline_dim",
-    "scalar_try_safe_arithmetic",
-    "window_running_distinct",
-    # stats — hypothesis tests & smoothing, exact cross-engine
-    "stats_ks_two_sample",
-    "stats_chi_square_independence",
-    "stats_mann_whitney_u",
-    "events_ewma_daily",
-    # sketches — distributed sketch structures, exact oracles
-    "sketch_cms_heavy_hitters",
-    "sketch_bloom_contamination_gate",
-    "sketch_hll_daily_union",
-    # llmdata3 — corpus curation wave 3
-    "train_contamination_containment",
-    "text_boilerplate_sentences",
-    # all-DataFrame ML primitives (rows-only, property-tested)
-    "similarity_pca_top_component",
-    "train_logreg_quality_gate",
-    # sampling wave 3 + bloom-pruned join
-    "train_weighted_sample_ares",
-    "train_nucleus_topp_per_source",
-    "join_bloom_prefiltered",
-    "quality_snapshot_diff",
-    "train_bpe_learn_apply",
-    "events_funnel_ordered_steps",
-    "dedup_label_propagation",
-    "events_linear_interpolate_gaps",
-    "quality_freshness_sla",
-    "text_zipf_fit",
-    "events_asof_nearest",
-    "events_new_vs_returning",
-    "analytics_market_basket_pairs",
-    "quality_activity_gini",
-    "events_markov_stationary",
-    "train_epoch_waterfill",
-    "multimodal_phash_near_dup",
-    "maintenance_incremental_join_view",
-    "maintenance_compaction_plan",
-    "quality_column_entropy",
-    "text_ngram_novelty",
-    "dedup_incremental_lsh",
-    "train_dataset_card",
-    "similarity_pca_top_k",
-    "events_rolling_active_users",
-]
-
-# ---------------------------------------------------------------------------
-# Rounds 1–4 attested history, kept in original order behind the
-# window (green driver rows already recorded in CORRECTNESS_r01–r04).
-# ---------------------------------------------------------------------------
-_ATTESTED: list[str] = [
-    # driver-ERR in r02/r03, fixed round 4 (array → joined string)
-    "collect_sorted_list",
-    "array_higher_order_funcs",
-    # TPC-H remainder (local sf0.01 parity green since round 1/2)
-    "q4_order_priority_exists",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q11_important_parts",
-    "q12_shipmode_priority",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_cnt",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_predicates",
-    "q20_part_promotion",
-    "q22_idle_customers",
-    # round-2 composite family (never in a driver window)
-    "events_sessionize_gaps",
-    "events_cdc_latest_snapshot",
-    "events_scd2_history",
-    "join_interval_overlap",
-    "agg_histogram_bins",
-    "dedup_fuzzy_edit_distance",
-    "dedup_pair_triangles",
-    "text_tfidf_top_terms",
-    "train_curriculum_schedule",
-    "join_right_outer",
-    "join_date_spine_gapfill",
-    "scalar_json_quarantine",
-    "events_attribution_join",
-    "window_activity_streaks",
-    "zorder_rowgroup_skipping",
-    # rows-only entries never in a driver window (docstring-justified)
-    "stats_approx_percentiles",
-    "similarity_ann_lsh",
-    "similarity_ann_ivf",
-    "dedup_embedding_cosine",
-    "weather_synth_throughput",
-    "text_winnowing_fingerprints",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "multimodal_feature_extract",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    "multimodal_video_metadata",
-    "multimodal_audio_features",
-    "multimodal_metadata_profile",
-    "agg_approx_distinct",
-    # round-4 window, attested green in CORRECTNESS_r04.json
-    "text_decontaminate_ngram_overlap",
-    "text_unigram_logprob_score",
-    "text_repetition_ratio",
-    "dedup_cross_corpus_anti",
-]
-
-
-def _driver_order(names: list[str]) -> list[str]:
-    # r06 prefix: never-attested wave-3/4 queries + this round's new
-    # registrations (≤50 total), then the r01–r05 attested history in
-    # its historical order (evidence in CORRECTNESS_r{01..05}.json).
-    head = _ROUND15_PRIORITY + [
-        n for n in _ROUND15_NEW if n not in _ROUND15_PRIORITY
-    ]
-    head = head + [n for n in _ROUND14_PRIORITY if n not in head]
-    head = head + [n for n in _ROUND14_NEW if n not in head]
-    head = head + [n for n in _ROUND13_PRIORITY if n not in head]
-    head = head + [n for n in _ROUND13_NEW if n not in head]
-    head = head + [n for n in _ROUND12_PRIORITY if n not in head]
-    head = head + [n for n in _ROUND12_NEW if n not in head]
-    head = head + [n for n in _ROUND11_PRIORITY if n not in head]
-    head = head + [n for n in _ROUND11_NEW if n not in head]
-    head = head + [n for n in _ROUND10_PRIORITY if n not in head]
-    head = head + [n for n in _ROUND10_NEW if n not in head]
-    head = head + [n for n in _ROUND9_PRIORITY if n not in head]
-    head = head + [n for n in _ROUND9_NEW if n not in head]
-    head = head + [n for n in _ROUND8_PRIORITY if n not in head]
-    head = head + [n for n in _R06_UNATTESTED if n not in head]
-    head = head + [n for n in _ROUND6_NEW if n not in head]
-    back = _DRIVER_PRIORITY + [
-        n for n in _ROUND5_NEW if n not in _DRIVER_PRIORITY
-    ]
-    back = back + [n for n in _ROUND5_WAVE3 if n not in back]
-    back = back + [n for n in _ATTESTED if n not in back]
-    head = head + [n for n in back if n not in head]
-    prio = [n for n in head if n in names]
-    rest = [n for n in names if n not in set(head)]
-    return prio + rest
-
-
 def all_queries() -> dict[str, QueryFn]:
+    """Every registered query, in sorted-name order."""
     _ensure_loaded()
-    return {n: _QUERIES[n] for n in _driver_order(list(_QUERIES))}
+    return {n: _QUERIES[n] for n in sorted(_QUERIES)}
 
 
 def all_oracles() -> dict[str, str]:
+    """Oracle SQL of every query that has one, in sorted-name order."""
     _ensure_loaded()
     out: dict[str, str] = {}
-    for n in _driver_order(list(_QUERIES)):
+    for n in sorted(_QUERIES):
         if n not in _ORACLES:
             continue
         o = _ORACLES[n]
@@ -812,10 +138,9 @@ def _ensure_loaded() -> None:
     effects). DISCOVERY-DRIVEN since r11: every non-underscore module
     in this package is imported in sorted-name order, so a new themed
     module registers itself just by existing — no god-file import
-    list to grow. Registration ORDER doesn't matter for the driver
-    contract (the per-round priority lists above define the
-    attestation window); duplicate names still fail loudly in
-    query()."""
+    list to grow. Registration order doesn't matter: all_queries()
+    and all_oracles() return sorted-name order. Duplicate names still
+    fail loudly in query()."""
     global _LOADED
     if _LOADED:
         return

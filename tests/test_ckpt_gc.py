@@ -80,12 +80,14 @@ def test_markov_stationary_gc(spark, tmp_path):
         [("a", "a", 0.5), ("a", "b", 0.5), ("b", "a", 0.9), ("b", "b", 0.1)],
         "src string, dst string, p double",
     )
-    out = markov_stationary(t, iters=12, checkpoint_dir=d)
+    # driver_solve=False: a chain this small would otherwise be solved
+    # on the driver, which writes no checkpoint at all
+    out = markov_stationary(t, iters=12, checkpoint_dir=d, driver_solve=False)
     pis = {r["state"]: r["p"] for r in out.collect()}
     assert abs(sum(pis.values()) - 1.0) < 1e-9
     # alternating pi slots: at most 2 live directories (t/sources
-    # released)
-    assert len(_rdd_dirs(d)) <= 2
+    # released), and the final pi's at least
+    assert 1 <= len(_rdd_dirs(d)) <= 2
     assert out.count() == 2
 
 

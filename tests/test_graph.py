@@ -1,6 +1,7 @@
 """Connected-components operator: known-graph and invariant tests."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from ibd_pipeline_spark.operators.graph import connected_components
 
@@ -259,8 +260,6 @@ def test_degenerate_iteration_counts_rejected(spark):
     checkpoint slots while the returned (never-checkpointed) state
     still reads them — reject up front instead of failing on first
     action."""
-    import pytest
-
     from ibd_pipeline_spark.operators.graph import (
         label_propagation,
         markov_stationary,
@@ -314,11 +313,83 @@ def test_absorption_probability_target_with_outgoing_edges(spark):
 
 
 def test_absorption_probability_rejects_zero_iters(spark):
-    import pytest
-
     from ibd_pipeline_spark.operators.graph import absorption_probability
 
     t = spark.createDataFrame([("A", "B", 1.0)], "src string, dst string, p double")
     tgt = spark.createDataFrame([("B",)], "state string")
     with pytest.raises(ValueError, match=">= 1"):
         absorption_probability(t, tgt, iters=0)
+
+
+def _label_propagation_case(spark, **kw):
+    from ibd_pipeline_spark.operators.graph import label_propagation
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (5, 6), (7, 8), (8, 9), (2, 4)],
+        "src long, dst long",
+    )
+    seeds = spark.createDataFrame(
+        [(1, "a"), (4, "b"), (5, "c"), (99, "z")],
+        "vertex long, label string",
+    )
+    out = {
+        r["vertex"]: (r["label"], r["is_seed"])
+        for r in label_propagation(edges, seeds, max_iter=5, **kw).collect()
+    }
+    assert out[99] == ("z", True)  # isolated seed kept
+    assert out[7][0] is None  # unreached component stays NULL
+    return out
+
+
+def _markov_stationary_case(spark, **kw):
+    from ibd_pipeline_spark.operators.graph import markov_stationary
+
+    # a cycle that leaks into an absorbing sink: the held-mass path
+    # runs in both solvers
+    t = spark.createDataFrame(
+        [
+            ("v", "v", 0.2), ("v", "c", 0.5), ("v", "p", 0.3),
+            ("c", "v", 0.6), ("c", "p", 0.3), ("c", "sink", 0.1),
+            ("p", "v", 1.0),
+        ],
+        "src string, dst string, p double",
+    )
+    return {
+        r["state"]: r["p"]
+        for r in markov_stationary(t, iters=12, **kw).collect()
+    }
+
+
+def _absorption_probability_case(spark, **kw):
+    from ibd_pipeline_spark.operators.graph import absorption_probability
+
+    # a self-loop, a back edge, a dead end and a target with an
+    # outgoing edge
+    t = spark.createDataFrame(
+        [
+            ("A", "A", 0.2), ("A", "B", 0.5), ("A", "DEAD", 0.3),
+            ("B", "A", 0.3), ("B", "C", 0.7), ("C", "DEAD", 1.0),
+        ],
+        "src string, dst string, p double",
+    )
+    tgt = spark.createDataFrame([("C",)], "state string")
+    return {
+        r["state"]: r["a"]
+        for r in absorption_probability(t, tgt, **kw).collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        _label_propagation_case,
+        _markov_stationary_case,
+        _absorption_probability_case,
+    ],
+    ids=["label_propagation", "markov_stationary", "absorption_probability"],
+)
+def test_driver_solve_matches_distributed(spark, case):
+    """Each solver's small-input driver solve agrees with its
+    distributed loop: same rows, values within double noise."""
+    driver = case(spark)
+    assert driver == pytest.approx(case(spark, driver_solve=False), abs=1e-9)

@@ -70,31 +70,3 @@ def test_catalog_cache_invalidates_on_rewrite(spark, tmp_path):
     os.utime(p)
     assert catalog.load(spark, sf, "region").count() == 2
 
-
-def test_label_propagation_driver_matches_distributed(spark):
-    """r16: label_propagation gained a driver-solve fast path (the
-    markov_stationary doctrine); the two paths must agree exactly —
-    labels, is_seed, and NULL-label vertices."""
-    from ibd_pipeline_spark.operators.graph import label_propagation
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (5, 6), (7, 8), (8, 9), (2, 4)],
-        "src long, dst long",
-    )
-    seeds = spark.createDataFrame(
-        [(1, "a"), (4, "b"), (5, "c"), (99, "z")],
-        "vertex long, label string",
-    )
-    fast = {
-        r["vertex"]: (r["label"], r["is_seed"])
-        for r in label_propagation(edges, seeds, max_iter=5).collect()
-    }
-    slow = {
-        r["vertex"]: (r["label"], r["is_seed"])
-        for r in label_propagation(
-            edges, seeds, max_iter=5, driver_solve=False
-        ).collect()
-    }
-    assert fast == slow
-    assert fast[99] == ("z", True)  # isolated seed kept
-    assert fast[7][0] is None  # unreached component stays NULL
