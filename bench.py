@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: runs EVERY registered query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+the default session (local[$SPARK_GRAFT_CPUS], else every core this
+process may run on) and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Two parts: the curated HEADLINE list (volume-doing queries, the r01
@@ -25,6 +26,10 @@ last 2000 bytes of stdout: the r02–r04 60-query lines overflowed that
 window and landed as parsed=null. Previous-round timings are loaded
 from BENCH_COMMITTED.json (else a leftover BENCH_FULL.json) when its
 scale factor matches the run's.
+
+The timing core — `time_noop`, `warm` and `plan_text` — is shared by
+the tools in tools/ (opt_measure, scale_probe, plan_gallery), so every
+harness times and plans a frame the same way.
 """
 
 from __future__ import annotations
@@ -38,7 +43,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 R01_PATH = Path(__file__).resolve().parent / "BENCH_r01.json"
 
 # Round-1 headline set — kept intact and first, in the same order, so
@@ -345,31 +349,50 @@ HEADLINE = HEADLINE_R01 + [
 ]
 
 
+def time_noop(build, runs: int) -> list[float]:
+    """Wall seconds (3 decimals) of `runs` executions of `build()`,
+    each forced end-to-end through the noop sink: full computation, no
+    driver collect. Building the frame is inside the timed span, since
+    construction costs py4j round-trips and, for many builders, eager
+    jobs."""
+    out = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        build().write.format("noop").mode("overwrite").save()
+        out.append(round(time.perf_counter() - t0, 3))
+    return out
+
+
+def plan_text(df) -> str:
+    """`df`'s formatted plan: the text of `explain("formatted")`."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def warm(spark, registry) -> None:
+    """Warm the JVM once: q1 plus the codegen-heavy weather pipeline at
+    small N (same plan shape as the timed 1M run). Warming *every* plan
+    was tried and measured slower overall: tens of generated classes
+    churn the JIT enough that the timed runs lose their compiled code
+    again."""
+    from ibd_pipeline_spark.sources.weather_synth import synth_weather_json
+    from ibd_pipeline_spark.streaming.weather import weather_pipeline
+
+    time_noop(lambda: registry["q1_pricing_summary"](spark, SF_DIR), 1)
+    time_noop(lambda: weather_pipeline(synth_weather_json(spark, 10_000)), 1)
+
+
 def main() -> None:
     from ibd_pipeline_spark.queries import all_queries
     from ibd_pipeline_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="ibd-pipeline-bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-    )
+    spark = get_spark(app_name="ibd-pipeline-bench")
     registry = all_queries()
+    warm(spark, registry)
 
-    # Warm the JVM once (q1 + the codegen-heavy weather pipeline at
-    # small N — same plan shape as the timed 1M run). Warming *every*
-    # plan was tried and measured slower overall: tens of generated
-    # classes churn the JIT enough that the timed runs lose their
-    # compiled code again.
-    registry["q1_pricing_summary"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    from ibd_pipeline_spark.sources.weather_synth import synth_weather_json
-    from ibd_pipeline_spark.streaming.weather import weather_pipeline
-
-    weather_pipeline(synth_weather_json(spark, 10_000)).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    def runs_of(name: str, n: int) -> list[float]:
+        return time_noop(lambda: registry[name](spark, SF_DIR), n)
 
     # Best-of-3 per query: the first execution of a plan at volume
     # pays JIT tier-up on the hot loops (measured 3-15× noise on
@@ -393,16 +416,8 @@ def main() -> None:
     # an idle box) and inflated load_factor — which scales every
     # regression threshold. The warm run makes the canary measure the
     # box, not the JIT.
-    registry[CANARY](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    canary_runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        registry[CANARY](spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        canary_runs.append(round(time.perf_counter() - t0, 3))
+    runs_of(CANARY, 1)
+    canary_runs = runs_of(CANARY, 3)
     canary_now = min(canary_runs)
     canary_prev = prev.get(CANARY, 0.0)
     load_factor = (
@@ -419,12 +434,7 @@ def main() -> None:
         # wall was approaching 20 min), and the adaptive re-measure
         # below still grows the sample whenever the result looks like
         # contention.
-        n_runs = 3 if name in r01_set else 2
-        rs = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            registry[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            rs.append(round(time.perf_counter() - t0, 3))
+        rs = runs_of(name, 3 if name in r01_set else 2)
         # Adaptive re-measure: this box shows multi-second contention
         # stretches that outlast best-of-3 (r04 retention_cohorts ran
         # 10 s × 3 on unchanged code; isolated steady state 0.77 s).
@@ -435,9 +445,7 @@ def main() -> None:
         base = prev.get(name)
         extra = 0
         while base and min(rs) > 1.5 * base and extra < 2:
-            t0 = time.perf_counter()
-            registry[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            rs.append(round(time.perf_counter() - t0, 3))
+            rs += runs_of(name, 1)
             extra += 1
         runs[name] = rs
         timings[name] = min(rs)
@@ -452,16 +460,11 @@ def main() -> None:
     tail = [n for n in registry if n not in set(HEADLINE)]
     tail_errors: dict[str, str] = {}
     for name in tail:
-        t0 = time.perf_counter()
         try:
-            registry[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            rs = runs_of(name, 1)
         except Exception as e:  # noqa: BLE001 — record and continue
             tail_errors[name] = repr(e)[:200]
             continue
-        t = round(time.perf_counter() - t0, 3)
-        rs = [t]
         # Min-of-2 for the slow tail (r11 VERDICT #2): single-run
         # timings on >1.5 s queries produced regression flags that
         # were pure first-run plan-compile/contention noise
@@ -470,16 +473,12 @@ def main() -> None:
         # and makes the regression list mean something. Trigger on
         # EITHER this run or the committed time being slow, so a
         # contention-inflated run gets its re-measure too.
-        if t > 1.5 or prev.get(name, 0.0) > 1.5:
+        if rs[0] > 1.5 or prev.get(name, 0.0) > 1.5:
             # The re-measure stays non-fatal (same contract as the
             # first run): a transient failure here keeps the first
             # timing and records the error instead of aborting bench.
-            t0 = time.perf_counter()
             try:
-                registry[name](spark, SF_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                rs.append(round(time.perf_counter() - t0, 3))
+                rs += runs_of(name, 1)
             except Exception as e:  # noqa: BLE001 — keep first timing
                 tail_errors[name] = "rerun: " + repr(e)[:190]
         runs[name] = rs

@@ -13,6 +13,8 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -111,7 +113,7 @@ def band_keys(sig_col: Column, num_bands: int, rows_per_band: int) -> Column:
 # at ingest, every dedup job reading them) — session scope is the
 # local-mode equivalent.
 # ---------------------------------------------------------------------------
-_SESSION_STATE_CACHE: "dict[tuple, DataFrame]" = {}
+_SESSION_STATE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 _SESSION_STATE_CAP = 32
 
 
@@ -128,9 +130,11 @@ def _session_cached_state(docs: DataFrame, params: tuple, build) -> DataFrame:
         for k in [k for k in _SESSION_STATE_CACHE if k[0] != app]:
             del _SESSION_STATE_CACHE[k]
         while len(_SESSION_STATE_CACHE) >= _SESSION_STATE_CAP:
-            del _SESSION_STATE_CACHE[next(iter(_SESSION_STATE_CACHE))]
+            _SESSION_STATE_CACHE.popitem(last=False)
         hit = build().localCheckpoint(eager=True)
         _SESSION_STATE_CACHE[key] = hit
+    else:
+        _SESSION_STATE_CACHE.move_to_end(key)
     return hit
 
 

@@ -398,6 +398,22 @@ ORDER BY l_returnflag
 """
 
 
+def exact_distinct_count(df: DataFrame, key: str, col: str, alias: str) -> DataFrame:
+    """COUNT(DISTINCT col) per `key` as a two-level aggregate: map-side
+    partial dedup shrinks the input to the distinct (key, col) frame
+    before its shuffle. count(col), NOT count(1): COUNT(DISTINCT col)
+    excludes NULLs, so the NULL-col group of the distinct frame must
+    not count (l_suppkey/l_partkey are non-null in TPC-H, but the
+    equivalence should not depend on that)."""
+    return (
+        df.select(key, col)
+        .groupBy(key, col)
+        .agg(F.lit(1))
+        .groupBy(key)
+        .agg(F.count(F.col(col)).cast("bigint").alias(alias))
+    )
+
+
 @query("agg_approx_distinct", oracle=_APPROX_DISTINCT_SQL)
 def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_count_distinct (HyperLogLog++) — the 100 TB-scale answer
@@ -431,26 +447,16 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         <= F.lit(0.05)
     )
 
-    def exact(col: str, alias: str) -> DataFrame:
-        # count(col), NOT count(1): COUNT(DISTINCT col) excludes NULLs,
-        # so the NULL-key group of the distinct frame must not count
-        # (l_suppkey/l_partkey are non-null in TPC-H, but the
-        # equivalence should not depend on that).
-        return (
-            li.select("l_returnflag", col)
-            .groupBy("l_returnflag", col)
-            .agg(F.lit(1))
-            .groupBy("l_returnflag")
-            .agg(F.count(F.col(col)).cast("bigint").alias(alias))
-        )
-
     hll = li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_suppkey", 0.02).alias("_as"),
         F.approx_count_distinct("l_partkey", 0.02).alias("_ap"),
     )
     return (
-        exact("l_suppkey", "exact_suppliers")
-        .join(exact("l_partkey", "exact_parts"), "l_returnflag")
+        exact_distinct_count(li, "l_returnflag", "l_suppkey", "exact_suppliers")
+        .join(
+            exact_distinct_count(li, "l_returnflag", "l_partkey", "exact_parts"),
+            "l_returnflag",
+        )
         .join(hll, "l_returnflag")
         .select(
             "l_returnflag",

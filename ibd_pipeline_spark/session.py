@@ -20,7 +20,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Cores: SPARK_GRAFT_CPUS, else every CPU this process may run on (the
+# count `nproc` reports, which honours the affinity mask).
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 
 def get_spark(

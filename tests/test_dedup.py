@@ -220,3 +220,124 @@ def test_simhash_multitable_recall_at_least_single_table(spark, docs):
         for r in D.simhash_near_dup_pairs_multi(docs).collect()
     }
     assert single <= multi
+
+
+# LSH calibration against a PLANTED density corpus: pairs at graded
+# Jaccard straddling the 8x4 s-curve's steep region, so predicted
+# E[recall] and measured recall must agree within the Bernoulli
+# sampling bound — the s-curve model is calibrated for this hash
+# family, not just present.
+
+
+def _planted_density_docs():
+    """300 near-dup pairs: variant = base + appended extras, so on
+    3-gram shingles J = (n-2)/(n-2+m) exactly. Five 60-pair strata at
+    J = {0.500, 0.606, 0.690, 0.800, 0.909} (base 22 words, extras
+    m = 20/13/9/5/2) put 180 pairs in the s-curve's steep region
+    (P(hit) ≈ 0.40/0.69/0.87) where calibration can actually fail,
+    and 120 near the saturated top. Tokens are unique per pair, so
+    truth = exactly the planted pairs and the prefix-filter join
+    never crosses pairs."""
+    rows = []
+    strata = [(20, "J500"), (13, "J606"), (9, "J690"), (5, "J800"), (2, "J909")]
+    doc_id = 0
+    for s_i, (m, tag) in enumerate(strata):
+        for p in range(60):
+            base = [f"{tag}p{p}w{j}" for j in range(22)]
+            extra = [f"{tag}p{p}x{j}" for j in range(m)]
+            rows.append(
+                (doc_id, " ".join(base), "en", f"src{s_i}",
+                 len(" ".join(base)))
+            )
+            rows.append(
+                (doc_id + 1, " ".join(base + extra), "en", f"src{s_i}",
+                 len(" ".join(base + extra)))
+            )
+            doc_id += 2
+    return rows
+
+
+def test_lsh_calibration_planted_density(spark, tmp_path):
+    from ibd_pipeline_spark.queries import all_queries
+
+    df = spark.createDataFrame(
+        _planted_density_docs(),
+        "doc_id bigint, text string, lang string, source string, "
+        "n_chars bigint",
+    )
+    df.coalesce(1).write.parquet(f"{tmp_path}/documents.parquet")
+    (r,) = all_queries()["dedup_lsh_calibration"](
+        spark, str(tmp_path)
+    ).collect()
+    got = dict(zip(r.__fields__, r))
+    assert got["bands"] == 8 and got["rows_per_band"] == 4
+    # truth must be exactly the 300 planted pairs (token-disjoint
+    # corpus: the prefix-filter join cannot invent cross-pair truth)
+    assert got["n_true_pairs"] == 300
+    assert 0 < got["n_found"] <= 300
+    assert 0.0 < got["measured_recall"] <= 1.0
+    # the steep-region strata keep the prediction away from the
+    # saturated top — if predicted ~ 1.0 the test is vacuous
+    assert got["predicted_recall"] < 0.95
+    assert got["predicted_recall"] > 0.5
+    # Sampling bound: measured recall is the mean of 300 fixed-family
+    # Bernoulli(p_i) realizations with p_i from the planted J strata
+    # (60 each at P(hit) ~ 0.403/0.686/0.872/0.985/0.9999);
+    # sigma_mean = sqrt(sum p_i(1-p_i))/300 ~ 0.020, so 4.5 sigma
+    # ~ 0.09. A gap beyond that means the s-curve model is WRONG for
+    # the md5-salted family, not unlucky.
+    assert got["calibration_gap"] <= 0.09, got
+    assert (
+        abs(
+            got["calibration_gap"]
+            - abs(got["predicted_recall"] - got["measured_recall"])
+        )
+        < 1e-9
+    )
+
+
+def test_lsh_calibration_oracle_on_planted(spark, tmp_path):
+    """Engine parity on the PLANTED corpus too (the driver only ever
+    replays oracles on the clean fixtures, where measured recall is
+    typically saturated): Spark row == DuckDB row value-for-value."""
+    from ibd_pipeline_spark.queries import all_oracles, all_queries
+    from tests.test_round14 import _oracle_on
+
+    df = spark.createDataFrame(
+        _planted_density_docs(),
+        "doc_id bigint, text string, lang string, source string, "
+        "n_chars bigint",
+    )
+    df.coalesce(1).write.parquet(f"{tmp_path}/documents.parquet")
+    (r,) = all_queries()["dedup_lsh_calibration"](
+        spark, str(tmp_path)
+    ).collect()
+    cols, rows = _oracle_on(
+        tmp_path, all_oracles()["dedup_lsh_calibration"]
+    )
+    assert len(rows) == 1
+    want = dict(zip(cols, rows[0]))
+    got = dict(zip(r.__fields__, r))
+    for k in got:
+        assert float(got[k]) == float(want[k]), (k, got[k], want[k])
+
+
+def test_session_state_cache_evicts_least_recently_used(spark, monkeypatch):
+    """A cache hit refreshes its entry: with room for two states, build
+    A, build B, hit A, build C — A (just used) survives and B (least
+    recently used) is evicted."""
+    from collections import OrderedDict
+
+    monkeypatch.setattr(D, "_SESSION_STATE_CAP", 2)
+    monkeypatch.setattr(D, "_SESSION_STATE_CACHE", OrderedDict())
+    frames = {n: spark.range(i + 1) for i, n in enumerate("abc")}
+
+    def state(n):
+        return D._session_cached_state(frames[n], ("lru",), lambda: frames[n])
+
+    a, b = state("a"), state("b")
+    assert state("a") is a
+    state("c")
+    assert len(D._SESSION_STATE_CACHE) == 2
+    assert state("a") is a
+    assert state("b") is not b

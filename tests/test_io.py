@@ -222,3 +222,27 @@ def test_avro_compression_and_failfast(spark, tmp_path):
     assert back.agg({"sq": "sum"}).collect()[0][0] == sum(
         i * i for i in range(100)
     )
+
+
+def test_catalog_cache_invalidates_on_rewrite(spark, tmp_path):
+    """Rewriting a fixture table bumps the directory mtime, so the lazy-plan cache misses and re-lists
+    instead of serving the stale file listing."""
+    import os
+    import time
+
+    from ibd_pipeline_spark import catalog
+
+    sf = str(tmp_path)
+    p = catalog.table_path(sf, "region")
+    spark.createDataFrame([(1, "a")], "r_regionkey int, r_name string").write.parquet(
+        p
+    )
+    assert catalog.load(spark, sf, "region").count() == 1
+    # rewrite with different contents; ensure the mtime moves even on
+    # coarse-grained filesystems
+    time.sleep(0.05)
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "r_regionkey int, r_name string"
+    ).write.mode("overwrite").parquet(p)
+    os.utime(p)
+    assert catalog.load(spark, sf, "region").count() == 2

@@ -80,6 +80,22 @@ def test_approx_count_distinct_error_bound(spark, sf_dir):
         assert r.exact_suppliers == exact[r.l_returnflag]
 
 
+def test_exact_distinct_excludes_null_keys(spark):
+    """agg_approx_distinct's two-level exact distinct keeps
+    COUNT(DISTINCT col) semantics: the NULL-col group of the distinct
+    frame does not count."""
+    from ibd_pipeline_spark.queries.relational import exact_distinct_count
+
+    df = spark.createDataFrame(
+        [("A", 1), ("A", 1), ("A", None), ("B", None)],
+        "g string, k int",
+    )
+    rows = exact_distinct_count(df, "g", "k", "n").collect()
+    got = {r["g"]: r["n"] for r in rows}
+    # A: distinct non-null {1} -> 1; B: only NULL -> 0
+    assert got == {"A": 1, "B": 0}
+
+
 def test_approx_percentile_error_bound(spark, sf_dir):
     # r09: the GK rank guarantee is emitted BY the query
     # (driver-attested against a TRUE-literal oracle). r10: the

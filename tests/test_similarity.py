@@ -344,3 +344,18 @@ def test_axis_sign_bucket_rejects_composite_column(spark):
         ).alias("k")
     ).collect()[0]["k"]
     assert a == b
+
+
+def test_cosine_dim_mismatch_fails_loudly(spark):
+    """The expanded e0..e{dim-1} codegen dot would silently truncate
+    vectors LONGER than `dim`; the checkpointed per-vector frame
+    asserts size(v) == dim, so a mismatched dim argument fails at
+    materialization instead of returning silently different cosines."""
+    df = spark.createDataFrame(
+        [(i, [0.1 * (i + 1)] * 64) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    # 64-element vectors with dim=48 passes the portable bit-range
+    # check (48 axes read) but violates the fixed-dim dot contract.
+    with pytest.raises(Exception, match="expected dim=48"):
+        S.cosine_near_dup_pairs(df, portable=True, dim=48)

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Regenerate COVERAGE.md: every registered query mapped to its
-SURVEY.md §2 row / capability category, with oracle status and the
-first docstring line. Run from the repo root:
+SURVEY.md §2 row / capability category, with its first docstring
+line. Run from the repo root:
 
     python tools/coverage_map.py
 """
@@ -347,9 +347,9 @@ def survey_row_map(query_names: "set[str]") -> "dict[str, list[str]]":
 
 
 def main() -> None:
-    from ibd_pipeline_spark.queries import all_oracles, all_queries
+    from ibd_pipeline_spark.queries import all_queries
 
-    queries, oracles = all_queries(), all_oracles()
+    queries = all_queries()
     by_cat: dict[str, list[str]] = {}
     for name in sorted(queries):
         by_cat.setdefault(category(name), []).append(name)
@@ -359,9 +359,8 @@ def main() -> None:
         "",
         "Generated by `tools/coverage_map.py` — do not edit by hand.",
         "",
-        f"**{len(queries)} queries registered, {len(oracles)} DuckDB-oracle-checked** "
-        "(the rest are approximate/non-SQL ops with rows-only checks — "
-        "each docstring says why).",
+        f"**{len(queries)} queries registered, all {len(queries)} checked "
+        "against a DuckDB oracle.**",
         "",
         "Streaming runtime (true readStream/writeStream paths: update-mode "
         "windowed aggregation, session windows, dropDuplicatesWithinWatermark, "
@@ -392,15 +391,14 @@ def main() -> None:
     for cat in sorted(by_cat):
         lines.append(f"## {cat}")
         lines.append("")
-        lines.append("| query | oracle | survey row (§2.2) | what it covers |")
-        lines.append("|---|---|---|---|")
+        lines.append("| query | survey row (§2.2) | what it covers |")
+        lines.append("|---|---|---|")
         for name in by_cat[cat]:
             doc = (queries[name].__doc__ or "").strip().split("\n")[0].strip()
-            mark = "DuckDB" if name in oracles else "rows-only"
             row = q_to_row.get(name, "—")
             if len(row) > 60:
                 row = row[:57] + "…"
-            lines.append(f"| `{name}` | {mark} | {row} | {doc} |")
+            lines.append(f"| `{name}` | {row} | {doc} |")
         lines.append("")
 
     lines.append("## SURVEY §2.2 row → registry queries (mechanical map)")

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
-"""Optimization measurement harness (r15/r16).
+"""Optimization measurement harness.
 
 Times named queries (noop sink, N runs each, min reported) at
-$SPARK_GRAFT_SF_DIR and optionally dumps `explain("formatted")` to
-plans/<round>/<query>_<tag>.txt.
+$SPARK_GRAFT_SF_DIR with bench.py's timing core, and optionally dumps
+`explain("formatted")` to plans/<query>_<tag>.txt.
 
     python tools/opt_measure.py --tag before --runs 3 q1_pricing_summary ...
     python tools/opt_measure.py --top 40 --tag before    # slowest 40 per BENCH_COMMITTED
@@ -16,24 +16,21 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
-import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-PLANS = Path(__file__).resolve().parent.parent / "plans" / os.environ.get(
-    "SPARK_GRAFT_PLANS_ROUND", "r16"
-)
+from bench import SF_DIR, plan_text, time_noop, warm  # noqa: E402
+
+PLANS = REPO / "plans"
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
-    ap.add_argument("--tag", default=None, help="dump plans/<round>/<q>_<tag>.txt")
+    ap.add_argument("--tag", default=None, help="dump plans/<q>_<tag>.txt")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--top", type=int, default=0,
                     help="add the N slowest queries per BENCH_COMMITTED.json")
@@ -41,10 +38,9 @@ def main() -> None:
 
     names = list(args.names)
     if args.top:
-        committed = json.loads(
-            (Path(__file__).resolve().parent.parent / "BENCH_COMMITTED.json")
-            .read_text()
-        )["queries"]
+        committed = json.loads((REPO / "BENCH_COMMITTED.json").read_text())[
+            "queries"
+        ]
         ranked = sorted(committed, key=lambda n: -committed[n])
         for n in ranked[: args.top]:
             if n not in names:
@@ -53,17 +49,9 @@ def main() -> None:
     from ibd_pipeline_spark.queries import all_queries
     from ibd_pipeline_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="opt-measure",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-    )
+    spark = get_spark(app_name="opt-measure")
     registry = all_queries()
-
-    # Warm the JVM the same way bench.py does.
-    registry["q1_pricing_summary"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm(spark, registry)
 
     if args.tag:
         PLANS.mkdir(parents=True, exist_ok=True)
@@ -72,17 +60,11 @@ def main() -> None:
     for name in names:
         fn = registry[name]
         if args.tag:
-            df = fn(spark, SF_DIR)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+            (PLANS / f"{name}_{args.tag}.txt").write_text(
+                plan_text(fn(spark, SF_DIR))
             )
-            (PLANS / f"{name}_{args.tag}.txt").write_text(plan)
-        rs = []
-        for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"opt:{name}")
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            rs.append(round(time.perf_counter() - t0, 3))
+        spark.sparkContext.setJobDescription(f"opt:{name}")
+        rs = time_noop(lambda: fn(spark, SF_DIR), args.runs)
         timings[name] = min(rs)
         print(f"  {name}: {min(rs)} {rs}", file=sys.stderr)
     print(json.dumps(timings))

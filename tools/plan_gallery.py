@@ -15,6 +15,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import plan_text  # noqa: E402
+
 CURATED = {
     "analytics_skyline_pareto": "2-D skyline: distinct-revenue spine + "
     "block-stitched exclusive prefix max + one broadcast join back — no "
@@ -338,14 +340,15 @@ def features(plan: str) -> list[str]:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from ibd_pipeline_spark.queries import all_queries
-    from ibd_pipeline_spark.session import get_spark
+    from ibd_pipeline_spark.session import DEFAULT_CPUS, get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     qs = all_queries()
     lines = [
         "# PLANS — physical-plan gallery (generated by tools/plan_gallery.py)",
         "",
-        f"Formatted plans at `{sf_dir}`, local[8]/AQE. Regenerate after planner-",
+        f"Formatted plans at `{sf_dir}`, local[{DEFAULT_CPUS}]/AQE. "
+        "Regenerate after planner-",
         "relevant changes. Each entry: why this plan shape is the one that",
         "survives a 100 TB scale-up (see SCALE.md for the full argument).",
         "",
@@ -367,17 +370,13 @@ def main() -> None:
         "",
     ]
     for name, why in CURATED.items():
-        df = qs[name](spark, sf_dir)
-        formatted = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        plan_str = formatted
+        formatted = plan_text(qs[name](spark, sf_dir))
         lines += [
             f"## {name}",
             "",
             why,
             "",
-            "Extracted features: " + "; ".join(features(plan_str)),
+            "Extracted features: " + "; ".join(features(formatted)),
             "",
             "```",
             formatted.strip()[:6000],

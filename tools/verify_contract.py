@@ -90,7 +90,7 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("-")]
     run_all = "--all" in sys.argv[1:]
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
