@@ -483,14 +483,13 @@ def main() -> None:
                 tail_errors[name] = "rerun: " + repr(e)[:190]
         runs[name] = rs
         timings[name] = min(rs)
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "headline_query_wall_time",
         "value": total,  # headline subtotal: round-comparable
         "unit": "sec",
         "queries": timings,
         "runs": runs,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else SF_DIR,
+        "sf": _sf(),
         "n_queries": len(HEADLINE),
         "r01_subtotal": round(sum(timings[n] for n in HEADLINE_R01), 3),
         "n_tail": len(tail),
@@ -509,18 +508,13 @@ def main() -> None:
     # Alarm thresholds scale with the measured box load: ratio
     # tripwires multiply by load_factor, absolute floors likewise —
     # a quiet box keeps the committed thresholds exactly.
-    r01: dict = {}
-    vs: dict = {}
-    if R01_PATH.exists():
-        r01 = (
-            json.loads(R01_PATH.read_text()).get("parsed") or {}
-        ).get("queries", {})
-        vs = {
-            n: round(timings[n] / r01[n], 3)
-            for n in HEADLINE_R01
-            if n in r01 and r01[n] > 0
-        }
-        out["vs_r01"] = vs
+    r01 = _load_r01_timings()
+    vs = {
+        n: round(timings[n] / r01[n], 3)
+        for n in HEADLINE_R01
+        if n in r01 and r01[n] > 0
+    }
+    out["vs_r01"] = vs
     vs_prev: dict = {}
     if prev:
         vs_prev = {
@@ -606,11 +600,29 @@ FULL_PATH = Path(__file__).resolve().parent / "BENCH_FULL.json"
 COMMITTED_PATH = Path(__file__).resolve().parent / "BENCH_COMMITTED.json"
 
 
+def _sf() -> float | str:
+    """The scale factor SF_DIR names (`.../sf0.1` → 0.1), else SF_DIR."""
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    return float(sf) if sf.replace(".", "").isdigit() else SF_DIR
+
+
+def _load_r01_timings() -> dict[str, float]:
+    """BENCH_r01.json's per-query timings when it was run at this
+    scale factor, else none: a ratio across scale factors measures
+    the data volume, not the code."""
+    if not R01_PATH.exists():
+        return {}
+    r01 = json.loads(R01_PATH.read_text())
+    if r01.get("sf") != _sf():
+        return {}
+    return (r01.get("parsed") or {}).get("queries", {})
+
+
 def _load_prev_timings() -> dict[str, float]:
     """Previous-round per-query timings at this scale factor: the
     committed quiet-run reference (BENCH_COMMITTED.json) when present,
     else a leftover BENCH_FULL.json, else none."""
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    sf = _sf()
     for path in (COMMITTED_PATH, FULL_PATH):
         if not path.exists():
             continue
@@ -620,7 +632,7 @@ def _load_prev_timings() -> dict[str, float]:
             # Only comparable at the same scale factor: a record
             # left behind by an sf0.01 smoke run must not become the
             # baseline for an sf0.1 run (every ratio would inflate).
-            if q and str(full.get("sf")) == sf:
+            if q and full.get("sf") == sf:
                 return {k: float(v) for k, v in q.items()}
         except (ValueError, TypeError):
             pass

@@ -11,7 +11,8 @@ Reference behavior (Processing&Storing/spark_processor.py):
 Deliberate fixes over the reference (SURVEY.md §4 anti-patterns):
   * stddev coalesced to 0.0 — the reference sink crashes with
     float(None) on single-row windows (spark_processor.py:183);
-  * no collect() anywhere — sinks write per partition;
+  * no collect() of unbounded data — the sink's per-batch window
+    output is the one bounded driver-side write (streaming/sinks.py);
   * all transforms are source-agnostic: the same functions compose
     over a batch DataFrame (for oracle tests) or a streaming one.
 """

@@ -4,10 +4,14 @@ Network-free — the transport is injected (the same deterministic-twin
 pattern as tests/test_rest_feeder.py). The production default is the
 stdlib urllib POST in streaming/sinks.py:_urllib_transport; reference
 behavior being rebuilt: spark_processor.py:194-197 (driver-side
-write_api.write per point) → per-partition batched POSTs.
+write_api.write of Python-built points) → line protocol rendered in
+the JVM, collected once per batch and POSTed in chunks.
 """
 
 from __future__ import annotations
+
+import math
+import os
 
 import pytest
 
@@ -15,15 +19,17 @@ from ibd_pipeline_spark.streaming.sinks import InfluxHTTPConfig, http_line_write
 
 
 class FakeTransport:
-    """Records every POST; replies from a scripted status queue
-    (then 204s forever)."""
+    """Records every POST and the process it came from; replies from a
+    scripted status queue (then 204s forever)."""
 
     def __init__(self, statuses: list[int] | None = None):
         self.calls: list[tuple[str, dict, bytes]] = []
+        self.pids: list[int] = []
         self.statuses = list(statuses or [])
 
     def __call__(self, url: str, headers: dict, body: bytes) -> int:
         self.calls.append((url, dict(headers), body))
+        self.pids.append(os.getpid())
         return self.statuses.pop(0) if self.statuses else 204
 
 
@@ -93,45 +99,62 @@ def test_empty_partition_posts_nothing():
     assert t.calls == []
 
 
-def test_foreach_batch_wiring_with_http_writer(spark, tmp_path):
-    """End-to-end: foreachBatch handler → per-partition HTTP writer.
-    The fake transport spools each POST body to a shared directory
-    because foreachPartition runs in separate python worker processes
-    — an in-memory list would stay empty on the driver."""
-    import glob
-    import os
-    import uuid
-
-    from ibd_pipeline_spark.sources.weather_synth import synth_weather_json
+def _weather_handler(transport, batch_lines: int):
     from ibd_pipeline_spark.streaming.sinks import influx_foreach_batch
-    from ibd_pipeline_spark.streaming.weather import weather_pipeline
 
-    agg = weather_pipeline(synth_weather_json(spark, 600))
-    spool = str(tmp_path / "posts")
-    os.makedirs(spool, exist_ok=True)
-
-    def spooling_transport(url, headers, body):
-        with open(os.path.join(spool, uuid.uuid4().hex), "wb") as fh:
-            fh.write(body)
-        return 204
-
-    # NB: the closure must not reference test-module top-levels (_cfg,
-    # FakeTransport) — executor pickling resolves those by module
-    # import, and test modules aren't on the worker path. Instances
-    # and nested functions pickle by value.
     cfg = InfluxHTTPConfig(
-        url="http://influx.example:8086", org="o", bucket="b", batch_lines=100
+        url="http://influx.example:8086", org="o", bucket="b", batch_lines=batch_lines
     )
-    handler = influx_foreach_batch(
+    return influx_foreach_batch(
         "weather_metrics_5m",
         {"location": "Bucharest"},
         ["avg_temperature_c"],
-        lambda: http_line_writer(cfg, spooling_transport),
+        lambda: http_line_writer(cfg, transport),
     )
-    handler(agg, 0)
-    lines = []
-    for p in glob.glob(spool + "/*"):
-        lines += open(p, "rb").read().decode().splitlines()
-    assert lines and all(
+
+
+@pytest.fixture(scope="module")
+def weather_batch(spark):
+    """A weather aggregate materialized like a micro-batch's frame: its
+    collect() is one job with no exchange left to plan."""
+    from ibd_pipeline_spark.sources.weather_synth import synth_weather_json
+    from ibd_pipeline_spark.streaming.weather import weather_pipeline
+
+    return weather_pipeline(synth_weather_json(spark, 3000)).localCheckpoint()
+
+
+def test_foreach_batch_wiring_with_http_writer(weather_batch):
+    """End-to-end: foreachBatch handler → HTTP writer. The batch is
+    written from the driver, so an in-memory transport sees every POST,
+    all from this process, chunked to `batch_lines`."""
+    t = FakeTransport()
+    _weather_handler(t, batch_lines=4)(weather_batch, 0)
+    lines = [line for c in t.calls for line in c[2].decode().splitlines()]
+    assert len(lines) == weather_batch.count() > 4
+    assert all(
         line.startswith("weather_metrics_5m,location=Bucharest ") for line in lines
     )
+    assert t.pids and set(t.pids) == {os.getpid()}
+    assert len(t.calls) == math.ceil(len(lines) / 4)
+
+
+def test_foreach_batch_runs_one_job(spark, weather_batch):
+    t = FakeTransport()
+    handler = _weather_handler(t, batch_lines=100)
+    sc = spark.sparkContext
+    sc.setJobGroup("influx-sink", "one micro-batch through the sink")
+    try:
+        handler(weather_batch, 0)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("influx-sink")) == 1
+    assert len(t.calls) == 1
+
+
+def test_empty_batch_posts_nothing(weather_batch):
+    """The watermark's no-data batch reaches the handler as an empty
+    frame: nothing to write, so no POST."""
+    t = FakeTransport()
+    _weather_handler(t, batch_lines=100)(weather_batch.limit(0), 1)
+    assert t.calls == []

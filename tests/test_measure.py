@@ -38,3 +38,15 @@ def test_importing_the_harnesses_starts_no_job(spark, monkeypatch):
         for key in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(key, None)
     assert sc.statusTracker().getJobIdsForGroup("harness-import") == []
+
+
+def test_r01_timings_only_at_their_scale_factor(monkeypatch):
+    import bench
+
+    monkeypatch.setattr(bench, "SF_DIR", "/data/sf0.001")
+    assert bench._sf() == 0.001
+    assert bench._load_r01_timings() == {}
+    monkeypatch.setattr(bench, "SF_DIR", "/data/sf0.1/")
+    assert bench._sf() == 0.1
+    r01 = bench._load_r01_timings()
+    assert r01 and set(bench.HEADLINE_R01) <= set(r01)

@@ -171,7 +171,7 @@ def test_streaming_late_data_dropped(spark, tmp_path):
 
 
 def test_influx_line_protocol_sink(spark, tmp_path, raw_batch):
-    """foreachBatch → line-protocol partition writer (no collect());
+    """foreachBatch → line-protocol writer (one bounded collect());
     mirrors the reference sink fields (spark_processor.py:177-190)."""
     from ibd_pipeline_spark.streaming.sinks import (
         file_line_writer,
