@@ -18,29 +18,31 @@ ops:
      full-data shuffle. mid is nondeterministic-flagged, which pins
      the projection above the sort (Catalyst won't reorder it).
   3. `localCheckpoint(eager=True)` — materialize the ranged frame
-     EXACTLY ONCE. The (counts → offsets) aggregate and the join
-     probe below are two consumers of this subtree; without the
+     EXACTLY ONCE. The per-partition aggregate below and the row-level
+     projection are two consumers of this subtree; without the
      checkpoint they are two physical evaluations, and
      `repartitionByRange` re-samples its range boundaries per
      evaluation (the sampler seeds from the RDD lineage id), so the
      same row can land in different partitions in the two jobs and
-     `_off + (_mid - _mid0)` silently misaligns. Checkpointing pins
+     `offset + (_mid - _mid0)` silently misaligns. Checkpointing pins
      both consumers to the same physical rows — this also makes the
      operator safe over nondeterministic upstreams (sample(),
      rand-derived columns).
-  4. per-partition (count, min(mid)) — a P-row aggregate; prefix-sum
-     offsets via a window over the P-ROW frame (bounded by partition
-     count — the one empty-partition window here, over partition
-     metadata, never data; tests/test_plan_audit.py's registry-wide
-     unpartitioned-window invariant exempts it by the `_pid` grouping
-     in its subtree).
-  5. broadcast the P-row offset frame back: global rn = offset +
-     within-partition index + 1.
+  4. per-partition (count, min(mid)) — a ≤ P-row aggregate (one row
+     per non-empty partition, bounded by the partition count, never
+     by data), `collect()`ed to the driver, where the running offsets
+     are summed in partition-id order.
+  5. one row-local projection: the offsets go back as an array
+     literal indexed by partition id, `element_at(array(…), _pid + 1)`,
+     and global rn = `_mid` + that partition's (offset − min(mid) + 1).
+     No join, no broadcast exchange, no window.
 
 Cost: one range shuffle of the data (what any global ordering costs)
-materialized once to executor-local storage, one P-row shuffle, one
-broadcast. Nothing ever lands on a single task. NTILE / PERCENT_RANK / CUME_DIST are then pure row-level
-formulas of (rn, n).
+materialized once to executor-local storage, and one collected ≤ P-row
+aggregate. Nothing ever lands on a single task. NTILE /
+PERCENT_RANK / CUME_DIST are then pure row-level formulas of (rn, n).
+The grouped variants broadcast-join their offsets instead: that frame
+has ≤ P × groups rows, which no partition count bounds.
 
 REQUIRES the order columns to be a total order (append a unique
 tiebreaker): ties that straddle a range-partition boundary would
@@ -50,8 +52,45 @@ functions themselves are only well-defined up to ties.
 
 from __future__ import annotations
 
+from decimal import localcontext
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
+
+from ibd_pipeline_spark.sqltext import element_at_bank, literal
+
+
+def _partition_offsets(ranged: DataFrame, aggs: "list[Column]") -> dict:
+    """Collect the per-`_pid` aggregates `aggs` of a checkpointed ranged
+    frame (≤ P rows, one per non-empty partition: the bound the old
+    broadcast offset frame had) and fold them on the driver in `_pid`
+    order. Returns {alias: (dtype, per_pid, offsets, total)}, lists
+    indexed by `_pid` (None for an empty partition): offsets[p] is the
+    SUM of the aggregates before p (0 before any; NULLs skipped, so
+    DOUBLE offsets are the running float sum in `_pid` order), total
+    the SUM of all (NULL only if every one is NULL). DECIMAL sums run
+    in an 80-digit context, so they stay exact."""
+    t = ranged.groupBy("_pid").agg(*aggs)
+    rows = {r["_pid"]: r for r in t.collect()}
+    out = {}
+    with localcontext() as ctx:
+        ctx.prec = 80
+        for f in t.schema.fields[1:]:
+            per_pid = [
+                rows[p][f.name] if p in rows else None
+                for p in range(max(rows, default=-1) + 1)
+            ]
+            offsets, acc = [], None
+            for v in per_pid:
+                offsets.append(0 if acc is None else acc)
+                if v is not None:
+                    acc = v if acc is None else acc + v
+            out[f.name] = (f.dataType.simpleString(), per_pid, offsets, acc)
+    return out
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def with_global_row_number(
@@ -62,8 +101,10 @@ def with_global_row_number(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """df + 1-based global row number (`rn_col`) and total row count
-    (`total_col`) under the total order `order_cols`. See module
-    docstring for the plan shape; exact for n < 2⁵³."""
+    (`total_col`) under the total order `order_cols`. Module steps
+    1-5: `rn_col` = `_mid` + (offset − min(mid) + 1) of the row's
+    partition, looked up by `_pid` in an array literal; `total_col` is
+    a BIGINT literal. Exact for n < 2⁵³."""
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     # No explicit partition count unless the caller pins one: AQE then
     # sizes the range exchange from the data (coalescing tiny frames
@@ -76,35 +117,17 @@ def with_global_row_number(
         .sortWithinPartitions(*cols)
         .withColumn("_mid", F.monotonically_increasing_id())
         .withColumn("_pid", F.spark_partition_id())
-        # Materialize ONCE before branching: the counts aggregate and
-        # the join probe must read the SAME physical rows —
-        # repartitionByRange re-samples boundaries per evaluation, so
-        # two evaluations of this subtree can disagree on which
-        # partition (hence which _mid/_pid) a row gets.
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # single evaluation: module step 3
     )
-    counts = ranged.groupBy("_pid").agg(
-        F.count(F.lit(1)).alias("_cnt"), F.min("_mid").alias("_mid0")
+    agg = _partition_offsets(
+        ranged, [F.count(F.lit(1)).alias("cnt"), F.min("_mid").alias("mid0")]
     )
-    # P-row frame: the empty-partition windows below run over
-    # partition METADATA (≤ one row per shuffle partition), the
-    # bounded case the module docstring allows.
-    w_prefix = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = counts.select(
-        "_pid",
-        "_mid0",
-        F.coalesce(F.sum("_cnt").over(w_prefix), F.lit(0)).alias("_off"),
-        F.sum("_cnt").over(w_all).alias(total_col),
-    )
-    return (
-        ranged.join(F.broadcast(offsets), "_pid")
-        .withColumn(
-            rn_col, F.col("_off") + (F.col("_mid") - F.col("_mid0")) + F.lit(1)
-        )
-        .drop("_pid", "_mid", "_off", "_mid0")
+    _, _, offsets, n = agg["cnt"]
+    base = [0 if m is None else o - m + 1 for o, m in zip(offsets, agg["mid0"][1])]
+    return ranged.selectExpr(
+        *map(_quoted, ranged.columns[:-2]),
+        f"{literal(n or 0, 'bigint')} AS {_quoted(total_col)}",
+        f"_mid + {element_at_bank(base, 'bigint', '_pid + 1')} AS {_quoted(rn_col)}",
     )
 
 
@@ -229,7 +252,7 @@ def with_grouped_prefix_sum(
     Arrow batches: a narrow transformation, so no further exchange
     and partition order is preserved. Per-(partition, group) weight
     totals (≤ P × groups rows) prefix-sum into offsets exactly as
-    the row-number variant, broadcast back, and
+    in with_grouped_row_number, broadcast back, and
     cum = offset + within-partition running sum.
 
     EXACTNESS: pass an integer (or exact-decimal-scaled-to-integer)
@@ -335,10 +358,12 @@ def with_global_prefix_sums(
     exchange on order_cols (partition-id order == global order), sort
     within partitions, materialize once (single-evaluation guarantee
     — see module doc), a narrow mapInPandas cumulative sum with one
-    scalar carry per weight, then P-row per-partition totals
-    prefix-summed into offsets (the one empty-spec window here runs
-    over partition METADATA, ≤ P rows — exempted by the plan audit's
-    `_pid` rule) and broadcast back.
+    scalar carry per weight. The ≤ P per-partition totals are
+    collected and prefix-summed on the driver in `_pid` order (module
+    steps 4-5), and one projection adds them back row-locally:
+    ``_cum_<w> = _cin_<w> + element_at(array(<offsets>), _pid + 1)``,
+    ``_tot_<w>`` a literal typed like SUM(w) (BIGINT, DOUBLE or
+    DECIMAL). No join, no window, no second exchange.
 
     NULL weights count as 0 (same contract as with_grouped_prefix_sum).
     Integer weights make the running totals order-independent and
@@ -377,32 +402,13 @@ def with_global_prefix_sums(
             yield out
 
     scanned = ranged.mapInPandas(cumsum, schema=out_schema)
-    totals = ranged.groupBy("_pid").agg(
-        *[F.sum(w).alias(f"_wsum_{w}") for w in weight_cols]
-    )
-    w_prefix = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = totals.select(
-        "_pid",
+    agg = _partition_offsets(ranged, [F.sum(w).alias(w) for w in weight_cols])
+    return scanned.selectExpr(
+        *map(_quoted, ranged.columns[:-1]),
+        *[f"{literal(agg[w][3], agg[w][0])} AS `_tot_{w}`" for w in weight_cols],
         *[
-            F.coalesce(F.sum(f"_wsum_{w}").over(w_prefix), F.lit(0)).alias(
-                f"_off_{w}"
-            )
+            f"`_cin_{w}` + {element_at_bank(agg[w][2], agg[w][0], '_pid + 1')}"
+            f" AS `_cum_{w}`"
             for w in weight_cols
         ],
-        *[
-            F.sum(f"_wsum_{w}").over(w_all).alias(f"_tot_{w}")
-            for w in weight_cols
-        ],
-    )
-    out = scanned.join(F.broadcast(offsets), "_pid")
-    for w in weight_cols:
-        out = out.withColumn(
-            f"_cum_{w}", F.col(f"_off_{w}") + F.col(f"_cin_{w}")
-        )
-    return out.drop(
-        "_pid", *[f"_cin_{w}" for w in weight_cols],
-        *[f"_off_{w}" for w in weight_cols],
     )

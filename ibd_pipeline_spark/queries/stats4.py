@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ibd_pipeline_spark.catalog import load
 from ibd_pipeline_spark.queries import query
 from ibd_pipeline_spark.queries.statcommon import _phi_tail_col, _phi_tail_sql
+from ibd_pipeline_spark.sqltext import sum_chain
 
 # ---------------------------------------------------------------------------
 # Cochran's Q: k=3 binary repeated measures (did the user view/click/
@@ -339,97 +340,80 @@ def stats_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF but the mirrored-order IEEE contract is what the hash pins).
 
     Scale: the distinct-value frame + one range-exchange prefix scan
-    (with_global_prefix_sums, two weights = one shuffle) — the same
-    de-serialized ECDF spine as KS/MWU/Spearman; group count k is a
-    constant (3), so the pairwise fold is 3 expressions, not a join.
+    (with_global_prefix_sums, two weights = one shuffle, its offsets
+    summed on the driver) — the same de-serialized ECDF spine as
+    KS/MWU/Spearman; group count k is a constant (3), so the pairwise
+    fold is 3 expressions, not a join. Every stage is Spark SQL text
+    (`selectExpr`), staged filter → per-value aggregate → scan →
+    aggregate → moments → variance → z → p, so building it costs a
+    few dozen gateway calls and each stage's value (z above all) is
+    computed once, not inlined into every later use.
     """
     from ibd_pipeline_spark.operators.ranking import with_global_prefix_sums
 
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "click", "purchase")
-        & F.col("value").isNotNull()
-    )
-    s = ev.select(
-        F.col("value").alias("v"),
-        F.when(F.col("event_type") == "view", 1)
-        .when(F.col("event_type") == "click", 2)
-        .otherwise(3)
-        .alias("g"),
-    )
-    pv = s.groupBy("v").agg(
-        F.sum(F.when(F.col("g") == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("c1"),
-        F.sum(F.when(F.col("g") == 2, 1).otherwise(0))
-        .cast("bigint")
-        .alias("c2"),
-        F.sum(F.when(F.col("g") == 3, 1).otherwise(0))
-        .cast("bigint")
-        .alias("c3"),
-        F.count(F.lit(1)).cast("bigint").alias("t"),
-    )
-    cum = with_global_prefix_sums(pv, ["v"], ["c1", "c2"])
-    m1, m2 = F.col("_cum_c1"), F.col("_cum_c2")
-    agg = cum.agg(
-        F.sum("c1").cast("bigint").alias("n1"),
-        F.sum("c2").cast("bigint").alias("n2"),
-        F.sum("c3").cast("bigint").alias("n3"),
-        F.sum(
-            2 * F.col("c2") * (m1 - F.col("c1"))
-            + F.col("c1") * F.col("c2")
-            + 2 * F.col("c3") * (m1 - F.col("c1"))
-            + F.col("c1") * F.col("c3")
-            + 2 * F.col("c3") * (m2 - F.col("c2"))
-            + F.col("c2") * F.col("c3")
+    pv = (
+        load(spark, sf_dir, "events")
+        .filter(
+            "event_type IN ('view', 'click', 'purchase') AND value IS NOT NULL"
         )
-        .cast("bigint")
-        .alias("jt_x2"),
-        F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5))
-        .cast("bigint")
-        .alias("tie_a"),
-        F.sum(F.col("t") * (F.col("t") - 1) * (F.col("t") - 2))
-        .cast("bigint")
-        .alias("tie_b"),
-        F.sum(F.col("t") * (F.col("t") - 1)).cast("bigint").alias("tie_c"),
+        .groupBy(F.col("value").alias("v"))
+        .agg(
+            *[
+                F.expr(
+                    f"CAST(SUM(CASE WHEN event_type = '{e}' THEN 1 ELSE 0 END)"
+                    f" AS BIGINT) AS c{i}"
+                )
+                for i, e in enumerate(("view", "click", "purchase"), 1)
+            ],
+            F.expr("CAST(COUNT(1) AS BIGINT) AS t"),
+        )
     )
-
-    nn = F.col("n1") + F.col("n2") + F.col("n3")
-    sn2 = (
-        F.col("n1") * F.col("n1")
-        + F.col("n2") * F.col("n2")
-        + F.col("n3") * F.col("n3")
+    # 2·U_ij per value: 2·c_j·(cum_i − c_i) + c_i·c_j over i < j.
+    pairs = [(1, 2, "_cum_c1"), (1, 3, "_cum_c1"), (2, 3, "_cum_c2")]
+    jt_x2 = sum_chain(
+        f"2 * c{j} * ({m} - c{i}) + c{i} * c{j}" for i, j, m in pairs
     )
-    ga = sum(
-        F.col(c).cast("double") * (F.col(c) - 1) * (2 * F.col(c) + 5)
-        for c in ("n1", "n2", "n3")
-    )
-    gb = sum(
-        F.col(c).cast("double") * (F.col(c) - 1) * (F.col(c) - 2)
-        for c in ("n1", "n2", "n3")
-    )
-    gc = sum(
-        F.col(c).cast("double") * (F.col(c) - 1) for c in ("n1", "n2", "n3")
-    )
-    nnd = nn.cast("double")
-    var_jt = (
-        (nnd * (nn - 1) * (2 * nn + 5) - ga - F.col("tie_a").cast("double"))
-        / F.lit(72.0)
-        + gb
-        * F.col("tie_b").cast("double")
-        / (F.lit(36.0) * nnd * (nn - 1) * (nn - 2))
-        + gc * F.col("tie_c").cast("double") / (F.lit(8.0) * nnd * (nn - 1))
-    )
-    num_x2 = (F.col("jt_x2") - (nn * nn - sn2) / F.lit(2)).cast("double")
-    z = num_x2 / (F.lit(2.0) * F.sqrt(var_jt))
-    return agg.select(
-        "n1",
-        "n2",
-        "n3",
-        "jt_x2",
-        F.round(z, 6).alias("z_stat"),
-        F.round(
-            F.least(F.lit(1.0), 2.0 * _phi_tail_col(F.abs(z))), 8
-        ).alias("p_value"),
+    ns = ("n1", "n2", "n3")
+    return (
+        with_global_prefix_sums(pv, ["v"], ["c1", "c2"])
+        .selectExpr(
+            *[f"CAST(SUM(c{i}) AS BIGINT) AS n{i}" for i in (1, 2, 3)],
+            f"CAST(SUM({jt_x2}) AS BIGINT) AS jt_x2",
+            "CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_a",
+            "CAST(SUM(t * (t - 1) * (t - 2)) AS BIGINT) AS tie_b",
+            "CAST(SUM(t * (t - 1)) AS BIGINT) AS tie_c",
+        )
+        .selectExpr(
+            "n1", "n2", "n3", "jt_x2",
+            "n1 + n2 + n3 AS nn",
+            "n1 * n1 + n2 * n2 + n3 * n3 AS sn2",
+            sum_chain(
+                f"CAST({n} AS DOUBLE) * ({n} - 1) * (2 * {n} + 5)" for n in ns
+            ) + " AS ga",
+            sum_chain(
+                f"CAST({n} AS DOUBLE) * ({n} - 1) * ({n} - 2)" for n in ns
+            ) + " AS gb",
+            sum_chain(f"CAST({n} AS DOUBLE) * ({n} - 1)" for n in ns) + " AS gc",
+            "CAST(tie_a AS DOUBLE) AS ta",
+            "CAST(tie_b AS DOUBLE) AS tb",
+            "CAST(tie_c AS DOUBLE) AS tc",
+        )
+        .selectExpr(
+            "n1", "n2", "n3", "jt_x2",
+            "(CAST(nn AS DOUBLE) * (nn - 1) * (2 * nn + 5) - ga - ta) / 72.0D"
+            " + gb * tb / (36.0D * CAST(nn AS DOUBLE) * (nn - 1) * (nn - 2))"
+            " + gc * tc / (8.0D * CAST(nn AS DOUBLE) * (nn - 1)) AS var_jt",
+            "CAST(jt_x2 - (nn * nn - sn2) / 2 AS DOUBLE) AS num_x2",
+        )
+        .selectExpr(
+            "n1", "n2", "n3", "jt_x2",
+            "num_x2 / (2.0D * sqrt(var_jt)) AS z",
+        )
+        .selectExpr(
+            "n1", "n2", "n3", "jt_x2",
+            "ROUND(z, 6) AS z_stat",
+            f"ROUND(LEAST(1.0D, 2.0D * {_phi_tail_sql('abs(z)')}), 8) AS p_value",
+        )
     )
 
 

@@ -27,6 +27,15 @@ DEFAULT_CPUS = int(
 )
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """75 % of the box's MemTotal in whole GiB, at least 1g: the
+    remaining quarter is for what lives outside the heap (the JVM's
+    code cache and metaspace, the Arrow Python workers, the OS)."""
+    with open(meminfo) as fh:
+        kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{max(1, kib * 3 // 4 // 2**20)}g"
+
+
 def get_spark(
     app_name: str = "ibd-pipeline-spark",
     master: str | None = None,
@@ -45,10 +54,14 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # Local mode runs every executor thread in the driver JVM —
-        # size the heap for the core count (the 1 GiB default OOMs a
-        # 32-thread shuffle). Ignored if a JVM already exists.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # Local mode runs every executor thread in the driver JVM, so
+        # the 1 GiB default is too small; a heap larger than the box
+        # gets the JVM OOM-killed. SPARK_GRAFT_DRIVER_MEM overrides.
+        # Ignored if a JVM already exists.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # Whole-stage codegen emits one class per stage; a workload
         # that plans many distinct queries (bench, test suite) fills
         # the default 240 MB JIT code cache, after which HotSpot

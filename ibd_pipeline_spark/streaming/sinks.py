@@ -262,10 +262,10 @@ def influx_foreach_batch(
     tags: dict[str, str],
     field_cols: list[str],
     writer_factory: Callable[[], Callable[[int, Iterable[str]], None]],
-    time_col: str = "window_end",
 ):
     """Build a foreachBatch function that renders a micro-batch of a
-    windowed aggregate as line protocol and writes it from the driver:
+    windowed aggregate as line protocol, each point timestamped with
+    its window's end, and writes it from the driver:
     one collect() job, then one `writer_factory()` writer called with
     partition id 0.
 

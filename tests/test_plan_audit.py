@@ -11,14 +11,11 @@ Three invariants across the entire inventory:
     partitioned cartesian shuffle;
   * no unpartitioned Window over data-sized input — an empty
     partition spec serializes the whole frame onto ONE task (Spark's
-    own `WindowExec: No Partition Defined` warning). Exemptions:
-      - the partition-METADATA prefix-sum inside
-        operators/ranking.py (recognized by its `_pid` grouping —
-        the frame is ≤ one row per shuffle partition (× group),
-        never data);
-      - queries in ALLOWED_UNPARTITIONED_WINDOW, each with a stated
-        bound on the frame the window actually sees. Data-sized
-        global ordering belongs on operators/ranking.py instead.
+    own `WindowExec: No Partition Defined` warning). The only
+    exemptions are the queries in ALLOWED_UNPARTITIONED_WINDOW, each
+    with a stated bound on the frame the window actually sees.
+    Data-sized global ordering belongs on operators/ranking.py, whose
+    global kernels run no window at all.
 """
 
 from __future__ import annotations
@@ -80,9 +77,7 @@ def _walk(jnode):
 
 
 def _unpartitioned_windows(df):
-    """Logical-plan Window nodes with an empty partitionSpec, minus
-    the ranking.py partition-metadata frame (grouping on `_pid` over
-    a checkpointed LogicalRDD)."""
+    """Logical-plan Window nodes with an empty partitionSpec."""
     lp = df._jdf.queryExecution().optimizedPlan()
     out = []
     for n in _walk(lp):
@@ -90,8 +85,6 @@ def _unpartitioned_windows(df):
             continue
         if not n.partitionSpec().isEmpty():
             continue
-        if "_pid#" in n.child().toString():
-            continue  # operators/ranking.py offsets frame: ≤ P rows
         out.append(n.toString().splitlines()[0])
     return out
 

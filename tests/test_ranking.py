@@ -369,3 +369,153 @@ def test_grouped_prefix_sum_null_weight_counts_as_zero(spark):
         ("g1", 1): 3.0, ("g1", 2): 3.0, ("g1", 3): 7.0,
         ("g2", 1): 0.0, ("g2", 2): 2.0,
     }
+
+
+# -- global kernels: driver-side partition offsets ---------------------------
+
+
+def _clock_keyed(spark, n):
+    """n rows keyed by a nondeterministic clock UDF. The range
+    exchange samples its bounds in a job before the shuffle evaluates
+    the keys again, so every shuffled key is later than every bound:
+    all rows land in the LAST range partition and the others are
+    empty (the kernels' checkpoint then pins the shuffled values)."""
+    import time
+
+    clock = F.udf(lambda _: time.monotonic_ns(), "bigint").asNondeterministic()
+    return spark.range(0, n, 1, 2).select(
+        clock("id").alias("o"),
+        "id",
+        F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id") % 7).alias("w"),
+    )
+
+
+def _shuffled_frame(spark, n):
+    return spark.range(0, n, 1, 3).select(
+        ((F.col("id") * 37) % n).alias("o"),
+        "id",
+        F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id") % 7).alias("w"),
+    )
+
+
+@pytest.mark.parametrize("make", [_shuffled_frame, _clock_keyed])
+def test_global_kernels_match_sql_window_with_forced_partitions(spark, make):
+    """Both global kernels at num_partitions=4 equal SQL SUM / ROW_NUMBER
+    / COUNT ... OVER (ORDER BY o, id), evaluated over the kernel's own
+    output rows, including when three of the four range partitions are
+    empty (the offsets bank must index by `_pid`, not by rank)."""
+    from ibd_pipeline_spark.operators.ranking import with_global_prefix_sums
+
+    df = make(spark, 400)
+    if make is _clock_keyed:
+        sizes = df.repartitionByRange(4, "o", "id").rdd.glom().map(len).collect()
+        assert sizes.count(0) == 3, sizes
+    ps = with_global_prefix_sums(df, ["o", "id"], ["w"], num_partitions=4)
+    rn = with_global_row_number(df, ["o", "id"], num_partitions=4)
+    bad_ps = ps.selectExpr(
+        "_cum_w",
+        "_tot_w",
+        "SUM(COALESCE(w, 0)) OVER (ORDER BY o, id) AS ref_cum",
+        "SUM(w) OVER () AS ref_tot",
+    ).filter("_cum_w <> ref_cum OR _tot_w <> ref_tot")
+    bad_rn = rn.selectExpr(
+        "_rn",
+        "_n",
+        "ROW_NUMBER() OVER (ORDER BY o, id) AS ref_rn",
+        "COUNT(1) OVER () AS ref_n",
+    ).filter("_rn <> ref_rn OR _n <> ref_n")
+    assert bad_ps.count() == 0 and bad_rn.count() == 0
+    assert ps.count() == rn.count() == 400
+
+
+def test_global_prefix_sums_null_partition_and_null_column(spark):
+    """NULL weights count as 0 in `_cum_*`; a range partition whose
+    weights are all NULL adds nothing to the later offsets; `_tot_*` is
+    SQL SUM, so an all-NULL weight column totals NULL."""
+    from ibd_pipeline_spark.operators.ranking import with_global_prefix_sums
+
+    w = [1, 2, None, None, 3, None, 4, None]
+    df = spark.createDataFrame(
+        [(o, v, None) for o, v in enumerate(w)], "o int, w bigint, z bigint"
+    )
+    got = with_global_prefix_sums(df, ["o"], ["w", "z"], num_partitions=4)
+    rows = sorted(got.collect())
+    assert [r["_cum_w"] for r in rows] == [1, 3, 3, 3, 6, 6, 10, 10]
+    assert {r["_tot_w"] for r in rows} == {10}
+    assert [r["_cum_z"] for r in rows] == [0] * 8
+    assert {r["_tot_z"] for r in rows} == {None}
+
+
+def test_global_prefix_sums_double_offsets_are_running_float_sum(spark):
+    """DOUBLE weights: each partition's offset is Python's running float
+    sum of the partition totals in `_pid` order, and `_cum` adds the
+    sequential within-partition running sum to it. The weights span 15
+    orders of magnitude, so a different summation order shows."""
+    import itertools
+    import random
+
+    from ibd_pipeline_spark.operators.ranking import with_global_prefix_sums
+
+    rng = random.Random(7)
+    ws = [rng.uniform(-1, 1) * 10.0 ** rng.randint(-3, 12) for _ in range(40)]
+    df = spark.createDataFrame(list(enumerate(ws)), "o int, w double").coalesce(1)
+    # 40 rows in one input partition: the range sampler sees every row,
+    # so the bounds (and each row's partition) are reproducible here.
+    pid = {
+        r["o"]: r["p"]
+        for r in df.repartitionByRange(4, "o")
+        .select("o", F.spark_partition_id().alias("p"))
+        .collect()
+    }
+    assert sorted(set(pid.values())) == [0, 1, 2, 3]
+    parts = [[w for o, w in enumerate(ws) if pid[o] == p] for p in range(4)]
+    offsets = [0.0] + list(itertools.accumulate(sum(p) for p in parts))
+    expected = {}
+    for p, part in enumerate(parts):
+        for i, c in enumerate(itertools.accumulate(part)):
+            expected[i + sum(len(q) for q in parts[:p])] = offsets[p] + c
+    got = with_global_prefix_sums(df, ["o"], ["w"], num_partitions=4).collect()
+    assert {r["o"]: r["_cum_w"] for r in got} == expected
+    assert {r["_tot_w"] for r in got} == {offsets[4]}
+
+
+def test_global_kernel_plans_have_no_join_or_window(spark):
+    """The offsets return as literals: neither global kernel's plan
+    carries a broadcast join or a window over `_pid`."""
+    from ibd_pipeline_spark.operators.ranking import with_global_prefix_sums
+
+    df = _shuffled_frame(spark, 200)
+    for out in (
+        with_global_prefix_sums(df, ["o", "id"], ["w"]),
+        with_global_row_number(df, ["o", "id"]),
+    ):
+        qe = out._jdf.queryExecution()
+        physical = qe.executedPlan().toString()
+        logical = qe.optimizedPlan().toString()
+        assert "BroadcastHashJoin" not in physical, physical
+        assert "Window" not in logical and "Join" not in logical, logical
+
+
+def test_jonckheere_terpstra_builds_in_few_gateway_commands(
+    spark, sf_dir, monkeypatch
+):
+    """stats_jonckheere_terpstra is SQL text: building it (the eager
+    checkpoint and offsets collect included) sends fewer than 400 py4j
+    commands; the Column-tree build sent about 3,400."""
+    import py4j.clientserver as cs
+
+    from ibd_pipeline_spark.queries import all_queries
+
+    build = all_queries()["stats_jonckheere_terpstra"]
+    orig = cs.ClientServerConnection.send_command
+    sent = []
+
+    def send_command(conn, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):  # object-release notices
+            sent.append(command)
+        return orig(conn, command, *args, **kwargs)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", send_command)
+    build(spark, sf_dir)
+    monkeypatch.undo()
+    assert len(sent) < 400, len(sent)
