@@ -57,7 +57,7 @@ from decimal import localcontext
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from ibd_pipeline_spark.sqltext import element_at_bank, literal
+from ibd_pipeline_spark.sqltext import element_at_bank, ident, literal
 
 
 def _partition_offsets(ranged: DataFrame, aggs: "list[Column]") -> dict:
@@ -87,10 +87,6 @@ def _partition_offsets(ranged: DataFrame, aggs: "list[Column]") -> dict:
                     acc = v if acc is None else acc + v
             out[f.name] = (f.dataType.simpleString(), per_pid, offsets, acc)
     return out
-
-
-def _quoted(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
 
 
 def with_global_row_number(
@@ -125,9 +121,9 @@ def with_global_row_number(
     _, _, offsets, n = agg["cnt"]
     base = [0 if m is None else o - m + 1 for o, m in zip(offsets, agg["mid0"][1])]
     return ranged.selectExpr(
-        *map(_quoted, ranged.columns[:-2]),
-        f"{literal(n or 0, 'bigint')} AS {_quoted(total_col)}",
-        f"_mid + {element_at_bank(base, 'bigint', '_pid + 1')} AS {_quoted(rn_col)}",
+        *map(ident, ranged.columns[:-2]),
+        f"{literal(n or 0, 'bigint')} AS {ident(total_col)}",
+        f"_mid + {element_at_bank(base, 'bigint', '_pid + 1')} AS {ident(rn_col)}",
     )
 
 
@@ -404,11 +400,14 @@ def with_global_prefix_sums(
     scanned = ranged.mapInPandas(cumsum, schema=out_schema)
     agg = _partition_offsets(ranged, [F.sum(w).alias(w) for w in weight_cols])
     return scanned.selectExpr(
-        *map(_quoted, ranged.columns[:-1]),
-        *[f"{literal(agg[w][3], agg[w][0])} AS `_tot_{w}`" for w in weight_cols],
+        *map(ident, ranged.columns[:-1]),
         *[
-            f"`_cin_{w}` + {element_at_bank(agg[w][2], agg[w][0], '_pid + 1')}"
-            f" AS `_cum_{w}`"
+            f"{literal(agg[w][3], agg[w][0])} AS {ident('_tot_' + w)}"
+            for w in weight_cols
+        ],
+        *[
+            f"{ident('_cin_' + w)} + {element_at_bank(agg[w][2], agg[w][0], '_pid + 1')}"
+            f" AS {ident('_cum_' + w)}"
             for w in weight_cols
         ],
     )

@@ -12,6 +12,10 @@ stream. Here every config is chosen for the two regimes we run in:
     (coalescing, skew-join splitting), so the static shuffle number is
     only an upper bound for the pre-AQE plan. Callers on a cluster
     should pass ``shuffle_partitions`` ≈ 2-3× total executor cores.
+
+Two choices depend on the master: the master URL itself, and, for a
+``local`` master, the streaming checkpoint file manager (see
+``get_spark``).
 """
 
 from __future__ import annotations
@@ -44,12 +48,31 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-sane defaults.
 
-    Every option below is also correct on a 1000-executor cluster; the
-    only local-mode-specific choice is the master URL.
+    Every option below is also correct on a 1000-executor cluster,
+    except the master URL and the checkpoint file manager, which only
+    a ``local`` master gets.
     """
     cpus = DEFAULT_CPUS
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
+    conf = dict(extra_conf or {})
+    if master == "local" or master.startswith("local["):
+        # Spark's default checkpoint manager renames every offset-log,
+        # commit-log, state .delta/.crc and metadata file through
+        # FileContext's rename(src, dst, Options.Rename), and on the
+        # local file system that call resolves each path with a forked
+        # `readlink`: 184 processes per 3-batch drain of the weather
+        # stream (JFR jdk.ProcessStart), of 242 forks in all. The
+        # FileSystem-based manager checks the target and then renames
+        # with one rename(2), forking nothing; on a local disk the
+        # FileContext path is check-then-rename too, so no guarantee is
+        # lost. Cluster masters keep the default: there HDFS's atomic
+        # no-overwrite rename is what Spark relies on.
+        conf.setdefault(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -102,7 +125,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -15,6 +15,21 @@ from collections.abc import Iterable
 from decimal import Decimal
 
 
+def string_literal(text: str) -> str:
+    """`text` as a quoted Spark SQL string literal. Spark's parser reads
+    ``\\`` as an escape inside quotes (unless
+    ``spark.sql.parser.escapedStringLiterals`` is set), so backslashes
+    are doubled before quotes are escaped; every other character,
+    non-ASCII included, stands for itself."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def ident(name: str) -> str:
+    """`name` as one backtick-quoted identifier (embedded backticks
+    doubled): dots, spaces and keywords stay part of the name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def sum_chain(terms: Iterable[str]) -> str:
     """Left-associative ``(t1) + (t2) + …``: the evaluation order of
     folding the terms with ``+`` one at a time, which is what a
@@ -39,7 +54,7 @@ def literal(value, dtype: str) -> str:
         v = float(value)
         return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
     text = format(value, "f") if isinstance(value, Decimal) else str(value)
-    return f"CAST('{text}' AS {dtype})"
+    return f"CAST({string_literal(text)} AS {dtype})"
 
 
 def element_at_bank(values: list, dtype: str, index_sql: str) -> str:

@@ -125,7 +125,7 @@ def file_json_source(
     reader = spark.readStream.format("text")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(directory).withColumnRenamed("value", "value")
+    return reader.load(directory)
 
 
 def run_weather_query(

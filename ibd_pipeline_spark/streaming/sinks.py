@@ -5,12 +5,13 @@ writes InfluxDB points one HTTP client call per batch
 (spark_processor.py:167-197), building each point in Python.
 
 InfluxDB itself isn't in this container, so the Influx adapter
-formats line protocol (the public wire format) in JVM column
-expressions and hands a batch's lines to a writer callback —
-file-backed by default, chunked HTTP POSTs in production. A windowed
-aggregate's micro-batch output is bounded by the windows the batch
-touched, not by the input rate, so the adapter writes it from the
-driver in one job; the Kafka sink below writes from the executors.
+formats line protocol (the public wire format) in one Spark SQL
+expression, built once per handler, and hands a batch's lines to a
+writer callback — file-backed by default, chunked HTTP POSTs in
+production. A windowed aggregate's micro-batch output is bounded by
+the windows the batch touched, not by the input rate, so the adapter
+writes it from the driver in one job; the Kafka sink below writes
+from the executors.
 """
 
 from __future__ import annotations
@@ -21,7 +22,40 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+
+from ibd_pipeline_spark.sqltext import ident, string_literal
+
+
+def _lp_escape(text: str, specials: str) -> str:
+    """Backslash-escape each of `specials` in a line-protocol name."""
+    for ch in specials:
+        text = text.replace(ch, "\\" + ch)
+    return text
+
+
+def line_protocol_sql(
+    measurement: str, tags: dict[str, str], field_cols: list[str], time_sql: str
+) -> str:
+    """One Spark SQL expression rendering a row as an InfluxDB line
+    protocol point: measurement, tags, the `field_cols` as doubles, and
+    `time_sql` (an expression castable to timestamp) as an epoch-ns
+    timestamp — the shape the reference writes via Point()
+    (spark_processor.py:177-190).
+
+    The constant parts are escaped here, as the line protocol requires:
+    `,` and space in the measurement; `,`, `=` and space in tag keys,
+    tag values and field keys. Tags are written in key order."""
+    head = _lp_escape(measurement, ", ") + "".join(
+        f",{_lp_escape(k, ',= ')}={_lp_escape(v, ',= ')}"
+        for k, v in sorted(tags.items())
+    )
+    fields = ", ".join(
+        f"concat({string_literal(_lp_escape(c, ',= ') + '=')}, "
+        f"CAST(CAST({ident(c)} AS DOUBLE) AS STRING))"
+        for c in field_cols
+    )
+    ts_ns = f"CAST(unix_micros(CAST({time_sql} AS TIMESTAMP)) * 1000 AS STRING)"
+    return f"concat({string_literal(head + ' ')}, concat_ws(',', {fields}), ' ', {ts_ns})"
 
 
 def to_line_protocol(
@@ -31,28 +65,11 @@ def to_line_protocol(
     field_cols: list[str],
     time_col: str = "window_end",
 ) -> DataFrame:
-    """Render rows as InfluxDB line protocol strings (measurement,
-    tags, fields, ns timestamp — the reference writes the same shape
-    via Point(), spark_processor.py:177-190) as a `line` column.
-
-    Pure column expressions — rendering happens distributed, in
-    codegen, not on the driver.
-    """
-    tag_str = ",".join(f"{k}={v}" for k, v in sorted(tags.items()))
-    prefix = f"{measurement},{tag_str} " if tags else f"{measurement} "
-    fields = [
-        F.concat(F.lit(f"{c}="), F.col(c).cast("double").cast("string"))
-        for c in field_cols
-    ]
-    ts_ns = (F.unix_micros(F.col(time_col).cast("timestamp")) * 1000).cast("string")
-    return df.select(
-        F.concat(
-            F.lit(prefix),
-            F.concat_ws(",", *fields),
-            F.lit(" "),
-            ts_ns,
-        ).alias("line")
-    )
+    """`df` rendered as line protocol (`line_protocol_sql`) in one
+    `line` column, timestamped with `time_col`. Rendering runs
+    distributed, in codegen, not on the driver."""
+    sql = line_protocol_sql(measurement, tags, field_cols, ident(time_col))
+    return df.selectExpr(f"{sql} AS line")
 
 
 def file_line_writer(directory: str) -> Callable[[int, Iterable[str]], None]:
@@ -267,7 +284,9 @@ def influx_foreach_batch(
     windowed aggregate as line protocol, each point timestamped with
     its window's end, and writes it from the driver:
     one collect() job, then one `writer_factory()` writer called with
-    partition id 0.
+    partition id 0. The line expression is SQL text built here, once;
+    a batch sends only its `selectExpr` and `collect()` through the
+    gateway.
 
     Bound: a batch's output is at most one row per window the batch
     touched (update mode), whatever the input rate — on the benchmark,
@@ -279,12 +298,11 @@ def influx_foreach_batch(
     measurement+tags+timestamp ⇒ Influx upsert), which is what makes
     update mode correct for this sink."""
 
+    sql = line_protocol_sql(measurement, tags, field_cols, "`window`.`end`")
+    line_sql = f"{sql} AS line"
+
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        flat = batch_df.select(
-            F.col("window.end").alias("window_end"),
-            *[F.col(c) for c in field_cols],
-        )
-        lines = to_line_protocol(flat, measurement, tags, field_cols, "window_end")
-        writer_factory()(0, [row.line for row in lines.collect()])
+        lines = batch_df.selectExpr(line_sql).collect()
+        writer_factory()(0, [row.line for row in lines])
 
     return handle

@@ -15,6 +15,11 @@ Deliberate fixes over the reference (SURVEY.md §4 anti-patterns):
     output is the one bounded driver-side write (streaming/sinks.py);
   * all transforms are source-agnostic: the same functions compose
     over a batch DataFrame (for oracle tests) or a streaming one.
+
+Every expression but from_json's schema is Spark SQL text
+(`selectExpr` / `F.expr`, quoted by `sqltext`): building the pipeline
+costs a gateway round-trip per expression, not one per Column node,
+and Catalyst gets the same plan.
 """
 
 from __future__ import annotations
@@ -28,6 +33,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ibd_pipeline_spark.sqltext import ident, literal, string_literal
 
 # Exact reader schema of the reference (spark_processor.py:71-119):
 # 3-level nested struct; every leaf nullable; numerics widened to
@@ -111,39 +118,55 @@ WEATHER_SCHEMA: StructType = _s(
 )
 
 
+# The reference's projection (spark_processor.py:125-144).
+_FLATTEN_SQL = (
+    "to_timestamp(data.`timestamp`) AS event_time",
+    "data.location.latitude AS lat",
+    "data.location.longitude AS lon",
+    "data.current_conditions.temperature.value AS temperature_c",
+    "data.current_conditions.temperature.apparent AS apparent_temperature_c",
+    "data.current_conditions.humidity.value AS humidity_pct",
+    "data.current_conditions.wind.speed AS wind_speed_kmph",
+    "data.current_conditions.wind.gusts AS wind_gust_kmph",
+    "data.current_conditions.wind.direction AS wind_direction_deg",
+    "data.current_conditions.atmosphere.pressure_msl AS pressure_hpa",
+    "data.current_conditions.atmosphere.cloud_cover AS cloud_cover_pct",
+    "data.current_conditions.precipitation.total AS precipitation_mm",
+)
+# The reference's aggregates under its output names
+# (spark_processor.py:153-164), then the corrected sum and the count.
+_AGGREGATES_SQL = (
+    "avg(temperature_c) AS avg_temperature_c",
+    "avg(apparent_temperature_c) AS avg_apparent_temperature_c",
+    f"coalesce(stddev(temperature_c), {literal(0.0, 'double')}) AS temperature_stddev",
+    "avg(wind_speed_kmph) AS avg_wind_speed_kmph",
+    "max(wind_gust_kmph) AS max_wind_gust_kmph",
+    "avg(pressure_hpa) AS avg_pressure_hpa",
+    "avg(humidity_pct) AS avg_humidity_pct",
+    "avg(precipitation_mm) AS total_precipitation_mm",
+    "sum(precipitation_mm) AS total_precipitation_mm_sum",
+    "count(1) AS sample_count",
+)
+
+
 def parse_weather_json(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """P1+P2+P3+P4 of the reference pipeline: binary/string → JSON
     struct (PERMISSIVE: malformed → null struct) → event_time +
-    12 flat snake_case columns (spark_processor.py:121-145).
+    11 flat snake_case columns (spark_processor.py:121-145).
 
-    Catalyst prunes the unreferenced JSON subtrees (units,
-    metadata.*, rain/showers/snowfall, …) out of the from_json
+    The projection is one `selectExpr` of SQL text, so building the
+    frame costs a few gateway round-trips, not one per Column node.
+    `from_json` takes `WEATHER_SCHEMA` as a DataType (sent as JSON): as
+    a DDL string it would go through Spark's SQL parser, whose DFA
+    cache, kept for the JVM's life, grows by about 0.8 MB for this
+    schema. Catalyst prunes the unreferenced JSON subtrees
+    (units, metadata.*, rain/showers/snowfall, …) out of the from_json
     parse — the discarded-data map of SURVEY.md §2.3 is enforced by
     the optimizer, not by hand.
     """
-    return (
-        raw.select(F.col(value_col).cast("string").alias("json_str"))
-        .select(F.from_json("json_str", WEATHER_SCHEMA).alias("data"))
-        .select(
-            F.to_timestamp(F.col("data.timestamp")).alias("event_time"),
-            F.col("data.location.latitude").alias("lat"),
-            F.col("data.location.longitude").alias("lon"),
-            F.col("data.current_conditions.temperature.value").alias("temperature_c"),
-            F.col("data.current_conditions.temperature.apparent").alias(
-                "apparent_temperature_c"
-            ),
-            F.col("data.current_conditions.humidity.value").alias("humidity_pct"),
-            F.col("data.current_conditions.wind.speed").alias("wind_speed_kmph"),
-            F.col("data.current_conditions.wind.gusts").alias("wind_gust_kmph"),
-            F.col("data.current_conditions.wind.direction").alias("wind_direction_deg"),
-            F.col("data.current_conditions.atmosphere.pressure_msl").alias("pressure_hpa"),
-            F.col("data.current_conditions.atmosphere.cloud_cover").alias(
-                "cloud_cover_pct"
-            ),
-            F.col("data.current_conditions.precipitation.total").alias(
-                "precipitation_mm"
-            ),
-        )
+    json_str = F.expr(f"CAST({ident(value_col)} AS STRING)")
+    return raw.select(F.from_json(json_str, WEATHER_SCHEMA).alias("data")).selectExpr(
+        *_FLATTEN_SQL
     )
 
 
@@ -154,7 +177,8 @@ def windowed_aggregate(
     streaming: bool | None = None,
 ) -> DataFrame:
     """P5+P6+A1-A4: watermark → tumbling window → the reference's 8
-    aggregates with verbatim output names (spark_processor.py:147-165).
+    aggregates with verbatim output names (spark_processor.py:147-165),
+    each written as one SQL expression.
 
     `total_precipitation_mm` is avg(precipitation_mm) — reproducing
     the reference's name-vs-computation quirk for parity
@@ -168,18 +192,8 @@ def windowed_aggregate(
     if streaming is None:
         streaming = parsed.isStreaming
     src = parsed.withWatermark("event_time", watermark) if streaming else parsed
-    return src.groupBy(F.window("event_time", window_duration).alias("window")).agg(
-        F.avg("temperature_c").alias("avg_temperature_c"),
-        F.avg("apparent_temperature_c").alias("avg_apparent_temperature_c"),
-        F.coalesce(F.stddev("temperature_c"), F.lit(0.0)).alias("temperature_stddev"),
-        F.avg("wind_speed_kmph").alias("avg_wind_speed_kmph"),
-        F.max("wind_gust_kmph").alias("max_wind_gust_kmph"),
-        F.avg("pressure_hpa").alias("avg_pressure_hpa"),
-        F.avg("humidity_pct").alias("avg_humidity_pct"),
-        F.avg("precipitation_mm").alias("total_precipitation_mm"),
-        F.sum("precipitation_mm").alias("total_precipitation_mm_sum"),
-        F.count(F.lit(1)).alias("sample_count"),
-    )
+    window = F.expr(f"window(event_time, {string_literal(window_duration)}) AS window")
+    return src.groupBy(window).agg(*map(F.expr, _AGGREGATES_SQL))
 
 
 def weather_pipeline(raw: DataFrame, **agg_kwargs) -> DataFrame:

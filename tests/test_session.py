@@ -35,3 +35,13 @@ def test_default_heap_fits_this_box(spark):
     )
     max_heap = spark._jvm.java.lang.Runtime.getRuntime().maxMemory()
     assert max_heap <= 0.75 * _mem_total_bytes()
+
+
+def test_local_session_checkpoints_through_the_file_system_manager(spark):
+    """A local master renames checkpoint files with FileSystem.rename
+    (one rename(2)), not FileContext's rename, which forks `readlink`
+    per path on the local file system."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )

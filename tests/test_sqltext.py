@@ -1,11 +1,18 @@
-"""ibd_pipeline_spark/sqltext.py: typed literals and constant banks."""
+"""ibd_pipeline_spark/sqltext.py: typed and string literals, identifiers,
+constant banks."""
 
 from __future__ import annotations
 
 import math
 from decimal import Decimal
 
-from ibd_pipeline_spark.sqltext import element_at_bank, literal, sum_chain
+from ibd_pipeline_spark.sqltext import (
+    element_at_bank,
+    ident,
+    literal,
+    string_literal,
+    sum_chain,
+)
 
 
 def test_literals_round_trip_exactly_with_their_type(spark):
@@ -35,3 +42,37 @@ def test_element_at_bank_and_sum_chain(spark):
     empty = spark.range(0).selectExpr(f"{element_at_bank([], 'double', '1')} AS b")
     assert empty.schema["b"].dataType.simpleString() == "double"
     assert sum_chain(["a", "b * 2", "c"]) == "(a) + (b * 2) + (c)"
+
+
+STRINGS = [
+    "plain",
+    "it's",
+    "back\\slash",
+    "trailing\\",
+    "\\'",
+    "''",
+    "New York, NY",
+    "Bucureşti — Zürich ☀ 東京",
+    "tab\tnew\nline",
+    "",
+]
+
+
+def test_string_literals_round_trip(spark):
+    row = spark.sql(
+        "SELECT " + ", ".join(f"{string_literal(v)} AS c{i}" for i, v in enumerate(STRINGS))
+    ).first()
+    assert list(row) == STRINGS
+    assert literal("it's", "string") == "CAST('it\\'s' AS string)"
+    got = spark.sql(f"SELECT {literal(STRINGS[2], 'string')} AS s").first()["s"]
+    assert got == STRINGS[2]
+
+
+def test_ident_quotes_any_column_name(spark):
+    names = ["a.b", "with space", "back`tick", "select", "Zürich"]
+    df = spark.sql(
+        "SELECT " + ", ".join(f"{i} AS {ident(n)}" for i, n in enumerate(names))
+    )
+    assert df.columns == names
+    got = df.selectExpr(*[f"{ident(n)} + 10 AS {ident(n)}" for n in names]).first()
+    assert list(got) == [10 + i for i in range(len(names))]
