@@ -1,6 +1,6 @@
-"""Shared normal-tail machinery used across the statistics modules
-(extracted from the chronological round files in the r14 topic split;
-values and rounding identical).
+"""Shared normal-tail machinery for the statistics queries and the
+streaming monitors: one SQL form for the DuckDB oracles and SQL-text
+builders, one Column form for DataFrame builders.
 
 Zelen & Severo 26.2.17 polynomial for the standard normal CDF — plain
 double algebra (exp + one polynomial) that Spark and DuckDB evaluate

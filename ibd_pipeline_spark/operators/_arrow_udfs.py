@@ -13,39 +13,6 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
 
-def bucket_keys_udf(dim, n_tables, bits_per_table, seed=42):
-    """Multi-table sign-LSH bucket keys as an Arrow-batched scalar
-    pandas UDF: one numpy matmul of the batch against all
-    n_tables·bits_per_table hyperplanes (see operators.similarity.
-    lsh_bucket_tables for why this beats the column-expression form).
-    """
-    from ibd_pipeline_spark.operators.similarity import random_hyperplanes
-
-    @pandas_udf("array<long>")
-    def bucket_keys(vecs: pd.Series) -> pd.Series:
-        planes = np.array(
-            [
-                random_hyperplanes(dim, bits_per_table, seed=seed + 1000 * t)[b]
-                for t in range(n_tables)
-                for b in range(bits_per_table)
-            ]
-        )  # (total_bits, dim)
-        V = np.vstack(vecs.to_numpy())  # (batch, dim)
-        bits = (V @ planes.T) >= 0  # (batch, total_bits)
-        weights = 1 << np.arange(bits_per_table, dtype=np.int64)
-        out = []
-        for row in bits:
-            keys = [
-                (t << 32)
-                + int(row[t * bits_per_table : (t + 1) * bits_per_table] @ weights)
-                for t in range(n_tables)
-            ]
-            out.append(keys)
-        return pd.Series(out)
-
-    return bucket_keys
-
-
 @pandas_udf("double")
 def geo_mean_udf(q: pd.Series, p: pd.Series, t: pd.Series) -> pd.Series:
     """Scalar pandas UDF: per-row geometric mean of three measures."""

@@ -1,4 +1,5 @@
-"""Month-partitioned calendar-window helpers (r11, VERDICT #5).
+"""Month-partitioned calendar-window helpers: day-grain windows without
+the single-task `No Partition Defined` fallback.
 
 Day-grain frames (one row per calendar day) are tiny at any realistic
 corpus size, but an UNPARTITIONED window over them still serializes

@@ -122,8 +122,8 @@ def literal_barrier(df: DataFrame) -> DataFrame:
     LARGE LITERAL EXPRESSION TREES (public-randomness JL projections,
     hashed-gram lambda chains, wide CASE banks).
 
-    Why a named helper (r11 VERDICT #4): two independent r11 fixes were
-    the same move —
+    Why a named helper: two independent fixes were the same move, so
+    the move exists once —
 
       * similarity_ndcg_eval checkpointed the JL-projected corpus so
         Catalyst stops re-analyzing (and codegen stops re-compiling)

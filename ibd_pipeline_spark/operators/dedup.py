@@ -6,9 +6,10 @@ Design for 100 TB:
   * exact dedup = hash-groupBy on a content digest — one shuffle on
     a 128-bit key, perfectly parallel;
   * near-dup never compares all O(n²) pairs: MinHash LSH bands (or
-    SimHash prefixes) generate candidate buckets, pairs are verified
-    only within buckets. All hashing uses Spark's built-in xxhash64 —
-    deterministic, JVM-side, no Python.
+    SimHash chunks) generate candidate buckets, pairs are verified
+    only within buckets. Every hash is an md5 prefix, which DuckDB
+    computes identically, so a SQL oracle replays each pipeline
+    value for value. JVM-side, no Python.
 """
 
 from __future__ import annotations
@@ -45,58 +46,9 @@ def shingles(text: Column | str, k: int = 3) -> Column:
     )
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature: for each of `num_hashes` hash families, the
-    minimum hash over the shingle set. Approximates Jaccard
-    similarity: P[sig_i matches] = J(A,B).
-
-    Cost shape: the variable-length shingle *strings* are hashed
-    exactly once (xxhash64); each additional family re-hashes the
-    resulting 8-byte longs — O(shingles + families·shingles·const)
-    instead of O(families·shingles·strlen). All JVM-side."""
-    base_hashes = F.transform(shingle_col, lambda s: F.xxhash64(s))
-
-    # NB: the family id must be closed over with a one-argument lambda.
-    # A two-argument `lambda h, i=i:` looks like a default-arg capture
-    # but Spark passes (element, array_index) to binary transform
-    # lambdas — the index SHADOWS the default and every "family"
-    # becomes the same function (caught by the Hypothesis property
-    # test: signature agreement hit 1.0 on a J=0.5 pair).
-    def family(fam: int):
-        return lambda h: F.xxhash64(h, F.lit(fam))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(base_hashes, family(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def band_keys(sig_col: Column, num_bands: int, rows_per_band: int) -> Column:
-    """LSH banding: split the signature into bands and hash each band.
-    Docs sharing ANY band key are candidates. For signature length
-    n = num_bands * rows_per_band, P[candidate] = 1-(1-J^r)^b."""
-    return F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.element_at(sig_col, b * rows_per_band + r + 1).cast("string")
-                        for r in range(rows_per_band)
-                    ],
-                ),
-                F.lit(b),
-            )
-            for b in range(num_bands)
-        ]
-    )
-
-
 # ---------------------------------------------------------------------------
-# Session-level signature cache (r11, VERDICT #3 — the multimodal
-# _cached_asset_frame pattern applied to dedup state): the per-doc
+# Session-level signature cache (the multimodal _cached_asset_frame
+# pattern applied to dedup state): the per-doc
 # MinHash state (shingle set + 32 signature minima) is the single
 # most expensive artifact in the dedup family, and SIX registry
 # queries derive it from the same upstream frames
@@ -167,10 +119,9 @@ def minhash_candidate_pairs(
     num_hashes: int = 32,
     num_bands: int = 8,
     restrict_to: DataFrame | None = None,
-    portable: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash LSH, with exact Jaccard
-    verification on the (64-bit-hashed) shingle sets of each
+    verification on the (32-bit md5-hashed) shingle sets of each
     candidate pair. Returns (id_a, id_b, jaccard), id_a < id_b,
     deduplicated across bands.
 
@@ -179,14 +130,14 @@ def minhash_candidate_pairs(
          is hashed once, immediately, so no stage ever shuffles text;
       2. ONE hash aggregate computes the whole state per doc:
          collect_set(hash) (the verification set) + num_hashes ×
-         min(xxhash64(hash, i)) (the signature) — plain aggregates,
-         no giant higher-order lambdas for the JIT to chew on;
-      3. band keys are multi-arg xxhash64 over signature slices;
+         min(family hash) (the signature) — plain aggregates, no
+         giant higher-order lambdas for the JIT to chew on;
+      3. band buckets are the comma-joined signature slices;
       4. bucket equi-join on (band, bucket) → shuffle O(n·bands);
-      5. Jaccard on long-hash sets (collision odds ~2⁻⁶⁴ — immaterial)
-         via array_intersect sizes, only for bucket-colliding pairs.
+      5. Jaccard on the shingle-hash sets via array_intersect sizes,
+         only for bucket-colliding pairs.
 
-    The per-doc state relation is SESSION-cached (r11 — see
+    The per-doc state relation is SESSION-cached (see
     _SESSION_STATE_CACHE above): it feeds banding and both join sides
     of the verification here, and structurally identical invocations
     from other registry queries reuse the same eagerly-checkpointed
@@ -202,15 +153,13 @@ def minhash_candidate_pairs(
     pairs(all) = pairs(base) ∪ pairs(all, restrict_to=Δ) is
     property-tested in tests/test_dedup.py.
 
-    portable=True swaps every hash for the md5_bucket idiom (shingle
-    hash = first 32 bits of md5; family i = 32-bit word (i mod 4) of
-    md5("<i//4>:h"), so one digest feeds four families and the path
-    pays 8 digests per shingle, not 32; band buckets become the
-    plain comma-joined minima string) so a DuckDB oracle replays the
-    ENTIRE pipeline — shingle hashes, the 32 signature minima, band
-    collisions, and the exact-Jaccard verify — value-for-value.
-    xxhash64 stays the at-scale default (8-byte JVM hash vs a hex
-    round-trip per family)."""
+    Every hash is the md5_bucket idiom (shingle hash = first 32 bits
+    of md5; family i = 32-bit word (i mod 4) of md5("<i//4>:h"), so
+    one digest feeds four families and the path pays 8 digests per
+    shingle, not 32; band buckets are the plain comma-joined minima
+    string), so a DuckDB oracle replays the ENTIRE pipeline —
+    shingle hashes, the 32 signature minima, band collisions, and the
+    exact-Jaccard verify — value-for-value."""
     rows_per_band = num_hashes // num_bands
     toks = F.split(F.col(text_col), " ")
     n = F.size(toks)
@@ -221,34 +170,29 @@ def minhash_candidate_pairs(
     grams = F.when(n >= k_shingle, F.transform(idx, gram)).otherwise(
         F.array(F.concat_ws(" ", toks))
     )
-    if portable:
-        # base shingle hash: first 8 md5 hex chars AS A STRING — the
-        # set algebra (collect_set + array_intersect) and the family
-        # digest input only need a stable token, so the hex→long
-        # parse is dead weight here too.
-        base_h = F.substring(F.md5(F.col("g")), 1, 8)
-        # Family i reads 32-bit word (i mod 4) of digest group (i//4):
-        # one md5 digest feeds FOUR families, so the portable path
-        # pays 8 digest computations per shingle instead of 32. The
-        # digests are materialized in an explicit projection below —
-        # guaranteed single evaluation, no reliance on codegen
-        # subexpression elimination inside the aggregate. The minima
-        # stay 8-char lowercase-hex STRINGS: fixed-width hex orders
-        # lexicographically == numerically in both engines, so the
-        # per-row hex→long parse (F.conv — the measured hot spot) is
-        # skipped entirely; band buckets are string joins anyway.
-        fam = lambda i: F.min(  # noqa: E731
-            F.substring(F.col(f"d{i // 4}"), 1 + 8 * (i % 4), 8)
-        ).alias(f"m{i}")
-    else:
-        base_h = F.xxhash64("g")
-        fam = lambda i: F.min(F.xxhash64("h", F.lit(i))).alias(f"m{i}")  # noqa: E731
+    # base shingle hash: first 8 md5 hex chars AS A STRING — the set
+    # algebra (collect_set + array_intersect) and the family digest
+    # input only need a stable token, so a hex→long parse would be
+    # dead weight.
+    base_h = F.substring(F.md5(F.col("g")), 1, 8)
+    # Family i reads 32-bit word (i mod 4) of digest group (i//4): one
+    # md5 digest feeds FOUR families, so the path pays 8 digest
+    # computations per shingle instead of 32. The digests are
+    # materialized in an explicit projection below — guaranteed single
+    # evaluation, no reliance on codegen subexpression elimination
+    # inside the aggregate. The minima stay 8-char lowercase-hex
+    # STRINGS: fixed-width hex orders lexicographically == numerically
+    # in both engines, so the per-row hex→long parse (F.conv — the
+    # measured hot spot) is skipped entirely; band buckets are string
+    # joins anyway.
+    fam = lambda i: F.min(  # noqa: E731
+        F.substring(F.col(f"d{i // 4}"), 1 + 8 * (i % 4), 8)
+    ).alias(f"m{i}")
 
-    exploded = docs.select(
-        F.col(id_col).alias("id"), F.explode(grams).alias("g")
-    ).select("id", base_h.alias("h"))
-    if portable:
-        exploded = exploded.select(
+    exploded = (
+        docs.select(F.col(id_col).alias("id"), F.explode(grams).alias("g"))
+        .select("id", base_h.alias("h"))
+        .select(
             "id",
             "h",
             *[
@@ -258,34 +202,26 @@ def minhash_candidate_pairs(
                 for g in range(num_hashes // 4)
             ],
         )
+    )
 
     state = _session_cached_state(
         docs,
-        ("minhash", id_col, text_col, k_shingle, num_hashes, portable),
+        ("minhash", id_col, text_col, k_shingle, num_hashes),
         lambda: exploded.groupBy("id").agg(
             F.collect_set("h").alias("hs"),
             *[fam(i) for i in range(num_hashes)],
         ),
     )
-    if portable:
-        band_cols = [
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"m{b * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            ).alias(f"b{b}")
-            for b in range(num_bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(
-                *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)],
-                F.lit(b),
-            ).alias(f"b{b}")
-            for b in range(num_bands)
-        ]
+    band_cols = [
+        F.concat_ws(
+            ",",
+            *[
+                F.col(f"m{b * rows_per_band + r}").cast("string")
+                for r in range(rows_per_band)
+            ],
+        ).alias(f"b{b}")
+        for b in range(num_bands)
+    ]
     banded = state.select("id", F.posexplode(F.array(*band_cols)).alias("band", "bucket"))
     if restrict_to is not None:
         # Incremental mode: only pairs TOUCHING the delta id set are
@@ -343,11 +279,11 @@ def minhash_candidate_pairs(
 
 def release_state(df: DataFrame) -> bool:
     """Unpersist the cached per-doc state backing a DataFrame returned
-    by the SimHash pair operators (no-op on other frames, including
-    minhash_candidate_pairs results since r11 — their state is
-    session-cached in _SESSION_STATE_CACHE and shared across queries,
-    so it deliberately outlives any one result). Returns True if
-    blocks were released."""
+    by simhash32_pairs (no-op on other frames, including
+    minhash_candidate_pairs results — their state is session-cached
+    in _SESSION_STATE_CACHE and shared across queries, so it
+    deliberately outlives any one result). Returns True if blocks
+    were released."""
     state = getattr(df, "_cached_state", None)
     if state is None:
         return False
@@ -355,143 +291,9 @@ def release_state(df: DataFrame) -> bool:
     return True
 
 
-def _bit_mask(bit: int) -> Column:
-    # 1<<63 overflows signed int64; it is the sign bit itself.
-    return F.lit((1 << bit) if bit < 63 else -(2**63)).cast("long")
-
-
-def simhash64(text: Column | str, ngram: int = 2) -> Column:
-    """64-bit SimHash over word n-grams, as pure column algebra.
-
-    For each of the 64 bit positions: sum over shingles of ±1
-    depending on that bit of xxhash64(shingle); sign of the sum gives
-    the output bit. Near-identical docs differ in few bits (small
-    Hamming distance).
-
-    ⚠ Expression-form trade-off: the 64 per-bit aggregate() calls each
-    inline the tokenize+hash subtree (CollapseProject re-substitutes
-    common subexpressions), and the resulting mega-expression exceeds
-    codegen limits and falls back to interpreted eval — fine for tests
-    and small frames, ~100× too slow on a corpus. Use
-    simhash_signatures() (explode + one hash-aggregate, identical
-    output) for anything sized; simhash_near_dup_pairs does.
-    """
-    sh = shingles(text, ngram)
-    h = F.transform(sh, lambda s: F.xxhash64(s))
-
-    def bit_sign_sum(bit: int) -> Column:
-        # +1 when bit set, -1 otherwise, summed across shingles.
-        return F.aggregate(
-            h,
-            F.lit(0),
-            lambda acc, x: acc
-            + F.when(x.bitwiseAND(_bit_mask(bit)) != 0, 1).otherwise(-1),
-        )
-
-    out = F.lit(0).cast("long")
-    for bit in range(64):
-        out = out + F.when(bit_sign_sum(bit) > 0, _bit_mask(bit)).otherwise(
-            F.lit(0).cast("long")
-        )
-    return out
-
-
-def simhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", ngram: int = 2
-) -> DataFrame:
-    """SimHash signatures as a distributed plan: tokenize + hash each
-    document ONCE (explode the shingle-hash array), then one
-    map-side-combined hash-aggregate computes all 64 per-bit ±1 sums
-    as ordinary sum(when(...)) columns, and a final projection folds
-    them into the signature. Output: (id, sig) with id named after
-    `id_col`.
-
-    Bit-for-bit identical to the simhash64 expression (same shingle
-    set, same xxhash64, same sign rule — asserted in tests), but every
-    operator stays in whole-stage codegen: the explode is linear in
-    corpus tokens, the aggregate is 64 longs of state per doc. This is
-    the form that survives a 100 TB corpus; the shuffle key is the doc
-    id, so it co-partitions with any downstream per-doc join."""
-    h = F.transform(shingles(text_col, ngram), lambda s: F.xxhash64(s))
-    # Tokenize+hash is the dominant cost and runs in the SCAN stage;
-    # a small corpus arrives as 1-2 parquet splits and would serialize
-    # it on 1-2 cores. Fan the rows out first when the source has
-    # fewer splits than the cluster has slots. r16: the split count
-    # comes from the zero-job file-size heuristic
-    # (_estimated_scan_splits) — the old df.rdd.getNumPartitions()
-    # "metadata check" actually launches a DataFrame→RDD conversion
-    # job (~1 s of wall per call on Spark 4, the _estimated_scan_splits
-    # docstring's own measurement). Non-file-backed frames return a
-    # large sentinel and stay untouched — at real scale the input has
-    # plenty of splits and no exchange is added; the repartition is a
-    # perf-only branch either way (per-doc aggregates are
-    # partition-invariant).
-    from ibd_pipeline_spark.operators.similarity import _estimated_scan_splits
-
-    parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    if _estimated_scan_splits(docs) < max(2, parallelism // 2):
-        docs = docs.repartition(parallelism)
-    exploded = docs.select(F.col(id_col).alias("id"), F.explode(h).alias("hv"))
-    sums = exploded.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when(F.col("hv").bitwiseAND(_bit_mask(b)) != 0, 1).otherwise(-1)
-            ).alias(f"b{b}")
-            for b in range(64)
-        ]
-    )
-    sig = F.lit(0).cast("long")
-    for b in range(64):
-        sig = sig + F.when(F.col(f"b{b}") > 0, _bit_mask(b)).otherwise(
-            F.lit(0).cast("long")
-        )
-    return sums.select("id", sig.alias("sig"))
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit signatures (bit_count of XOR)."""
     return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 8,
-    prefix_bits: int = 12,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: block on the top `prefix_bits` of
-    the signature (near-dups almost always share the prefix), verify
-    Hamming distance within blocks.
-
-    Scale: prefix blocking bounds the join the same way LSH bands do.
-    For higher recall at scale, use simhash_near_dup_pairs_multi —
-    the rotate-and-reblock multi-table scheme.
-
-    The signature frame is persisted so the self-join's two sides
-    share ONE tokenize+hash pass (no ReusedExchange fires for this
-    shape — verified on the formatted plan); callers release with
-    release_state(result), the minhash_candidate_pairs contract.
-    """
-    from pyspark import StorageLevel
-
-    sig = (
-        simhash_signatures(docs, id_col, text_col)
-        .withColumn("blk", F.shiftrightunsigned("sig", 64 - prefix_bits))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    l, r = sig.alias("l"), sig.alias("r")
-    result = (
-        l.join(r, (F.col("l.blk") == F.col("r.blk")) & (F.col("l.id") < F.col("r.id")))
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            hamming64(F.col("l.sig"), F.col("r.sig")).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    result._cached_state = sig  # release handle; see release_state()
-    return result
 
 
 def simhash_signatures_md5(
@@ -499,22 +301,29 @@ def simhash_signatures_md5(
 ) -> DataFrame:
     """Engine-PORTABLE SimHash signatures: 32-bit, per-shingle hash =
     first 8 hex digits of md5 (the md5_bucket idiom from
-    operators/sketches.py) instead of xxhash64 — every step is exact
-    integer algebra DuckDB can replay, which makes the whole
-    near-dup pipeline (signature → chunk blocking → Hamming verify)
-    hash-attestable against a SQL oracle.
+    operators/sketches.py) — every step is exact integer algebra
+    DuckDB can replay, which makes the whole near-dup pipeline
+    (signature → chunk blocking → Hamming verify) hash-attestable
+    against a SQL oracle.
 
-    Same distributed plan shape as simhash_signatures (explode the
-    shingle set once, ONE map-side-combined hash-aggregate with 32
-    ±1 sums, fold to the signature); the xxhash64 64-bit form stays
-    the library default for throughput (8-byte JVM hash, no hex
-    round-trip) — use THIS form when cross-engine reproducibility
-    matters more than the constant factor. Output: (id, sig), sig a
-    non-negative 32-bit value in a bigint."""
+    For each of the 32 bit positions: sum over shingles of ±1
+    depending on that bit of the shingle hash; the sign of the sum
+    gives the output bit, so near-identical docs differ in few bits.
+    The plan tokenizes and hashes each document ONCE (explode the
+    shingle set), then ONE map-side-combined hash-aggregate computes
+    the 32 ±1 sums and a projection folds them into the signature —
+    every operator stays in whole-stage codegen, and the shuffle key
+    is the doc id. Output: (id, sig), sig a non-negative 32-bit value
+    in a bigint."""
     grams = shingles(text_col, ngram)
     hv = F.conv(F.substring(F.md5(F.col("_g")), 1, 8), 16, 10).cast("bigint")
-    # zero-job split estimate — see simhash_signatures (r16): the old
-    # df.rdd.getNumPartitions() check launched a conversion job.
+    # Tokenize+hash is the dominant cost and runs in the SCAN stage; a
+    # small corpus arrives as 1-2 parquet splits and would serialize it
+    # on 1-2 cores, so fan the rows out first. The split count is the
+    # zero-job file-size estimate: df.rdd.getNumPartitions() would
+    # launch a DataFrame→RDD conversion job (~1 s of wall per call on
+    # Spark 4). Per-doc aggregates are partition-invariant, so the
+    # repartition is a perf-only branch.
     from ibd_pipeline_spark.operators.similarity import _estimated_scan_splits
 
     parallelism = docs.sparkSession.sparkContext.defaultParallelism
@@ -595,98 +404,6 @@ def simhash32_pairs(
     return result
 
 
-def _rotl64(col: Column, r: int) -> Column:
-    """Rotate a 64-bit signature left by r bits (r in 1..63)."""
-    return F.shiftleft(col, r).bitwiseOR(F.shiftrightunsigned(col, 64 - r))
-
-
-def simhash_near_dup_pairs_multi(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 8,
-    tables: int = 4,
-    prefix_bits: int = 16,
-) -> DataFrame:
-    """Multi-table SimHash near-dup pairs: the standard
-    rotate-and-reblock scheme (Manku/Jain/Sarma, WWW'07 — the Google
-    simhash dedup paper). The 64-bit signature is rotated left by
-    64·t/tables for each table t and blocked on the top `prefix_bits`
-    of each rotation; a pair is a candidate if it collides in ANY
-    table, and candidates are Hamming-verified once.
-
-    Recall: with the defaults (4 tables × disjoint 16-bit chunks),
-    any pair with Hamming ≤ 3 agrees EXACTLY on at least one chunk
-    (pigeonhole: 3 flipped bits touch ≤ 3 of the 4 chunks) — a
-    guarantee the single-prefix form lacks, and strictly more recall
-    than it for any budget (table 0 with prefix 16 ⊃ the 12-bit
-    prefix blocks). At Hamming 4-8 collisions remain probabilistic
-    but four chances beat one; the recall ordering is
-    property-tested on planted flips.
-
-    Scale: signatures are computed by the same one-pass hash-agg plan
-    (simhash_signatures); the band-row explode multiplies the
-    (id, sig) table — 16 bytes/row — by `tables`, NOT the corpus, and
-    the per-table self-join is bounded by block occupancy exactly
-    like MinHash LSH bands. Candidate pairs dedup on (id_a, id_b)
-    before the single Hamming verify projection.
-    """
-    sig = simhash_signatures(docs, id_col, text_col)
-    return simhash_pairs_multi_from_sigs(sig, max_hamming, tables, prefix_bits)
-
-
-def simhash_pairs_multi_from_sigs(
-    sig: DataFrame,
-    max_hamming: int = 8,
-    tables: int = 4,
-    prefix_bits: int = 16,
-) -> DataFrame:
-    """The rotate-and-reblock candidate join over a precomputed
-    (id, sig) signature frame — split out so the pigeonhole recall
-    guarantee is testable on planted exact bit flips (see
-    simhash_near_dup_pairs_multi for the scheme and scale notes).
-    The signature frame is persisted so the banded self-join's two
-    sides share one upstream signature pass; callers release with
-    release_state(result)."""
-    from pyspark import StorageLevel
-
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    step = 64 // tables
-    blocks = F.array(
-        *[
-            F.shiftrightunsigned(
-                _rotl64(F.col("sig"), t * step) if t else F.col("sig"),
-                64 - prefix_bits,
-            )
-            for t in range(tables)
-        ]
-    )
-    band = sig.select("id", "sig", F.posexplode(blocks).alias("t", "blk"))
-    l, r = band.alias("l"), band.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.t") == F.col("r.t"))
-            & (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("l.sig").alias("sig_a"),
-            F.col("r.sig").alias("sig_b"),
-        )
-        .distinct()
-    )
-    result = cand.select(
-        "id_a",
-        "id_b",
-        hamming64(F.col("sig_a"), F.col("sig_b")).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
-    result._cached_state = sig  # release handle; see release_state()
-    return result
-
-
 def semdedup_pairs(
     vectors: DataFrame,
     epsilon: float = 0.30,
@@ -707,12 +424,12 @@ def semdedup_pairs(
     `result._assigned` (vec_id, cluster_id) so consumers don't rerun
     the fixpoint.
 
-    SCALE-SAFE DEFAULT (r11 VERDICT #3): with k=None the cluster
-    count is derived as k = max(k_min, ceil(n / target_cluster_size))
-    — the published k ∝ n contract that holds per-cluster size (and
-    hence candidate pairs, Σ_c |c|²/2) LINEAR in corpus size. The r11
-    probe measured fixed k=8 under a 4× corpus going quadratic
-    (pairs ×16) while k scaled 8→32 stayed linear (pairs ×4); an
+    SCALE-SAFE DEFAULT: with k=None the cluster count is derived as
+    k = max(k_min, ceil(n / target_cluster_size)) — the published
+    k ∝ n contract that holds per-cluster size (and hence candidate
+    pairs, Σ_c |c|²/2) LINEAR in corpus size. A scale probe measured
+    fixed k=8 under a 4× corpus going quadratic (pairs ×16) while k
+    scaled 8→32 stayed linear (pairs ×4); an
     operator whose default silently goes quadratic at scale is the
     named degradation mode, so the derived k is the default and a
     fixed k is the explicit opt-in (the attested registry query pins
@@ -738,7 +455,7 @@ def semdedup_pairs(
     else:
         assigned = build()
     assigned = assigned.select(F.col(id_col).alias("vec_id"), "cluster_id")
-    # r15 note: a columnar-expanded codegen dot (the
+    # A columnar-expanded codegen dot (the
     # cosine_near_dup_pairs optimization) was A/B-measured HERE and
     # lost (2.7 s fold vs 2.8-4.3 s columnar): this pair scan is a
     # cluster-keyed self-JOIN, so the expansion widens the shuffled

@@ -18,7 +18,7 @@ makes it exactly reproducible in the DuckDB oracle.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 
 
 def zvalue(cols: list[Column], bits: int = 16) -> Column:
@@ -53,16 +53,3 @@ def rank_bucket(c: Column, lo: float, hi: float, bits: int = 16) -> Column:
     )
     return F.greatest(F.lit(0).cast("long"), F.least(scaled, F.lit((1 << bits) - 1)))
 
-
-def zorder_sort(
-    df: DataFrame,
-    col_bounds: dict[str, tuple[float, float]],
-    bits: int = 16,
-) -> DataFrame:
-    """Order a frame along the Z-curve of the given columns (each with
-    fixed (lo, hi) bounds). Downstream: `.write.parquet(...)` emits
-    row groups whose min/max stats are tight on EVERY z-ordered
-    column. The sort is the only cost — one range exchange, exactly
-    what a single-column sort would pay."""
-    zcols = [rank_bucket(F.col(name), lo, hi, bits) for name, (lo, hi) in col_bounds.items()]
-    return df.orderBy(zvalue(zcols, bits))

@@ -1,28 +1,19 @@
-"""Distributed ML primitives: PCA (top-1 and top-k) and binary
-logistic regression. Each operator carries TWO agreement-tested
-implementations (r06):
+"""Distributed ML primitives: binary logistic regression and PCA by
+power iteration with deflation, in the SQL-replayable form the
+registry runs. Every float operation is quantized to fixed point so a
+DuckDB CTE unroll replays each round bit-for-bit.
 
-- **Small-d fast path (the default route)** — numpy partials over
-  Arrow batches, reduced on the driver where the tiny model-state
-  update runs: one-scan Gram + `numpy.linalg.eigh` for PCA (the
-  MLlib RowMatrix.computePrincipalComponents design), per-round
-  gradient partials Xᵀ(σ(Xw)−y) for logreg (the spark.ml
-  treeAggregate shape). Partials are MODEL STATE — ONE row of d or
-  d² doubles per PARTITION (accumulated across each partition's
-  Arrow batch iterator, so the driver collect is bounded by
-  partition count, never rows) — not data collects.
-- **Large-d fallback (`method="power"`/`"expr"`)** — the pure
-  DataFrame forms: power iteration on the covariance ACTION
-  Cov·w = (1/n)·Σ xᶜ(xᶜ·w) (the d×d matrix never exists — O(n·d)
-  per round, survives d in the thousands) and expression-level GD;
-  model state is a one-row broadcast frame, lineage truncated on
-  the every-2 cadence (reliable checkpoint with `checkpoint_dir`,
-  localCheckpoint in tests), weight-delta early exit at truncation
-  points.
+Corpus-side work is scans, per-row array expressions and small global
+aggregates; model state (d weights, the d×d covariance) comes back to
+the driver, where the iteration runs on exact integers and IEEE
+doubles.
 
-Corpus-side work never shuffles the corpus in either path: scans +
-per-row array expressions, with at most d partial sums per task on
-the wire.
+pca_top_k, the float-math top-k PCA (one-scan Gram eigensolve at
+small d, covariance-action power iteration with deflation above), no
+registry query runs. It stays because its orthogonality property
+test holds to 1e-6 only on unrounded loadings: pca_power_attested
+returns loadings rounded to 6 decimals, whose squared norm can miss
+1 by more than that.
 """
 
 from __future__ import annotations
@@ -158,353 +149,6 @@ def _pca_gram_topk(corpus: DataFrame, vec: str, k: int) -> "list[tuple]":
     return out
 
 
-def pca_top_component(
-    corpus: DataFrame,
-    vec: str = "embedding",
-    iters: int = 8,
-    checkpoint_dir: str | None = None,
-    method: str = "auto",
-) -> DataFrame:
-    """Top principal component of an embedding column by power
-    iteration on the covariance ACTION (never the matrix):
-
-      1. dimension means via posexplode + hash agg (one d-row frame,
-         assembled into a broadcast mean vector);
-      2. iterate  w ← normalize( Σᵢ xᶜᵢ (xᶜᵢ·w) )  — per row, the
-         projection s = xᶜ·w is one zip_with fold; the contribution
-         posexplodes to (pos, s·x) and hash-aggregates per dimension;
-      3. eigenvalue via the Rayleigh quotient λ = (Σ sᵢ²)/n on the
-         final w (w is unit-norm, data is centered).
-
-    Sign convention: the component is flipped so its
-    largest-magnitude loading is positive — eigenvectors are defined
-    up to sign, and a deterministic convention makes results
-    comparable across runs/engines.
-
-    Init is the normalized all-ones vector (deterministic; orthogonal
-    to the top component only on a measure-zero set — the planted-
-    direction property test would catch a pathological fixture).
-
-    method: "gram" = the one-scan Gram + driver eigensolve fast path
-    (_pca_gram_topk); "power" = the iterative covariance-action form;
-    "auto" (default) = gram when d ≤ 512, power above (where the d×d
-    matrix must never exist).
-
-    Returns a d-row DataFrame (dim, loading, eigenvalue, n_vectors).
-    """
-    if method not in ("auto", "gram", "power"):
-        raise ValueError(
-            f"pca_top_component: unknown method {method!r} (auto|gram|power)"
-        )
-    ckpt = _checkpointer(corpus, checkpoint_dir)
-    c = corpus.select(as_double_array(vec).alias("v"))
-    d = _dim(c, "v")
-    if method == "gram" or (method == "auto" and d <= 512):
-        rows = _pca_gram_topk(corpus, vec, k=1)
-        return corpus.sparkSession.createDataFrame(
-            [(dim, ld, ev, n) for (_c, dim, ld, ev, n) in rows],
-            "dim int, loading double, eigenvalue double, n_vectors bigint",
-        )
-    n_and_mu = c.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.avg(F.element_at(F.col("v"), i + 1)).alias(f"_m{i}") for i in range(d)],
-    ).select(F.array(*[F.col(f"_m{i}") for i in range(d)]).alias("mu"), "n")
-    # Persist the centered corpus for the iterations: without this
-    # every round re-runs the parquet scan AND the d-dimension mean
-    # aggregate inside its crossJoin lineage (the logreg/label-
-    # propagation loop-invariant lesson). Dropped after the result
-    # row is materialized below.
-    from pyspark import StorageLevel
-
-    centered = c.crossJoin(F.broadcast(n_and_mu)).select(
-        F.zip_with("v", "mu", lambda x, m: x - m).alias("xc"), "n"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    w = c.sparkSession.range(1).select(
-        F.array(*[F.lit(1.0 / d**0.5) for _ in range(d)]).alias("w")
-    )
-    prev_w: list[float] | None = None
-    for i in range(iters):
-        proj = centered.crossJoin(F.broadcast(w)).select(
-            "xc", _dot(F.col("xc"), F.col("w")).alias("s")
-        )
-        y = _weighted_dim_sums(proj, "xc", "s")
-        w = y.select(
-            F.transform(
-                "y",
-                lambda a: a
-                / F.sqrt(
-                    F.aggregate(
-                        F.col("y"), F.lit(0.0), lambda acc, t: acc + t * t
-                    )
-                ),
-            ).alias("w")
-        )
-        # Every-2 truncation cadence + fixpoint early exit on the
-        # (d-element, one-row) iterate — the graph-operator contract.
-        if (i + 1) % 2 == 0 or i == iters - 1:
-            w = ckpt(w, "w")
-            cur_w = w.first()["w"]
-            if prev_w is not None and max(
-                abs(a - b) for a, b in zip(cur_w, prev_w)
-            ) < 1e-9:
-                break
-            prev_w = cur_w
-
-    final = centered.crossJoin(F.broadcast(w)).select(
-        _dot(F.col("xc"), F.col("w")).alias("s"), "n", "w"
-    )
-    lam = final.groupBy().agg(
-        F.first("w").alias("w"),
-        (F.sum(F.col("s") * F.col("s")) / F.first("n")).alias("eigenvalue"),
-        F.first("n").alias("n_vectors"),
-    )
-    # deterministic sign: largest-|loading| entry made positive
-    signed = lam.select(
-        F.when(
-            F.element_at(
-                F.array_sort(
-                    F.transform(F.col("w"), lambda x: F.struct(
-                        (-F.abs(x)).alias("negabs"), x.alias("x")
-                    ))
-                ),
-                1,
-            )["x"]
-            < 0,
-            F.transform(F.col("w"), lambda x: -x),
-        )
-        .otherwise(F.col("w"))
-        .alias("w"),
-        "eigenvalue",
-        "n_vectors",
-    )
-    out = signed.select(
-        F.posexplode("w").alias("dim", "loading"), "eigenvalue", "n_vectors"
-    )
-    # Materialize the d-row result before releasing the training cache.
-    out = ckpt(out, "out")
-    ckpt.release("w")
-    centered.unpersist()
-    return out
-
-
-def _logreg_fit_arrow(
-    c: DataFrame, d: int, iters: int, lr: float, l2: float, tol: float
-) -> DataFrame:
-    """Arrow GD loop for logreg_fit (see its docstring): per round one
-    mapInPandas pass yields ONE per-partition (count, Xᵀ(σ(Xw)−y))
-    partial (accumulated over the partition's batch iterator);
-    the driver reduces them, updates w, and early-exits on max|Δw| <
-    tol. `c` arrives persisted (x array<double>, y double) and is
-    released here after the final one-row eval materializes."""
-    import numpy as np
-
-    w = np.zeros(d, dtype=np.float64)
-    for _ in range(iters):
-        wl = w.tolist()
-
-        def grad_part(batches, wl=wl):
-            import numpy as np
-            import pandas as pd
-
-            # One partial per PARTITION (accumulated over the batch
-            # iterator), so collected partials are partition-bounded.
-            wv = np.asarray(wl, dtype=np.float64)
-            n_p, g_p = 0, np.zeros_like(wv)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.asarray(pdf["x"].tolist(), dtype=np.float64)
-                y = pdf["y"].to_numpy(dtype=np.float64)
-                p = 1.0 / (1.0 + np.exp(-(X @ wv)))
-                n_p += int(len(y))
-                g_p += X.T @ (p - y)
-            if n_p:
-                yield pd.DataFrame({"n": [n_p], "g": [g_p.tolist()]})
-
-        parts = c.mapInPandas(grad_part, "n long, g array<double>").collect()
-        n_tot = sum(r["n"] for r in parts)
-        g = np.sum([np.asarray(r["g"]) for r in parts], axis=0) / n_tot
-        new_w = w - lr * (g + l2 * w)
-        done = tol > 0.0 and float(np.max(np.abs(new_w - w))) < tol
-        w = new_w
-        if done:
-            break
-
-    wl = w.tolist()
-
-    def eval_part(batches, wl=wl):
-        import numpy as np
-        import pandas as pd
-
-        wv = np.asarray(wl, dtype=np.float64)
-        eps = 1e-12
-        n_p, loss_p, acc_p = 0, 0.0, 0.0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray(pdf["x"].tolist(), dtype=np.float64)
-            y = pdf["y"].to_numpy(dtype=np.float64)
-            p = 1.0 / (1.0 + np.exp(-(X @ wv)))
-            loss = -(y * np.log(p + eps) + (1.0 - y) * np.log(1.0 - p + eps))
-            n_p += int(len(y))
-            loss_p += float(loss.sum())
-            acc_p += float(((p >= 0.5) == (y >= 0.5)).sum())
-        if n_p:
-            yield pd.DataFrame(
-                {"n": [n_p], "loss_sum": [loss_p], "acc_sum": [acc_p]}
-            )
-
-    parts = c.mapInPandas(
-        eval_part, "n long, loss_sum double, acc_sum double"
-    ).collect()
-    n_tot = sum(r["n"] for r in parts)
-    loss = sum(r["loss_sum"] for r in parts) / n_tot
-    acc = sum(r["acc_sum"] for r in parts) / n_tot
-    out = c.sparkSession.createDataFrame(
-        [(wl, float(loss), float(acc), int(n_tot))],
-        "weights array<double>, log_loss double, accuracy double, n_rows bigint",
-    )
-    c.unpersist()
-    return out
-
-
-def logreg_fit(
-    df: DataFrame,
-    features: str,
-    label: str,
-    iters: int = 12,
-    lr: float = 1.0,
-    l2: float = 0.0,
-    checkpoint_dir: str | None = None,
-    tol: float = 1e-9,
-    method: str = "auto",
-) -> DataFrame:
-    """Binary logistic regression by full-batch gradient descent.
-    `features` is an array<double> column (include a leading 1.0
-    yourself for a bias term); `label` is 0/1.
-
-    method="arrow" (the "auto" route for d ≤ 4096) is the spark.ml
-    treeAggregate design: per GD round ONE Arrow mapInPandas pass
-    computes per-partition numpy gradient partials Xᵀ(σ(Xw)−y) — d
-    doubles per partition, model state — which reduce on the driver where
-    the weight update (and the tol early exit) runs for free; no
-    per-round checkpoint is needed because every round is a fresh
-    one-pass plan over the persisted feature frame. method="expr" is
-    the pure-DataFrame form below (the huge-d fallback where even
-    per-batch numpy partials would be unwieldy); a path-agreement
-    test pins the two to each other.
-
-    Per iteration: p = σ(x·w) per row (one zip_with fold), gradient
-    gₖ = (1/n)·Σ (p − y)·xₖ via posexplode + hash agg on dim, then
-    w ← w − lr·(g + l2·w), eagerly checkpointed. The weight vector is
-    a one-row frame broadcast into the scan — no driver collect of
-    the DATA, no corpus shuffle (the shuffle moves d partial
-    gradients per task). The feature frame is persisted
-    MEMORY_AND_DISK for the duration of training — it is scanned
-    once per round, and re-reading + re-projecting parquet every
-    round was both slow and the dominant run-to-run variance source
-    (r05 bench: [3.10, 3.08, 4.76 s] spreads) — and unpersisted
-    before return.
-
-    Lineage truncates every 2nd round and on the last (the pagerank
-    cadence — rounds chain with no cross-round reuse, so batching two
-    rounds per checkpoint job halves scheduler overhead at the same
-    scan count). Early exit: at each truncation the (d-element,
-    one-row) weight vector is fetched and compared against the
-    previous truncation's; training stops when max|Δwₖ| < `tol` — GD
-    has reached its fixpoint at the working precision and further
-    rounds are pure scheduler cost. Set tol=0.0 to force all `iters`
-    rounds.
-
-    Returns a one-row DataFrame:
-      (weights array<double>, log_loss, accuracy, n_rows)
-    where log_loss/accuracy are evaluated with the FINAL weights over
-    the training frame. Convergence properties (loss strictly
-    decreasing for small lr, planted-separable recovery) are asserted
-    in tests/test_ml.py.
-    """
-    from pyspark import StorageLevel
-
-    if method not in ("auto", "arrow", "expr"):
-        raise ValueError(f"logreg_fit: unknown method {method!r} (auto|arrow|expr)")
-    ckpt = _checkpointer(df, checkpoint_dir)
-    c = df.select(
-        as_double_array(features).alias("x"), F.col(label).cast("double").alias("y")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    d = _dim(c, "x")
-    if method == "arrow" or (method == "auto" and d <= 4096):
-        return _logreg_fit_arrow(c, d, iters, lr, l2, tol)
-    w = c.sparkSession.range(1).select(
-        F.array(*[F.lit(0.0) for _ in range(d)]).alias("w")
-    )
-
-    def sigmoid(z: Column) -> Column:
-        return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-
-    prev_w: list[float] | None = None
-    for i in range(iters):
-        scored = c.crossJoin(F.broadcast(w)).select(
-            "x", "y", "w", sigmoid(_dot(F.col("x"), F.col("w"))).alias("p")
-        )
-        grad = _weighted_dim_sums(
-            scored.select("x", (F.col("p") - F.col("y")).alias("err")),
-            "x",
-            "err",
-            mean=True,
-        ).select(F.col("y").alias("g"))
-        w = (
-            w.crossJoin(F.broadcast(grad))
-            .select(
-                F.zip_with(
-                    "w",
-                    "g",
-                    lambda wk, gk: wk - F.lit(lr) * (gk + F.lit(l2) * wk),
-                ).alias("w")
-            )
-        )
-        # Truncate every 2nd round and on the last (the pagerank
-        # cadence): rounds chain sequentially with no cross-round
-        # reuse, so one checkpoint job per two rounds runs the same
-        # two corpus scans with half the job-scheduling overhead.
-        if (i + 1) % 2 == 0 or i == iters - 1:
-            w = ckpt(w, "w")
-            if tol > 0.0:
-                # One-row, d-element fetch off the just-materialized
-                # checkpoint — model state, not data, so this is not
-                # a driver-collect antipattern.
-                cur_w = w.first()["w"]
-                if prev_w is not None and max(
-                    abs(a - b) for a, b in zip(cur_w, prev_w)
-                ) < tol:
-                    break
-                prev_w = cur_w
-
-    eps = F.lit(1e-12)
-    scored = c.crossJoin(F.broadcast(w)).select(
-        "w", "y", sigmoid(_dot(F.col("x"), F.col("w"))).alias("p")
-    )
-    out = scored.groupBy().agg(
-        F.first("w").alias("weights"),
-        F.avg(
-            -(
-                F.col("y") * F.log(F.col("p") + eps)
-                + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - F.col("p") + eps)
-            )
-        ).alias("log_loss"),
-        F.avg(
-            F.when((F.col("p") >= 0.5) == (F.col("y") >= 0.5), 1.0).otherwise(0.0)
-        ).alias("accuracy"),
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-    )
-    # Materialize the one-row result before dropping the training
-    # cache, so the caller's action doesn't re-scan uncached data.
-    out = ckpt(out, "out")
-    ckpt.release("w")
-    c.unpersist()
-    return out
-
-
 def pca_top_k(
     corpus: DataFrame,
     vec: str = "embedding",
@@ -521,16 +165,18 @@ def pca_top_k(
     space), and eigenvalues come out in decreasing order; both are
     property-tested.
 
-    Same scale posture as pca_top_component: the covariance matrix
-    never exists — every step is one corpus scan (zip_with folds) +
+    Scale posture on the power route: the covariance matrix never
+    exists — every step is one corpus scan (zip_with folds) +
     one d-row aggregate; model state (k d-vectors) is one-row frames
     broadcast per round. The deflated corpus is checkpointed per
     component (k materializations of an n×d relation — the honest
     cost of deflation; randomized block SVD is the escape hatch at
     k in the hundreds, noted for parity with the literature).
 
-    method: "gram" / "power" / "auto" — as pca_top_component. The
-    gram path replaces k×iters corpus scans with ONE (and eigh's
+    method: "gram" = the one-scan Gram + driver eigensolve
+    (_pca_gram_topk); "power" = the iterative covariance-action form;
+    "auto" (default) = gram when d ≤ 512, power above. The gram path
+    replaces k×iters corpus scans with ONE (and eigh's
     exact factorization replaces deflation), the measured difference
     between 7 s and sub-second at sf0.1 / d=64.
 
@@ -660,9 +306,8 @@ def logreg_fit_attested(
 ) -> DataFrame:
     """Binary logistic regression by full-batch GD whose EVERY float
     operation is cross-engine deterministic, so a DuckDB CTE unroll
-    replays all `iters` rounds bit-for-bit (the r11 guarantee-
-    attestation conversion — the kmeans_attested design applied to
-    gradient descent):
+    replays all `iters` rounds bit-for-bit (the kmeans_attested
+    design applied to gradient descent):
 
     - dot products and gradients run in fixed point:
       SUM(FLOOR(term·10¹²)) over exact BIGINTs — order-independent,
@@ -686,21 +331,19 @@ def logreg_fit_attested(
 
     Returns (dim, weight, log_loss, accuracy, n_rows) — one row per
     weight with the final-model metrics repeated (scalars, kept out
-    of array columns for the driver's canonicalizer). The float-math
-    production twin stays logreg_fit (Arrow treeAggregate partials).
+    of array columns for the driver's canonicalizer).
 
     Scale: per round one (n·d)-row fixed-point shuffle grouped by
     row id plus one d-row gradient aggregate; model state is d
     doubles on the driver."""
     spark = df.sparkSession
     view = "__logreg_attested_x"
-    # r15 optimization (guide §1.2: fix the distributed algorithm
-    # first). The r11 form kept features EXPLODED as (rid, k, xk) rows
-    # and each GD round paid: re-scan + re-explode from storage, a
+    # The features stay an ARRAY column. An exploded (rid, k, xk)
+    # form would pay, per GD round: re-scan + re-explode from storage, a
     # VALUES join, a groupBy(rid) SHUFFLE for z, a join back on rid
     # (another shuffle), and a groupBy(k) shuffle for the gradient —
     # ~3 exchanges × `iters` rounds for a model-state-sized result.
-    # Now the features stay an ARRAY column materialized ONCE
+    # Here the array column is materialized ONCE
     # (localCheckpoint), z is a per-row fixed-point fold
     # (aggregate∘zip_with — map-side, no shuffle), and the gradient is
     # ONE global aggregate of d SUM expressions (partial aggregation;
@@ -805,10 +448,9 @@ def pca_power_attested(
 ) -> DataFrame:
     """Principal components by power iteration with deflation whose
     EVERY float operation is cross-engine deterministic, so a DuckDB
-    CTE unroll replays all rounds bit-for-bit — the r11 guarantee-
-    attestation conversion (logreg_fit_attested's design applied to
-    the eigenproblem; the float-math production twins stay
-    pca_top_component / pca_top_k, property-tested in tests/test_ml.py):
+    CTE unroll replays all rounds bit-for-bit (logreg_fit_attested's
+    design applied to the eigenproblem; recovery is property-tested in
+    tests/test_ml.py):
 
     - dimension means and the covariance matrix accumulate in FIXED
       POINT: SUM(FLOOR(term·10⁹ or 10¹²)) over exact BIGINTs —

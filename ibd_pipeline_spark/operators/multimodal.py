@@ -3,7 +3,7 @@ columns with typed metadata (north-star set, SURVEY.md §2.2).
 
 What's real here (and tested): the schema contract, the Arrow-batched
 mapInPandas plumbing, batch shapes, partition sizing for large blobs —
-and the ENTIRE audio path (synthesize_wav/decode_audio/slice_audio),
+and the ENTIRE audio path (synthesize_wav/decode_audio),
 which runs a genuine RIFF/WAV codec from the Python stdlib, no
 external library needed. Image decode/resize run real when pillow is
 installed (guarded import); video frame extraction is stubbed
@@ -90,8 +90,8 @@ def asset_rows(n: int = 64, seed: int = 42) -> "list[tuple]":
     return rows
 
 
-# Session-keyed cache of the synthesized asset frames (VERDICT r9 #6):
-# a fresh createDataFrame local relation pays ~0.7-1.7 s on its FIRST
+# Session-keyed cache of the synthesized asset frames: a fresh
+# createDataFrame local relation pays ~0.7-1.7 s on its FIRST
 # action in this Spark version, and the multimodal queries each
 # re-synthesized the same fixture — so the decoded/encoded asset
 # relation is built ONCE per (session, kind, n, seed), eagerly
@@ -108,7 +108,7 @@ def _cached_asset_frame(spark, kind: str, n: int, seed: int, build) -> DataFrame
     if df is None:
         # drop entries from other (stopped) sessions so a long-lived
         # process creating many sessions never accumulates dead
-        # DataFrame references and their lineage (ADVICE r10)
+        # DataFrame references and their lineage
         app = key[0]
         for k in [k for k in _ASSET_FRAME_CACHE if k[0] != app]:
             del _ASSET_FRAME_CACHE[k]
@@ -744,45 +744,6 @@ def extract_audio_features(assets: DataFrame) -> DataFrame:
     return assets.mapInPandas(batches, AUDIO_FEATURE_SCHEMA)
 
 
-def slice_audio(assets: DataFrame, start_ms: int = 0, end_ms: int = 250) -> DataFrame:
-    """Real audio clipping: decode the WAV container, slice the PCM
-    frame range [start_ms, end_ms), re-encode a valid WAV — the audio
-    twin of resize_images, except nothing is stubbed. Output rows
-    remain decodable by decode_audio (tested round-trip)."""
-    import io
-    import wave
-
-    def _clip(content: bytes) -> bytes:
-        with wave.open(io.BytesIO(content), "rb") as w:
-            rate = w.getframerate()
-            lo = min(rate * start_ms // 1000, w.getnframes())
-            hi = min(rate * end_ms // 1000, w.getnframes())
-            w.setpos(lo)
-            frames = w.readframes(max(0, hi - lo))
-            params = w.getparams()
-        out = io.BytesIO()
-        with wave.open(out, "wb") as o:
-            o.setparams(params)
-            o.writeframes(frames)
-        return out.getvalue()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            auds = pdf[pdf["media_type"] == "audio"]
-            if auds.empty:
-                continue
-            yield pd.DataFrame(
-                {
-                    "asset_id": auds["asset_id"].values,
-                    "width": None,
-                    "height": None,
-                    "content": [_clip(bytes(b)) for b in auds["content"]],
-                }
-            )
-
-    return assets.mapInPandas(batches, RESIZE_SCHEMA)
-
-
 def metadata_profile(assets: DataFrame) -> DataFrame:
     """Metadata-only profile — touches ONLY metadata columns (size
     comes from the ingest-time content_bytes column, never
@@ -889,7 +850,7 @@ def phash_near_dup_pairs(
     verification ≤ max_hamming. Returns (id_a, id_b, hamming),
     id_a < id_b, deduplicated across tables.
 
-    Scale: identical geometry to dedup.simhash_near_dup_pairs — each
+    Scale: identical geometry to dedup.simhash32_pairs — each
     table's join key is a hash slice, so candidate volume is
     per-block quadratic, never corpus-quadratic; adding tables trades
     shuffle volume for recall exactly like sign-LSH's multi-table
@@ -902,7 +863,7 @@ def phash_near_dup_pairs(
     # Materialize the signature frame ONCE: it is referenced four
     # times below (two blocks × two join sides), and without the
     # checkpoint each reference re-executes the whole Python decode/
-    # signature stage (r10: measured 11 s -> ~1 s on the 96-asset
+    # signature stage (measured 11 s -> ~1 s on the 96-asset
     # fixture). Asset-count-sized rows — cheap to pin.
     sig = (
         phash_signatures(assets, fake=fake)
@@ -1287,7 +1248,8 @@ def audio_spectral_features(assets: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Video FRAME-level gates over a stdlib-decodable planted-defect corpus
-# (r14, VERDICT r13 #2 — the WAV-gate precedent applied to video)
+# (the WAV-gate precedent applied to video: real decode, planted
+# defects, exact counts)
 # ---------------------------------------------------------------------------
 
 

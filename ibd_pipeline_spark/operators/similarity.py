@@ -34,13 +34,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def normalize(a: Column) -> Column:
-    """Unit-normalize once at ingest so cosine becomes a plain dot
-    product downstream — the right layout for repeated queries."""
-    n = l2_norm(a)
-    return F.transform(a, lambda x: x / n)
-
-
 def _parse_byte_size(conf: str, default: int = 134217728) -> int:
     """Parse a Spark byte-size config value (JavaUtils grammar subset:
     optional k/m/g/t/p suffix, optional trailing 'b', case-insensitive).
@@ -153,57 +146,6 @@ def brute_force_topk(
     )
 
 
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes for sign-LSH, generated
-    from a seeded counter hash (no runtime RNG → plans are stable
-    across runs and resumes)."""
-    import hashlib
-    import struct
-
-    planes: list[list[float]] = []
-    for p in range(n_planes):
-        row: list[float] = []
-        for d in range(dim):
-            h = hashlib.md5(f"{seed}:{p}:{d}".encode()).digest()[:8]
-            (u,) = struct.unpack("<q", h)
-            row.append(u / float(2**63))  # uniform-ish in [-1, 1)
-        planes.append(row)
-    return planes
-
-
-def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-LSH bucket id: one bit per hyperplane = sign(v·h)."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(x) for x in plane])
-        bucket = bucket + F.when(
-            dot(vec_col, p) >= 0, F.lit(1 << i).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return bucket
-
-
-def lsh_bucket_tables(
-    vec_col: Column, dim: int, n_tables: int, bits_per_table: int, seed: int = 42
-) -> Column:
-    """Multi-table sign-LSH: an array of (table_id·2³² + bucket) keys,
-    one per hash table. Candidate = any shared key.
-
-    Implemented as an Arrow-batched pandas_udf (numpy matmul of the
-    batch against all n_tables·bits_per_table hyperplanes at once)
-    rather than column expressions: the expression form embeds
-    dim·tables·bits literal coefficients (~3000 for 8×6×64), which
-    overflows whole-stage-codegen method limits and degrades to slow
-    interpreted evaluation. One matmul per Arrow batch is both faster
-    and planner-friendly; the hyperplanes are regenerated
-    deterministically inside each executor (no broadcast needed).
-    The UDF lives in operators._arrow_udfs (type-hinted Spark 4
-    form; this module's future-annotations import would stringify
-    the hints)."""
-    from ibd_pipeline_spark.operators._arrow_udfs import bucket_keys_udf
-
-    return bucket_keys_udf(dim, n_tables, bits_per_table, seed=seed)(vec_col)
-
-
 def _maybe_broadcast(
     df: DataFrame,
     mode: bool | str,
@@ -217,16 +159,15 @@ def _maybe_broadcast(
     (the join key is already an equi-key, so only the hint changes).
     "auto" → size-check with a LIMIT-bounded count (CollectLimit
     short-circuits the scan) and broadcast only under the cap —
-    a large query set then degrades to shuffle instead of dying on
-    the broadcast size limit (the round-1 VERDICT's failure mode).
+    a large query set then degrades to shuffle instead of failing on
+    the broadcast size limit.
 
     The count runs against `probe_df` (the RAW query input) when
     given, with the cap divided by `fanout` (the deterministic
     bucket/cell explosion factor between probe_df and df): counting
-    the raw relation keeps the sizing job a pure JVM scan — counting
-    `df` itself would execute the bucket-hash pandas UDF and its
-    explode just to make a yes/no decision (measured ~0.7 s of
-    python-worker wall per ANN call at bench scale)."""
+    the raw relation keeps the sizing job a bare scan — counting
+    `df` itself would run the bucket or cell projection and its
+    explode just to make a yes/no decision."""
     if mode is True:
         return F.broadcast(df)
     if mode is False:
@@ -244,7 +185,7 @@ def ivf_cells(
     vec: str = "vec",
 ) -> "tuple[DataFrame, DataFrame]":
     """(centroids, corpus-cell assignment) — the reusable IVF layout
-    step split out of ivf_topk (r10, for IVF-PQ composition):
+    step split out of ivf_topk (IVF-PQ composes it too):
     centroids are the n_centroids lowest-id corpus vectors; every
     corpus vector is assigned to its max-cosine centroid with ties to
     the LOWEST cent_id (deterministic struct-max). Returns
@@ -371,14 +312,14 @@ def required_portable_dim(
 def check_portable_dim(
     dim: int, n_tables: int = 8, bits_per_table: int = 6, stride: int = 8
 ) -> None:
-    """Fail LOUDLY when a portable sign-LSH caller's vectors are too
-    short: element_at past the end returns NULL, which silently
-    degrades bucket bits to 0 and hashes everything into degenerate
-    buckets (ADVICE r10)."""
+    """Fail LOUDLY when a sign-LSH caller's vectors are too short:
+    element_at past the end returns NULL, which silently degrades
+    bucket bits to 0 and hashes everything into degenerate
+    buckets."""
     need = required_portable_dim(n_tables, bits_per_table, stride)
     if dim < need:
         raise ValueError(
-            f"portable sign-LSH needs dim >= {need} "
+            f"sign-LSH needs dim >= {need} "
             f"(n_tables={n_tables}, bits_per_table={bits_per_table}, "
             f"stride={stride}); got dim={dim}"
         )
@@ -394,15 +335,15 @@ def axis_sign_bucket_tables(
     are the coordinate axes at dims {t, t+stride, t+2·stride, …} —
     bucket bit j is simply sign(v[t + j·stride]). Valid sign-LSH for
     CENTERED embeddings (each axis splits ~50/50); less uniform than
-    random Gaussian hyperplanes (the pandas-UDF default) but exactly
+    random Gaussian hyperplanes on adversarial data, but exactly
     replayable as plain SQL CASE expressions, which makes the whole
     block→verify pipeline oracle-checkable. Pure codegen column
     algebra — no Python, no hyperplane state at all.
 
     Built as ONE `F.expr` SQL parse rather than ~n_tables·bits
     py4j Column calls: the per-call py4j chatter was ~0.3 s per side
-    at bench scale (r12 profile), vs ~1 ms to parse the same tree
-    JVM-side. Pass the vector column NAME when available (a bare
+    at bench scale, vs ~1 ms to parse the same tree JVM-side. Pass
+    the vector column NAME when available (a bare
     Column falls back to its string form, which is correct for plain
     attribute references like F.col("v"))."""
     if isinstance(vec_col, str):
@@ -438,34 +379,29 @@ def cosine_near_dup_pairs(
     dim: int = 64,
     id_col: str = "vec_id",
     vec: str = "embedding",
-    portable: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ threshold) via
     multi-table sign-LSH blocking + exact verification — the
     embedding-space sibling of MinHash text dedup (semantic dups that
     share no n-grams).
 
-    portable=True blocks on axis-aligned sign bits
-    (axis_sign_bucket_tables) instead of the numpy random-hyperplane
-    pandas UDF, making every stage SQL-replayable; the random
-    hyperplanes stay the default (better bucket uniformity on
-    adversarial data).
+    Blocking uses axis-aligned sign bits (axis_sign_bucket_tables), so
+    every stage is SQL-replayable.
 
     Scale: identical shape to minhash_candidate_pairs — bucket
     equi-join candidates, exact cosine only within buckets. At high
     thresholds (≥0.9 → small angles) sign-LSH recall per table is
     high, so few tables suffice.
     """
-    # Single-split inputs serialize the bucket-hash UDF and the
+    # Single-split inputs serialize the bucket projection and the
     # pairwise verification onto one core — widen first (no-op branch
     # on real multi-split corpora; see brute_force_topk).
     par = vectors.sparkSession.sparkContext.defaultParallelism
     if _estimated_scan_splits(vectors) < par:
         vectors = vectors.repartition(par)
-    if portable:
-        check_portable_dim(dim, n_tables, bits_per_table)
+    check_portable_dim(dim, n_tables, bits_per_table)
     # Per-vector state (double array + L2 norm) is materialized ONCE
-    # behind a checkpoint barrier (r11): norms are per-VECTOR
+    # behind a checkpoint barrier: norms are per-VECTOR
     # quantities — computing them inside the per-PAIR cosine paid two
     # HOF folds × |pairs| instead of × |vectors|, and the barrier
     # stops CollapseProject re-substituting the transform into every
@@ -475,7 +411,7 @@ def cosine_near_dup_pairs(
     v = vectors.select(
         F.col(id_col).alias("id"), as_double_array(vec).alias("v")
     )
-    # r15: the checkpointed per-vector state also carries the vector
+    # The checkpointed per-vector state also carries the vector
     # EXPANDED to `dim` real double columns. The verify dot over the
     # array form ran as an interpreted aggregate-over-zip_with per
     # pair (higher-order functions don't codegen); over real columns
@@ -486,10 +422,10 @@ def cosine_near_dup_pairs(
     # hash-attested consumers are unaffected. Assumes fixed-dim
     # vectors (the same `dim` contract the bucket tables already
     # hold).
-    # r16 (guide §1.2 driver overhead): the wide projections below are
-    # built as SQL STRINGS in ONE selectExpr py4j call each — the
-    # per-Column py4j form cost ~9300 gateway round-trips ≈ 1.7 s of
-    # pure driver chatter per construction at dim=64 (r16 cProfile);
+    # The wide projections below are built as SQL STRINGS in ONE
+    # selectExpr py4j call each — the per-Column py4j form cost ~9300
+    # gateway round-trips ≈ 1.7 s of pure driver chatter per
+    # construction at dim=64 (cProfile);
     # the parsed trees (GetArrayItem, left-assoc chains) are
     # node-identical, so every double is bit-unchanged.
     v = v.selectExpr(
@@ -499,7 +435,7 @@ def cosine_near_dup_pairs(
         "SQRT(aggregate(transform(v, x -> x * x), 0.0D,"
         " (acc, x) -> acc + x)) AS nrm",
         *[f"v[{k}] AS e{k}" for k in range(dim)],
-        # Guard the fixed-dim contract ONCE per vector (ADVICE r15):
+        # Guard the fixed-dim contract ONCE per vector:
         # the expanded e0..e{dim-1} dot silently ignores elements past
         # `dim` (and ANSI-errors on shorter vectors); assert the size
         # here so a mismatched `dim` argument fails loudly at the
@@ -508,11 +444,7 @@ def cosine_near_dup_pairs(
         f"'cosine_near_dup_pairs: expected dim={dim}, got ',"
         " CAST(size(v) AS STRING))) AS _dimck",
     ).localCheckpoint(eager=True)
-    buckets = (
-        axis_sign_bucket_tables(F.col("v"), n_tables, bits_per_table)
-        if portable
-        else lsh_bucket_tables(F.col("v"), dim, n_tables, bits_per_table)
-    )
+    buckets = axis_sign_bucket_tables("v", n_tables, bits_per_table)
     keyed = v.withColumn("bkey", F.explode(buckets)).select("id", "bkey")
     l, r = keyed.alias("l"), keyed.alias("r")
     pairs = (
@@ -537,8 +469,8 @@ def cosine_near_dup_pairs(
     )
     # Verify = codegen dot ÷ precomputed norms over BROADCAST vector
     # sides (letting AQE pick sort-merge for the vector joins shuffled
-    # 240 MB of arrays — 10 s vs 1.5 s broadcast, the r11
-    # measurement). The arithmetic is unchanged: same fold order, same
+    # 240 MB of arrays — 10 s vs 1.5 s broadcast at sf0.1). The
+    # arithmetic is unchanged: same fold order, same
     # sqrt(0.0 + Σx²) norms, identical doubles — the SQL `+` chain
     # parses left-associated exactly like the old functools.reduce.
     dot_sql = "0.0D" + "".join(f" + xa{k} * xb{k}" for k in range(dim))
@@ -566,7 +498,6 @@ def lsh_bucketed_topk(
     vec: str = "vec",
     broadcast_queries: bool | str = "auto",
     max_broadcast_rows: int = 500_000,
-    portable: bool = False,
 ) -> DataFrame:
     """ANN top-k via multi-table sign-LSH: L independent hash tables
     of b hyperplane bits each; a corpus vector is a candidate for a
@@ -580,40 +511,34 @@ def lsh_bucketed_topk(
     only buys what the geometry gives; recall is asserted on
     clustered data in tests/test_similarity.py.
 
-    portable=True buckets on axis-aligned sign bits
-    (axis_sign_bucket_tables — pure codegen column algebra, no
-    Python) instead of random Gaussian hyperplanes, making the
-    ENTIRE top-k pipeline SQL-replayable; random hyperplanes stay
-    the default (better bucket uniformity on adversarial data).
+    Buckets are axis-aligned sign bits (axis_sign_bucket_tables —
+    pure codegen column algebra, no Python), so the ENTIRE top-k
+    pipeline is SQL-replayable.
 
     Scale: explode(bucket_keys) → equi-join on the key replaces the
-    cross product; per-table buckets are balanced by construction
-    (sign bits of random projections), and the dedup before scoring
-    keeps each (query, candidate) pair scored once.
+    cross product, and the dedup before scoring keeps each (query,
+    candidate) pair scored once.
     """
     from pyspark.sql import Window
 
-    if portable:
-        check_portable_dim(dim, n_tables, bits_per_table)
+    check_portable_dim(dim, n_tables, bits_per_table)
 
-    def _buckets(col: Column) -> Column:
-        if portable:
-            return axis_sign_bucket_tables(col, n_tables, bits_per_table)
-        return lsh_bucket_tables(col, dim, n_tables, bits_per_table)
-
-    # NOTE deliberately NOT widened (contrast brute_force_topk/ivf_topk):
-    # the per-row work here is an Arrow pandas UDF, and a corpus small
-    # enough to be one split is also small enough that one python
-    # worker with one large Arrow batch beats 32 workers paying the
-    # per-worker serialization floor — measured 0.99 s → 1.89 s WORSE
-    # with widening at bench scale. Widening pays off for JVM
-    # expression stages (cosine fan-outs), not UDF-bound ones.
+    # NOTE deliberately NOT widened (contrast brute_force_topk/ivf_topk).
+    # The per-row bucket work is a JVM CASE bank over a few vector
+    # elements, so a one-split corpus gains little from more tasks and
+    # a repartition would add a shuffle; the cosine scoring after the
+    # candidate join is already spread by the join's exchange. Whether
+    # widening pays on this path is unmeasured.
     q = queries.select(
         F.col(query_id).alias("qid"), as_double_array(vec).alias("qv")
-    ).withColumn("bkey", F.explode(_buckets(F.col("qv"))))
+    ).withColumn(
+        "bkey", F.explode(axis_sign_bucket_tables("qv", n_tables, bits_per_table))
+    )
     c = corpus.select(
         F.col(corpus_id).alias("cid"), as_double_array(vec).alias("cv")
-    ).withColumn("bkey", F.explode(_buckets(F.col("cv"))))
+    ).withColumn(
+        "bkey", F.explode(axis_sign_bucket_tables("cv", n_tables, bits_per_table))
+    )
     candidates = (
         c.join(
             _maybe_broadcast(
@@ -645,15 +570,6 @@ def lsh_bucketed_topk(
     )
 
 
-def sq_dist(a: Column, b: Column) -> Column:
-    """Squared L2 distance via zip_with + aggregate (JVM codegen)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def kmeans_attested(
     corpus: DataFrame,
     k: int = 8,
@@ -663,15 +579,15 @@ def kmeans_attested(
 ) -> DataFrame:
     """Lloyd's k-means whose EVERY float operation is cross-engine
     deterministic, so a DuckDB CTE unroll replays the fixpoint
-    bit-for-bit (the r11 guarantee-attestation conversion — same
-    pattern as graph_kcore_peel's unrolled peel):
+    bit-for-bit (the same pattern as graph_kcore_peel's unrolled
+    peel):
 
     - init: the k lowest-id vectors (no RNG);
     - distance: per-dim (x−c)² doubles quantized by
       FLOOR(term·10¹²) to BIGINT and summed exactly — integer sums
       are order-independent, FLOOR of a double is bit-identical on
-      both engines (no round-half / shortest-repr hazard — the r05
-      davg lesson), and BIGINT never overflows here (≤ n·dim·4·10¹²);
+      both engines (no round-half / shortest-repr hazard), and
+      BIGINT never overflows here (≤ n·dim·4·10¹²);
     - argmin: least-struct over (d, cent_id) — integer compare, ties
       to the lowest centroid id;
     - update: per-(cluster, dim) means as
@@ -688,10 +604,9 @@ def kmeans_attested(
     whole-stage codegen.
 
     Returns (id_col, cluster_id INT, dist_fp BIGINT — squared L2 in
-    10⁻¹² units) under the final centroids. The production-speed
-    twin (numpy Arrow partials, float math, scan-only rounds) stays
-    `kmeans`; this form trades a per-round n-row shuffle for
-    replayability.
+    10⁻¹² units) under the final centroids; the inertia is
+    SUM(dist_fp) / 10¹². Replayability costs a per-round n-row
+    shuffle.
 
     Scale: per round ONE n·dim explode broadcast-joined to a dim-row
     inline-VALUES centroid lookup, aggregated to n rows carrying k
@@ -762,219 +677,3 @@ GROUP BY a.cl, e.pos"""
         F.col("cl").cast("int").alias("cluster_id"),
         F.col("dist_fp"),
     )
-
-
-def _kmeans_arrow(
-    c: DataFrame, k: int, iters: int, id_col: str
-) -> DataFrame:
-    """Arrow fast path for kmeans (see its docstring): per Lloyd round
-    ONE mapInPandas pass yields per-PARTITION (centroid, count,
-    vector-sum) partials — k·d doubles of model state per partition, the
-    spark.ml treeAggregate shape — reduced on the driver where the
-    centroid update runs; the final assignment is one more distributed
-    pass emitting (id, cluster_id, dist). Ties break to the lowest
-    centroid id (numpy argmin first-occurrence — the same rule as the
-    expression form's MIN(dist, cent_id) struct). Empty centroids keep
-    their previous position (the k-clusters contract). `c` arrives
-    persisted as (cid, cv) and is released after the materialized
-    assignment."""
-    import numpy as np
-
-    init = c.orderBy("cid").limit(k).collect()
-    cents = np.asarray([r["cv"] for r in init], dtype=np.float64)
-    kk = cents.shape[0]
-    for _ in range(iters):
-        cl = cents.tolist()
-
-        def upd(batches, cl=cl):
-            import numpy as np
-            import pandas as pd
-
-            # Accumulate over the whole partition's batch iterator and
-            # yield k partial rows ONCE — partials are then bounded by
-            # partition count, not corpus rows.
-            C = np.asarray(cl, dtype=np.float64)
-            sums = np.zeros_like(C)
-            cnts = np.zeros(C.shape[0], dtype=np.int64)
-            seen = False
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                seen = True
-                X = np.asarray(pdf["cv"].tolist(), dtype=np.float64)
-                d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-                a = d2.argmin(1)
-                np.add.at(sums, a, X)
-                np.add.at(cnts, a, 1)
-            if seen:
-                yield pd.DataFrame(
-                    {
-                        "cent": list(range(C.shape[0])),
-                        "cnt": cnts.tolist(),
-                        "s": [row.tolist() for row in sums],
-                    }
-                )
-
-        parts = c.mapInPandas(upd, "cent int, cnt long, s array<double>").collect()
-        cnts = np.zeros(kk, dtype=np.int64)
-        sums = np.zeros_like(cents)
-        for r in parts:
-            cnts[r["cent"]] += r["cnt"]
-            sums[r["cent"]] += np.asarray(r["s"])
-        for j in range(kk):
-            if cnts[j] > 0:
-                cents[j] = sums[j] / cnts[j]
-
-    fl = cents.tolist()
-
-    def assign_rows(batches, fl=fl):
-        import numpy as np
-        import pandas as pd
-
-        C = np.asarray(fl, dtype=np.float64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray(pdf["cv"].tolist(), dtype=np.float64)
-            d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-            a = d2.argmin(1)
-            yield pd.DataFrame(
-                {
-                    "cid": pdf["cid"].to_numpy(),
-                    "cluster_id": a.astype("int32"),
-                    "dist": d2[np.arange(len(a)), a],
-                }
-            )
-
-    out = c.mapInPandas(
-        assign_rows, "cid bigint, cluster_id int, dist double"
-    ).withColumnRenamed("cid", id_col)
-    out = out.localCheckpoint(eager=True)
-    c.unpersist()
-    return out
-
-
-def kmeans(
-    corpus: DataFrame,
-    k: int = 8,
-    iters: int = 4,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
-    checkpoint_dir: str | None = None,
-    method: str = "auto",
-) -> DataFrame:
-    """Lloyd's k-means over an embedding column, DataFrame ops only.
-
-    Init is deterministic (the k lowest-id vectors — the same seed
-    rule ivf_topk uses for its coarse centroids; kmeans is the
-    sharpening pass that docstring points at). Each iteration:
-
-      assign  — corpus × broadcast(centroids) fan-out (k rows per
-                vector), argmin via MIN over (dist, cent_id) structs —
-                ties break on centroid id, so assignment is exact and
-                partitioning-independent;
-      update  — posexplode each assigned vector and hash-aggregate
-                (cent_id, dim_pos) → mean, then re-assemble the k
-                centroid arrays with a sort-by-position collect.
-
-    No driver collect anywhere: centroids stay a k-row DataFrame,
-    re-broadcast each round. Per round the k-row centroid frame is
-    checkpointed — `checkpoint_dir` set: reliable checkpoint (survives
-    executor loss — production); unset: localCheckpoint (tests) — the
-    same durability contract as operators.graph.connected_components.
-    Cadence note: EVERY round is correct here, unlike pagerank's
-    every-2 — a k-means round's lineage contains the corpus-wide
-    assign + dim aggregate, so deferring truncation re-executes that
-    real work (measured: every-2 ≈ 1.4× slower at sf0.1); pagerank's
-    rounds are near-free joins on vertex state, where the checkpoint
-    JOB overhead dominates instead.
-    Cost per iteration: one shuffle of k·dim (cent_id, pos) partial
-    means — corpus is scanned, never shuffled.
-
-    Returns (id_col, cluster_id, dist) — dist is the squared L2 to
-    the final centroid (inertia = SUM(dist)).
-    """
-    from pyspark.sql import Window
-
-    from pyspark import StorageLevel
-
-    from ibd_pipeline_spark.operators.ckpt import RoundCheckpointer
-
-    sc = corpus.sparkSession
-    ckpt = RoundCheckpointer(sc, checkpoint_dir)
-    # Persist the projected (id, vector) frame across Lloyd rounds:
-    # each assign otherwise re-reads + re-projects parquet (iters + 1
-    # scans) — the loop-invariant rule from logreg/pca/graph. Released
-    # after the final assignment is materialized.
-    c = corpus.select(
-        F.col(id_col).alias("cid"), as_double_array(vec).alias("cv")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if method not in ("auto", "arrow", "expr"):
-        raise ValueError(f"kmeans: unknown method {method!r} (auto|arrow|expr)")
-    if method in ("arrow", "auto"):
-        # Arrow partial-aggregation fast path (kmeans state k·d is
-        # always model-sized — no large-d fallback needed; keep
-        # method="expr" for the pure-DataFrame form).
-        return _kmeans_arrow(c, k, iters, id_col)
-    cents = (
-        c.orderBy("cid")
-        .limit(k)
-        .select(
-            (F.row_number().over(Window.orderBy("cid")) - 1).alias("cent_id"),
-            F.col("cv").alias("cent_v"),
-        )
-    )
-
-    def assign(cent_df: DataFrame) -> DataFrame:
-        pairs = c.join(F.broadcast(cent_df))
-        best = F.min(
-            F.struct(
-                sq_dist(F.col("cv"), F.col("cent_v")).alias("dist"),
-                F.col("cent_id").alias("cent_id"),
-            )
-        ).alias("best")
-        return (
-            pairs.groupBy("cid")
-            .agg(F.first("cv").alias("cv"), best)
-            .select(
-                "cid",
-                "cv",
-                F.col("best.cent_id").alias("cluster_id"),
-                F.col("best.dist").alias("dist"),
-            )
-        )
-
-    for _ in range(iters):
-        assigned = assign(cents)
-        dims = assigned.select("cluster_id", F.posexplode("cv").alias("pos", "x"))
-        updated = (
-            dims.groupBy("cluster_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cluster_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cent_v")
-            )
-            .select(F.col("cluster_id").alias("cent_id"), F.col("cent_v").alias("new_v"))
-        )
-        # A centroid that lost every member vanishes from the update
-        # aggregate; keep its previous position instead of silently
-        # shrinking k — later rounds can re-capture vectors for it,
-        # and the operator's k-clusters contract stays true.
-        cents = (
-            cents.join(updated, "cent_id", "left")
-            .select("cent_id", F.coalesce("new_v", "cent_v").alias("cent_v"))
-        )
-        cents = ckpt(cents, "cents")
-
-    out = assign(cents).select("cid", "cluster_id", "dist").withColumnRenamed(
-        "cid", id_col
-    )
-    # Materialize the final assignment before dropping the training
-    # cache, so the caller's action doesn't re-run assign uncached.
-    out = ckpt(out, "out")
-    ckpt.release("cents")
-    c.unpersist()
-    return out

@@ -1,8 +1,7 @@
 """Distributed sketch structures built from first principles on the
-DataFrame API (round 5, wave 3): a Count-Min sketch and a Bloom
+DataFrame API: a Count-Min sketch and a Bloom
 filter whose hash functions are the engine-portable md5 idiom, plus
-Spark's built-in DataSketches HLL aggregates wrapped for mergeable
-rollups.
+the md5-portable HyperLogLog registers for mergeable rollups.
 
 Why hand-built sketches when Spark has `approx_count_distinct` and a
 (JVM-internal) BloomFilter? Because the md5-derived forms are pure
@@ -10,9 +9,6 @@ functions of the data — identical in any engine, partitioning, and
 rerun — which makes them (a) DuckDB-oracle-checkable exactly, and
 (b) safe to persist and probe from a different system later (a CMS
 table written by this engine can be probed by anything that can md5).
-The built-in HLL path is kept alongside for the case where only
-Spark reads the sketch (binary DataSketches payload, far tighter
-memory).
 
 Scale notes per structure are on each builder.
 """
@@ -222,44 +218,3 @@ def bloom_maybe_contains(words_col: str, key: Column) -> Column:
         )
         cond = cond & (word.bitwiseAND(mask) != 0)
     return cond
-
-
-def hll_daily_weekly(events: DataFrame, ts: str = "ts", uid: str = "user_id") -> DataFrame:
-    """Mergeable distinct-user rollup on Spark's DataSketches HLL
-    aggregates: one sketch per day, weekly estimates from a UNION of
-    day sketches, side by side with a direct weekly sketch and the
-    exact distinct count.
-
-    This is the partial-aggregation pattern that makes 100 TB distinct
-    counting tractable: day partials are built once (map-side
-    combinable, fixed bytes per day), and any coarser grain —
-    week/month/rolling-28d — is a cheap union of partials instead of a
-    re-scan. The query asserts the algebra by construction: the union
-    estimate must equal the direct estimate because DataSketches HLL
-    union is exact over sketches with the same lgK.
-    """
-    day = events.select(
-        F.to_date(F.date_trunc("day", ts)).alias("day"),
-        F.to_date(F.date_trunc("week", ts)).alias("week"),
-        F.col(uid),
-    )
-    per_day = day.groupBy("week", "day").agg(
-        F.hll_sketch_agg(uid).alias("day_sketch")
-    )
-    weekly_union = per_day.groupBy("week").agg(
-        F.hll_sketch_estimate(F.hll_union_agg("day_sketch"))
-        .cast("bigint")
-        .alias("est_union_of_days"),
-        F.count(F.lit(1)).cast("int").alias("n_days"),
-    )
-    weekly_direct = day.groupBy("week").agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg(uid))
-        .cast("bigint")
-        .alias("est_direct"),
-        F.countDistinct(uid).cast("bigint").alias("exact_users"),
-    )
-    return (
-        weekly_union.join(weekly_direct, "week")
-        .select("week", "n_days", "est_union_of_days", "est_direct", "exact_users")
-        .orderBy("week")
-    )

@@ -44,13 +44,6 @@ def stopword_count(text: Column | str) -> Column:
     return F.size(F.filter(tokens(text), lambda t: F.array_contains(stop, t)))
 
 
-def avg_token_len(text: Column | str) -> Column:
-    """Mean token length = (chars - separators) / tokens."""
-    n = token_count(text)
-    txt = F.col(text) if isinstance(text, str) else text
-    return (F.length(txt) - (n - F.lit(1))) / n
-
-
 def quality_score(text: Column | str) -> Column:
     """Heuristic document quality in [0,1]: rewards moderate length,
     lexical diversity, and a natural stopword ratio. Mirrors the
@@ -82,52 +75,38 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens(text)))))
 
 
-def winnowing_fingerprints(
-    text: Column | str, k: int = 4, window: int = 5, portable: bool = False
-) -> Column:
+def winnowing_fingerprints(text: Column | str, k: int = 4, window: int = 5) -> Column:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken):
-    hash every word k-gram (the rolling-hash step — xxhash64 per
-    gram), then keep the minimum hash of each sliding window of
-    `window` consecutive gram hashes. Guarantees any shared substring
-    of ≥ k+window-1 words yields a shared fingerprint — the classic
-    plagiarism/near-dup detection key set.
-
-    portable=True swaps the gram hash for the md5_bucket idiom
-    (first 8 md5 hex digits as a 32-bit value) so a SQL oracle can
-    replay the fingerprint set exactly; xxhash64 stays the
-    at-scale default (8-byte JVM hash, no hex round-trip; 64-bit
-    fingerprint space vs 32).
+    hash every word k-gram (the md5_bucket idiom: first 8 md5 hex
+    digits as a 32-bit value), then keep the minimum hash of each
+    sliding window of `window` consecutive gram hashes. Guarantees
+    any shared substring of ≥ k+window-1 words yields a shared
+    fingerprint — the classic plagiarism/near-dup detection key set.
 
     Pure column algebra: sequence + transform for the grams, a second
     sequence + transform + array_min for the window minima,
     array_distinct for the final set. No explode, no Python.
 
-    SCALE WARNING (r9): this nested-lambda form re-evaluates the gram
-    array (and the token split) once per window element at runtime —
-    CollapseProject inlines the singly-referenced inner transform,
-    and higher-order functions don't codegen. Fine for unit tests and
-    single documents; at corpus scale use winnowing_fingerprint_rows
-    below (identical fingerprint sets, property-tested; 745 s → ~6 s
-    at sf0.1)."""
+    This is the REFERENCE form that the registry's
+    winnowing_fingerprint_rows is tested against: the nested lambda
+    re-evaluates the gram array (and the token split) once per window
+    element at runtime — CollapseProject inlines the
+    singly-referenced inner transform, and higher-order functions
+    don't codegen. Fine for unit tests and single documents; at
+    corpus scale use winnowing_fingerprint_rows below (identical
+    fingerprint sets, property-tested; 745 s → ~6 s at sf0.1)."""
     toks = F.split(F.col(text) if isinstance(text, str) else text, " ")
     n = F.size(toks)
     # slice() tolerates running past the end (returns the shorter
     # tail), so a document with fewer than k tokens yields one
-    # whole-text gram — the same semantics the element_at form ERRORED
-    # on (INVALID_ARRAY_INDEX, r9 fix) and the same the DuckDB oracle
-    # always had (out-of-range list index → NULL, concat_ws skips it).
-    if portable:
-        gram = lambda i: F.conv(  # noqa: E731
-            F.substring(
-                F.md5(F.concat_ws(" ", F.slice(toks, i + 1, k))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-    else:
-        gram = lambda i: F.xxhash64(  # noqa: E731
-            F.concat_ws(" ", F.slice(toks, i + 1, k))
-        )
+    # whole-text gram — the case an element_at form errors on
+    # (INVALID_ARRAY_INDEX), and the semantics the DuckDB oracle has
+    # (out-of-range list index → NULL, concat_ws skips it).
+    gram = lambda i: F.conv(  # noqa: E731
+        F.substring(F.md5(F.concat_ws(" ", F.slice(toks, i + 1, k))), 1, 8),
+        16,
+        10,
+    ).cast("bigint")
     n_grams = F.greatest(n - k + 1, F.lit(1))
     hashes = F.transform(F.sequence(F.lit(0), n_grams - 1), gram)
     n_windows = F.greatest(n_grams - window + 1, F.lit(1))
@@ -164,22 +143,21 @@ def winnowing_fingerprint_rows(
     id_col: str = "doc_id",
     k: int = 4,
     window: int = 5,
-    portable: bool = False,
 ):
     """Winnowing fingerprints as ROWS — the scale path of
-    `winnowing_fingerprints` (same algorithm, same output set,
-    equality property-tested): returns (id_col, fp) with one row per
-    distinct selected fingerprint per document.
+    `winnowing_fingerprints` (same algorithm, same md5 gram hash, same
+    output set, equality property-tested): returns (id_col, fp) with
+    one row per distinct selected fingerprint per document.
 
-    WHY a second form exists (the r9 745-second lesson): the
+    WHY this form exists (the 745-second lesson): the
     column-expression form nests the gram-hash array inside the
     window-min lambda, and Catalyst's CollapseProject counts that as
     a SINGLE reference — so it inlines it, and at runtime the full
     gram array (including the token split) re-evaluates once PER
     WINDOW ELEMENT: O(windows × grams × k) re-hashing per row,
     ~800 interpreted re-evaluations of the split+hash tree for a
-    30-token document. Measured at sf0.1: 334 s (xxhash64) / 745 s
-    (portable md5) for 5,000 documents.
+    30-token document. Measured at sf0.1: 745 s for 5,000
+    documents.
 
     This form hashes each gram EXACTLY ONCE: grams explode to rows,
     each gram row fans out to the ≤ `window` sliding windows it
@@ -200,10 +178,7 @@ def winnowing_fingerprint_rows(
         (n_grams - F.lit(window) + 1).alias("_nw"),
         F.posexplode(grams).alias("_pos", "_gram"),
     )
-    if portable:
-        h = F.conv(F.substring(F.md5("_gram"), 1, 8), 16, 10).cast("bigint")
-    else:
-        h = F.xxhash64("_gram")
+    h = F.conv(F.substring(F.md5("_gram"), 1, 8), 16, 10).cast("bigint")
     # fan each gram hash out to the sliding windows it belongs to:
     # wpos ∈ [max(0, pos-window+1), min(pos, n_windows-1)]
     wpos = F.explode(

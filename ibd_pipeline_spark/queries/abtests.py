@@ -10,12 +10,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ibd_pipeline_spark.catalog import load
+from ibd_pipeline_spark.normal_tail import _phi_tail_col, _phi_tail_sql
 from ibd_pipeline_spark.queries import query
-from ibd_pipeline_spark.queries.statcommon import (
-    _PHI_B,
-    _phi_tail_col,
-    _phi_tail_sql,
-)
 
 # ---------------------------------------------------------------------------
 # 2×2 odds ratio with the Woolf log-interval (md5 arm × converted)
@@ -1109,21 +1105,7 @@ def ab_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     t2 = (diff - F.lit(_TOST_MARGIN)) / se
 
     def phi_upper(t):
-        at = F.abs(t)
-        kk = F.lit(1.0) / (F.lit(1.0) + F.lit(0.2316419) * at)
-        poly = (
-            (
-                (
-                    (F.lit(_PHI_B[4]) * kk + F.lit(_PHI_B[3])) * kk
-                    + F.lit(_PHI_B[2])
-                )
-                * kk
-                + F.lit(_PHI_B[1])
-            )
-            * kk
-            + F.lit(_PHI_B[0])
-        ) * kk
-        tail = F.lit(0.3989422804014327) * F.exp(-0.5 * at * at) * poly
+        tail = _phi_tail_col(F.abs(t))
         return F.when(t >= 0, tail).otherwise(F.lit(1.0) - tail)
 
     p_tost = F.greatest(phi_upper(t1), F.lit(1.0) - phi_upper(t2))

@@ -241,19 +241,19 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (rolling-hash) fingerprint overlap, hash-attested:
     documents sharing ≥ 3 selected fingerprints with a lower-id
     document — substring-level near-dup detection (operators.text.
-    winnowing_fingerprints, portable=True: md5-derived 32-bit gram
-    hashes the DuckDB oracle replays exactly — grams, window minima,
-    the self-join, everything). The xxhash64 64-bit form stays the
-    at-scale default; the window-min selection property and
+    winnowing_fingerprint_rows: md5-derived 32-bit gram hashes the
+    DuckDB oracle replays exactly — grams, window minima, the
+    self-join, everything). The window-min selection property and
     planted-overlap recovery stay tested in
     tests/test_skew_and_text.py.
 
     Fingerprint sets explode → self-join on fingerprint → pair count;
     candidate space bounded like every other block-verify op here.
 
-    r9: switched to the explode-based winnowing_fingerprint_rows —
-    the nested-lambda column form re-evaluated the gram array (and
-    the token split) once per window element (Catalyst inlines the
+    The explode-based winnowing_fingerprint_rows, not the
+    column-expression winnowing_fingerprints: the nested-lambda form
+    re-evaluated the gram array (and the token split) once per window
+    element (Catalyst inlines the
     singly-referenced inner transform), turning 5,000 documents at
     sf0.1 into 745 s of interpreted re-hashing; the row form hashes
     each gram exactly once (2 s). Identity of the two forms is
@@ -266,8 +266,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-gram hashing onto one core — widen the scan before the
     # per-row-heavy fingerprint build
     d = winnowing_fingerprint_rows(
-        load_wide(spark, sf_dir, "documents").select("doc_id", "text"),
-        portable=True,
+        load_wide(spark, sf_dir, "documents").select("doc_id", "text")
     )
     a, b = d.alias("a"), d.alias("b")
     return (

@@ -1,5 +1,5 @@
-"""Avro message-payload queries (r14, VERDICT r13 #1): the
-schema-registry form of the reference's core ingest step.
+"""Avro message-payload queries: the schema-registry form of the
+reference's core ingest step.
 
 The reference decodes Kafka binary payloads with CAST + from_json
 (`spark_processor.py:123-124`); production Kafka topics carry
@@ -333,7 +333,7 @@ def io_avro_schema_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Logical types through the payload codec (r15, VERDICT r14 #3)
+# Logical types through the payload codec (the CDC/Debezium set)
 # ---------------------------------------------------------------------------
 
 _LOGICAL_ID = 11

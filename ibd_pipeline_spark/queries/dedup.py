@@ -2,11 +2,11 @@
 
 Every family here is oracle-checked: exact and unigram-Jaccard via
 DuckDB's list set-algebra, and the MinHash-LSH / SimHash pipelines
-via md5-PORTABLE hashing (operators/dedup.py portable modes — the
+via md5-PORTABLE hashing (operators/dedup.py — the
 first-8-md5-hex-digits idiom) so DuckDB replays signatures, band
-collisions, and the verify stage value-for-value. The xxhash64
-forms stay the at-scale defaults, with precision-vs-exact-Jaccard
-and planted-flip recovery property-tested in tests/test_dedup.py.
+collisions, and the verify stage value-for-value. Precision against
+exact Jaccard and planted-flip recovery are property-tested in
+tests/test_dedup.py.
 """
 
 from __future__ import annotations
@@ -134,7 +134,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mh_mins() -> str:
     # the 32 md5-family minima of operators.dedup.minhash_candidate_
-    # pairs(portable=True): family i is 32-bit word (i mod 4) of
+    # pairs: family i is 32-bit word (i mod 4) of
     # md5("<i//4>:h") — one digest feeds four families (the Spark
     # side materializes the 8 digests once per shingle row). Minima
     # are kept as 8-char hex strings: fixed-width lowercase hex
@@ -238,8 +238,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket equi-join, exact-Jaccard verification of bucket collisions
     only. The DuckDB oracle replays the WHOLE pipeline — digest
     staging, shingle hashes, all 32 family minima, band collisions,
-    verify — value-for-value (operators.dedup.minhash_candidate_pairs
-    portable=True; the xxhash64 form stays the at-scale default and
+    verify — value-for-value (operators.dedup.minhash_candidate_pairs;
     its precision/recall stays property-tested in
     tests/test_dedup.py).
 
@@ -256,7 +255,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps = d.select("doc_id", "text").join(
         D.exact_keeper_ids(d), "doc_id", "left_semi"
     )
-    pairs = D.minhash_candidate_pairs(reps, "doc_id", "text", portable=True)
+    pairs = D.minhash_candidate_pairs(reps, "doc_id", "text")
     # No release handle to forward: the minhash state is session-
     # cached (operators/dedup.py _SESSION_STATE_CACHE, r11).
     return pairs.filter(F.col("jaccard") >= 0.5).orderBy("id_a", "id_b")
@@ -310,9 +309,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5_bucket idiom from the MinHash estimator query), single
     8-bit chunk blocking, Hamming ≤ 4 verify — every stage exact
     integer algebra the DuckDB oracle replays bit-for-bit. The
-    xxhash64 64-bit forms (simhash64 / simhash_signatures /
-    simhash_near_dup_pairs) remain the library throughput path,
-    property-tested on planted flips in tests/test_dedup.py.
+    signature and pair operators are property-tested on planted flips
+    in tests/test_dedup.py.
 
     Scale: one explode+hash-agg signature pass, block-bounded
     self-join (never all-pairs) — identical plan shape at either
@@ -354,8 +352,8 @@ def dedup_simhash_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     on ≥ 1 chunk by pigeonhole), Hamming ≤ 4 verified once, output
     aggregated to (hamming, n_pairs). The DuckDB oracle replays the
     whole pipeline — signatures, banding, verify — exactly; the
-    pigeonhole recall ordering stays property-tested on planted bit
-    flips for the 64-bit production forms (tests/test_dedup.py).
+    pigeonhole guarantee stays property-tested on planted bit flips
+    (tests/test_dedup.py, tests/test_properties_r06.py).
 
     Scale: the band explode multiplies only the 16-byte (id, sig)
     table by 4, and each table's self-join is block-bounded exactly
@@ -536,7 +534,7 @@ def dedup_pagerank_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ibd_pipeline_spark.operators.graph import connected_components, pagerank
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    cand = minhash_candidate_pairs(d, portable=True)
+    cand = minhash_candidate_pairs(d)
     pairs = (
         cand.filter(F.col("jaccard") >= 0.6)
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -679,7 +677,7 @@ def dedup_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
     pairs = (
-        minhash_candidate_pairs(d, portable=True)
+        minhash_candidate_pairs(d)
         .filter(F.col("jaccard") >= 0.6)
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
@@ -733,7 +731,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     delta = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
-    cand = minhash_candidate_pairs(docs, restrict_to=delta, portable=True)
+    cand = minhash_candidate_pairs(docs, restrict_to=delta)
     out = (
         cand.filter(F.col("jaccard") >= 0.6)
         .orderBy("id_a", "id_b")
@@ -781,7 +779,7 @@ def dedup_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix itself is |sources|² bounded. The doc_id < 400 slice
     bounds BENCH cost, not the join shape."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    pairs = D.minhash_candidate_pairs(d, portable=True).filter(
+    pairs = D.minhash_candidate_pairs(d).filter(
         F.col("jaccard") >= 0.5
     )
     src = d.select("doc_id", "source")
@@ -1077,10 +1075,8 @@ def dedup_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFram
     for every candidate pair (exact J ≥ 0.1 on the bounded doc_id <
     400 subset), the exact intersection/union sizes next to the
     number of agreeing MinHash components (16 families — ONE md5 per
-    shingle, Carter–Wegman-mixed per family, r10; E[n_match/16] = J,
-    the estimator the production xxhash64 LSH pipeline relies on;
-    operators/dedup.py:46 documents why the fast path re-hashes longs
-    instead).
+    shingle, Carter–Wegman-mixed per family; E[n_match/16] = J, the
+    estimator the MinHash LSH pipeline relies on).
 
     Everything integer: the J ≥ 0.1 gate is the cross-multiplied
     10·|∩| ≥ |∪|, outputs are (n_inter, n_union, n_match) BIGINTs —

@@ -219,7 +219,7 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
     )
     cand = (
-        D.minhash_candidate_pairs(reps, "doc_id", "text", portable=True)
+        D.minhash_candidate_pairs(reps, "doc_id", "text")
         .select("id_a", "id_b")
         .repartition(par)
     )
@@ -345,7 +345,7 @@ def dedup_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    cand = minhash_candidate_pairs(d, portable=True)
+    cand = minhash_candidate_pairs(d)
 
     dh = (
         d.select("doc_id", F.explode(shingles("text")).alias("g"))
@@ -739,7 +739,7 @@ def dedup_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cand = (
-        D.minhash_candidate_pairs(reps, "doc_id", "text", portable=True)
+        D.minhash_candidate_pairs(reps, "doc_id", "text")
         .select("id_a", "id_b")
         .repartition(par)
     )

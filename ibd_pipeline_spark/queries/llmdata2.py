@@ -559,9 +559,9 @@ def dedup_near_dup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rounds = cluster diameter, checkpointed), broadcast-joinable
     survivor set. Hash-attested END-TO-END: the md5-portable MinHash
     mode + a recursive-CTE connected-components oracle replay the
-    whole pipeline in DuckDB (the xxhash64 banding stays the
-    operator default; stage-level evidence remains from dedup_exact
-    r01, minhash recall tests, dedup_cluster_components r01).
+    whole pipeline in DuckDB (stage-level evidence remains from
+    dedup_exact, the minhash recall tests and
+    dedup_cluster_components).
 
     Returns (source, n_docs, n_after_exact, n_after_near, pct_kept).
     """
@@ -590,9 +590,7 @@ def dedup_near_dup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # (id, source): consumed 3×
     )
     try:
-        cand = D.minhash_candidate_pairs(
-            reps_text, "doc_id", "text", portable=True
-        )
+        cand = D.minhash_candidate_pairs(reps_text, "doc_id", "text")
         pairs = cand.filter(F.col("jaccard") >= 0.5).select(
             F.col("id_a").alias("src"), F.col("id_b").alias("dst")
         )

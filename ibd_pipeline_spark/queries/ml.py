@@ -1,13 +1,10 @@
-"""Registry entries for the all-DataFrame ML primitives
-(operators/ml.py). HASH-ATTESTED since r11, completing the r10→r11
-conversion programme: the logreg gate via the fixed-point GD unroll
-(r11 wave 1) and BOTH PCA queries via the fixed-point power-iteration
-unroll (r11 wave 3) — every float step quantized so a DuckDB CTE
-unroll replays the identical arithmetic bit-for-bit. The float-math
-production twins (Gram eigensolve fast path, covariance-action power
-iteration, Arrow-partial GD) remain in operators/ml.py and are what
-the property suite in tests/test_ml.py exercises (planted-direction
-recovery, orthogonality, eigenvalue ordering, path agreement).
+"""Registry entries for the ML primitives (operators/ml.py), all
+HASH-ATTESTED: the logreg gate via the fixed-point GD unroll and BOTH
+PCA queries via the fixed-point power-iteration unroll — every float
+step quantized so a DuckDB CTE unroll replays the identical
+arithmetic bit-for-bit. The property suite in tests/test_ml.py
+exercises the same operators (planted-direction recovery,
+separable convergence, monotone loss).
 """
 
 from __future__ import annotations
@@ -101,17 +98,14 @@ def _pca_top1_oracle() -> str:
 def similarity_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal component of the embeddings table (64 dims).
 
-    HASH-ATTESTED since r11 (previously rows-only): routed through
-    operators/ml.py:pca_power_attested — fixed-point covariance
-    accumulation, 8 power-iteration rounds with 1e12-floored matvec
-    terms, exact-integer norms and 1e-9 vector re-quantization, so
-    the DuckDB oracle's CTE unroll replays loadings and the
-    eigenvalue bit-for-bit (the r10 conversion pattern that closed
-    kmeans/logreg). The float-math production twins stay
-    operators/ml.py:pca_top_component (Gram fast path at small d,
-    covariance-action power iteration at large d), property-tested
-    in tests/test_ml.py. Output: one row per dimension
-    (dim, loading, eigenvalue, n_vectors)."""
+    HASH-ATTESTED: routed through operators/ml.py:pca_power_attested
+    — fixed-point covariance accumulation, 8 power-iteration rounds
+    with 1e12-floored matvec terms, exact-integer norms and 1e-9
+    vector re-quantization, so the DuckDB oracle's CTE unroll replays
+    loadings and the eigenvalue bit-for-bit (the pattern that made
+    kmeans and logreg replayable). Planted-direction recovery is
+    property-tested in tests/test_ml.py. Output: one row per
+    dimension (dim, loading, eigenvalue, n_vectors)."""
     emb = load(spark, sf_dir, "embeddings")
     comp = pca_power_attested(emb, vec="embedding", iters=_PCA_ITERS, k=1)
     return comp.select("dim", "loading", "eigenvalue", "n_vectors").orderBy(
@@ -125,8 +119,8 @@ def similarity_pca_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensionality-reduction front end for visualization and cheap
     pre-ANN projection.
 
-    HASH-ATTESTED since r11 (previously rows-only): the attested
-    power-iteration fixpoint with DEFLATION — after each component,
+    HASH-ATTESTED: the attested power-iteration fixpoint with
+    DEFLATION — after each component,
     C ← C − FLOOR(λ·vⱼ·vₖ·10¹²)/10¹² keeps later components on the
     same quantized grid, and the oracle unrolls all 3×8 rounds as
     CTEs (see _pca_oracle). Not a convergence claim: 8 rounds on
@@ -214,14 +208,11 @@ def train_logreg_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     row — scalars, kept out of array columns for the driver's
     canonicalizer).
 
-    HASH-ATTESTED since r11 (previously rows-only): the attested GD
-    variant (operators/ml.py:logreg_fit_attested) runs fixed-point
-    dot products/gradients and 1e-7-quantized sigmoids, making all
-    12 rounds bit-deterministic — the oracle unrolls the identical
-    fixpoint as CTEs. The float-math production twin stays
-    operators/ml.py:logreg_fit (Arrow treeAggregate partials),
-    property-tested in tests/test_ml.py (planted-separation
-    recovery, monotone loss, path agreement)."""
+    HASH-ATTESTED: operators/ml.py:logreg_fit_attested runs
+    fixed-point dot products/gradients and 1e-7-quantized sigmoids,
+    making all 12 rounds bit-deterministic — the oracle unrolls the
+    identical fixpoint as CTEs. Planted-separation recovery and
+    monotone loss are property-tested in tests/test_ml.py."""
     emb = load(spark, sf_dir, "embeddings")
     feats = emb.select(
         F.col("vec_id").alias("rid"),

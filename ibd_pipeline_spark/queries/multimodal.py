@@ -596,8 +596,8 @@ def multimodal_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Video frame-level gates (r14 — VERDICT r13 #2: the WAV-gate
-# precedent applied to video on a stdlib-decodable raw-frame corpus)
+# Video frame-level gates (the WAV-gate precedent applied to video on a
+# stdlib-decodable raw-frame corpus: real decode, exact counts)
 # ---------------------------------------------------------------------------
 
 

@@ -1,5 +1,5 @@
-"""Protobuf message-payload queries (r15, VERDICT r14 #2): the OTHER
-schema-registry form of the reference's core ingest step.
+"""Protobuf message-payload queries: the OTHER schema-registry form of
+the reference's core ingest step.
 
 The reference decodes Kafka binary payloads with CAST + from_json
 (`spark_processor.py:123-124`); production topics carry Confluent-

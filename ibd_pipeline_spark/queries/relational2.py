@@ -259,7 +259,7 @@ def collect_sorted_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort) before comparing or emitting. The sorted list is emitted
     as a ','-joined string: the driver's canonicalizer hashes scalar
     columns only (raw array columns raise `unhashable type: 'list'`
-    in pandas factorize — see VERDICT r02)."""
+    in pandas factorize)."""
     o = load(spark, sf_dir, "orders").filter(F.col("o_custkey") < 30)
     return (
         o.groupBy("o_custkey")

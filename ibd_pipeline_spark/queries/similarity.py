@@ -115,15 +115,13 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket, exact cosine re-rank. The scale path for large query
     sets; recall vs brute force asserted in tests on clustered data.
 
-    HASH-ATTESTED (r10; previously rows-only): the query runs the
-    operator in PORTABLE mode — axis-aligned sign buckets (8 tables ×
-    6 dims, pure CASE algebra) instead of the random-hyperplane
-    pandas UDF — so the whole pipeline (bucket keys → candidate
-    equi-join → exact cosine in the Spark fold's addition order →
-    window top-5) is replayed by DuckDB bit-for-bit, the same
-    portability trade dedup_embedding_cosine made in r8. Random
-    hyperplanes remain the operator default for adversarial data;
-    that path's recall is property-tested (tests/test_similarity.py).
+    HASH-ATTESTED: the operator buckets on axis-aligned sign bits
+    (8 tables × 6 dims, pure CASE algebra), so the whole pipeline
+    (bucket keys → candidate equi-join → exact cosine in the Spark
+    fold's addition order → window top-5) is replayed by DuckDB
+    bit-for-bit, the same portability trade dedup_embedding_cosine
+    makes. Recall on clustered data is property-tested
+    (tests/test_similarity.py).
     """
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
@@ -134,7 +132,6 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tables=8,
         bits_per_table=6,
         dim=64,
-        portable=True,
         # |Q| = 10 by construction — skip auto's sizing count job
         broadcast_queries=True,
     )
@@ -233,14 +230,13 @@ LIMIT 20
 @query("dedup_embedding_cosine", oracle=_EMB_COSINE_SQL)
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate candidates via sign-LSH
-    blocking + exact verification, hash-attested: the portable mode
+    blocking + exact verification, hash-attested: the operator
     blocks on axis-aligned sign bits (8 tables × 6 dims — valid
     sign-LSH for centered embeddings, and plain CASE algebra DuckDB
     replays exactly; the oracle's dot products are written in the
     same left-associated element order as the Spark fold, so the
-    doubles match bit-for-bit). Random-hyperplane blocking stays the
-    operator default, planted-pair recovery property-tested in
-    tests/test_similarity.py.
+    doubles match bit-for-bit). Planted-pair recovery is
+    property-tested in tests/test_similarity.py.
 
     The fixture corpus has no true semantic dups (max pairwise cosine
     ≈0.5), so rather than a high threshold that returns an empty
@@ -248,7 +244,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same block→verify→rank machinery with checkable output."""
     emb = load(spark, sf_dir, "embeddings")
     return (
-        S.cosine_near_dup_pairs(emb, threshold=-1.0, portable=True)
+        S.cosine_near_dup_pairs(emb, threshold=-1.0)
         .orderBy(F.col("cosine_sim").desc(), "id_a", "id_b")
         .limit(20)
     )
@@ -402,15 +398,14 @@ FROM fb WHERE rn = 1 GROUP BY cent_id ORDER BY cent_id""")
 def similarity_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means clustering of the embedding corpus (k=8, 4 Lloyd
     iterations, deterministic lowest-id init): cluster sizes and mean
-    squared distance to the final centroid. HASH-ATTESTED since r11
-    (previously rows-only): the attested Lloyd variant
-    (operators/similarity.py:kmeans_attested) quantizes every
-    distance term by FLOOR(term·1e12) into exact BIGINT sums and runs
-    fixed-point centroid updates, making all four rounds
-    bit-deterministic — the oracle unrolls the identical fixpoint as
-    CTEs (the graph_kcore_peel pattern). The float-math production
-    twin stays operators/similarity.py:kmeans (Arrow numpy
-    partials), property-tested in tests/test_similarity.py.
+    squared distance to the final centroid. HASH-ATTESTED: the
+    attested Lloyd variant (operators/similarity.py:kmeans_attested)
+    quantizes every distance term by FLOOR(term·1e12) into exact
+    BIGINT sums and runs fixed-point centroid updates, making all
+    four rounds bit-deterministic — the oracle unrolls the identical
+    fixpoint as CTEs (the graph_kcore_peel pattern). Its invariants
+    and planted-cluster recovery are property-tested in
+    tests/test_similarity.py.
 
     Scale: per round ONE corpus scan (centroids re-embedded as
     literals — zero joins) + a (k·dim)-row mean shuffle; centroid
@@ -462,7 +457,8 @@ ORDER BY label, pos
 def similarity_centroid_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid as (label, pos, mean) rows — the dim-wise
     aggregation primitive under k-means' update step (operators.
-    similarity.kmeans) exposed as a standalone oracle-checked query.
+    similarity.kmeans_attested) exposed as a standalone
+    oracle-checked query.
     Emitting rows instead of re-assembled arrays keeps the oracle
     exact AND mirrors how the mean is actually computed: posexplode →
     hash aggregate on (label, pos), map-side combined, exact decimal
@@ -1338,10 +1334,6 @@ def similarity_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Maximum-inner-product top-k
 # ---------------------------------------------------------------------------
-
-
-def _seq_dot(a: str, b: str, dim: int = 64) -> str:
-    return " + ".join(f"{a}[{i + 1}] * {b}[{i + 1}]" for i in range(dim))
 
 
 _MIPS_SQL = f"""

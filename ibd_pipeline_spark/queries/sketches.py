@@ -1,10 +1,8 @@
-"""Sketch-structure registry queries (round 5, wave 3): Count-Min
-heavy-hitter estimation and a Bloom contamination pre-gate — both
-built on engine-portable md5 hashing so DuckDB can verify them
-EXACTLY (the estimates, not just the shapes) — plus the HyperLogLog
-mergeable rollup (md5-portable and hash-attested since r11; the
-DataSketches-native variant lives on as the operator
-hll_daily_weekly).
+"""Sketch-structure registry queries: Count-Min heavy-hitter
+estimation and a Bloom contamination pre-gate — both built on
+engine-portable md5 hashing so DuckDB can verify them EXACTLY (the
+estimates, not just the shapes) — plus the md5-portable,
+hash-attested HyperLogLog mergeable rollup.
 
 These are the approximate/streaming-adjacent counterparts of exact
 operators already in the registry: CMS ↔ events_heavy_hitters
@@ -26,7 +24,6 @@ from ibd_pipeline_spark.operators.sketches import (
     bloom_maybe_contains,
     cms_build,
     cms_probe,
-    hll_daily_weekly,
 )
 from ibd_pipeline_spark.queries import query
 
@@ -191,9 +188,7 @@ def sketch_bloom_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 # Portable HyperLogLog (Flajolet et al. 2007), md5-derived and fully
-# SQL-replayable (r11 conversion — this row was the last rows-only
-# sketch; the DataSketches-native twin stays as the operator
-# hll_daily_weekly, property-tested in tests/test_sketches.py):
+# SQL-replayable:
 #   h   = 60-bit md5 prefix               (15 hex chars, both engines)
 #   b   = h mod m                         (register index, m = 32)
 #   w   = h div m                         (55-bit remainder)
@@ -278,15 +273,13 @@ def sketch_hll_daily_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly distinct users from a UNION of per-day HyperLogLog
     register partials, next to the direct weekly registers and the
     exact count — the mergeable-rollup pattern that replaces re-scans
-    at coarser grains. HASH-ATTESTED since r11 (previously rows-only
-    DataSketches): the md5-portable HLL above keeps every register an
-    integer and defers the single double division to the last
-    projection, so DuckDB replays union AND direct estimates
-    bit-for-bit — including the small-range linear-counting branch
-    (Flajolet's E ≤ 2.5m correction). hll_union_est == hll_direct_est
-    on every row is the attested union-algebra invariant (register
-    MAX is associative); the engine-native DataSketches twin lives on
-    as operators/sketches.py:hll_daily_weekly.
+    at coarser grains. HASH-ATTESTED: the md5-portable HLL above keeps
+    every register an integer and defers the single double division
+    to the last projection, so DuckDB replays union AND direct
+    estimates bit-for-bit — including the small-range linear-counting
+    branch (Flajolet's E ≤ 2.5m correction). hll_union_est ==
+    hll_direct_est on every row is the attested union-algebra
+    invariant (register MAX is associative).
 
     Scale: daily register partials are map-side combined and bounded
     by m × days rows; any coarser grain (week here, month/rolling-28d

@@ -13,11 +13,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from ibd_pipeline_spark.catalog import load
-from ibd_pipeline_spark.queries import query
-from ibd_pipeline_spark.queries.statcommon import (
+from ibd_pipeline_spark.normal_tail import (
     _phi_tail_col,
     _phi_tail_sql,
 )
+from ibd_pipeline_spark.queries import query
 
 # ---------------------------------------------------------------------------
 # Cohen's d / Hedges' g effect size (purchase vs view values)

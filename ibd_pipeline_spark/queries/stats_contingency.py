@@ -11,12 +11,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from ibd_pipeline_spark.catalog import load
+from ibd_pipeline_spark.normal_tail import _phi_tail_col, _phi_tail_sql
 from ibd_pipeline_spark.queries import query
-from ibd_pipeline_spark.queries.statcommon import (
-    _PHI_B,
-    _phi_tail_col,
-    _phi_tail_sql,
-)
 
 # ---------------------------------------------------------------------------
 # G-test (log-likelihood ratio) of independence — event_type × ISO dow
@@ -352,21 +348,7 @@ def stats_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.col("sn").cast("double") * F.col("sn") / F.col("nn")
         )
     )
-    az = F.abs(t / F.sqrt(v))
-    kk = F.lit(1.0) / (F.lit(1.0) + F.lit(0.2316419) * az)
-    poly = (
-        (
-            (
-                (F.lit(_PHI_B[4]) * kk + F.lit(_PHI_B[3])) * kk
-                + F.lit(_PHI_B[2])
-            )
-            * kk
-            + F.lit(_PHI_B[1])
-        )
-        * kk
-        + F.lit(_PHI_B[0])
-    ) * kk
-    tail = F.lit(0.3989422804014327) * F.exp(-0.5 * az * az) * poly
+    tail = _phi_tail_col(F.abs(t / F.sqrt(v)))
     return m.select(
         F.col("nn").alias("n"),
         F.col("rr").alias("n_success"),

@@ -11,12 +11,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from ibd_pipeline_spark.catalog import load
+from ibd_pipeline_spark.normal_tail import _phi_tail_col, _phi_tail_sql
 from ibd_pipeline_spark.queries import query
-from ibd_pipeline_spark.queries.statcommon import (
-    _PHI_B,
-    _phi_tail_col,
-    _phi_tail_sql,
-)
 
 # ---------------------------------------------------------------------------
 # Benjamini–Yekutieli FDR under arbitrary dependence (brand z-tests)
@@ -26,7 +22,7 @@ _BY_Q_NUM, _BY_Q_DEN = 1, 10  # q = 0.10, the BH family convention
 
 
 def _by_oracle() -> str:
-    from ibd_pipeline_spark.queries.statcommon import _phi_tail_sql as pts
+    from ibd_pipeline_spark.normal_tail import _phi_tail_sql as pts
 
     return f"""
 WITH b AS (
@@ -526,20 +522,7 @@ def stats_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.sqrt(p0 * (1.0 - p0) / F.col("n"))
     )
     zt = b.crossJoin(F.broadcast(tot)).select("brand", "n", az.alias("az"))
-    k = 1.0 / (1.0 + 0.2316419 * F.col("az"))
-    poly = (
-        (
-            (
-                (F.lit(_PHI_B[4]) * k + F.lit(_PHI_B[3])) * k
-                + F.lit(_PHI_B[2])
-            )
-            * k
-            + F.lit(_PHI_B[1])
-        )
-        * k
-        + F.lit(_PHI_B[0])
-    ) * k
-    tail = F.lit(0.3989422804014327) * F.exp(-0.5 * F.col("az") * F.col("az")) * poly
+    tail = _phi_tail_col(F.col("az"))
     pv = zt.select(
         "brand", "n", "az", F.round(2.0 * tail, 8).alias("p_value")
     )

@@ -824,8 +824,9 @@ def text_bm25_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # NB: term must be closed over with a ONE-argument lambda factory —
     # a `lambda x, t=term:` default-arg capture makes Spark pass the
-    # array INDEX as the second argument, shadowing the default (the
-    # minhash_signature lesson, operators/dedup.py:57).
+    # array INDEX as the second argument, shadowing the default (a
+    # Hypothesis test once caught every MinHash family collapsing to
+    # one function this way).
     def tf_of(term: str):
         return F.size(F.filter("toks", lambda x: x == F.lit(term))).cast("double")
 

@@ -13,12 +13,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ibd_pipeline_spark.catalog import load
-from ibd_pipeline_spark.queries import query
-from ibd_pipeline_spark.queries.statcommon import (  # noqa: F401
+from ibd_pipeline_spark.normal_tail import (  # noqa: F401
     _PHI_B,
     _phi_tail_col,
     _phi_tail_sql,
 )
+from ibd_pipeline_spark.queries import query
 
 
 # ---------------------------------------------------------------------------

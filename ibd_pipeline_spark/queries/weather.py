@@ -254,8 +254,8 @@ def weather_synth_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 msg/s producer of the reference (weather-producer.py:17) maps
     to ~11.5 days of simulated stream.
 
-    ATTESTATION ENVELOPE (r11 VERDICT #7 — formerly the registry's
-    one rows-only query): the generator is seeded, so its
+    ATTESTATION ENVELOPE (a seeded generator's output can still be
+    oracle-checked where it is deterministic): the generator is seeded, so its
     DETERMINISTIC projections are replayed exactly by DuckDB —
     per-window timestamps (start + i·1 s, 5-min aligned), sample
     counts (300/window, 100 in the 3334th), and the precipitation

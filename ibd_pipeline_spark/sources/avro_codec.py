@@ -180,8 +180,8 @@ class _Field:
         self.fixed_size = fixed_size
 
 
-# logical types (Avro spec §Logical Types — the CDC/Debezium set,
-# VERDICT r14 #3): decimal over bytes (length-prefixed minimal
+# logical types (Avro spec §Logical Types — the CDC/Debezium set that
+# real change-data topics carry): decimal over bytes (length-prefixed minimal
 # two's-complement big-endian unscaled int — the Debezium form) and
 # over fixed (constant-size sign-extended — what Spark's own
 # SchemaConverters emits for DecimalType), timestamp-micros/-millis

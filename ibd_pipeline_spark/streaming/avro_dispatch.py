@@ -1,7 +1,7 @@
-"""Multi-schema Avro topic dispatch as a SOURCE-AGNOSTIC transform
-(r15, VERDICT r14 #4).
+"""Multi-schema Avro topic dispatch as a SOURCE-AGNOSTIC transform,
+so the batch-attested decode also runs on a stream.
 
-The r14 query `io_avro_schema_dispatch` attested the wire-id routing +
+The query `io_avro_schema_dispatch` attested the wire-id routing +
 reader-defaulting decode in batch; the reference's actual shape is a
 STREAMING consumer (`spark_processor.py:47-69,123-124` — readStream
 from Kafka, then payload decode). This module holds that decode path

@@ -29,24 +29,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-# Zelen & Severo 26.2.17 normal-tail polynomial (shared constants with
-# queries/stats2.py (stats_benjamini_hochberg) — inlined so the streaming layer stays
-# dependency-free of the query registry).
-_B = (0.319381530, -0.356563782, 1.781477937, -1.821255978, 1.330274429)
-
-
-def _phi_tail(az):
-    k = F.lit(1.0) / (F.lit(1.0) + F.lit(0.2316419) * az)
-    poly = (
-        (
-            ((F.lit(_B[4]) * k + F.lit(_B[3])) * k + F.lit(_B[2])) * k
-            + F.lit(_B[1])
-        )
-        * k
-        + F.lit(_B[0])
-    ) * k
-    return F.lit(0.3989422804014327) * F.exp(F.lit(-0.5) * az * az) * poly
-
+from ibd_pipeline_spark.normal_tail import _phi_tail_col
 
 def arm_index(user_col: str = "user_id", arms: int = 2, seed: str = "11"):
     """Engine-portable experiment arm: first 8 md5 hex digits of
@@ -137,7 +120,7 @@ def srm_report(
         ).alias("chi2"),
     ).crossJoin(F.broadcast(off))
     z = F.sqrt(F.col("chi2"))
-    p = F.when(F.col("chi2") > 0, 2.0 * _phi_tail(z)).otherwise(F.lit(1.0))
+    p = F.when(F.col("chi2") > 0, 2.0 * _phi_tail_col(z)).otherwise(F.lit(1.0))
     return chi.select(
         "n_total",
         "n_arms",
@@ -148,7 +131,7 @@ def srm_report(
             (
                 (F.col("n_total") > 0)
                 & (
-                    F.when(F.col("chi2") > 0, 2.0 * _phi_tail(z)).otherwise(
+                    F.when(F.col("chi2") > 0, 2.0 * _phi_tail_col(z)).otherwise(
                         1.0
                     )
                     < alarm_p

@@ -91,21 +91,6 @@ def test_markov_stationary_gc(spark, tmp_path):
     assert out.count() == 2
 
 
-def test_logreg_expr_gc(spark, tmp_path):
-    from ibd_pipeline_spark.operators.ml import logreg_fit
-
-    d = str(tmp_path / "lr")
-    df = spark.createDataFrame(
-        [([float(i % 2), 1.0], i % 2) for i in range(40)],
-        "x array<double>, y int",
-    )
-    out = logreg_fit(df, features="x", label="y", iters=6, method="expr",
-                     checkpoint_dir=d)
-    row = out.collect()[0]
-    assert row["n_rows"] == 40
-    assert len(_rdd_dirs(d)) <= 1  # w slot released; only `out` remains
-
-
 def test_bpe_learn_gc(spark, tmp_path):
     from ibd_pipeline_spark.operators.bpe import bpe_learn
 
@@ -120,23 +105,6 @@ def test_bpe_learn_gc(spark, tmp_path):
     # tiny 1-row dir per learned merge, but no per-round CORPUS dirs:
     assert len(_rdd_dirs(d)) <= len(rows)
     assert out.count() == len(rows)
-
-
-@pytest.mark.parametrize("method", ["expr"])
-def test_kmeans_expr_gc(spark, tmp_path, method):
-    from ibd_pipeline_spark.operators.similarity import kmeans
-
-    d = str(tmp_path / "km")
-    df = spark.createDataFrame(
-        [(i, [float(i % 3) * 10 + 1.0, float(i % 3) * 10]) for i in range(30)],
-        "id long, v array<double>",
-    )
-    out = kmeans(df, k=3, vec="v", id_col="id", iters=5, method=method,
-                 checkpoint_dir=d)
-    rows = out.collect()
-    assert len(rows) == 30
-    assert len(_rdd_dirs(d)) <= 1  # cents released; only `out` remains
-    assert out.count() == 30
 
 
 def test_foreign_checkpoints_never_misattributed(spark, tmp_path):

@@ -87,10 +87,7 @@ def test_minhash_no_false_negatives_on_fixture(spark, sf_dir):
 
 
 def test_simhash_invariants(spark, docs):
-    sigs = {
-        r.doc_id: r.sig
-        for r in docs.select("doc_id", D.simhash64("text").alias("sig")).collect()
-    }
+    sigs = {r.id: r.sig for r in D.simhash_signatures_md5(docs).collect()}
     assert sigs[0] == sigs[1]  # identical text → identical signature
     h = lambda a, b: bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1")  # noqa: E731
     assert h(0, 2) <= 16  # near-dup → small hamming distance
@@ -98,7 +95,10 @@ def test_simhash_invariants(spark, docs):
 
 
 def test_simhash_pairs_find_near_dups(spark, docs):
-    pairs = {(r.id_a, r.id_b): r.hamming for r in D.simhash_near_dup_pairs(docs).collect()}
+    pairs = {
+        (r.id_a, r.id_b): r.hamming
+        for r in D.simhash32_pairs(D.simhash_signatures_md5(docs)).collect()
+    }
     assert (0, 1) in pairs and pairs[(0, 1)] == 0
 
 
@@ -164,37 +164,35 @@ def test_incremental_lsh_identity(spark, sf_dir):
 
 
 def test_simhash_multitable_pigeonhole_guarantee(spark):
-    """4 rotations x 16-bit prefixes cover the 4 disjoint 16-bit
-    chunks of the signature: ANY pair within Hamming 3 agrees exactly
-    on >=1 chunk and MUST be found. Plant flips in the TOP prefix
-    bits — exactly where single-prefix blocking goes blind."""
-    base = 0x5A5A_C3C3_0F0F_9999
-    mask = (1 << 64) - 1
+    """4 tables x 8-bit chunks cover the 4 disjoint chunks of the
+    32-bit signature: ANY pair within Hamming 3 agrees exactly on >=1
+    chunk and MUST be found. Plant flips in the TOP prefix bits —
+    exactly where single-prefix blocking goes blind."""
+    base = 0x5A5A_C3C3
 
-    def signed(u):  # Spark bigint is signed 64-bit
-        return u - (1 << 64) if u >= (1 << 63) else u
-
-    rows = [(0, signed(base))]
-    # flips at bits 63, 62, 50 (all inside single-table 12-bit prefix
-    # territory or first chunk), spread across ids 1..3 with hamming
+    rows = [(0, base)]
+    # flips at bits 31, 30, 15, 5 (the first two inside single-table
+    # 12-bit prefix territory), spread across ids 1..3 with hamming
     # 1, 2, 3 from base
-    rows.append((1, signed(base ^ (1 << 63))))
-    rows.append((2, signed(base ^ (1 << 63) ^ (1 << 62))))
-    rows.append((3, signed(base ^ (1 << 63) ^ (1 << 30) ^ (1 << 5))))
+    rows.append((1, base ^ (1 << 31)))
+    rows.append((2, base ^ (1 << 31) ^ (1 << 30)))
+    rows.append((3, base ^ (1 << 31) ^ (1 << 15) ^ (1 << 5)))
     sig = spark.createDataFrame(rows, "id bigint, sig bigint")
     found = {
         (r.id_a, r.id_b): r.hamming
-        for r in D.simhash_pairs_multi_from_sigs(sig, max_hamming=8).collect()
+        for r in D.simhash32_pairs(
+            sig, max_hamming=8, tables=4, chunk_bits=8
+        ).collect()
     }
     # every base-vs-flipped pair has hamming <= 3 -> guaranteed found
     assert found[(0, 1)] == 1
     assert found[(0, 2)] == 2
     assert found[(0, 3)] == 3
     # and the single 12-bit-prefix form misses every base-vs-flipped
-    # pair (the flip at bit 63 lands inside the prefix, so the blocks
+    # pair (the flip at bit 31 lands inside the prefix, so the blocks
     # differ), demonstrating the recall gap the multi-table scheme
     # closes
-    blk = sig.selectExpr("id", "sig", "shiftrightunsigned(sig, 52) AS blk")
+    blk = sig.selectExpr("id", "sig", "shiftrightunsigned(sig, 20) AS blk")
     single = {
         (r.id_a, r.id_b)
         for r in blk.alias("l")
@@ -210,15 +208,11 @@ def test_simhash_multitable_pigeonhole_guarantee(spark):
 
 def test_simhash_multitable_recall_at_least_single_table(spark, docs):
     """On the text fixture the multi-table pass finds every pair the
-    single-prefix pass finds (same Hamming cutoff, four chances to
+    single-table pass finds (same Hamming cutoff, four chances to
     collide instead of one)."""
-    single = {
-        (r.id_a, r.id_b) for r in D.simhash_near_dup_pairs(docs).collect()
-    }
-    multi = {
-        (r.id_a, r.id_b)
-        for r in D.simhash_near_dup_pairs_multi(docs).collect()
-    }
+    sig = D.simhash_signatures_md5(docs)
+    single = {(r.id_a, r.id_b) for r in D.simhash32_pairs(sig, tables=1).collect()}
+    multi = {(r.id_a, r.id_b) for r in D.simhash32_pairs(sig, tables=4).collect()}
     assert single <= multi
 
 

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from ibd_pipeline_spark.operators.layout import rank_bucket, zorder_sort, zvalue
+from ibd_pipeline_spark.operators.layout import rank_bucket, zvalue
 
 
 def test_zvalue_interleaves_bits(spark):
@@ -82,14 +82,3 @@ def test_zorder_beats_single_column_sort_on_second_dim(spark, sf_dir):
     assert sp <= 0.1, sp
     assert zp > sp
 
-
-def test_zorder_sort_runs_end_to_end(spark, sf_dir):
-    from ibd_pipeline_spark.catalog import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_quantity", "l_extendedprice")
-    out = zorder_sort(
-        li,
-        {"l_quantity": (0.0, 50.0), "l_extendedprice": (900.0, 120000.0)},
-        bits=8,
-    )
-    assert out.count() == li.count()

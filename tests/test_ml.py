@@ -1,6 +1,6 @@
-"""Property tests for the all-DataFrame ML primitives
-(operators/ml.py) — the correctness evidence for the two rows-only
-registry entries, following the kmeans/pagerank pattern: assert the
+"""Property tests for the ML primitives (operators/ml.py), the same
+fixed-point operators the registry's hash-attested PCA and logreg
+queries run: the oracle pins the arithmetic, these assert the
 mathematical contract on planted inputs, not fixture-specific values.
 """
 
@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from ibd_pipeline_spark.catalog import load
-from ibd_pipeline_spark.operators.ml import logreg_fit, pca_top_component
+from ibd_pipeline_spark.operators.ml import logreg_fit_attested, pca_power_attested
 
 
 def _planted_frame(spark, n=400, d=8, seed=7):
@@ -30,7 +30,7 @@ def _planted_frame(spark, n=400, d=8, seed=7):
 
 def test_pca_recovers_planted_direction(spark):
     df, u = _planted_frame(spark)
-    comp = pca_top_component(df, iters=10).orderBy("dim").collect()
+    comp = pca_power_attested(df, iters=10).orderBy("dim").collect()
     assert len(comp) == 8
     w = [r["loading"] for r in comp]
     # unit norm
@@ -50,7 +50,7 @@ def test_pca_eigenvalue_dominates_residual_on_fixture(spark, sf_dir):
     """On the real embeddings table: λ₁ must be ≥ the variance along
     any coordinate axis (the Rayleigh quotient is a maximum)."""
     emb = load(spark, sf_dir, "embeddings")
-    comp = pca_top_component(emb, iters=8).limit(1).collect()[0]
+    comp = pca_power_attested(emb, iters=8).limit(1).collect()[0]
     lam = comp["eigenvalue"]
     axis_var = (
         emb.select(F.posexplode("embedding").alias("pos", "x"))
@@ -73,13 +73,18 @@ def _sep_frame(spark, n=300, d=4, margin=2.0, seed=11):
         y = 1 if z > 0 else 0
         # push points away from the boundary for a clean margin
         x = [xi + (margin if y else -margin) * wi / 2.0 for xi, wi in zip(x, w_true)]
-        rows.append(([1.0] + x, y))
-    return spark.createDataFrame(rows, "x array<double>, y int")
+        rows.append((len(rows), [1.0] + x, y))
+    return spark.createDataFrame(rows, "rid long, x array<double>, y int")
+
+
+def _fit(df, iters, lr):
+    """The final-model metrics, repeated on every weight row."""
+    return logreg_fit_attested(df, "x", "y", iters=iters, lr=lr).collect()[0]
 
 
 def test_logreg_separable_converges(spark):
     df = _sep_frame(spark)
-    fit = logreg_fit(df, "x", "y", iters=15, lr=1.0).collect()[0]
+    fit = _fit(df, iters=15, lr=1.0)
     assert fit["n_rows"] == 300
     assert fit["accuracy"] >= 0.97, fit["accuracy"]
     assert fit["log_loss"] < 0.3, fit["log_loss"]
@@ -90,20 +95,10 @@ def test_logreg_loss_monotone_decreasing(spark):
     training loss at every horizon."""
     df = _sep_frame(spark, n=150)
     losses = [
-        logreg_fit(df, "x", "y", iters=i, lr=0.3).collect()[0]["log_loss"]
+        _fit(df, iters=i, lr=0.3)["log_loss"]
         for i in (1, 3, 6, 10)
     ]
     assert all(b < a + 1e-12 for a, b in zip(losses, losses[1:])), losses
-
-
-def test_logreg_l2_shrinks_weights(spark):
-    df = _sep_frame(spark)
-    w_free = logreg_fit(df, "x", "y", iters=10, lr=0.5).collect()[0]["weights"]
-    w_reg = logreg_fit(df, "x", "y", iters=10, lr=0.5, l2=0.5).collect()[0][
-        "weights"
-    ]
-    norm = lambda w: math.sqrt(sum(x * x for x in w))
-    assert norm(w_reg) < norm(w_free)
 
 
 def test_pca_top_k_orthogonal_ordered(spark):
@@ -150,42 +145,12 @@ def test_pca_top_k_orthogonal_ordered(spark):
     assert lams[3] < 0.2 * lams[2]
 
 
-def test_logreg_and_pca_reliable_checkpoint_mode(spark, tmp_path):
-    """Reliable checkpoint() branch of the r06 early-exit/cadence code
-    (logreg weight fetch + pca w fetch read from REAL checkpoints)."""
-    from ibd_pipeline_spark.operators.ml import logreg_fit, pca_top_component
-
-    rows = [([1.0, float(i), 1.0 if i > 5 else -1.0], 1 if i > 5 else 0) for i in range(12)]
-    df = spark.createDataFrame(rows, "x array<double>, y int")
-    fit = logreg_fit(df, "x", "y", iters=10, lr=0.5, checkpoint_dir=str(tmp_path / "g")).collect()[0]
-    assert fit["accuracy"] >= 0.8
-
-    emb = spark.createDataFrame(
-        [([float(i), 0.1 * i, -float(i)],) for i in range(1, 30)], "embedding array<double>"
-    )
-    comp = pca_top_component(emb, iters=6, checkpoint_dir=str(tmp_path / "p")).collect()
-    assert len(comp) == 3 and abs(sum(r["loading"] ** 2 for r in comp) - 1.0) < 1e-6
-
-
 def test_pca_gram_and_power_paths_agree(spark):
-    """The one-scan Gram eigensolve and the iterative covariance-action
-    power iteration recover the same top component (up to the shared
-    sign convention) on planted-direction data — both code paths stay
-    covered now that small d routes to gram."""
-    import math
-
-    from ibd_pipeline_spark.operators.ml import pca_top_component, pca_top_k
-
-    rows = [([float(i), 0.05 * i, -2.0 * i],) for i in range(1, 40)]
-    emb = spark.createDataFrame(rows, "embedding array<double>")
-    g = {r["dim"]: r["loading"] for r in pca_top_component(emb, method="gram").collect()}
-    p = {r["dim"]: r["loading"] for r in pca_top_component(emb, iters=30, method="power").collect()}
-    assert set(g) == set(p) == {0, 1, 2}
-    for dim in g:
-        assert abs(g[dim] - p[dim]) < 1e-6, (dim, g[dim], p[dim])
-
-    # top-k: gram vs deflated power on two planted directions
-    import random
+    """The one-scan Gram eigensolve and the deflated covariance-action
+    power iteration recover the same top-k components (up to the
+    shared sign convention) on two planted directions — both code
+    paths stay covered now that small d routes to gram."""
+    from ibd_pipeline_spark.operators.ml import pca_top_k
 
     rng = random.Random(3)
     rows2 = []
@@ -200,20 +165,3 @@ def test_pca_gram_and_power_paths_agree(spark):
     pm = {(r["component"], r["dim"]): r["loading"] for r in pk}
     for key in gm:
         assert abs(gm[key] - pm[key]) < 1e-3, (key, gm[key], pm[key])
-
-
-def test_logreg_arrow_and_expr_paths_agree(spark):
-    """The Arrow-partial GD loop and the pure-DataFrame expression
-    form compute the same weights (same math, same iteration count,
-    tol disabled so neither exits early)."""
-    from ibd_pipeline_spark.operators.ml import logreg_fit
-
-    rows = [([1.0, float(i % 7), 1.0 if i % 3 else -1.0], 1 if i % 2 else 0) for i in range(40)]
-    df = spark.createDataFrame(rows, "x array<double>, y int")
-    a = logreg_fit(df, "x", "y", iters=5, lr=0.4, l2=0.1, tol=0.0, method="arrow").collect()[0]
-    e = logreg_fit(df, "x", "y", iters=5, lr=0.4, l2=0.1, tol=0.0, method="expr").collect()[0]
-    assert len(a["weights"]) == len(e["weights"])
-    for x, y in zip(a["weights"], e["weights"]):
-        assert abs(x - y) < 1e-9, (a["weights"], e["weights"])
-    assert abs(a["log_loss"] - e["log_loss"]) < 1e-9
-    assert a["n_rows"] == e["n_rows"]

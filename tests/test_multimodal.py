@@ -157,20 +157,6 @@ def test_audio_features_distributed(spark):
     assert feats.columns[0] == "asset_id"
 
 
-def test_audio_slice_round_trip(spark):
-    """slice_audio output is itself a valid WAV of the clipped
-    duration — decode(slice(x)) must parse and show ~250 ms."""
-    import ibd_pipeline_spark.operators.multimodal as M
-
-    assets = M.synthesize_audio_assets(spark, n=6)
-    clips = M.slice_audio(assets, 0, 250).orderBy("asset_id").collect()
-    assert len(clips) == 6
-    for c in clips:
-        d = M.decode_audio(bytes(c.content))
-        assert d["duration_ms"] <= 250
-        assert d["sample_rate"] == 8000
-
-
 def test_mp4_container_round_trip():
     """synthesize_mp4 emits real ISO-BMFF framing; parse_mp4_meta
     walks it back — and rejects corrupted framing like any

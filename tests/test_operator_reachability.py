@@ -1,0 +1,131 @@
+"""Every operator function is reachable from what the engine runs.
+
+A static walk over the package's source (no Spark, no job): the roots
+are all code in `queries/`, `streaming/` and `sources/`; a reference
+to a top-level function or class — a bare name, a name imported from
+another module, or `module_alias.name` — makes it reachable, and its
+own body is walked in turn. Import statements alone do not count: a
+function that is imported but never called is not reached.
+
+A top-level function in `operators/` that nothing reaches is a second
+form of an operator that only tests call. REFERENCE holds the few
+kept on purpose, each with its reason.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PKG = Path(__file__).resolve().parent.parent / "ibd_pipeline_spark"
+ROOT_DIRS = ("queries", "streaming", "sources")
+
+REFERENCE = {
+    "winnowing_fingerprints": (
+        "the column-expression form that test_winnowing_rows_equals_"
+        "column_form checks the registry's winnowing_fingerprint_rows "
+        "against"
+    ),
+    "pca_top_k": (
+        "test_pca_top_k_orthogonal_ordered holds to 1e-6 only on its "
+        "unrounded loadings; pca_power_attested rounds them to 6 decimals"
+    ),
+}
+
+
+def _module_name(path: Path) -> str:
+    rel = path.relative_to(PKG.parent).with_suffix("")
+    parts = rel.parts[:-1] if rel.name == "__init__" else rel.parts
+    return ".".join(parts)
+
+
+def _index():
+    """(defs, refs): defs maps (module, name) → top-level node; refs
+    maps each such key, and each root module, to the keys its code
+    references."""
+    defs, refs, roots = {}, {}, set()
+    for path in sorted(PKG.rglob("*.py")):
+        mod = _module_name(path)
+        tree = ast.parse(path.read_text())
+        top = {
+            n.name
+            for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        }
+        names, modules = {}, {}  # local name → (module, name) / module
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and n.module:
+                for a in n.names:
+                    local = a.asname or a.name
+                    names[local] = (n.module, a.name)
+                    modules[local] = f"{n.module}.{a.name}"
+            elif isinstance(n, ast.Import):
+                for a in n.names:
+                    modules[a.asname or a.name] = a.name
+
+        def resolve(node):
+            out = set()
+            for n in ast.walk(node):
+                if isinstance(n, ast.Name):
+                    if n.id in top:
+                        out.add((mod, n.id))
+                    elif n.id in names:
+                        out.add(names[n.id])
+                elif isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
+                    if n.value.id in modules:
+                        out.add((modules[n.value.id], n.attr))
+            return out
+
+        for n in tree.body:
+            if isinstance(n, (ast.Import, ast.ImportFrom)):
+                continue
+            key = (mod, getattr(n, "name", None))
+            if key[1] in top:
+                defs[key] = n
+                refs[key] = resolve(n)
+            if path.relative_to(PKG).parts[0] in ROOT_DIRS:
+                roots |= resolve(n)
+    return defs, refs, roots
+
+
+def _reachable(refs, start):
+    seen, todo = set(), list(start)
+    while todo:
+        key = todo.pop()
+        if key not in seen:
+            seen.add(key)
+            todo.extend(refs.get(key, ()))
+    return seen
+
+
+def _operator_functions(defs):
+    return {
+        key
+        for key, node in defs.items()
+        if key[0].startswith("ibd_pipeline_spark.operators.")
+        and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+
+
+def test_every_operator_function_is_reachable():
+    defs, refs, roots = _index()
+    ops = _operator_functions(defs)
+    kept = {key for key in ops if key[1] in REFERENCE}
+    reached = _reachable(refs, roots | kept)
+    orphans = sorted(f"{m}.{n}" for m, n in ops - reached)
+    assert not orphans, (
+        "operator functions that no query, stream or source reaches "
+        f"(delete them, or name them in REFERENCE with a reason): {orphans}"
+    )
+
+
+def test_reference_entries_are_defined_and_otherwise_unreached():
+    defs, refs, roots = _index()
+    ops = _operator_functions(defs)
+    reached = _reachable(refs, roots)
+    for name in REFERENCE:
+        keys = [key for key in ops if key[1] == name]
+        assert keys, f"REFERENCE names {name}, which operators/ does not define"
+        assert not set(keys) & reached, (
+            f"{name} is reached from the engine; drop it from REFERENCE"
+        )

@@ -140,19 +140,20 @@ def test_python_stage_queries_have_no_sort_above_python(spark, sf_dir):
 def test_simhash_signature_agg_is_codegen(spark, sf_dir):
     """Perf regression guard: the SimHash signature build must stay a
     plan (explode + hash aggregate inside WholeStageCodegen), never
-    the interpreted mega-expression it replaced."""
-    from ibd_pipeline_spark.operators.dedup import simhash_signatures
+    an interpreted per-bit mega-expression over the shingle array."""
+    from ibd_pipeline_spark.operators.dedup import simhash_signatures_md5
 
     docs = load(spark, sf_dir, "documents")
-    plan = _formatted_plan(simhash_signatures(docs))
+    plan = _formatted_plan(simhash_signatures_md5(docs))
     # exactly one explode (one tokenize+hash pass, not 64)
     assert plan.count("(explode(") == 1 or plan.count("Generate") >= 1
     assert len([l for l in plan.splitlines() if ") Generate" in l]) == 1
     # partial+final hash aggregation around one exchange
     assert "partial_sum" in plan and "HashAggregate" in plan
     # the interpreted form's signature: per-bit aggregate() lambdas
-    # over the shingle array — must not appear anywhere
-    assert "aggregate(transform" not in plan and "lambdafunction(xxhash64" in plan
+    # over the shingle array — must not appear anywhere; each shingle
+    # is hashed once, after the explode
+    assert "aggregate(transform" not in plan and "md5(" in plan
 
 
 def test_ann_auto_probe_reads_raw_relation(spark, sf_dir):

@@ -21,30 +21,24 @@ SET = settings(
 )
 
 
-def _signed64(u: int) -> int:
-    return u - (1 << 64) if u >= (1 << 63) else u
-
-
 @SET
 @given(
-    base=st.integers(min_value=0, max_value=(1 << 64) - 1),
+    base=st.integers(min_value=0, max_value=(1 << 32) - 1),
     flips=st.lists(
-        st.integers(min_value=0, max_value=63), min_size=1, max_size=3, unique=True
+        st.integers(min_value=0, max_value=31), min_size=1, max_size=3, unique=True
     ),
 )
 def test_simhash_multi_finds_every_hamming3_pair(spark, base, flips):
-    """ANY signature pair within Hamming 3 collides in at least one of
-    the 4 disjoint 16-bit chunks (pigeonhole) — randomized over base
-    signatures and flip positions."""
-    from ibd_pipeline_spark.operators.dedup import simhash_pairs_multi_from_sigs
+    """ANY 32-bit signature pair within Hamming 3 collides in at least
+    one of the 4 disjoint 8-bit chunks (pigeonhole) — randomized over
+    base signatures and flip positions."""
+    from ibd_pipeline_spark.operators.dedup import simhash32_pairs
 
     other = base
     for b in flips:
         other ^= 1 << b
-    sig = spark.createDataFrame(
-        [(0, _signed64(base)), (1, _signed64(other))], "id bigint, sig bigint"
-    )
-    pairs = simhash_pairs_multi_from_sigs(sig, max_hamming=8)
+    sig = spark.createDataFrame([(0, base), (1, other)], "id bigint, sig bigint")
+    pairs = simhash32_pairs(sig, max_hamming=8, tables=4, chunk_bits=8)
     try:
         found = {(r.id_a, r.id_b): r.hamming for r in pairs.collect()}
     finally:

@@ -419,7 +419,7 @@ def test_proto_decode_under_readstream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert q.exception() is None
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     assert n_batches >= 2

@@ -103,9 +103,9 @@ def test_fano_single_hour_null_not_nan(spark):
 
 
 def test_portable_lsh_dim_guard(spark):
-    """ADVICE r10 (operators/similarity.py): portable sign-LSH with
-    vectors shorter than the highest read axis must fail loudly, not
-    hash everything into degenerate buckets."""
+    """Axis-aligned sign-LSH (operators/similarity.py) with vectors
+    shorter than the highest read axis must fail loudly, not hash
+    everything into degenerate buckets."""
     import pytest
 
     from ibd_pipeline_spark.operators import similarity as S
@@ -116,17 +116,17 @@ def test_portable_lsh_dim_guard(spark):
         [(1, [0.1] * 16), (2, [0.2] * 16)], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ValueError, match="dim >= 48"):
-        S.cosine_near_dup_pairs(df, portable=True, dim=16)
+        S.cosine_near_dup_pairs(df, dim=16)
     q = df.selectExpr("vec_id as query_id", "embedding as vec")
     c = df.selectExpr("vec_id as corpus_id", "embedding as vec")
     with pytest.raises(ValueError, match="dim >= 48"):
-        S.lsh_bucketed_topk(q, c, portable=True, dim=16)
+        S.lsh_bucketed_topk(q, c, dim=16)
     # dim exactly at the bound is accepted (no raise at plan time)
     ok = spark.createDataFrame(
         [(1, [0.1] * 48), (2, [-0.2] * 48)],
         "vec_id long, embedding array<double>",
     )
-    S.cosine_near_dup_pairs(ok, portable=True, dim=48)
+    S.cosine_near_dup_pairs(ok, dim=48)
 
 
 def test_multimodal_cache_purges_dead_sessions(spark):

@@ -138,11 +138,6 @@ def test_cosine_near_dup_finds_planted_pairs(spark):
     assert all({a, b} <= {0, 1, 2} for a, b in pairs)
 
 
-def test_normalize_makes_unit_vectors(spark, emb):
-    n = emb.select(S.l2_norm(S.normalize(S.as_double_array("embedding"))).alias("n"))
-    assert all(abs(r.n - 1.0) < 1e-9 for r in n.collect())
-
-
 def test_broadcast_knob_paths_identical(spark, clustered):
     """broadcast_queries True / False / auto return identical top-k;
     the False path's candidate join has no broadcast of the query side
@@ -191,51 +186,38 @@ def test_ivf_broadcast_knob_paths_identical(spark, clustered):
     assert rows(True) == rows(False) == rows("auto")
 
 
+def _inertia(assigned):
+    """Σ squared L2 to the final centroids, from the fixed-point
+    dist_fp (10⁻¹² units) kmeans_attested returns."""
+    return assigned.agg(F.sum("dist_fp")).collect()[0][0] / 1e12
+
+
 def test_kmeans_invariants(spark, sf_dir):
     """Lloyd's k-means: full coverage, k clusters max, monotone
     inertia over iterations, deterministic across input partitioning."""
     import pyspark.sql.functions as F
 
-    from ibd_pipeline_spark.operators.similarity import kmeans
+    from ibd_pipeline_spark.operators.similarity import kmeans_attested
 
     emb = load(spark, sf_dir, "embeddings")
     n = emb.count()
 
-    a1 = kmeans(emb, k=4, iters=1)
-    a3 = kmeans(emb, k=4, iters=3)
+    a1 = kmeans_attested(emb, k=4, iters=1)
+    a3 = kmeans_attested(emb, k=4, iters=3)
     assert a3.count() == n  # every vector assigned
     assert a3.select("cluster_id").distinct().count() <= 4
 
-    inertia1 = a1.agg(F.sum("dist")).collect()[0][0]
-    inertia3 = a3.agg(F.sum("dist")).collect()[0][0]
+    inertia1 = _inertia(a1)
+    inertia3 = _inertia(a3)
     assert inertia3 <= inertia1 + 1e-9  # Lloyd's never increases inertia
 
     # partitioning-invariance: same sizes from a reshuffled input
-    b3 = kmeans(emb.repartition(7), k=4, iters=3)
+    b3 = kmeans_attested(emb.repartition(7), k=4, iters=3)
     sizes = lambda df: sorted(
         (r["cluster_id"], r["n"])
         for r in df.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n")).collect()
     )
     assert sizes(a3) == sizes(b3)
-
-
-def test_kmeans_reliable_checkpoint_path(spark, sf_dir, tmp_path):
-    """checkpoint_dir set → reliable checkpoint() branch (production
-    durability contract, same as connected_components): results must
-    equal the localCheckpoint branch."""
-    import pyspark.sql.functions as F
-
-    from ibd_pipeline_spark.catalog import load
-    from ibd_pipeline_spark.operators.similarity import kmeans
-
-    emb = load(spark, sf_dir, "embeddings")
-    a = kmeans(emb, k=4, iters=2)
-    b = kmeans(emb, k=4, iters=2, checkpoint_dir=str(tmp_path / "ckpt"))
-    sizes = lambda df: sorted(
-        (r["cluster_id"], r["n"])
-        for r in df.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    assert sizes(a) == sizes(b)
 
 
 def test_kmeans_inertia_monotone_per_iteration(spark, sf_dir):
@@ -245,13 +227,10 @@ def test_kmeans_inertia_monotone_per_iteration(spark, sf_dir):
     immediately."""
     import pyspark.sql.functions as F
 
-    from ibd_pipeline_spark.operators.similarity import kmeans
+    from ibd_pipeline_spark.operators.similarity import kmeans_attested
 
     emb = load(spark, sf_dir, "embeddings")
-    inertias = [
-        kmeans(emb, k=4, iters=i).agg(F.sum("dist")).collect()[0][0]
-        for i in range(1, 5)
-    ]
+    inertias = [_inertia(kmeans_attested(emb, k=4, iters=i)) for i in range(1, 5)]
     for prev, cur in zip(inertias, inertias[1:]):
         assert cur <= prev + 1e-9, f"inertia increased: {inertias}"
 
@@ -262,7 +241,7 @@ def test_kmeans_recovers_planted_clusters(spark):
     its own predicted cluster."""
     import random
 
-    from ibd_pipeline_spark.operators.similarity import kmeans
+    from ibd_pipeline_spark.operators.similarity import kmeans_attested
 
     rng = random.Random(7)
     centers = [[0.0] * 8, [10.0] * 8, [-10.0, 10.0] * 4]
@@ -277,7 +256,7 @@ def test_kmeans_recovers_planted_clusters(spark):
     df = spark.createDataFrame(
         rows, "vec_id int, planted int, embedding array<double>"
     )
-    out = kmeans(df, k=3, iters=5).join(
+    out = kmeans_attested(df, k=3, iters=5).join(
         df.select("vec_id", "planted"), "vec_id"
     )
     groups = out.groupBy("planted").agg(
@@ -294,26 +273,15 @@ def test_kmeans_empty_cluster_keeps_k_centroids(spark):
     position (not vanish): with k=4 over 2 tight planted blobs, the
     result still assigns against 4 centroids and every assignment is
     a valid id in [0, k)."""
-    from ibd_pipeline_spark.operators.similarity import kmeans
+    from ibd_pipeline_spark.operators.similarity import kmeans_attested
 
     rows = [(i, [0.0] * 4) for i in range(10)] + [
         (10 + i, [100.0] * 4) for i in range(10)
     ]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    out = kmeans(df, k=4, iters=3).collect()
+    out = kmeans_attested(df, k=4, iters=3).collect()
     assert len(out) == 20
     assert all(0 <= r.cluster_id < 4 for r in out)
-
-
-def test_kmeans_arrow_and_expr_paths_agree(spark, clustered):
-    """The Arrow partial-aggregation Lloyd loop and the pure-DataFrame
-    expression form produce identical assignments on well-separated
-    clusters (same init, same tie rule)."""
-    a = {r["vec_id"]: r["cluster_id"]
-         for r in S.kmeans(clustered, k=5, iters=3, method="arrow").collect()}
-    e = {r["vec_id"]: r["cluster_id"]
-         for r in S.kmeans(clustered, k=5, iters=3, method="expr").collect()}
-    assert a == e
 
 
 def test_axis_sign_bucket_rejects_composite_column(spark):
@@ -355,7 +323,7 @@ def test_cosine_dim_mismatch_fails_loudly(spark):
         [(i, [0.1 * (i + 1)] * 64) for i in range(4)],
         "vec_id long, embedding array<double>",
     )
-    # 64-element vectors with dim=48 passes the portable bit-range
+    # 64-element vectors with dim=48 passes the sign-LSH bit-range
     # check (48 axes read) but violates the fixed-dim dot contract.
     with pytest.raises(Exception, match="expected dim=48"):
-        S.cosine_near_dup_pairs(df, portable=True, dim=48)
+        S.cosine_near_dup_pairs(df, dim=48)

@@ -20,7 +20,6 @@ from ibd_pipeline_spark.operators.sketches import (
     bloom_maybe_contains,
     cms_build,
     cms_probe,
-    hll_daily_weekly,
 )
 
 
@@ -90,20 +89,6 @@ def test_bloom_no_false_negatives_and_fp_bounded(spark, sf_dir):
     # fp rate ≈ (set bits / m)^k; allow 4× headroom + integer slack
     expected = (n_bits / 8192.0) ** 3
     assert fp <= max(5, 4 * expected * n_others), (fp, n_others, n_bits, n_members)
-
-
-def test_hll_union_equals_direct_and_close_to_exact(spark, sf_dir):
-    """Union-of-day-sketches must give the SAME estimate as the
-    direct weekly sketch (DataSketches HLL union over same-lgK
-    sketches is lossless), and the estimate must sit within 5% of the
-    exact distinct count at fixture cardinalities."""
-    rows = hll_daily_weekly(load(spark, sf_dir, "events")).collect()
-    assert rows, "no weeks produced"
-    for r in rows:
-        assert r["est_union_of_days"] == r["est_direct"], r
-        assert abs(r["est_direct"] - r["exact_users"]) <= max(
-            2, 0.05 * r["exact_users"]
-        ), r
 
 
 def test_portable_hll_both_branches(spark):

@@ -62,9 +62,8 @@ def test_winnowing_deterministic(spark):
 
 def test_winnowing_rows_equals_column_form(spark):
     """The explode-based scale path must select the IDENTICAL
-    fingerprint set as the column-expression form (both hash
-    variants), including the short-document (< k tokens, < window
-    grams) edge cases."""
+    fingerprint set as the column-expression form, including the
+    short-document (< k tokens, < window grams) edge cases."""
     from ibd_pipeline_spark.operators.text import winnowing_fingerprint_rows
 
     rows = [
@@ -75,19 +74,14 @@ def test_winnowing_rows_equals_column_form(spark):
         (5, " ".join(f"t{i % 7}" for i in range(40))),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for portable in (False, True):
-        col_form = {
-            (r["doc_id"], fp)
-            for r in df.select(
-                "doc_id",
-                winnowing_fingerprints("text", portable=portable).alias("fps"),
-            ).collect()
-            for fp in r["fps"]
-        }
-        row_form = {
-            (r["doc_id"], r["fp"])
-            for r in winnowing_fingerprint_rows(
-                df, portable=portable
-            ).collect()
-        }
-        assert row_form == col_form, f"portable={portable}"
+    col_form = {
+        (r["doc_id"], fp)
+        for r in df.select(
+            "doc_id", winnowing_fingerprints("text").alias("fps")
+        ).collect()
+        for fp in r["fps"]
+    }
+    row_form = {
+        (r["doc_id"], r["fp"]) for r in winnowing_fingerprint_rows(df).collect()
+    }
+    assert row_form == col_form

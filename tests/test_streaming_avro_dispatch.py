@@ -59,7 +59,7 @@ def test_stream_equals_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert not q.isActive
     assert q.exception() is None
     # the replay must have been genuinely micro-batched, not one gulp

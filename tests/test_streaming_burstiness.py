@@ -50,7 +50,7 @@ def test_streaming_hourly_counts_equal_batch(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     streamed = _collect_latest(spark, "burst_hourly")
     batch = {
         (r["event_type"], r["w"]["start"]): r["c"]
@@ -115,7 +115,7 @@ def test_watermark_evicts_closed_windows(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     prog = q.lastProgress
     state_rows = prog["stateOperators"][0]["numRowsTotal"]
     # 24 one-hour windows total; the watermark horizon (2h) keeps only

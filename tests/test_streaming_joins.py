@@ -68,7 +68,7 @@ def _run_stream(spark, spool: str, ckpt: str, how: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     return spark.sql(f"SELECT * FROM {name}").collect()
 
 

@@ -36,7 +36,7 @@ def test_streaming_freshness_equals_batch(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     streamed = {
         r["event_type"]: (r["n_events"], r["last_ts"])
         for r in spark.sql("select * from freshness").collect()

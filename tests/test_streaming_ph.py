@@ -35,7 +35,7 @@ def test_streaming_daily_means_equal_batch(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM ph_daily").collect()
     streamed = {}
     for r in rows:  # update mode: last (max-n) update per window wins

@@ -46,7 +46,7 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
         foreach_batch=make_handler("run1"),
         trigger_available_now=True,
     )
-    q1.awaitTermination(120)
+    assert q1.awaitTermination(120)
 
     # Run 2: second half arrives while the query is down; restart
     # from the same checkpoint.
@@ -57,7 +57,7 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
         foreach_batch=make_handler("run2"),
         trigger_available_now=True,
     )
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
 
     for f in sink_dir.glob("*.json"):
         emitted.extend(tuple(x) for x in json.loads(f.read_text()))
@@ -134,7 +134,7 @@ def test_sink_replay_idempotent_after_midbatch_crash(spark, tmp_path):
         foreach_batch=healthy(),
         trigger_available_now=True,
     )
-    q1.awaitTermination(120)
+    assert q1.awaitTermination(120)
 
     # Run 2 (poisoned): the second window's lines are WRITTEN but the
     # batch never commits — the query dies mid-batch.
@@ -155,7 +155,7 @@ def test_sink_replay_idempotent_after_midbatch_crash(spark, tmp_path):
         foreach_batch=healthy(),
         trigger_available_now=True,
     )
-    q3.awaitTermination(120)
+    assert q3.awaitTermination(120)
 
     lines: list[str] = []
     for p in glob.glob(out_dir + "/*.lp"):

@@ -41,7 +41,7 @@ def materialized(spark, tmp_path_factory):
     # watermark wider than the replayed span or cross-batch "late"
     # rows are dropped by design.
     q = run_rollup_materialization(stream, log, ckpt, watermark="60 days")
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert not q.isActive
     assert q.exception() is None
     return {"raw": raw, "log": log, "base": base}

@@ -43,7 +43,7 @@ def test_streaming_cms_equals_batch(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     stream_sketch = {
         (r["seed"], r["bucket"]): r["cnt"]
         for r in spark.sql("select * from cms_counters").collect()

@@ -6,6 +6,7 @@ memory sink, no external services."""
 from __future__ import annotations
 
 import json
+import time
 from datetime import datetime, timedelta
 
 import pytest
@@ -79,7 +80,7 @@ def test_dedup_within_watermark_streaming(spark, event_stream):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("select event_id, count(*) c from dedup_stream group by 1").collect()
     assert len(rows) == 60  # 70 inputs, 10 dups removed
     assert all(r.c == 1 for r in rows)
@@ -96,7 +97,7 @@ def test_session_window_streaming(spark, event_stream):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("select * from sess_stream").collect()
     # users appear every 90s < 2-min gap → one continuous session each
     assert len(rows) == 3
@@ -114,7 +115,7 @@ def test_sliding_window_streaming(spark, event_stream):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("select * from slide_stream").collect()
     # 30 minutes of data / 5-min slide → 7 overlapping 10-min windows
     assert len(rows) == 7
@@ -133,7 +134,15 @@ def test_apply_in_pandas_with_state(spark, event_stream):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # Processing-time timeouts keep an availableNow query planning
+    # no-data batches, so it never ends by itself (and
+    # processAllAvailable() never returns). A no-data batch runs only
+    # once every available file is processed: wait for one, then stop.
+    deadline = time.monotonic() + 120
+    while not any(p["numInputRows"] == 0 for p in q.recentProgress):
+        assert q.isActive and time.monotonic() < deadline, q.exception()
+        time.sleep(0.1)
+    q.stop()
     rows = spark.sql(
         "select user_id, max(events_seen) seen, max(value_sum) vs from user_stats group by 1"
     ).collect()
@@ -179,7 +188,7 @@ def test_transform_with_state_in_pandas(spark, event_stream):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         rows = spark.sql(
             "select user_id, max(events_seen) seen, max(value_sum) vs, max(value_max) vm "
             "from user_stats_tws group by 1"
@@ -278,7 +287,7 @@ def test_cusum_monitor_stream_equals_batch(spark, cusum_stream):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     # update mode emits one row per key per micro-batch that touched
     # it; the LAST emit per key is the final state.
     stream_rows = {
@@ -350,7 +359,7 @@ def test_cusum_monitor_recovers_from_checkpoint(spark, cusum_stream, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     # phase 1: hide the last file, process what's there
     hidden = tmp_path / "hidden_c.json"

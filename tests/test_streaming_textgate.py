@@ -56,7 +56,7 @@ def test_repetition_gate_stream_equals_batch(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     stream_ids = {r["doc_id"] for r in spark.sql("select * from gated_docs").collect()}
 
     assert stream_ids == batch_ids
@@ -99,7 +99,7 @@ def test_stream_static_enrichment_equals_batch(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {
         r["segment"]: r["n"]
         for r in spark.sql(

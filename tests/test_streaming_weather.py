@@ -125,7 +125,7 @@ def test_streaming_file_source_update_mode(spark, tmp_path):
         query_name="weather_test",
         trigger_available_now=True,
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     got = {
         r["window"]["start"]: r
@@ -165,7 +165,7 @@ def test_streaming_late_data_dropped(spark, tmp_path):
         query_name="weather_late",
         trigger_available_now=True,
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("select * from weather_late").collect()
     assert len(rows) >= 1
 
@@ -288,7 +288,7 @@ def test_drain_sends_few_gateway_commands(spark, tmp_path, monkeypatch):
         foreach_batch=handler,
         trigger_available_now=True,
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     monkeypatch.undo()
     assert q.exception() is None
     assert len(q.recentProgress) >= 2

@@ -216,11 +216,10 @@ CURATED = {
     "join_bloom_prefiltered": "hand-rolled runtime filter: one-row bloom "
     "bitset broadcast into the fact scan, one md5 + 3 O(1) word probes per row in "
     "codegen, then the exact broadcast join over survivors only.",
-    "similarity_pca_top_component": "PCA via the r06 Gram fast path: one "
-    "Arrow mapInPandas pass of numpy Gram/sum partials + driver eigensolve "
-    "(MLlib RowMatrix design); printed plan = the local scan of the "
-    "materialized d-row result (the covariance-ACTION power iteration "
-    "remains the large-d route).",
+    "similarity_pca_top_component": "PCA by fixed-point power iteration: "
+    "the mean and covariance are two exact BIGINT aggregates collected as "
+    "model state, the rounds run on the driver; printed plan = the scan "
+    "of the inlined d-row result VALUES.",
     "train_weighted_sample_ares": "A-Res weighted sampling: md5-uniform "
     "score per row, one per-source rank window — a weighted draw without "
     "replacement in a single shuffle, no rejection loop.",

@@ -113,21 +113,22 @@ def main() -> None:
         )
         results.setdefault("minhash_lsh_x", {})[str(k)] = timed(pairs)
 
-    # 5b. simhash signature build (explode + 64-sum hash-agg) as the
-    # corpus replicates — must stay linear in corpus tokens.
+    # 5b. simhash signature build (explode + 32-sum hash-agg over md5
+    # shingle hashes) as the corpus replicates — must stay linear in
+    # corpus tokens.
     for k in (1, 4):
         corpus = replicate(docs, k, {"doc_id": 10_000_000})
         results.setdefault("simhash_signatures_x", {})[str(k)] = timed(
-            D.simhash_signatures(corpus)
+            D.simhash_signatures_md5(corpus)
         )
 
-    # 5e. multi-table SimHash pair generation (r06): 4 rotated band
+    # 5e. multi-table SimHash pair generation: 4 disjoint 8-bit chunk
     # tables must keep candidate growth bounded by block occupancy —
-    # flat-to-linear in corpus, like the single-table and MinHash
-    # blockers, never quadratic.
+    # flat-to-linear in corpus, like the MinHash blockers, never
+    # quadratic.
     for k in (1, 4):
         corpus = replicate(docs, k, {"doc_id": 10_000_000})
-        pairs = D.simhash_near_dup_pairs_multi(corpus)
+        pairs = D.simhash32_pairs(D.simhash_signatures_md5(corpus), tables=4)
         results.setdefault("simhash_multitable_x", {})[str(k)] = timed(pairs)
         D.release_state(pairs)
 
