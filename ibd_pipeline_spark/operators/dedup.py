@@ -47,7 +47,7 @@ def shingles(text: Column | str, k: int = 3) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Session-level signature cache (the multimodal _cached_asset_frame
+# Session-level signature cache (the multimodal asset_table
 # pattern applied to dedup state): the per-doc
 # MinHash state (shingle set + 32 signature minima) is the single
 # most expensive artifact in the dedup family, and SIX registry

@@ -262,7 +262,6 @@ def label_propagation(
     label: str = "label",
     max_iter: int = 5,
     checkpoint_dir: str | None = None,
-    driver_solve: bool = True,
     max_driver_edges: int = 65536,
 ) -> DataFrame:
     """Semi-supervised label propagation over undirected `edges`:
@@ -294,9 +293,7 @@ def label_propagation(
         # and fail on first action — reject up front (ADVICE r8).
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
 
-    import pyspark.sql.functions as F
-
-    # DRIVER SOLVE (r16, default for small graphs — the
+    # DRIVER SOLVE (r16, for graphs up to max_driver_edges — the
     # markov_stationary / absorption_probability doctrine verbatim):
     # when the edge list AND the seed list fit under max_driver_edges,
     # the voting rounds run as plain Python over the collected pairs —
@@ -309,92 +306,91 @@ def label_propagation(
     # lexicographically smallest (Python str comparison == Spark
     # UTF8String order — UTF-8 byte order is code-point order), and
     # the loop exits early on an unchanged state, which can only skip
-    # no-op rounds. Set driver_solve=False for genuinely large graphs
-    # (the distributed loop below is unchanged).
-    if driver_solve:
-        erows = _driver_rows(
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+    # no-op rounds. Above max_driver_edges the distributed loop below
+    # runs.
+    erows = _driver_rows(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        max_driver_edges,
+    )
+    if erows is not None:
+        srows = _driver_rows(
+            seeds.select(F.col(vertex).alias("v"), F.col(label).alias("lbl")),
             max_driver_edges,
         )
-        if erows is not None:
-            srows = _driver_rows(
-                seeds.select(F.col(vertex).alias("v"), F.col(label).alias("lbl")),
-                max_driver_edges,
+        if srows is not None:
+            sym_set: set = set()
+            for r in erows:
+                sym_set.add((r["a"], r["b"]))
+                sym_set.add((r["b"], r["a"]))
+            adj: dict = {}
+            for a_, b_ in sorted(
+                sym_set, key=lambda t: (str(t[0]), str(t[1]))
+            ):
+                adj.setdefault(a_, []).append(b_)
+            seed_lbl = {
+                r["v"]: r["lbl"]
+                for r in sorted(srows, key=lambda r: str(r["v"]))
+            }
+            lbl = {v: seed_lbl.get(v) for v in adj}
+            lbl.update(
+                {v: l for v, l in seed_lbl.items() if v not in adj}
             )
-            if srows is not None:
-                sym_set: set = set()
-                for r in erows:
-                    sym_set.add((r["a"], r["b"]))
-                    sym_set.add((r["b"], r["a"]))
-                adj: dict = {}
-                for a_, b_ in sorted(
-                    sym_set, key=lambda t: (str(t[0]), str(t[1]))
-                ):
-                    adj.setdefault(a_, []).append(b_)
-                seed_lbl = {
-                    r["v"]: r["lbl"]
-                    for r in sorted(srows, key=lambda r: str(r["v"]))
-                }
-                lbl = {v: seed_lbl.get(v) for v in adj}
-                lbl.update(
-                    {v: l for v, l in seed_lbl.items() if v not in adj}
-                )
-                is_seed = {v: v in seed_lbl for v in lbl}
-                # Early exit replicates the distributed loop's
-                # fingerprint gate EXACTLY: the state is compared at
-                # every 2nd round (and the last) against the previous
-                # comparison point, so a period-2 oscillation exits at
-                # the same round with the same labels the DataFrame
-                # loop (and the unrolled oracle) produce — comparing
-                # every round would converge to the OTHER phase.
-                prev_check = None
-                for i in range(max_iter):
-                    new = {}
-                    for v in lbl:
-                        if is_seed[v]:
-                            new[v] = lbl[v]
-                            continue
-                        cnt: dict = {}
-                        for b_ in adj.get(v, ()):
-                            nl = lbl.get(b_)
-                            if nl is not None:
-                                cnt[nl] = cnt.get(nl, 0) + 1
-                        if cnt:
-                            new[v] = min(
-                                cnt, key=lambda l: (-cnt[l], l)
-                            )
-                        else:
-                            new[v] = lbl[v]
-                    lbl = new
-                    if (i + 1) % 2 == 0 or i == max_iter - 1:
-                        if lbl == prev_check:
-                            break
-                        prev_check = lbl
-                from pyspark.sql.types import (
-                    BooleanType,
-                    StructField,
-                    StructType,
-                )
+            is_seed = {v: v in seed_lbl for v in lbl}
+            # Early exit replicates the distributed loop's
+            # fingerprint gate EXACTLY: the state is compared at
+            # every 2nd round (and the last) against the previous
+            # comparison point, so a period-2 oscillation exits at
+            # the same round with the same labels the DataFrame
+            # loop (and the unrolled oracle) produce — comparing
+            # every round would converge to the OTHER phase.
+            prev_check = None
+            for i in range(max_iter):
+                new = {}
+                for v in lbl:
+                    if is_seed[v]:
+                        new[v] = lbl[v]
+                        continue
+                    cnt: dict = {}
+                    for b_ in adj.get(v, ()):
+                        nl = lbl.get(b_)
+                        if nl is not None:
+                            cnt[nl] = cnt.get(nl, 0) + 1
+                    if cnt:
+                        new[v] = min(
+                            cnt, key=lambda l: (-cnt[l], l)
+                        )
+                    else:
+                        new[v] = lbl[v]
+                lbl = new
+                if (i + 1) % 2 == 0 or i == max_iter - 1:
+                    if lbl == prev_check:
+                        break
+                    prev_check = lbl
+            from pyspark.sql.types import (
+                BooleanType,
+                StructField,
+                StructType,
+            )
 
-                schema = StructType(
-                    [
-                        StructField(
-                            vertex, edges.schema[src].dataType, True
-                        ),
-                        StructField(
-                            label, seeds.schema[label].dataType, True
-                        ),
-                        StructField("is_seed", BooleanType(), False),
-                    ]
-                )
-                return edges.sparkSession.createDataFrame(
-                    [
-                        (v, lbl[v], is_seed[v])
-                        for v in sorted(lbl, key=str)
-                    ],
-                    schema,
-                )
-        # fall through to the distributed loop
+            schema = StructType(
+                [
+                    StructField(
+                        vertex, edges.schema[src].dataType, True
+                    ),
+                    StructField(
+                        label, seeds.schema[label].dataType, True
+                    ),
+                    StructField("is_seed", BooleanType(), False),
+                ]
+            )
+            return edges.sparkSession.createDataFrame(
+                [
+                    (v, lbl[v], is_seed[v])
+                    for v in sorted(lbl, key=str)
+                ],
+                schema,
+            )
+    # fall through to the distributed loop
 
     ckpt = _checkpointer(edges, checkpoint_dir)
     # Materialize the loop-invariant symmetrized edge list ONCE.
@@ -477,7 +473,6 @@ def markov_stationary(
     prob: str = "p",
     iters: int = 16,
     checkpoint_dir: str | None = None,
-    driver_solve: bool = True,
     max_driver_edges: int = 65536,
 ) -> DataFrame:
     """Stationary distribution of a (row-stochastic) Markov chain by
@@ -511,71 +506,68 @@ def markov_stationary(
         # and fail on first action — reject up front (ADVICE r8).
         raise ValueError(f"iters must be >= 1, got {iters}")
 
-    import pyspark.sql.functions as F
-
-    # DRIVER SOLVE (r12, default for small chains) — same contract and
-    # rationale as absorption_probability: the chain is
+    # DRIVER SOLVE (r12, for chains up to max_driver_edges) — same
+    # contract and rationale as absorption_probability: the chain is
     # model-state-sized, the distributed work is the caller's
     # transition-count aggregation, and the per-round DataFrame
     # join+checkpoint loop is pure scheduling overhead at this size.
-    if driver_solve:
-        rows = _driver_rows(
-            transitions.select(
-                F.col(src).alias("s"),
-                F.col(dst).alias("d"),
-                F.col(prob).cast("double").alias("w"),
-            ),
-            max_driver_edges,
+    rows = _driver_rows(
+        transitions.select(
+            F.col(src).alias("s"),
+            F.col(dst).alias("d"),
+            F.col(prob).cast("double").alias("w"),
+        ),
+        max_driver_edges,
+    )
+    if rows is not None:
+        edges = sorted(
+            ((r["s"], r["d"], r["w"]) for r in rows),
+            key=lambda e: (str(e[1]), str(e[0])),
         )
-        if rows is not None:
-            edges = sorted(
-                ((r["s"], r["d"], r["w"]) for r in rows),
-                key=lambda e: (str(e[1]), str(e[0])),
-            )
-            src_set = sorted({s for s, _, _ in edges})
-            srcs = set(src_set)
-            n = len(src_set)
-            pi = {s: 1.0 / n for s in src_set}
-            prev_pi = None
-            for i in range(iters):
-                out: dict = {}
-                for s, d, w in edges:
-                    if s in pi:
-                        out[d] = out.get(d, 0.0) + pi[s] * w
-                for st in sorted(pi):
-                    if st not in srcs:
-                        out[st] = out.get(st, 0.0) + pi[st]
-                pi = out
-                if (i + 1) % 2 == 0 or i == iters - 1:
-                    if prev_pi is not None:
-                        keys = set(pi) | set(prev_pi)
-                        delta = max(
-                            abs(pi.get(k, 0.0) - prev_pi.get(k, 0.0))
-                            for k in keys
-                        )
-                        if delta < 1e-12:
-                            break
-                    prev_pi = dict(pi)
-            from pyspark.sql.types import DoubleType, StructField, StructType
+        src_set = sorted({s for s, _, _ in edges})
+        srcs = set(src_set)
+        n = len(src_set)
+        pi = {s: 1.0 / n for s in src_set}
+        prev_pi = None
+        for i in range(iters):
+            out: dict = {}
+            for s, d, w in edges:
+                if s in pi:
+                    out[d] = out.get(d, 0.0) + pi[s] * w
+            for st in sorted(pi):
+                if st not in srcs:
+                    out[st] = out.get(st, 0.0) + pi[st]
+            pi = out
+            if (i + 1) % 2 == 0 or i == iters - 1:
+                if prev_pi is not None:
+                    keys = set(pi) | set(prev_pi)
+                    delta = max(
+                        abs(pi.get(k, 0.0) - prev_pi.get(k, 0.0))
+                        for k in keys
+                    )
+                    if delta < 1e-12:
+                        break
+                prev_pi = dict(pi)
+        from pyspark.sql.types import DoubleType, StructField, StructType
 
-            schema = StructType(
-                [
-                    StructField(
-                        "state",
-                        transitions.schema[src].dataType,
-                        True,
-                    ),
-                    StructField("p", DoubleType(), True),
-                ]
-            )
-            return transitions.sparkSession.createDataFrame(
-                sorted(
-                    ((k, float(v)) for k, v in pi.items()),
-                    key=lambda kv: str(kv[0]),
+        schema = StructType(
+            [
+                StructField(
+                    "state",
+                    transitions.schema[src].dataType,
+                    True,
                 ),
-                schema,
-            )
-        # fall through to the distributed loop
+                StructField("p", DoubleType(), True),
+            ]
+        )
+        return transitions.sparkSession.createDataFrame(
+            sorted(
+                ((k, float(v)) for k, v in pi.items()),
+                key=lambda kv: str(kv[0]),
+            ),
+            schema,
+        )
+    # fall through to the distributed loop
 
     ckpt = _checkpointer(transitions, checkpoint_dir)
     # Materialize the loop-invariant transition triples ONCE — every
@@ -654,7 +646,6 @@ def absorption_probability(
     prob: str = "p",
     iters: int = 16,
     checkpoint_dir: str | None = None,
-    driver_solve: bool = True,
     max_driver_edges: int = 65536,
 ) -> DataFrame:
     """Absorption probability of a Markov chain: for every TRANSIENT
@@ -680,7 +671,7 @@ def absorption_probability(
     vector so it emits exactly ONE row (a = 1.0), not a second
     'transient' row computed from its outgoing edges (ADVICE r9).
 
-    DRIVER SOLVE (r12, default for small chains): the chain is
+    DRIVER SOLVE (r12, for chains up to max_driver_edges): the chain is
     model-state-sized BY CONSTRUCTION — states are channels/funnel
     steps, never data — so when the edge list fits under
     `max_driver_edges` the 16-round fixpoint runs as plain Python on
@@ -691,56 +682,52 @@ def absorption_probability(
     scheduling for a 30-state chain whose arithmetic takes
     microseconds. Per-state sums run in sorted (src, dst) order —
     deterministic; double noise is ~1e-16 against outputs rounded at
-    6. Set driver_solve=False for state spaces that genuinely exceed
-    driver memory (the distributed loop is unchanged)."""
+    6. Above max_driver_edges the distributed loop runs."""
     if iters < 1:
         # iters=0 would return a frame whose lineage still reads
         # slots released below — reject up front (ADVICE r8).
         raise ValueError(f"iters must be >= 1, got {iters}")
 
-    import pyspark.sql.functions as F
+    rows = _driver_rows(
+        transitions.select(
+            F.col(src).alias("s"),
+            F.col(dst).alias("d"),
+            F.col(prob).cast("double").alias("w"),
+        ),
+        max_driver_edges,
+    )
+    if rows is not None:
+        tgt_set = {r["state"] for r in targets.collect()}
+        edges: dict[str, list] = {}
+        for r in sorted(rows, key=lambda r: (str(r["s"]), str(r["d"]))):
+            edges.setdefault(r["s"], []).append((r["d"], r["w"]))
+        states = sorted(edges)
+        a = {s: 0.0 for s in states}
+        for _ in range(iters):
+            a = {
+                s: sum(
+                    w * (1.0 if d in tgt_set else a.get(d, 0.0))
+                    for d, w in edges[s]
+                )
+                for s in states
+            }
+        out_rows = [
+            (s, float(a[s])) for s in states if s not in tgt_set
+        ] + [(t, 1.0) for t in sorted(tgt_set, key=str)]
+        from pyspark.sql.types import DoubleType, StructField, StructType
 
-    if driver_solve:
-        rows = _driver_rows(
-            transitions.select(
-                F.col(src).alias("s"),
-                F.col(dst).alias("d"),
-                F.col(prob).cast("double").alias("w"),
-            ),
-            max_driver_edges,
+        schema = StructType(
+            [
+                StructField(
+                    "state", transitions.schema[src].dataType, True
+                ),
+                StructField("a", DoubleType(), True),
+            ]
         )
-        if rows is not None:
-            tgt_set = {r["state"] for r in targets.collect()}
-            edges: dict[str, list] = {}
-            for r in sorted(rows, key=lambda r: (str(r["s"]), str(r["d"]))):
-                edges.setdefault(r["s"], []).append((r["d"], r["w"]))
-            states = sorted(edges)
-            a = {s: 0.0 for s in states}
-            for _ in range(iters):
-                a = {
-                    s: sum(
-                        w * (1.0 if d in tgt_set else a.get(d, 0.0))
-                        for d, w in edges[s]
-                    )
-                    for s in states
-                }
-            out_rows = [
-                (s, float(a[s])) for s in states if s not in tgt_set
-            ] + [(t, 1.0) for t in sorted(tgt_set, key=str)]
-            from pyspark.sql.types import DoubleType, StructField, StructType
-
-            schema = StructType(
-                [
-                    StructField(
-                        "state", transitions.schema[src].dataType, True
-                    ),
-                    StructField("a", DoubleType(), True),
-                ]
-            )
-            return transitions.sparkSession.createDataFrame(
-                out_rows, schema
-            )
-        # fall through to the distributed loop
+        return transitions.sparkSession.createDataFrame(
+            out_rows, schema
+        )
+    # fall through to the distributed loop
 
     ckpt = _checkpointer(transitions, checkpoint_dir)
     t = ckpt(

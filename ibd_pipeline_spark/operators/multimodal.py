@@ -5,10 +5,12 @@ What's real here (and tested): the schema contract, the Arrow-batched
 mapInPandas plumbing, batch shapes, partition sizing for large blobs —
 and the ENTIRE audio path (synthesize_wav/decode_audio),
 which runs a genuine RIFF/WAV codec from the Python stdlib, no
-external library needed. Image decode/resize run real when pillow is
-installed (guarded import); video frame extraction is stubbed
-(needs ffmpeg/av) with the fan-out contract fully tested, exactly as
-the build contract prescribes.
+external library needed. PNG decode/resize run real through the
+stdlib codec (operators/png.py), other image formats behind a guarded
+pillow import; ISO-BMFF container metadata and raw-frame sample tables
+decode for real; video frame SAMPLING is a deterministic digest
+stand-in (no codec is installed) with the fan-out contract fully
+tested.
 
 Scale design for binary columns:
   * store blobs in Parquet binary columns NEXT TO their metadata —
@@ -18,13 +20,15 @@ Scale design for binary columns:
     fits executor memory; for >100 MB media, store a reference
     (uri, offset, length) instead and stream in the UDF;
   * all per-blob compute goes through mapInPandas (Arrow batches),
-    never row-at-a-time Python.
+    never row-at-a-time Python — and, but for the 1→N frame fan-out,
+    through the one mapper _map_blobs.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import struct
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -66,21 +70,63 @@ FEATURE_SCHEMA = StructType(
 )
 
 
+def _map_blobs(
+    assets: DataFrame,
+    schema: StructType,
+    per_blob: "Callable[[bytes], dict]",
+    media_type: "str | None" = None,
+) -> DataFrame:
+    """The one per-blob Arrow boundary of this module: mapInPandas
+    over `assets`, keeping only `media_type` rows when it is given,
+    skipping batches left empty, calling `per_blob` on each blob's
+    bytes (it returns a dict of output columns), carrying `asset_id`
+    and `media_type` through when `schema` names them, and emitting
+    the columns in `schema` order. Blob bytes never reach the
+    driver."""
+    names = [f.name for f in schema.fields]
+    carried = [c for c in ("asset_id", "media_type") if c in names]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            if media_type is not None:
+                pdf = pdf[pdf["media_type"] == media_type]
+            if pdf.empty:
+                continue
+            out = pd.DataFrame([per_blob(bytes(b)) for b in pdf["content"]])
+            for c in carried:
+                out[c] = pdf[c].values
+            yield out[names]
+
+    return assets.mapInPandas(batches, schema)
+
+
+def _asset_row(
+    i: int,
+    media: str,
+    blob: bytes,
+    width: "int | None",
+    height: "int | None",
+    duration_ms: "int | None",
+    uri: str,
+) -> tuple:
+    """One ASSET_SCHEMA row; content_bytes is the blob's length."""
+    return (i, media, bytearray(blob), len(blob), width, height, duration_ms, uri)
+
+
 def asset_rows(n: int = 64, seed: int = 42) -> "list[tuple]":
     """The deterministic fake-asset rows (pure Python, no Spark) —
-    shared by synthesize_assets and the VALUES-literal oracle
-    generators in queries/multimodal.py, which recompute the expected
-    query outputs from these same inputs in a plain driver loop."""
+    shared by asset_table and the VALUES-literal oracle generators in
+    queries/multimodal.py, which recompute the expected query outputs
+    from these same inputs in a plain driver loop."""
     rows = []
     for i in range(n):
         media = ("image", "audio", "video")[i % 3]
         blob = hashlib.sha512(f"{seed}:{i}".encode()).digest() * (4 + i % 5)
         rows.append(
-            (
+            _asset_row(
                 i,
                 media,
-                bytearray(blob),
-                len(blob),
+                blob,
                 64 + i % 512 if media == "image" else None,
                 64 + (i * 3) % 512 if media == "image" else None,
                 1000 + i * 37 if media != "image" else None,
@@ -94,7 +140,7 @@ def asset_rows(n: int = 64, seed: int = 42) -> "list[tuple]":
 # createDataFrame local relation pays ~0.7-1.7 s on its FIRST
 # action in this Spark version, and the multimodal queries each
 # re-synthesized the same fixture — so the decoded/encoded asset
-# relation is built ONCE per (session, kind, n, seed), eagerly
+# relation is built ONCE per (session, row builder, n, seed), eagerly
 # localCheckpointed (asset-count-sized rows pinned to executor-local
 # blocks), and every consumer reads the materialized frame. Holding
 # the DataFrame reference keeps the checkpoint blocks alive; a new
@@ -102,8 +148,13 @@ def asset_rows(n: int = 64, seed: int = 42) -> "list[tuple]":
 _ASSET_FRAME_CACHE: "dict[tuple, DataFrame]" = {}
 
 
-def _cached_asset_frame(spark, kind: str, n: int, seed: int, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, kind, n, seed)
+def asset_table(
+    spark, rows: "Callable[[int, int], list[tuple]]", n: int, seed: int = 42
+) -> DataFrame:
+    """The ASSET_SCHEMA table of `rows(n, seed)` — one of the
+    *_asset_rows builders below — cached per session: the first call
+    builds and checkpoints it, later calls return the same frame."""
+    key = (spark.sparkContext.applicationId, rows, n, seed)
     df = _ASSET_FRAME_CACHE.get(key)
     if df is None:
         # drop entries from other (stopped) sessions so a long-lived
@@ -115,28 +166,21 @@ def _cached_asset_frame(spark, kind: str, n: int, seed: int, build) -> DataFrame
         # coalesce before the checkpoint: n≲100 rows across 32
         # createDataFrame slices would otherwise spin a python worker
         # per near-empty partition in every downstream Arrow stage
-        df = build().coalesce(4).localCheckpoint(eager=True)
+        df = (
+            spark.createDataFrame(rows(n, seed), ASSET_SCHEMA)
+            .coalesce(4)
+            .localCheckpoint(eager=True)
+        )
         _ASSET_FRAME_CACHE[key] = df
     return df
 
 
-def synthesize_assets(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic fake assets: content = seeded pseudo-random bytes
-    tagged with plausible metadata. Stands in for a real
-    images/ parquet directory. Cached per session (see
-    _cached_asset_frame)."""
-    return _cached_asset_frame(
-        spark,
-        "fake",
-        n,
-        seed,
-        lambda: spark.createDataFrame(asset_rows(n, seed), ASSET_SCHEMA),
-    )
-
-
 def image_asset_rows(n: int = 48, seed: int = 42) -> "list[tuple]":
-    """Pure-Python REAL-PNG asset rows — shared by
-    synthesize_image_assets and the VALUES oracle generators."""
+    """REAL-PNG asset rows: each blob is a valid 8-bit PNG
+    (operators/png.py encoder) of a seeded gradient+hash-noise
+    pattern, cycling gray / RGB / RGBA color types so the decoder's
+    channel handling is exercised in-pipeline — decode/resize run
+    these with fake=False, no imaging library anywhere."""
     from ibd_pipeline_spark.operators import png as P
 
     rows = []
@@ -159,34 +203,9 @@ def image_asset_rows(n: int = 48, seed: int = 42) -> "list[tuple]":
                     px[base + 3] = 255  # opaque alpha
         blob = P.encode_png(w, h, bytes(px), color_type)
         rows.append(
-            (
-                i,
-                "image",
-                bytearray(blob),
-                len(blob),
-                w,
-                h,
-                None,
-                f"synthetic://assets/png/{i}",
-            )
+            _asset_row(i, "image", blob, w, h, None, f"synthetic://assets/png/{i}")
         )
     return rows
-
-
-def synthesize_image_assets(spark, n: int = 48, seed: int = 42) -> DataFrame:
-    """Deterministic REAL-PNG assets: each blob is a valid 8-bit PNG
-    (operators/png.py encoder) of a seeded gradient+hash-noise
-    pattern, cycling gray / RGB / RGBA color types so the decoder's
-    channel handling is exercised in-pipeline. Same ASSET_SCHEMA as
-    synthesize_assets; decode/resize run these with fake=False —
-    no imaging library anywhere. Cached per session."""
-    return _cached_asset_frame(
-        spark,
-        "png",
-        n,
-        seed,
-        lambda: spark.createDataFrame(image_asset_rows(n, seed), ASSET_SCHEMA),
-    )
 
 
 def _pil():
@@ -249,27 +268,15 @@ def extract_features(assets: DataFrame, fake_decode: bool = True) -> DataFrame:
     driver. The decode call is the stub; the batch shape, schema and
     partitioning are the real production pattern."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = []
-            for content in pdf["content"]:
-                b = bytes(content)
-                d = decode_image(b, fake=fake_decode)
-                feats.append(
-                    (
-                        hashlib.sha256(b).hexdigest(),
-                        len(b),
-                        f"{d['mean_luma']:.6f}",
-                    )
-                )
-            out = pd.DataFrame(
-                feats, columns=["content_sha256", "content_bytes", "feat_mean"]
-            )
-            out.insert(0, "media_type", pdf["media_type"].values)
-            out.insert(0, "asset_id", pdf["asset_id"].values)
-            yield out
+    def features(b: bytes) -> dict:
+        d = decode_image(b, fake=fake_decode)
+        return {
+            "content_sha256": hashlib.sha256(b).hexdigest(),
+            "content_bytes": len(b),
+            "feat_mean": f"{d['mean_luma']:.6f}",
+        }
 
-    return assets.mapInPandas(batches, FEATURE_SCHEMA)
+    return _map_blobs(assets, FEATURE_SCHEMA, features)
 
 
 RESIZE_SCHEMA = StructType(
@@ -328,22 +335,12 @@ def resize_images(
             return out.getvalue()
 
     resize_fn = _fake_resize if fake else _real_resize
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            imgs = pdf[pdf["media_type"] == "image"]
-            if imgs.empty:
-                continue
-            yield pd.DataFrame(
-                {
-                    "asset_id": imgs["asset_id"].values,
-                    "width": target_w,
-                    "height": target_h,
-                    "content": [resize_fn(bytes(b)) for b in imgs["content"]],
-                }
-            )
-
-    return assets.mapInPandas(batches, RESIZE_SCHEMA)
+    return _map_blobs(
+        assets,
+        RESIZE_SCHEMA,
+        lambda b: {"width": target_w, "height": target_h, "content": resize_fn(b)},
+        "image",
+    )
 
 
 FRAME_SCHEMA = StructType(
@@ -356,103 +353,37 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def _av():
-    """Optional-import hook for a real media-decode library (PyAV /
-    ffmpeg bindings). Returns the `av` module when installed, else
-    None — the container default. Mirrors `_pil()` exactly: tests
-    exercise the guard on both branches (real branch skips when av is
-    absent)."""
-    try:
-        import av  # noqa: PLC0415
-
-        return av
-    except ImportError:
-        return None
-
-
-def _decode_frames_real(content: bytes, every_ms: int) -> list[tuple[int, int, bytes]]:
-    """Real frame extraction via PyAV (guarded import): decode the
-    video stream, keep the first frame at-or-after each every_ms
-    boundary, emit (index, ts_ms, rgb24 bytes of a 32×32 thumbnail).
-    Raises NotImplementedError when av is absent."""
-    av = _av()
-    if av is None:
-        raise NotImplementedError(
-            "real frame sampling requires the 'av' (PyAV/ffmpeg) package, "
-            "not present in this environment; pass fake=True for the "
-            "deterministic stand-in"
-        )
-    import io
-
-    frames: list[tuple[int, int, bytes]] = []
-    with av.open(io.BytesIO(content)) as container:
-        stream = container.streams.video[0]
-        tb = float(stream.time_base) if stream.time_base else 0.0
-        next_ms = 0
-        for frame in container.decode(stream):
-            ts_ms = int((frame.pts or 0) * tb * 1000.0) if tb else next_ms
-            if ts_ms < next_ms:
-                continue
-            thumb = frame.reformat(width=32, height=32, format="rgb24")
-            frames.append((len(frames), ts_ms, thumb.to_ndarray().tobytes()))
-            # Advance PAST the kept frame's boundary: after a timestamp
-            # gap that skips several every_ms boundaries, the next keep
-            # must be the first frame at-or-after the NEXT boundary —
-            # `next_ms += every_ms` would keep nearly every frame.
-            next_ms = (ts_ms // every_ms + 1) * every_ms
-    return frames
-
-
-def sample_video_frames(
-    assets: DataFrame, every_ms: int = 1000, fake: bool = True
-) -> DataFrame:
+def sample_video_frames(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame sampling (1 row in → N frame rows out) over
     mapInPandas — the fan-out shape of media preprocessing.
 
-    fake=True (container default, no codec present): frames are
-    deterministic digests of (content, index); the row-explosion
-    contract (duration_ms // every_ms frames per video, typed
-    timestamps) is the real, tested part. fake=False decodes for real
-    when PyAV is installed (guarded import, same pattern as image
-    decode); without it the call fails fast at plan time rather than
-    inside an executor batch."""
-    if not fake and _av() is None:
-        raise NotImplementedError(
-            "real frame sampling requires the 'av' (PyAV/ffmpeg) package, "
-            "not present in this environment; pass fake=True for the "
-            "deterministic stand-in"
-        )
+    No video codec is installed, so frames are deterministic digests
+    of (content, index); the row-explosion contract (duration_ms //
+    every_ms frames per video, at least one, typed timestamps on the
+    every_ms grid) is the real, tested part."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             vids = pdf[pdf["media_type"] == "video"]
             out = {"asset_id": [], "frame_index": [], "frame_ts_ms": [], "frame": []}
-            for _, row in vids.iterrows():
-                blob = bytes(row["content"])
-                if fake:
-                    n_frames = max(1, int(row["duration_ms"]) // every_ms)
-                    decoded = [
-                        (
-                            i,
-                            i * every_ms,
-                            hashlib.sha256(blob + i.to_bytes(4, "little")).digest(),
-                        )
-                        for i in range(n_frames)
-                    ]
-                else:
-                    decoded = _decode_frames_real(blob, every_ms)
-                for i, ts_ms, frame in decoded:
-                    out["asset_id"].append(row["asset_id"])
+            for aid, duration_ms, content in zip(
+                vids["asset_id"], vids["duration_ms"], vids["content"]
+            ):
+                blob = bytes(content)
+                for i in range(max(1, int(duration_ms) // every_ms)):
+                    out["asset_id"].append(aid)
                     out["frame_index"].append(i)
-                    out["frame_ts_ms"].append(ts_ms)
-                    out["frame"].append(frame)
+                    out["frame_ts_ms"].append(i * every_ms)
+                    out["frame"].append(
+                        hashlib.sha256(blob + i.to_bytes(4, "little")).digest()
+                    )
             if out["asset_id"]:
                 yield pd.DataFrame(out)
 
     return assets.mapInPandas(batches, FRAME_SCHEMA)
 
 
-# -- video: REAL container parsing (ISO-BMFF box walk), frames stubbed --
+# -- video: REAL container parsing (ISO-BMFF box walk) -------------------
 
 VIDEO_META_SCHEMA = StructType(
     [
@@ -465,6 +396,50 @@ VIDEO_META_SCHEMA = StructType(
 )
 
 
+def _box(kind: bytes, payload: bytes) -> bytes:
+    """One ISO-BMFF box: 32-bit big-endian size, fourcc, payload."""
+    return struct.pack(">I", 8 + len(payload)) + kind + payload
+
+
+def _full_box(kind: bytes, version: int, flags: int, payload: bytes) -> bytes:
+    return _box(kind, struct.pack(">B3s", version, flags.to_bytes(3, "big")) + payload)
+
+
+_FTYP = _box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
+
+
+def _mvhd(timescale: int, duration: int) -> bytes:
+    """A version-0 mvhd box carrying a genuine timescale/duration."""
+    return _full_box(
+        b"mvhd",
+        0,
+        0,
+        struct.pack(">II", 0, 0)  # creation/modification time
+        + struct.pack(">II", timescale, duration)
+        + struct.pack(">I", 0x00010000)  # rate 1.0
+        + struct.pack(">H", 0x0100)  # volume
+        + b"\x00" * 10  # reserved
+        + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
+        + b"\x00" * 24  # pre_defined
+        + struct.pack(">I", 2),  # next_track_id
+    )
+
+
+def _boxes(buf: bytes, offset: int, end: int):
+    """Walk the box framing of buf[offset:end], yielding (fourcc,
+    payload_start, box_end). Framing that overruns `end`, a size
+    below the 8-byte header, or trailing bytes that are not a box
+    raise ValueError, like any conformant reader."""
+    while offset + 8 <= end:
+        size, kind = struct.unpack_from(">I4s", buf, offset)
+        if size < 8 or offset + size > end:
+            raise ValueError(f"bad box size {size} at {offset}")
+        yield kind, offset + 8, offset + size
+        offset += size
+    if offset != end:
+        raise ValueError("trailing bytes are not a box")
+
+
 def synthesize_mp4(i: int, seed: int = 42) -> tuple[bytes, int]:
     """A minimal but structurally REAL ISO-BMFF (MP4) container:
     ftyp + moov(mvhd) + mdat boxes with correct 32-bit big-endian
@@ -472,28 +447,10 @@ def synthesize_mp4(i: int, seed: int = 42) -> tuple[bytes, int]:
     timescale/duration. Parsers that walk boxes (including
     parse_mp4_meta below, ffprobe, mp4dump) read it; only media
     samples are absent. Returns (bytes, duration_ms)."""
-    import struct
-
-    def box(kind: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(payload)) + kind + payload
-
-    timescale = 1000
     duration_ms = 1000 + (seed * 13 + i * 37) % 9000
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
-    mvhd_payload = (
-        b"\x00\x00\x00\x00"  # version 0 + flags
-        + struct.pack(">II", 0, 0)  # creation/modification time
-        + struct.pack(">II", timescale, duration_ms)  # timescale, duration
-        + struct.pack(">I", 0x00010000)  # rate 1.0
-        + struct.pack(">H", 0x0100)  # volume
-        + b"\x00" * 10  # reserved
-        + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-        + b"\x00" * 24  # pre_defined
-        + struct.pack(">I", 2)  # next_track_id
-    )
-    moov = box(b"moov", box(b"mvhd", mvhd_payload))
-    mdat = box(b"mdat", hashlib.sha512(f"{seed}:{i}".encode()).digest())
-    return ftyp + moov + mdat, duration_ms
+    moov = _box(b"moov", _mvhd(1000, duration_ms))
+    mdat = _box(b"mdat", hashlib.sha512(f"{seed}:{i}".encode()).digest())
+    return _FTYP + moov + mdat, duration_ms
 
 
 def parse_mp4_meta(content: bytes) -> dict:
@@ -502,29 +459,17 @@ def parse_mp4_meta(content: bytes) -> dict:
     and decode the mvhd v0/v1 timescale + duration fields. This is
     the actual wire format every MP4 tool speaks — corrupt framing
     raises, unknown boxes are skipped by size like any conformant
-    reader. Frame DECODE still needs a codec (ffmpeg/av, stubbed in
-    sample_video_frames); container metadata does not."""
-    import struct
-
-    def walk(buf: bytes, offset: int, end: int):
-        while offset + 8 <= end:
-            size, kind = struct.unpack_from(">I4s", buf, offset)
-            if size < 8 or offset + size > end:
-                raise ValueError(f"bad box size {size} at {offset}")
-            yield kind, offset + 8, offset + size
-            offset += size
-        if offset != end:
-            raise ValueError("trailing bytes are not a box")
-
+    reader. Frame DECODE still needs a codec; container metadata
+    does not."""
     major = None
     timescale = duration = None
     n_boxes = 0
-    for kind, lo, hi in walk(content, 0, len(content)):
+    for kind, lo, hi in _boxes(content, 0, len(content)):
         n_boxes += 1
         if kind == b"ftyp":
             major = content[lo : lo + 4].decode("ascii")
         elif kind == b"moov":
-            for k2, l2, h2 in walk(content, lo, hi):
+            for k2, l2, h2 in _boxes(content, lo, hi):
                 n_boxes += 1
                 if k2 == b"mvhd":
                     version = content[l2]
@@ -547,17 +492,15 @@ def parse_mp4_meta(content: bytes) -> dict:
 
 
 def video_asset_rows(n: int = 24, seed: int = 42) -> "list[tuple]":
-    """Pure-Python MP4 asset rows — shared by synthesize_video_assets
-    and the VALUES oracle generators."""
+    """Asset rows of structurally valid MP4 blobs (synthesize_mp4)."""
     rows = []
     for i in range(n):
         blob, duration_ms = synthesize_mp4(i, seed)
         rows.append(
-            (
+            _asset_row(
                 i,
                 "video",
-                bytearray(blob),
-                len(blob),
+                blob,
                 None,
                 None,
                 duration_ms,
@@ -567,36 +510,11 @@ def video_asset_rows(n: int = 24, seed: int = 42) -> "list[tuple]":
     return rows
 
 
-def synthesize_video_assets(spark, n: int = 24, seed: int = 42) -> DataFrame:
-    """Asset table (ASSET_SCHEMA) of structurally valid MP4 blobs.
-    Cached per session."""
-    return _cached_asset_frame(
-        spark,
-        "mp4",
-        n,
-        seed,
-        lambda: spark.createDataFrame(video_asset_rows(n, seed), ASSET_SCHEMA),
-    )
-
-
 def extract_video_metadata(assets: DataFrame) -> DataFrame:
     """Per-video container metadata via mapInPandas — REAL box-walk
     parse (parse_mp4_meta), same Arrow batching rules as every other
     media op; blob bytes never reach the driver."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            vids = pdf[pdf["media_type"] == "video"]
-            if vids.empty:
-                continue
-            metas = [parse_mp4_meta(bytes(b)) for b in vids["content"]]
-            out = pd.DataFrame(metas)
-            out.insert(0, "asset_id", vids["asset_id"].values)
-            yield out[
-                ["asset_id", "major_brand", "timescale", "duration_ms", "n_boxes"]
-            ]
-
-    return assets.mapInPandas(batches, VIDEO_META_SCHEMA)
+    return _map_blobs(assets, VIDEO_META_SCHEMA, parse_mp4_meta, "video")
 
 
 # -- audio: REAL codec path (stdlib wave — no external dependency) ------
@@ -614,26 +532,29 @@ AUDIO_FEATURE_SCHEMA = StructType(
 )
 
 
-def synthesize_wav(
-    i: int, seed: int = 42, sample_rate: int = 8000
-) -> tuple[bytes, int]:
-    """A real RIFF/WAV blob: 16-bit PCM mono sine burst whose
-    frequency, amplitude and duration derive deterministically from
-    (seed, i). Unlike the image/video stand-ins these bytes are a
-    *valid media container* — the decode below is a genuine codec
-    pass, not a digest trick. Returns (bytes, duration_ms)."""
+def _sine_wav(
+    n: int, amp: int, freq: float, sample_rate: int, silent_until: int = 0
+) -> bytes:
+    """RIFF/WAV bytes of n 16-bit mono PCM samples: digital zero
+    before `silent_until`, then amp·sin(2π·freq·t/rate) clamped to
+    the int16 range — a requested amplitude above full scale clips
+    for real."""
     import io
     import math
-    import struct
     import wave
 
-    duration_ms = 200 + (seed * 7 + i * 37) % 800
-    freq = 220.0 * (1 + (i % 5))
-    amp = 8000 + (i * 997) % 20000
-    n = sample_rate * duration_ms // 1000
     pcm = b"".join(
         struct.pack(
-            "<h", int(amp * math.sin(2 * math.pi * freq * t / sample_rate))
+            "<h",
+            0
+            if t < silent_until
+            else max(
+                -32768,
+                min(
+                    32767,
+                    int(amp * math.sin(2 * math.pi * freq * t / sample_rate)),
+                ),
+            ),
         )
         for t in range(n)
     )
@@ -643,49 +564,13 @@ def synthesize_wav(
         w.setsampwidth(2)
         w.setframerate(sample_rate)
         w.writeframes(pcm)
-    return buf.getvalue(), duration_ms
+    return buf.getvalue()
 
 
-def audio_asset_rows(n: int = 48, seed: int = 42) -> "list[tuple]":
-    """Pure-Python WAV asset rows — shared by synthesize_audio_assets
-    and the VALUES oracle generators."""
-    rows = []
-    for i in range(n):
-        blob, duration_ms = synthesize_wav(i, seed)
-        rows.append(
-            (
-                i,
-                "audio",
-                bytearray(blob),
-                len(blob),
-                None,
-                None,
-                duration_ms,
-                f"synthetic://assets/audio/{i}.wav",
-            )
-        )
-    return rows
-
-
-def synthesize_audio_assets(spark, n: int = 48, seed: int = 42) -> DataFrame:
-    """Asset table (ASSET_SCHEMA) of real WAV blobs. Cached per
-    session."""
-    return _cached_asset_frame(
-        spark,
-        "wav",
-        n,
-        seed,
-        lambda: spark.createDataFrame(audio_asset_rows(n, seed), ASSET_SCHEMA),
-    )
-
-
-def decode_audio(content: bytes) -> dict:
-    """REAL audio decode via the stdlib wave module: parses the RIFF
-    container, reads PCM frames, computes sample-rate/duration/RMS/
-    peak. No fake path needed — the codec ships with Python, which is
-    exactly why audio is the modality where this engine's media
-    plumbing runs end-to-end against true encoded bytes even in a
-    minimal container."""
+def _read_pcm16(content: bytes):
+    """Decode a RIFF/WAV blob with the stdlib wave module: (sample
+    rate, channels, frames, int16 samples). Only 16-bit PCM is
+    supported; other widths raise ValueError."""
     import io
     import wave
 
@@ -700,7 +585,54 @@ def decode_audio(content: bytes) -> dict:
         )
         if width != 2:
             raise ValueError(f"only 16-bit PCM supported, got width={width}")
-        samples = np.frombuffer(w.readframes(n), dtype="<i2").astype(np.float64)
+        return rate, ch, n, np.frombuffer(w.readframes(n), dtype="<i2")
+
+
+def synthesize_wav(
+    i: int, seed: int = 42, sample_rate: int = 8000
+) -> tuple[bytes, int]:
+    """A real RIFF/WAV blob: 16-bit PCM mono sine burst whose
+    frequency, amplitude and duration derive deterministically from
+    (seed, i). Unlike the image/video stand-ins these bytes are a
+    *valid media container* — the decode below is a genuine codec
+    pass, not a digest trick. Returns (bytes, duration_ms)."""
+    duration_ms = 200 + (seed * 7 + i * 37) % 800
+    freq = 220.0 * (1 + (i % 5))
+    amp = 8000 + (i * 997) % 20000  # inside int16: never clamped
+    n = sample_rate * duration_ms // 1000
+    return _sine_wav(n, amp, freq, sample_rate), duration_ms
+
+
+def audio_asset_rows(n: int = 48, seed: int = 42) -> "list[tuple]":
+    """Asset rows of real WAV blobs (synthesize_wav)."""
+    rows = []
+    for i in range(n):
+        blob, duration_ms = synthesize_wav(i, seed)
+        rows.append(
+            _asset_row(
+                i,
+                "audio",
+                blob,
+                None,
+                None,
+                duration_ms,
+                f"synthetic://assets/audio/{i}.wav",
+            )
+        )
+    return rows
+
+
+def decode_audio(content: bytes) -> dict:
+    """REAL audio decode via the stdlib wave module: parses the RIFF
+    container, reads PCM frames, computes sample-rate/duration/RMS/
+    peak. No fake path needed — the codec ships with Python, which is
+    exactly why audio is the modality where this engine's media
+    plumbing runs end-to-end against true encoded bytes even in a
+    minimal container."""
+    import numpy as np
+
+    rate, ch, n, pcm = _read_pcm16(content)
+    samples = pcm.astype(np.float64)
     rms = float(np.sqrt(np.mean(samples**2))) if samples.size else 0.0
     return {
         "sample_rate": rate,
@@ -720,28 +652,7 @@ def extract_audio_features(assets: DataFrame) -> DataFrame:
     binary WAV blobs decoded JVM→Python once per batch, never on the
     driver. Same partition-sizing rules as image features; the decode
     itself is real (see decode_audio)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            auds = pdf[pdf["media_type"] == "audio"]
-            if auds.empty:
-                continue
-            feats = [decode_audio(bytes(b)) for b in auds["content"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "asset_id", auds["asset_id"].values)
-            yield out[
-                [
-                    "asset_id",
-                    "sample_rate",
-                    "n_channels",
-                    "n_frames",
-                    "duration_ms",
-                    "rms",
-                    "peak",
-                ]
-            ]
-
-    return assets.mapInPandas(batches, AUDIO_FEATURE_SCHEMA)
+    return _map_blobs(assets, AUDIO_FEATURE_SCHEMA, decode_audio, "audio")
 
 
 def metadata_profile(assets: DataFrame) -> DataFrame:
@@ -761,53 +672,28 @@ def metadata_profile(assets: DataFrame) -> DataFrame:
     )
 
 
-def ahash64(content: bytes, fake: bool = True) -> int:
-    """64-bit average hash (aHash) of an image: downsample to an 8×8
-    grid, set bit i when cell i's mean exceeds the global mean — the
-    classic perceptual fingerprint whose Hamming distance survives
-    re-encoding, resizing, and small edits (unlike a content digest,
-    which any single byte flips completely).
-
-    fake=True (container default, no imaging libs): the 'pixels' are
-    the raw bytes — 64 evenly-sized byte windows play the 8×8 cells.
-    That preserves exactly the property the dedup pipeline needs from
-    aHash (local perturbations flip few bits, the pair tests assert
-    it) while keeping the path deterministic and codec-free.
-    fake=False uses a real 8×8 grayscale resize behind the guarded
-    pillow import, same bit layout."""
-    if fake:
-        n = len(content)
-        if n == 0:
-            return 0
-        cells = [
-            content[(i * n) // 64 : max((i * n) // 64 + 1, ((i + 1) * n) // 64)]
-            for i in range(64)
-        ]
-        means = [sum(c) / len(c) for c in cells]
-        overall = sum(means) / 64.0
-        bits = 0
-        for i, m in enumerate(means):
-            if m > overall:
-                bits |= 1 << i
-        # interpret as signed 64-bit (Spark LongType)
-        return bits - (1 << 64) if bits >= 1 << 63 else bits
-    Image = _pil()
-    if Image is None:
-        raise NotImplementedError(
-            "real aHash requires pillow, not present in this environment; "
-            "pass fake=True for the deterministic stand-in"
-        )
-    import io
-
-    with Image.open(io.BytesIO(content)) as im:
-        small = im.convert("L").resize((8, 8))
-        px = list(small.getdata())
-        overall = sum(px) / 64.0
-        bits = 0
-        for i, p in enumerate(px):
-            if p > overall:
-                bits |= 1 << i
-        return bits - (1 << 64) if bits >= 1 << 63 else bits
+def ahash64(content: bytes) -> int:
+    """64-bit average hash (aHash) of a blob: 64 evenly-sized byte
+    windows play the 8×8 grid cells of the classic perceptual
+    fingerprint, and bit i is set when window i's mean exceeds the
+    global mean. Unlike a content digest, which any single byte flips
+    completely, local perturbations flip few bits (the pair tests
+    assert it), and the path is deterministic and codec-free."""
+    n = len(content)
+    if n == 0:
+        return 0
+    cells = [
+        content[(i * n) // 64 : max((i * n) // 64 + 1, ((i + 1) * n) // 64)]
+        for i in range(64)
+    ]
+    means = [sum(c) / len(c) for c in cells]
+    overall = sum(means) / 64.0
+    bits = 0
+    for i, m in enumerate(means):
+        if m > overall:
+            bits |= 1 << i
+    # interpret as signed 64-bit (Spark LongType)
+    return bits - (1 << 64) if bits >= 1 << 63 else bits
 
 
 PHASH_SCHEMA = StructType(
@@ -818,30 +704,16 @@ PHASH_SCHEMA = StructType(
 )
 
 
-def phash_signatures(assets: DataFrame, fake: bool = True) -> DataFrame:
+def phash_signatures(assets: DataFrame) -> DataFrame:
     """(asset_id, ahash) via Arrow-batched mapInPandas — blobs stay on
     executors, one 64-bit signature per asset comes out. The signature
     table is what the pair search operates on; the blob column is
     never touched again (the same two-phase shape as SimHash over
     text)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"].values,
-                    "ahash": [
-                        ahash64(bytes(c), fake=fake) for c in pdf["content"]
-                    ],
-                }
-            )
-
-    return assets.mapInPandas(batches, PHASH_SCHEMA)
+    return _map_blobs(assets, PHASH_SCHEMA, lambda b: {"ahash": ahash64(b)})
 
 
-def phash_near_dup_pairs(
-    assets: DataFrame, max_hamming: int = 8, fake: bool = True
-) -> DataFrame:
+def phash_near_dup_pairs(assets: DataFrame, max_hamming: int = 8) -> DataFrame:
     """Perceptual near-duplicate pairs: aHash signatures, TWO-table
     blocked self-join — candidates share the 16-bit prefix OR the
     16-bit suffix (near-identical hashes agree on a fixed slice
@@ -856,8 +728,6 @@ def phash_near_dup_pairs(
     shuffle volume for recall exactly like sign-LSH's multi-table
     rotation (measured here: one table recovers 37/48 planted dups on
     the fixture, two recover 45/48)."""
-    import pyspark.sql.functions as F
-
     from ibd_pipeline_spark.operators.dedup import hamming64
 
     # Materialize the signature frame ONCE: it is referenced four
@@ -866,7 +736,7 @@ def phash_near_dup_pairs(
     # signature stage (measured 11 s -> ~1 s on the 96-asset
     # fixture). Asset-count-sized rows — cheap to pin.
     sig = (
-        phash_signatures(assets, fake=fake)
+        phash_signatures(assets)
         .select(
             "asset_id",
             "ahash",
@@ -945,21 +815,13 @@ def image_entropy_profile(assets: DataFrame) -> DataFrame:
     near-zero entropy marks blank/synthetic frames, max entropy
     (ln 256 ≈ 5.545) marks noise. Blob bytes never cross the driver;
     per-batch work is decode + a 256-bin fold."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for content in pdf["content"]:
-                n, levels, ent = image_entropy(bytes(content))
-                rows.append((n, levels, ent))
-            out = pd.DataFrame(
-                rows, columns=["n_pixels", "n_levels", "entropy_nats"]
-            )
-            out.insert(0, "media_type", pdf["media_type"].values)
-            out.insert(0, "asset_id", pdf["asset_id"].values)
-            yield out
-
-    return assets.mapInPandas(batches, ENTROPY_SCHEMA)
+    return _map_blobs(
+        assets,
+        ENTROPY_SCHEMA,
+        lambda b: dict(
+            zip(("n_pixels", "n_levels", "entropy_nats"), image_entropy(b))
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -984,11 +846,6 @@ def synthesize_wav_gate(
                     — the whole clip reads as silence
 
     Returns (wav_bytes, duration_ms, kind)."""
-    import io
-    import math
-    import struct
-    import wave
-
     kind = ("normal", "clipped", "half_silent", "quiet")[i % 4]
     duration_ms = 200 + (seed * 11 + i * 53) % 600
     freq = 220.0 * (1 + (i % 5))
@@ -1000,28 +857,7 @@ def synthesize_wav_gate(
     }[kind]
     n = sample_rate * duration_ms // 1000
     silent_until = n // 2 if kind == "half_silent" else 0
-    pcm = b"".join(
-        struct.pack(
-            "<h",
-            0
-            if t < silent_until
-            else max(
-                -32768,
-                min(
-                    32767,
-                    int(amp * math.sin(2 * math.pi * freq * t / sample_rate)),
-                ),
-            ),
-        )
-        for t in range(n)
-    )
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(pcm)
-    return buf.getvalue(), duration_ms, kind
+    return _sine_wav(n, amp, freq, sample_rate, silent_until), duration_ms, kind
 
 
 def audio_gate_asset_rows(n: int = 32, seed: int = 42) -> "list[tuple]":
@@ -1032,11 +868,10 @@ def audio_gate_asset_rows(n: int = 32, seed: int = 42) -> "list[tuple]":
     for i in range(n):
         blob, duration_ms, kind = synthesize_wav_gate(i, seed)
         rows.append(
-            (
+            _asset_row(
                 i,
                 "audio",
-                bytearray(blob),
-                len(blob),
+                blob,
                 None,
                 None,
                 duration_ms,
@@ -1044,20 +879,6 @@ def audio_gate_asset_rows(n: int = 32, seed: int = 42) -> "list[tuple]":
             )
         )
     return rows
-
-
-def synthesize_audio_gate_assets(spark, n: int = 32, seed: int = 42) -> DataFrame:
-    """Asset table (ASSET_SCHEMA) of planted-defect WAV blobs. Cached
-    per session."""
-    return _cached_asset_frame(
-        spark,
-        "wav-gate",
-        n,
-        seed,
-        lambda: spark.createDataFrame(
-            audio_gate_asset_rows(n, seed), ASSET_SCHEMA
-        ),
-    )
 
 
 def audio_gate_stats(
@@ -1071,16 +892,10 @@ def audio_gate_stats(
     the ratios are single double divisions of those integers — both
     deterministic and replayable by the VALUES oracle, which runs this
     same function."""
-    import io
-    import wave
-
     import numpy as np
 
-    with wave.open(io.BytesIO(content), "rb") as w:
-        rate, width, n = w.getframerate(), w.getsampwidth(), w.getnframes()
-        if width != 2:
-            raise ValueError(f"only 16-bit PCM supported, got width={width}")
-        samples = np.frombuffer(w.readframes(n), dtype="<i2").astype(np.int64)
+    rate, _ch, n, pcm = _read_pcm16(content)
+    samples = pcm.astype(np.int64)
     absx = np.abs(samples)
     n_clipped = int(np.count_nonzero(absx >= clip_level))
     n_silent = int(np.count_nonzero(absx < silence_threshold))
@@ -1148,24 +963,11 @@ def audio_quality_gates(
     its whole surface is `spark_processor.py`); north-star multimodal
     row (SURVEY §2.2)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            auds = pdf[pdf["media_type"] == "audio"]
-            if auds.empty:
-                continue
-            feats = [
-                audio_gate_stats(bytes(b), silence_threshold, clip_level)
-                for b in auds["content"]
-            ]
-            out = pd.DataFrame(feats)
-            out["verdict"] = [
-                gate_verdict(f, max_clip_rate, max_silence_ratio)
-                for f in feats
-            ]
-            out.insert(0, "asset_id", auds["asset_id"].values)
-            yield out[[f.name for f in AUDIO_GATE_SCHEMA.fields]]
+    def gate(b: bytes) -> dict:
+        s = audio_gate_stats(b, silence_threshold, clip_level)
+        return s | {"verdict": gate_verdict(s, max_clip_rate, max_silence_ratio)}
 
-    return assets.mapInPandas(batches, AUDIO_GATE_SCHEMA)
+    return _map_blobs(assets, AUDIO_GATE_SCHEMA, gate, "audio")
 
 
 # ---------------------------------------------------------------------------
@@ -1182,18 +984,10 @@ def audio_spectral_stats(content: bytes) -> dict:
     this exact function, so the attestation pins the distributed
     Arrow plumbing bit-for-bit (float outputs ride as fixed-point
     strings, the decode_audio rms convention)."""
-    import io
-    import wave
-
     import numpy as np
 
-    with wave.open(io.BytesIO(content), "rb") as w:
-        rate, width, n = w.getframerate(), w.getsampwidth(), w.getnframes()
-        if width != 2:
-            raise ValueError(f"only 16-bit PCM supported, got width={width}")
-        samples = np.frombuffer(w.readframes(n), dtype="<i2").astype(
-            np.float64
-        )
+    rate, _ch, _n, pcm = _read_pcm16(content)
+    samples = pcm.astype(np.float64)
     mag = np.abs(np.fft.rfft(samples))
     freqs = np.fft.rfftfreq(samples.size, d=1.0 / rate)
     total = float(mag.sum())
@@ -1232,18 +1026,7 @@ def audio_spectral_features(assets: DataFrame) -> DataFrame:
     same batch shape and partition-sizing rules as the gate/feature
     extractors; the FFT runs vectorized per clip inside the executor
     Python worker, never on the driver."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            auds = pdf[pdf["media_type"] == "audio"]
-            if auds.empty:
-                continue
-            feats = [audio_spectral_stats(bytes(b)) for b in auds["content"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "asset_id", auds["asset_id"].values)
-            yield out[[f.name for f in SPECTRAL_SCHEMA.fields]]
-
-    return assets.mapInPandas(batches, SPECTRAL_SCHEMA)
+    return _map_blobs(assets, SPECTRAL_SCHEMA, audio_spectral_stats, "audio")
 
 
 # ---------------------------------------------------------------------------
@@ -1251,18 +1034,6 @@ def audio_spectral_features(assets: DataFrame) -> DataFrame:
 # (the WAV-gate precedent applied to video: real decode, planted
 # defects, exact counts)
 # ---------------------------------------------------------------------------
-
-
-def _box(kind: bytes, payload: bytes) -> bytes:
-    import struct
-
-    return struct.pack(">I", 8 + len(payload)) + kind + payload
-
-
-def _full_box(kind: bytes, version: int, flags: int, payload: bytes) -> bytes:
-    import struct
-
-    return _box(kind, struct.pack(">B3s", version, flags.to_bytes(3, "big")) + payload)
 
 
 def _raw_frame(seed: int, i: int, f: int, w: int, h: int) -> bytes:
@@ -1295,8 +1066,6 @@ def synthesize_mp4_raw(i: int, seed: int = 42) -> "tuple[bytes, int, str]":
     frames all-zero), 2 frozen (frame 0 repeated for 70% of
     positions), 3 short (2 frames — below any sane minimum).
     Returns (mp4_bytes, duration_ms, kind)."""
-    import struct
-
     kind = ("normal", "black_heavy", "frozen", "short")[i % 4]
     w, h = 16, 12
     fps = 10
@@ -1316,21 +1085,7 @@ def synthesize_mp4_raw(i: int, seed: int = 42) -> "tuple[bytes, int, str]":
     timescale = 1000
     duration = duration_ms
 
-    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
-
-    mvhd = _full_box(
-        b"mvhd",
-        0,
-        0,
-        struct.pack(">II", 0, 0)
-        + struct.pack(">II", timescale, duration)
-        + struct.pack(">I", 0x00010000)
-        + struct.pack(">H", 0x0100)
-        + b"\x00" * 10
-        + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-        + b"\x00" * 24
-        + struct.pack(">I", 2),
-    )
+    mvhd = _mvhd(timescale, duration)
     tkhd = _full_box(
         b"tkhd",
         0,
@@ -1410,11 +1165,11 @@ def synthesize_mp4_raw(i: int, seed: int = 42) -> "tuple[bytes, int, str]":
     # moov size is offset-independent (stco payload is fixed-width),
     # so one placeholder pass sizes it and the second pass patches.
     moov_len = len(moov_bytes(0))
-    chunk_offset = len(ftyp) + moov_len + 8  # + mdat header
+    chunk_offset = len(_FTYP) + moov_len + 8  # + mdat header
     moov = moov_bytes(chunk_offset)
     assert len(moov) == moov_len
     mdat = _box(b"mdat", b"".join(frames))
-    return ftyp + moov + mdat, duration_ms, kind
+    return _FTYP + moov + mdat, duration_ms, kind
 
 
 def decode_video_samples(content: bytes) -> "tuple[int, int, list[bytes]]":
@@ -1427,33 +1182,20 @@ def decode_video_samples(content: bytes) -> "tuple[int, int, list[bytes]]":
     [frame bytes]). Raises ValueError on any structural damage
     (bad box framing, missing table, offsets outside the file,
     frame size ≠ width*height)."""
-    import struct
 
-    def walk(buf: bytes, offset: int, end: int):
-        while offset + 8 <= end:
-            size, kind = struct.unpack_from(">I4s", buf, offset)
-            if size < 8 or offset + size > end:
-                raise ValueError(f"bad box size {size} at {offset}")
-            yield kind, offset + 8, offset + size
-            offset += size
-        if offset != end:
-            raise ValueError("trailing bytes are not a box")
-
-    def find(buf, lo, hi, kind):
-        for k, l2, h2 in walk(buf, lo, hi):
+    def find(lo, hi, kind):
+        for k, l2, h2 in _boxes(content, lo, hi):
             if k == kind:
                 return l2, h2
         raise ValueError(f"missing {kind!r} box")
 
-    lo, hi = find(content, 0, len(content), b"moov")
-    lo, hi = find(content, lo, hi, b"trak")
-    lo, hi = find(content, lo, hi, b"mdia")
-    lo, hi = find(content, lo, hi, b"minf")
-    lo, hi = find(content, lo, hi, b"stbl")
+    lo, hi = find(0, len(content), b"moov")
+    for kind in (b"trak", b"mdia", b"minf", b"stbl"):
+        lo, hi = find(lo, hi, kind)
     stbl_lo, stbl_hi = lo, hi
 
     # stsd → VisualSampleEntry → width/height at fixed spec offsets
-    lo, hi = find(content, stbl_lo, stbl_hi, b"stsd")
+    lo, hi = find(stbl_lo, stbl_hi, b"stsd")
     (n_entries,) = struct.unpack_from(">I", content, lo + 4)
     if n_entries != 1:
         raise ValueError(f"expected 1 sample entry, got {n_entries}")
@@ -1461,7 +1203,7 @@ def decode_video_samples(content: bytes) -> "tuple[int, int, list[bytes]]":
     # VisualSampleEntry: 8 hdr + 6 reserved + 2 dref_idx + 16 pre/res
     w, h = struct.unpack_from(">HH", content, entry_lo + 8 + 6 + 2 + 16)
 
-    lo, hi = find(content, stbl_lo, stbl_hi, b"stsz")
+    lo, hi = find(stbl_lo, stbl_hi, b"stsz")
     uniform, n_samples = struct.unpack_from(">II", content, lo + 4)
     if uniform:
         sizes = [uniform] * n_samples
@@ -1470,11 +1212,11 @@ def decode_video_samples(content: bytes) -> "tuple[int, int, list[bytes]]":
             struct.unpack_from(f">{n_samples}I", content, lo + 12)
         )
 
-    lo, hi = find(content, stbl_lo, stbl_hi, b"stco")
+    lo, hi = find(stbl_lo, stbl_hi, b"stco")
     (n_chunks,) = struct.unpack_from(">I", content, lo + 4)
     offsets = list(struct.unpack_from(f">{n_chunks}I", content, lo + 8))
 
-    lo, hi = find(content, stbl_lo, stbl_hi, b"stsc")
+    lo, hi = find(stbl_lo, stbl_hi, b"stsc")
     (n_stsc,) = struct.unpack_from(">I", content, lo + 4)
     runs = [
         struct.unpack_from(">III", content, lo + 8 + 12 * k)
@@ -1566,11 +1308,10 @@ def video_gate_asset_rows(n: int = 24, seed: int = 42) -> "list[tuple]":
     for i in range(n):
         blob, duration_ms, kind = synthesize_mp4_raw(i, seed)
         rows.append(
-            (
+            _asset_row(
                 i,
                 "video",
-                bytearray(blob),
-                len(blob),
+                blob,
                 16,
                 12,
                 duration_ms,
@@ -1578,20 +1319,6 @@ def video_gate_asset_rows(n: int = 24, seed: int = 42) -> "list[tuple]":
             )
         )
     return rows
-
-
-def synthesize_video_gate_assets(spark, n: int = 24, seed: int = 42) -> DataFrame:
-    """Asset table (ASSET_SCHEMA) of planted-defect raw-frame MP4
-    blobs. Cached per session."""
-    return _cached_asset_frame(
-        spark,
-        "mp4-gate",
-        n,
-        seed,
-        lambda: spark.createDataFrame(
-            video_gate_asset_rows(n, seed), ASSET_SCHEMA
-        ),
-    )
 
 
 VIDEO_GATE_SCHEMA = StructType(
@@ -1624,30 +1351,17 @@ def video_quality_gates(
     usable length, first-failing verdict. A 100 TB training-video
     sweep runs exactly this shape: blobs stay in executor Arrow
     batches, output is metadata-sized, and the verdict='pass' filter
-    prunes before any codec-heavy featurization. Real compressed
-    codecs plug in behind the same schema via the av-gated
-    sample_video_frames path."""
+    prunes before any codec-heavy featurization."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            vids = pdf[pdf["media_type"] == "video"]
-            if vids.empty:
-                continue
-            feats = [
-                video_gate_stats(bytes(b), black_threshold)
-                for b in vids["content"]
-            ]
-            out = pd.DataFrame(feats)
-            out["verdict"] = [
-                video_gate_verdict(
-                    f, min_frames, max_black_ratio, max_frozen_ratio
-                )
-                for f in feats
-            ]
-            out.insert(0, "asset_id", vids["asset_id"].values)
-            yield out[[f.name for f in VIDEO_GATE_SCHEMA.fields]]
+    def gate(b: bytes) -> dict:
+        s = video_gate_stats(b, black_threshold)
+        return s | {
+            "verdict": video_gate_verdict(
+                s, min_frames, max_black_ratio, max_frozen_ratio
+            )
+        }
 
-    return assets.mapInPandas(batches, VIDEO_GATE_SCHEMA)
+    return _map_blobs(assets, VIDEO_GATE_SCHEMA, gate, "video")
 
 
 def video_motion_stats(content: bytes) -> dict:
@@ -1699,15 +1413,4 @@ def video_motion_features(assets: DataFrame) -> DataFrame:
     (a video can pass every gate and still be a static slideshow; the
     motion energy column catches that class before it wastes
     codec-heavy featurization downstream)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            vids = pdf[pdf["media_type"] == "video"]
-            if vids.empty:
-                continue
-            feats = [video_motion_stats(bytes(b)) for b in vids["content"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "asset_id", vids["asset_id"].values)
-            yield out[[f.name for f in VIDEO_MOTION_SCHEMA.fields]]
-
-    return assets.mapInPandas(batches, VIDEO_MOTION_SCHEMA)
+    return _map_blobs(assets, VIDEO_MOTION_SCHEMA, video_motion_stats, "video")

@@ -1323,14 +1323,8 @@ def _semdedup_oracle() -> str:
         _KM_DIM,
         _KM_ITERS,
         _KM_K,
+        _km_dist,
     )
-
-    def dist(e: str, c: str) -> str:
-        return (
-            f"(SELECT SUM(CAST(FLOOR(({e}.v[i]-{c}.cv[i])*({e}.v[i]-{c}.cv[i])"
-            f" * 1000000000000.0) AS BIGINT))"
-            f" FROM UNNEST(generate_series(1,{_KM_DIM})) t(i))"
-        )
 
     parts = [f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1343,7 +1337,7 @@ c0 AS (
     for r in range(1, _KM_ITERS + 1):
         parts.append(f""",
 a{r} AS (
-  SELECT e.vec_id, e.v, c.cent_id, {dist('e', 'c')} AS d
+  SELECT e.vec_id, e.v, c.cent_id, {_km_dist('e', 'c')} AS d
   FROM e CROSS JOIN c{r - 1} c
 ), b{r} AS (
   SELECT vec_id, v, cent_id, d,
@@ -1363,7 +1357,7 @@ a{r} AS (
 )""")
     parts.append(f""",
 fa AS (
-  SELECT e.vec_id, c.cent_id, {dist('e', 'c')} AS d
+  SELECT e.vec_id, c.cent_id, {_km_dist('e', 'c')} AS d
   FROM e CROSS JOIN c{_KM_ITERS} c
 ), fb AS (
   SELECT vec_id, cent_id,

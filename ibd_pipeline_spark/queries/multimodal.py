@@ -220,12 +220,12 @@ def _metadata_profile_expected() -> str:
 def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched mapInPandas feature extraction over binary
     content columns — REAL decode: assets are valid PNGs
-    (synthesize_image_assets) and fake_decode=False routes every blob
+    (image_asset_rows) and fake_decode=False routes every blob
     through the stdlib-zlib PNG codec (operators/png.py — gray/RGB/
     RGBA, all five scanline filters), no imaging library involved.
     Planted-image correctness (known means, gradient edges, resize
     invariants) is property-tested in tests/test_png.py."""
-    assets = M.synthesize_image_assets(spark, n=48)
+    assets = M.asset_table(spark, M.image_asset_rows, n=48)
     return M.extract_features(assets, fake_decode=False).orderBy("asset_id")
 
 
@@ -235,7 +235,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     resample → grayscale PNG re-encode per blob (operators/png.py)
     over mapInPandas — the standard pre-embedding normalization
     stage, running actual pixels in this container."""
-    assets = M.synthesize_image_assets(spark, n=48)
+    assets = M.asset_table(spark, M.image_asset_rows, n=48)
     return (
         M.resize_images(assets, 224, 224, fake=False)
         .select("asset_id", "width", "height", F.length("content").alias("n_bytes"))
@@ -248,7 +248,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling (1 video row → N frame rows, extraction
     stubbed): the row-explosion contract of media preprocessing with
     typed frame timestamps."""
-    assets = M.synthesize_assets(spark, n=64)
+    assets = M.asset_table(spark, M.asset_rows, n=64)
     return (
         M.sample_video_frames(assets, every_ms=1000)
         .select("asset_id", "frame_index", "frame_ts_ms", F.length("frame").alias("n_bytes"))
@@ -262,7 +262,7 @@ def multimodal_video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     MP4 box framing, decode mvhd timescale/duration — no media
     library needed for metadata (frame decode stays codec-gated).
     Structurally valid synthesized MP4s, like the audio path's WAVs."""
-    assets = M.synthesize_video_assets(spark, n=24)
+    assets = M.asset_table(spark, M.video_asset_rows, n=24)
     return M.extract_video_metadata(assets).orderBy("asset_id")
 
 
@@ -272,7 +272,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stdlib wave codec — nothing stubbed) → sample-rate / duration /
     RMS / peak per clip. The one modality whose media path runs
     end-to-end against true encoded bytes in this container."""
-    assets = M.synthesize_audio_assets(spark, n=48)
+    assets = M.asset_table(spark, M.audio_asset_rows, n=48)
     return M.extract_audio_features(assets).orderBy("asset_id")
 
 
@@ -284,7 +284,7 @@ def multimodal_metadata_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets, not fixture tables, so there is no shared relation for a
     DuckDB oracle to scan; determinism is asserted in
     tests/test_multimodal.py."""
-    assets = M.synthesize_assets(spark, n=64)
+    assets = M.asset_table(spark, M.asset_rows, n=64)
     prof = M.metadata_profile(assets)
     return prof.select(
         "media_type",
@@ -297,7 +297,7 @@ def multimodal_metadata_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _phash_near_dup_expected() -> str:
     """Pure-Python twin of the whole phash query: plant the same
-    3-byte-flip near-copies, compute fake aHash signatures, run the
+    3-byte-flip near-copies, compute byte-window aHash signatures, run the
     two-table (hi/lo 16-bit slice) blocked Hamming search in a plain
     nested loop, and render the surviving pairs as VALUES."""
     mask64 = (1 << 64) - 1
@@ -305,12 +305,12 @@ def _phash_near_dup_expected() -> str:
     for i, _media, blob, *_ in M.asset_rows(48):
         base_id = i * 2
         b = bytes(blob)
-        sigs[base_id] = M.ahash64(b, fake=True) & mask64
+        sigs[base_id] = M.ahash64(b) & mask64
         pb = bytearray(b)
         for k in range(3):
             pos = (base_id * 131 + k * 977) % len(pb)
             pb[pos] ^= 0xFF
-        sigs[base_id + 1] = M.ahash64(bytes(pb), fake=True) & mask64
+        sigs[base_id + 1] = M.ahash64(bytes(pb)) & mask64
     ids = sorted(sigs)
     rows = []
     for ai in range(len(ids)):
@@ -350,8 +350,8 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     # the session-cached asset frame arrives pre-coalesced and
-    # checkpointed (operators/multimodal.py:_cached_asset_frame)
-    base = M.synthesize_assets(spark, n=48).select(
+    # checkpointed (operators/multimodal.py:asset_table)
+    base = M.asset_table(spark, M.asset_rows, n=48).select(
         (F.col("asset_id") * 2).alias("asset_id"), "media_type", "content"
     )
     # the 3-byte deterministic perturbation runs in the same Arrow
@@ -432,7 +432,7 @@ def multimodal_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     PNGs (stdlib-zlib codec, Arrow-batched mapInPandas) — blank-frame
     and noise detection for image curation: per asset, pixel count,
     occupied gray levels, and H = −Σ p·ln p in nats."""
-    assets = M.synthesize_image_assets(spark, n=48)
+    assets = M.asset_table(spark, M.image_asset_rows, n=48)
     return M.image_entropy_profile(assets).orderBy("asset_id")
 
 
@@ -481,7 +481,7 @@ def multimodal_audio_quality_gates(spark: SparkSession, sf_dir: str) -> DataFram
     audio sweep runs before featurization. Oracle replays the same
     decode in Python (integer counts; the two ratios are single
     integer-over-integer double divisions)."""
-    assets = M.synthesize_audio_gate_assets(spark, n=32)
+    assets = M.asset_table(spark, M.audio_gate_asset_rows, n=32)
     return M.audio_quality_gates(assets).orderBy("asset_id")
 
 
@@ -538,7 +538,7 @@ def multimodal_audio_gate_summary(spark: SparkSession, sf_dir: str) -> DataFrame
     across partitions — no float order sensitivity), so the JVM-side
     groupBy is exact; the VALUES oracle replays the same decode and
     the same integer sums."""
-    assets = M.synthesize_audio_gate_assets(spark, n=32)
+    assets = M.asset_table(spark, M.audio_gate_asset_rows, n=32)
     g = M.audio_quality_gates(assets)
     return (
         g.groupBy("verdict")
@@ -591,7 +591,7 @@ def multimodal_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     class). Planted-tone correctness: each clean corpus clip is a
     known-frequency sine, and the dominant bin recovers it
     (tests/test_multimodal.py)."""
-    assets = M.synthesize_audio_gate_assets(spark, n=32)
+    assets = M.asset_table(spark, M.audio_gate_asset_rows, n=32)
     return M.audio_spectral_features(assets).orderBy("asset_id")
 
 
@@ -648,7 +648,7 @@ def multimodal_video_quality_gates(spark: SparkSession, sf_dir: str) -> DataFram
     codec-heavy work. Counts are exact integers; ratios single
     integer/integer divisions; the VALUES oracle replays the same
     decode in pure Python."""
-    assets = M.synthesize_video_gate_assets(spark, n=24)
+    assets = M.asset_table(spark, M.video_gate_asset_rows, n=24)
     return M.video_quality_gates(assets).orderBy("asset_id")
 
 
@@ -687,7 +687,7 @@ def multimodal_video_gate_summary(spark: SparkSession, sf_dir: str) -> DataFrame
     frames, defect-frame totals. Pure integer groupBy on the gate
     frame (counts commute across partitions); the VALUES oracle
     replays the same decode and integer sums."""
-    assets = M.synthesize_video_gate_assets(spark, n=24)
+    assets = M.asset_table(spark, M.video_gate_asset_rows, n=24)
     g = M.video_quality_gates(assets)
     return (
         g.groupBy("verdict")
@@ -739,5 +739,5 @@ def multimodal_video_motion_energy(spark: SparkSession, sf_dir: str) -> DataFram
     their repeated span, black-heavy videos show bursts at the
     black↔content boundaries — the VALUES oracle replays the same
     integer pixel-delta sums in pure Python."""
-    assets = M.synthesize_video_gate_assets(spark, n=24)
+    assets = M.asset_table(spark, M.video_gate_asset_rows, n=24)
     return M.video_motion_features(assets).orderBy("asset_id")

@@ -335,19 +335,23 @@ def similarity_centroid_per_label(spark: SparkSession, sf_dir: str) -> DataFrame
 _KM_K, _KM_ITERS, _KM_DIM = 8, 4, 64
 
 
+def _km_dist(e: str, c: str) -> str:
+    """DuckDB fixed-point squared distance between row alias `e`'s
+    vector `v` and centroid alias `c`'s `cv`: the sum over dims of
+    FLOOR(term·1e12) as BIGINT, the attested k-means distance."""
+    return (
+        f"(SELECT SUM(CAST(FLOOR(({e}.v[i]-{c}.cv[i])*({e}.v[i]-{c}.cv[i])"
+        f" * 1000000000000.0) AS BIGINT))"
+        f" FROM UNNEST(generate_series(1,{_KM_DIM})) t(i))"
+    )
+
+
 def _kmeans_oracle() -> str:
     """DuckDB CTE unroll of the attested Lloyd fixpoint: every round
     is assignment (fixed-point FLOOR(term·1e12) BIGINT distances,
     row_number tie-break) + fixed-point centroid update, exactly the
     arithmetic operators/similarity.py:kmeans_attested runs — so
     sizes AND the distance means replay bit-for-bit."""
-
-    def dist(e: str, c: str) -> str:
-        return (
-            f"(SELECT SUM(CAST(FLOOR(({e}.v[i]-{c}.cv[i])*({e}.v[i]-{c}.cv[i])"
-            f" * 1000000000000.0) AS BIGINT))"
-            f" FROM UNNEST(generate_series(1,{_KM_DIM})) t(i))"
-        )
 
     parts = [f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -360,7 +364,7 @@ c0 AS (
     for r in range(1, _KM_ITERS + 1):
         parts.append(f""",
 a{r} AS (
-  SELECT e.vec_id, e.v, c.cent_id, {dist('e', 'c')} AS d
+  SELECT e.vec_id, e.v, c.cent_id, {_km_dist('e', 'c')} AS d
   FROM e CROSS JOIN c{r - 1} c
 ), b{r} AS (
   SELECT vec_id, v, cent_id, d,
@@ -380,7 +384,7 @@ a{r} AS (
 )""")
     parts.append(f""",
 fa AS (
-  SELECT e.vec_id, c.cent_id, {dist('e', 'c')} AS d
+  SELECT e.vec_id, c.cent_id, {_km_dist('e', 'c')} AS d
   FROM e CROSS JOIN c{_KM_ITERS} c
 ), fb AS (
   SELECT vec_id, cent_id, d,

@@ -499,6 +499,25 @@ def avro_expressions_available(spark: SparkSession) -> bool:
 # ---------------------------------------------------------------------------
 
 
+def struct_encoder(codec):
+    """A pandas UDF encoding each row of a STRUCT column to BINARY
+    with `codec.encode(values)`, the values in `codec.fields` order and
+    nulls as None. The Python fallback of both to_avro_binary and
+    proto_codec.to_protobuf_binary."""
+    names = [f.name for f in codec.fields]
+
+    @F.pandas_udf(BinaryType())
+    def _enc(pdf: pd.DataFrame) -> pd.Series:
+        out = []
+        cols = [pdf[n] for n in names]
+        for tup in zip(*cols):
+            vals = [None if v is pd.NA else v for v in tup]
+            out.append(codec.encode(vals))
+        return pd.Series(out, dtype=object)
+
+    return _enc
+
+
 def to_avro_binary(
     data: Column,
     schema_json: str,
@@ -518,19 +537,7 @@ def to_avro_binary(
 
         return to_avro(data, schema_json)
 
-    codec = RecordCodec(schema_json)
-    names = [f.name for f in codec.fields]
-
-    @F.pandas_udf(BinaryType())
-    def _enc(pdf: pd.DataFrame) -> pd.Series:
-        out = []
-        cols = [pdf[n] for n in names]
-        for tup in zip(*cols):
-            vals = [None if v is pd.NA else v for v in tup]
-            out.append(codec.encode(vals))
-        return pd.Series(out, dtype=object)
-
-    return _enc(data)
+    return struct_encoder(RecordCodec(schema_json))(data)
 
 
 def from_avro_binary(

@@ -79,6 +79,7 @@ from pyspark.sql.types import (
 )
 
 from ibd_pipeline_spark.sources.avro_codec import (
+    struct_encoder,
     zigzag_decode,
     zigzag_encode,
 )
@@ -654,19 +655,7 @@ def to_protobuf_binary(
             data, name, binaryDescriptorSet=descriptor_set_bytes(proto_src)
         )
 
-    codec = MessageCodec(proto_src)
-    names = [f.name for f in codec.fields]
-
-    @F.pandas_udf(BinaryType())
-    def _enc(pdf: pd.DataFrame) -> pd.Series:
-        out = []
-        cols = [pdf[n] for n in names]
-        for tup in zip(*cols):
-            vals = [None if v is pd.NA else v for v in tup]
-            out.append(codec.encode(vals))
-        return pd.Series(out, dtype=object)
-
-    return _enc(data)
+    return struct_encoder(MessageCodec(proto_src))(data)
 
 
 def from_protobuf_binary(

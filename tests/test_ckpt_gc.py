@@ -80,9 +80,9 @@ def test_markov_stationary_gc(spark, tmp_path):
         [("a", "a", 0.5), ("a", "b", 0.5), ("b", "a", 0.9), ("b", "b", 0.1)],
         "src string, dst string, p double",
     )
-    # driver_solve=False: a chain this small would otherwise be solved
+    # max_driver_edges=0: a chain this small would otherwise be solved
     # on the driver, which writes no checkpoint at all
-    out = markov_stationary(t, iters=12, checkpoint_dir=d, driver_solve=False)
+    out = markov_stationary(t, iters=12, checkpoint_dir=d, max_driver_edges=0)
     pis = {r["state"]: r["p"] for r in out.collect()}
     assert abs(sum(pis.values()) - 1.0) < 1e-9
     # alternating pi slots: at most 2 live directories (t/sources

@@ -392,4 +392,4 @@ def test_driver_solve_matches_distributed(spark, case):
     """Each solver's small-input driver solve agrees with its
     distributed loop: same rows, values within double noise."""
     driver = case(spark)
-    assert driver == pytest.approx(case(spark, driver_solve=False), abs=1e-9)
+    assert driver == pytest.approx(case(spark, max_driver_edges=0), abs=1e-9)

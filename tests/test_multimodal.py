@@ -10,8 +10,8 @@ from ibd_pipeline_spark.operators import multimodal as M
 
 
 def test_feature_extract_deterministic(spark):
-    a = M.extract_features(M.synthesize_assets(spark, 32), fake_decode=True).collect()
-    b = M.extract_features(M.synthesize_assets(spark, 32), fake_decode=True).collect()
+    a = M.extract_features(M.asset_table(spark, M.asset_rows, 32), fake_decode=True).collect()
+    b = M.extract_features(M.asset_table(spark, M.asset_rows, 32), fake_decode=True).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert len(a) == 32
     row = {r.asset_id: r for r in a}[0]
@@ -25,15 +25,53 @@ def test_real_decode_is_honestly_stubbed():
 
 
 def test_metadata_profile_schema(spark):
-    prof = M.metadata_profile(M.synthesize_assets(spark, 30)).collect()
+    prof = M.metadata_profile(M.asset_table(spark, M.asset_rows, 30)).collect()
     assert {r.media_type for r in prof} == {"image", "audio", "video"}
     img = {r.media_type: r for r in prof}["image"]
     assert img.avg_width is not None
     assert img.avg_duration_ms is None
 
 
+# every per-blob operator with its declared schema and the media type
+# it keeps (None: it maps every blob)
+_PER_BLOB_OPS = [
+    (M.extract_features, M.FEATURE_SCHEMA, None),
+    (M.resize_images, M.RESIZE_SCHEMA, "image"),
+    (M.extract_video_metadata, M.VIDEO_META_SCHEMA, "video"),
+    (M.extract_audio_features, M.AUDIO_FEATURE_SCHEMA, "audio"),
+    (M.phash_signatures, M.PHASH_SCHEMA, None),
+    (M.image_entropy_profile, M.ENTROPY_SCHEMA, None),
+    (M.audio_quality_gates, M.AUDIO_GATE_SCHEMA, "audio"),
+    (M.audio_spectral_features, M.SPECTRAL_SCHEMA, "audio"),
+    (M.video_quality_gates, M.VIDEO_GATE_SCHEMA, "video"),
+    (M.video_motion_features, M.VIDEO_MOTION_SCHEMA, "video"),
+]
+
+
+@pytest.mark.parametrize(
+    "op, schema, media",
+    _PER_BLOB_OPS,
+    ids=[op.__name__ for op, _, _ in _PER_BLOB_OPS],
+)
+def test_per_blob_operator_empty_input(spark, op, schema, media):
+    """Zero rows in the declared schema from an empty asset frame and,
+    for an operator that keeps one media type, from a frame without
+    it: batches left empty by the media filter are skipped, and the
+    other media's blobs (which its decoder would reject) are never
+    decoded."""
+    frames = [spark.createDataFrame([], M.ASSET_SCHEMA)]
+    if media is not None:
+        frames.append(
+            M.asset_table(spark, M.asset_rows, 12).filter(f"media_type != '{media}'")
+        )
+    for assets in frames:
+        out = op(assets)
+        assert out.schema == schema
+        assert out.collect() == []
+
+
 def test_resize_images_shape_and_determinism(spark):
-    assets = M.synthesize_assets(spark, 30)
+    assets = M.asset_table(spark, M.asset_rows, 30)
     out = M.resize_images(assets, 224, 224).collect()
     n_images = assets.filter("media_type = 'image'").count()
     assert len(out) == n_images
@@ -43,7 +81,7 @@ def test_resize_images_shape_and_determinism(spark):
 
 
 def test_sample_video_frames_fanout(spark):
-    assets = M.synthesize_assets(spark, 30)
+    assets = M.asset_table(spark, M.asset_rows, 30)
     frames = M.sample_video_frames(assets, every_ms=1000).collect()
     vids = {
         r.asset_id: r.duration_ms
@@ -60,21 +98,19 @@ def test_sample_video_frames_fanout(spark):
 
 
 def test_real_media_paths_honestly_stubbed(spark):
-    assets = M.synthesize_assets(spark, 3)
+    assets = M.asset_table(spark, M.asset_rows, 3)
     # non-PNG blobs with no pillow: the per-blob guard raises from
     # the task (format is a property of the data, so the error is
     # lazy — surfaced at action time wrapped by the Python runner)
     if M._pil() is None:
         with pytest.raises(Exception, match="NotImplementedError|pillow"):
             M.resize_images(assets, fake=False).collect()
-    with pytest.raises(NotImplementedError):
-        M.sample_video_frames(assets, fake=False)
 
 
 def test_binary_roundtrip_through_parquet(spark, tmp_path):
     """Binary columns survive a parquet write/read cycle and metadata
     queries don't change results after the roundtrip."""
-    assets = M.synthesize_assets(spark, 16)
+    assets = M.asset_table(spark, M.asset_rows, 16)
     path = str(tmp_path / "assets.parquet")
     assets.write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
@@ -90,7 +126,7 @@ def test_metadata_profile_prunes_blob_column(spark, tmp_path):
     import ibd_pipeline_spark.operators.multimodal as M
 
     path = str(tmp_path / "assets.parquet")
-    M.synthesize_assets(spark, 30).write.parquet(path)
+    M.asset_table(spark, M.asset_rows, 30).write.parquet(path)
     prof = M.metadata_profile(spark.read.parquet(path))
     plan = prof._jdf.queryExecution().executedPlan().toString()
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
@@ -144,7 +180,7 @@ def test_audio_decode_real_wav():
 def test_audio_features_distributed(spark):
     import ibd_pipeline_spark.operators.multimodal as M
 
-    assets = M.synthesize_audio_assets(spark, n=12)
+    assets = M.asset_table(spark, M.audio_asset_rows, n=12)
     rows = M.extract_audio_features(assets).orderBy("asset_id").collect()
     assert len(rows) == 12
     assert [r.asset_id for r in rows] == list(range(12))
@@ -152,9 +188,24 @@ def test_audio_features_distributed(spark):
     again = M.extract_audio_features(assets).orderBy("asset_id").collect()
     assert [tuple(r) for r in rows] == [tuple(r) for r in again]
     # mixed-media frame: non-audio rows are filtered, audio survives
-    mixed = M.synthesize_assets(spark, n=9)
+    mixed = M.asset_table(spark, M.asset_rows, n=9)
     feats = M.extract_audio_features(mixed)
     assert feats.columns[0] == "asset_id"
+
+
+def test_multimodal_cache_purges_dead_sessions(spark):
+    """On cache miss, entries keyed to OTHER applicationIds (stopped
+    sessions) are dropped so a long-lived multi-session process never
+    accumulates dead DataFrame references."""
+    M._ASSET_FRAME_CACHE.clear()
+    M._ASSET_FRAME_CACHE[("dead-app-1", M.asset_rows, 8, 1)] = object()
+    M._ASSET_FRAME_CACHE[("dead-app-2", M.asset_rows, 8, 2)] = object()
+    df = M.asset_table(spark, M.asset_rows, n=8, seed=99)
+    assert df.count() == 8
+    app = spark.sparkContext.applicationId
+    assert all(k[0] == app for k in M._ASSET_FRAME_CACHE)
+    # second call hits the cache (no purge path, same object back)
+    assert M.asset_table(spark, M.asset_rows, n=8, seed=99) is df
 
 
 def test_mp4_container_round_trip():
@@ -180,7 +231,7 @@ def test_mp4_container_round_trip():
 def test_video_metadata_distributed(spark):
     import ibd_pipeline_spark.operators.multimodal as M
 
-    assets = M.synthesize_video_assets(spark, n=10)
+    assets = M.asset_table(spark, M.video_asset_rows, n=10)
     rows = M.extract_video_metadata(assets).orderBy("asset_id").collect()
     assert len(rows) == 10
     assert all(r.major_brand == "isom" for r in rows)
@@ -247,7 +298,7 @@ def test_audio_planted_clipping_detected(spark):
     those, and clean sines must read clip_rate == 0."""
     from ibd_pipeline_spark.operators import multimodal as M
 
-    assets = M.synthesize_audio_gate_assets(spark, n=32)
+    assets = M.asset_table(spark, M.audio_gate_asset_rows, n=32)
     rows = {r["asset_id"]: r for r in M.audio_quality_gates(assets).collect()}
     for i in range(32):
         r = rows[i]
@@ -265,7 +316,7 @@ def test_audio_planted_silence_detected(spark):
     policy gate — the gate measures, policy decides."""
     from ibd_pipeline_spark.operators import multimodal as M
 
-    assets = M.synthesize_audio_gate_assets(spark, n=32)
+    assets = M.asset_table(spark, M.audio_gate_asset_rows, n=32)
     rows = {r["asset_id"]: r for r in M.audio_quality_gates(assets).collect()}
     for i in range(32):
         r = rows[i]
@@ -310,7 +361,7 @@ def test_audio_spectral_recovers_planted_tone(spark):
     clips still produce finite features."""
     from ibd_pipeline_spark.operators import multimodal as M
 
-    assets = M.synthesize_audio_gate_assets(spark, n=32)
+    assets = M.asset_table(spark, M.audio_gate_asset_rows, n=32)
     rows = {
         r["asset_id"]: r
         for r in M.audio_spectral_features(assets).collect()
@@ -327,6 +378,28 @@ def test_audio_spectral_recovers_planted_tone(spark):
         # spreads magnitude to high bins) but stays the same order
         c = float(r["centroid_hz"])
         assert 0.8 * planted <= c <= 10.0 * planted, r
+
+
+def test_audio_spectral_silent_clip_is_all_zero():
+    """A digitally-silent WAV produces zero centroid/rolloff/dominant
+    (guarded total-mass path), not NaNs."""
+    import io
+    import struct
+    import wave
+
+    from ibd_pipeline_spark.operators.multimodal import audio_spectral_stats
+
+    pcm = b"".join(struct.pack("<h", 0) for _ in range(800))
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(8000)
+        w.writeframes(pcm)
+    s = audio_spectral_stats(buf.getvalue())
+    assert s["centroid_hz"] == "0.0000"
+    assert s["rolloff85_hz"] == "0.0000"
+    assert s["dominant_hz"] == "0.0000"
 
 
 # ---------------------------------------------------------------------------

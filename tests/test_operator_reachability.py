@@ -10,15 +10,21 @@ function that is imported but never called is not reached.
 A top-level function in `operators/` that nothing reaches is a second
 form of an operator that only tests call. REFERENCE holds the few
 kept on purpose, each with its reason.
+
+The same parse also finds copy-paste: two functions anywhere in the
+package (nested ones included) whose bodies, docstrings excluded, are
+identical and span MIN_BODY_LINES lines or more.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "ibd_pipeline_spark"
 ROOT_DIRS = ("queries", "streaming", "sources")
+MIN_BODY_LINES = 5
 
 REFERENCE = {
     "winnowing_fingerprints": (
@@ -39,14 +45,21 @@ def _module_name(path: Path) -> str:
     return ".".join(parts)
 
 
+@functools.cache
+def _parsed():
+    """(path, module name, AST) of every source file in the package."""
+    return [
+        (path, _module_name(path), ast.parse(path.read_text()))
+        for path in sorted(PKG.rglob("*.py"))
+    ]
+
+
 def _index():
     """(defs, refs): defs maps (module, name) → top-level node; refs
     maps each such key, and each root module, to the keys its code
     references."""
     defs, refs, roots = {}, {}, set()
-    for path in sorted(PKG.rglob("*.py")):
-        mod = _module_name(path)
-        tree = ast.parse(path.read_text())
+    for path, mod, tree in _parsed():
         top = {
             n.name
             for n in tree.body
@@ -129,3 +142,34 @@ def test_reference_entries_are_defined_and_otherwise_unreached():
         assert not set(keys) & reached, (
             f"{name} is reached from the engine; drop it from REFERENCE"
         )
+
+
+def _body(fn):
+    """fn's statements, without a leading docstring."""
+    body = fn.body
+    first = body[0]
+    if (
+        isinstance(first, ast.Expr)
+        and isinstance(first.value, ast.Constant)
+        and isinstance(first.value.value, str)
+    ):
+        return body[1:]
+    return body
+
+
+def test_no_duplicate_function_bodies():
+    groups = {}
+    for path, _mod, tree in _parsed():
+        for n in ast.walk(tree):
+            if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            body = _body(n)
+            if body and body[-1].end_lineno - body[0].lineno + 1 >= MIN_BODY_LINES:
+                key = "\n".join(ast.dump(stmt) for stmt in body)
+                where = f"{path.relative_to(PKG.parent)}:{n.lineno} {n.name}"
+                groups.setdefault(key, []).append(where)
+    copies = sorted(g for g in groups.values() if len(g) > 1)
+    assert not copies, (
+        "functions with identical bodies (keep one and call it): "
+        f"{copies}"
+    )

@@ -150,13 +150,13 @@ def test_spark_real_decode_and_resize(spark):
     extract_features and resize_images with fake=False in-container."""
     from ibd_pipeline_spark.operators import multimodal as M
 
-    assets = M.synthesize_image_assets(spark, n=12)
+    assets = M.asset_table(spark, M.image_asset_rows, n=12)
     feats = M.extract_features(assets, fake_decode=False).collect()
     assert len(feats) == 12
     assert all(0.0 <= float(r["feat_mean"]) <= 1.0 for r in feats)
     # determinism across fresh evaluations
     again = M.extract_features(
-        M.synthesize_image_assets(spark, n=12), fake_decode=False
+        M.asset_table(spark, M.image_asset_rows, n=12), fake_decode=False
     ).collect()
     assert {(r["asset_id"], r["feat_mean"]) for r in feats} == {
         (r["asset_id"], r["feat_mean"]) for r in again

@@ -1,6 +1,5 @@
 """Round-11 ADVICE-fix pins: microsecond-exact nearest-as-of gaps,
-single-hour Fano NULL (not NaN), the portable sign-LSH dim guard,
-and the multimodal asset-cache cross-session purge."""
+single-hour Fano NULL (not NaN) and the portable sign-LSH dim guard."""
 
 from __future__ import annotations
 
@@ -127,21 +126,3 @@ def test_portable_lsh_dim_guard(spark):
         "vec_id long, embedding array<double>",
     )
     S.cosine_near_dup_pairs(ok, dim=48)
-
-
-def test_multimodal_cache_purges_dead_sessions(spark):
-    """ADVICE r10 (operators/multimodal.py): on cache miss, entries
-    keyed to OTHER applicationIds (stopped sessions) are dropped so
-    a long-lived multi-session process never accumulates dead
-    DataFrame references."""
-    from ibd_pipeline_spark.operators import multimodal as M
-
-    M._ASSET_FRAME_CACHE.clear()
-    M._ASSET_FRAME_CACHE[("dead-app-1", "fake", 8, 1)] = object()
-    M._ASSET_FRAME_CACHE[("dead-app-2", "fake", 8, 2)] = object()
-    df = M.synthesize_assets(spark, n=8, seed=99)
-    assert df.count() == 8
-    app = spark.sparkContext.applicationId
-    assert all(k[0] == app for k in M._ASSET_FRAME_CACHE)
-    # second call hits the cache (no purge path, same object back)
-    assert M.synthesize_assets(spark, n=8, seed=99) is df

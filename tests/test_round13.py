@@ -174,25 +174,3 @@ def test_rendezvous_minimal_churn(spark, sf_dir):
     assert all(a9[k] == 8 for k in moved), "HRW moved a key between old shards"
     frac = len(moved) / len(a8)
     assert 0.02 <= frac <= 0.25, f"expected ~1/9 churn, got {frac:.3f}"
-
-
-def test_audio_spectral_silent_clip_is_all_zero():
-    """A digitally-silent WAV produces zero centroid/rolloff/dominant
-    (guarded total-mass path), not NaNs."""
-    import io
-    import struct
-    import wave
-
-    from ibd_pipeline_spark.operators.multimodal import audio_spectral_stats
-
-    pcm = b"".join(struct.pack("<h", 0) for _ in range(800))
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(pcm)
-    s = audio_spectral_stats(buf.getvalue())
-    assert s["centroid_hz"] == "0.0000"
-    assert s["rolloff85_hz"] == "0.0000"
-    assert s["dominant_hz"] == "0.0000"
