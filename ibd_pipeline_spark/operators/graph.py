@@ -293,7 +293,7 @@ def label_propagation(
         # and fail on first action — reject up front (ADVICE r8).
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
 
-    # DRIVER SOLVE (r16, for graphs up to max_driver_edges — the
+    # DRIVER SOLVE (for graphs up to max_driver_edges — the
     # markov_stationary / absorption_probability doctrine verbatim):
     # when the edge list AND the seed list fit under max_driver_edges,
     # the voting rounds run as plain Python over the collected pairs —
@@ -466,6 +466,32 @@ def label_propagation(
     )
 
 
+def _chain_rows(
+    transitions: DataFrame,
+    src: str,
+    dst: str,
+    prob: str,
+    iters: int,
+    max_driver_edges: int,
+) -> "list | None":
+    """The shared prelude of the Markov-chain solvers: reject iters < 1
+    (iters=0 would return a frame whose lineage still reads
+    checkpoint slots the loop releases — files deleted, blocks
+    unpersisted — and fail on its first action), then probe for the
+    (s, d, w) transition triples the driver solve needs: all of them
+    when at most max_driver_edges, else None."""
+    if iters < 1:
+        raise ValueError(f"iters must be >= 1, got {iters}")
+    return _driver_rows(
+        transitions.select(
+            F.col(src).alias("s"),
+            F.col(dst).alias("d"),
+            F.col(prob).cast("double").alias("w"),
+        ),
+        max_driver_edges,
+    )
+
+
 def markov_stationary(
     transitions: DataFrame,
     src: str = "src",
@@ -500,25 +526,12 @@ def markov_stationary(
     Returns (state, p) — p sums to 1 whenever each SOURCE state's
     outgoing weights sum to 1 (conservation is property-tested).
     """
-    if iters < 1:
-        # iters=0 would return a frame whose lineage still reads
-        # slots released below (files deleted / blocks unpersisted)
-        # and fail on first action — reject up front (ADVICE r8).
-        raise ValueError(f"iters must be >= 1, got {iters}")
-
-    # DRIVER SOLVE (r12, for chains up to max_driver_edges) — same
-    # contract and rationale as absorption_probability: the chain is
+    # DRIVER SOLVE for chains up to max_driver_edges — same contract
+    # and rationale as absorption_probability: the chain is
     # model-state-sized, the distributed work is the caller's
     # transition-count aggregation, and the per-round DataFrame
     # join+checkpoint loop is pure scheduling overhead at this size.
-    rows = _driver_rows(
-        transitions.select(
-            F.col(src).alias("s"),
-            F.col(dst).alias("d"),
-            F.col(prob).cast("double").alias("w"),
-        ),
-        max_driver_edges,
-    )
+    rows = _chain_rows(transitions, src, dst, prob, iters, max_driver_edges)
     if rows is not None:
         edges = sorted(
             ((r["s"], r["d"], r["w"]) for r in rows),
@@ -671,7 +684,7 @@ def absorption_probability(
     vector so it emits exactly ONE row (a = 1.0), not a second
     'transient' row computed from its outgoing edges (ADVICE r9).
 
-    DRIVER SOLVE (r12, for chains up to max_driver_edges): the chain is
+    DRIVER SOLVE (for chains up to max_driver_edges): the chain is
     model-state-sized BY CONSTRUCTION — states are channels/funnel
     steps, never data — so when the edge list fits under
     `max_driver_edges` the 16-round fixpoint runs as plain Python on
@@ -683,19 +696,7 @@ def absorption_probability(
     microseconds. Per-state sums run in sorted (src, dst) order —
     deterministic; double noise is ~1e-16 against outputs rounded at
     6. Above max_driver_edges the distributed loop runs."""
-    if iters < 1:
-        # iters=0 would return a frame whose lineage still reads
-        # slots released below — reject up front (ADVICE r8).
-        raise ValueError(f"iters must be >= 1, got {iters}")
-
-    rows = _driver_rows(
-        transitions.select(
-            F.col(src).alias("s"),
-            F.col(dst).alias("d"),
-            F.col(prob).cast("double").alias("w"),
-        ),
-        max_driver_edges,
-    )
+    rows = _chain_rows(transitions, src, dst, prob, iters, max_driver_edges)
     if rows is not None:
         tgt_set = {r["state"] for r in targets.collect()}
         edges: dict[str, list] = {}

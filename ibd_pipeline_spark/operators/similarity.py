@@ -10,7 +10,7 @@ path is the per-bucket verifier, never the global strategy.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 
 
 def as_double_array(vec: Column | str) -> Column:
@@ -111,8 +111,6 @@ def brute_force_topk(
     at real scale the scan is already thousands of splits and the
     repartition is a no-op branch.
     """
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(query_id).alias("qid"), as_double_array(vec).alias("qv")
     ).withColumn("qnorm", l2_norm(F.col("qv")))
@@ -133,6 +131,12 @@ def brute_force_topk(
             ).alias("cosine_sim"),
         )
     )
+    return _top_k(scored, k, query_id, corpus_id)
+
+
+def _top_k(scored: DataFrame, k: int, query_id: str, corpus_id: str) -> DataFrame:
+    """The k best (qid, cid, cosine_sim) rows per query, ties to the
+    smaller cid, as (query_id, corpus_id, cosine_sim, rank)."""
     w = Window.partitionBy("qid").orderBy(F.col("cosine_sim").desc(), F.col("cid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -222,8 +226,6 @@ def ivf_probe(
 ) -> DataFrame:
     """Each query's n_probe nearest cells (qid, qv, cell_id) — the
     probe half of the IVF layout (shared by ivf_topk / IVF-PQ)."""
-    from pyspark.sql import Window
-
     q = queries.select(F.col(query_id).alias("qid"), as_double_array(vec).alias("qv"))
     probe_w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cent_id"))
     return (
@@ -262,8 +264,6 @@ def ivf_topk(
     brute force. This is the layout to persist: a corpus bucketed by
     cell_id makes the probe join shuffle-free on re-query.
     """
-    from pyspark.sql import Window
-
     # Widening + assignment + probe live in ivf_cells/ivf_probe (the
     # reusable IVF layout halves; IVF-PQ composes the same pieces).
     cents, corpus_cells = ivf_cells(
@@ -286,17 +286,7 @@ def ivf_topk(
             "qid", "cid", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine_sim")
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine_sim").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(query_id),
-            F.col("cid").alias(corpus_id),
-            "cosine_sim",
-            "rank",
-        )
-    )
+    return _top_k(scored, k, query_id, corpus_id)
 
 
 def required_portable_dim(
@@ -519,8 +509,6 @@ def lsh_bucketed_topk(
     cross product, and the dedup before scoring keeps each (query,
     candidate) pair scored once.
     """
-    from pyspark.sql import Window
-
     check_portable_dim(dim, n_tables, bits_per_table)
 
     # NOTE deliberately NOT widened (contrast brute_force_topk/ivf_topk).
@@ -557,17 +545,7 @@ def lsh_bucketed_topk(
     scored = candidates.select(
         "qid", "cid", F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine_sim")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine_sim").desc(), F.col("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(query_id),
-            F.col("cid").alias(corpus_id),
-            "cosine_sim",
-            "rank",
-        )
-    )
+    return _top_k(scored, k, query_id, corpus_id)
 
 
 def kmeans_attested(

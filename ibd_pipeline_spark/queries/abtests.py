@@ -13,6 +13,24 @@ from ibd_pipeline_spark.catalog import load
 from ibd_pipeline_spark.normal_tail import _phi_tail_col, _phi_tail_sql
 from ibd_pipeline_spark.queries import query
 
+
+def _assigned_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, arm, converted): the md5 hash split into arms 0 and 1
+    and the conversion rule (any purchase of value > 80) that the
+    two-arm proportion tests share."""
+    from ibd_pipeline_spark.operators.sketches import md5_bucket
+
+    ev = load(spark, sf_dir, "events")
+    return ev.groupBy(
+        "user_id", md5_bucket(F.col("user_id"), 11, 2).alias("arm")
+    ).agg(
+        F.max(
+            F.when(
+                (F.col("event_type") == "purchase") & (F.col("value") > 80), 1
+            ).otherwise(0)
+        ).alias("converted")
+    )
+
 # ---------------------------------------------------------------------------
 # 2×2 odds ratio with the Woolf log-interval (md5 arm × converted)
 # ---------------------------------------------------------------------------
@@ -1072,18 +1090,7 @@ def ab_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive-arg Zelen–Severo polynomial both engines share).
 
     Scale: one user-grain aggregate, then 1-row algebra."""
-    from ibd_pipeline_spark.operators.sketches import md5_bucket
-
-    ev = load(spark, sf_dir, "events")
-    assigned = ev.groupBy(
-        "user_id", md5_bucket(F.col("user_id"), 11, 2).alias("arm")
-    ).agg(
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") > 80), 1
-            ).otherwise(0)
-        ).alias("converted")
-    )
+    assigned = _assigned_users(spark, sf_dir)
     c = assigned.agg(
         F.count(F.when(F.col("arm") == 0, 1)).cast("bigint").alias("n_a"),
         F.count(F.when(F.col("arm") == 1, 1)).cast("bigint").alias("n_b"),

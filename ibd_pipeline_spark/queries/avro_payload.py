@@ -91,6 +91,74 @@ ORDER BY event_type
 """
 
 
+def _message_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events as the (event_id, event_type, value, ts_us) message both
+    payload codecs carry."""
+    return load(spark, sf_dir, "events").select(
+        "event_id",
+        "event_type",
+        "value",
+        F.unix_micros("ts").alias("ts_us"),
+    )
+
+
+def _plant_damage(
+    wire: DataFrame, flip_mod: int, cut_mod: int, cut_len: int
+) -> DataFrame:
+    """(orig_type, wire) with planted damage: the magic byte flipped to
+    0x01 (the frame check must null it) for event_id % flip_mod == 1,
+    and the frame cut to its first cut_len bytes (the decoder must
+    quarantine it) for event_id % cut_mod == 0, the cut taking
+    precedence."""
+    return wire.select(
+        F.col("event_type").alias("orig_type"),
+        F.when(
+            F.col("event_id") % cut_mod == 0,
+            F.substring(F.col("wire"), 1, cut_len),
+        )
+        .when(
+            F.col("event_id") % flip_mod == 1,
+            F.concat(
+                F.lit(b"\x01"),
+                F.substring(
+                    F.col("wire"), F.lit(2), F.length("wire") - F.lit(1)
+                ),
+            ),
+        )
+        .otherwise(F.col("wire"))
+        .alias("wire"),
+    )
+
+
+def _quarantine_counts(dec: DataFrame) -> DataFrame:
+    """Per event type of (orig_type, frame_null, r) decodes: messages,
+    bad frames, bad payloads (a null decode of an intact frame), clean
+    decodes and the id-sum of the clean ones."""
+    return (
+        dec.groupBy(F.col("orig_type").alias("event_type"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_msgs"),
+            F.sum(F.when(F.col("frame_null"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_bad_frame"),
+            F.sum(
+                F.when(
+                    ~F.col("frame_null") & F.col("r.event_id").isNull(), 1
+                ).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_bad_payload"),
+            F.sum(F.when(F.col("r.event_id").isNotNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_ok"),
+            F.sum(F.coalesce(F.col("r.event_id"), F.lit(0)))
+            .cast("bigint")
+            .alias("sum_ok_event_id"),
+        )
+        .orderBy("event_type")
+    )
+
+
 @query("io_avro_payload_roundtrip", oracle=_ROUNDTRIP_SQL)
 def io_avro_payload_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kafka-payload Avro round-trip: events → Avro binary
@@ -107,12 +175,7 @@ def io_avro_payload_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     when spark-avro is deployed. Aggregation is map-side combined on
     the event_type key. Cite: reference ingest decode is
     spark_processor.py:123-124; this is its schema-registry form."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        "value",
-        F.unix_micros("ts").alias("ts_us"),
-    )
+    ev = _message_fields(spark, sf_dir)
     payload = A.to_avro_binary(
         F.struct("event_id", "event_type", "value", "ts_us"),
         _MSG_SCHEMA,
@@ -183,12 +246,7 @@ def io_avro_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same pipeline as io_avro_payload_roundtrip plus two
     codegen CASE branches for the planting; quarantine classes come
     from null-pattern inspection, no extra pass."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        "value",
-        F.unix_micros("ts").alias("ts_us"),
-    )
+    ev = _message_fields(spark, sf_dir)
     payload = A.to_avro_binary(
         F.struct("event_id", "event_type", "value", "ts_us"),
         _MSG_SCHEMA,
@@ -199,24 +257,8 @@ def io_avro_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         A.to_confluent_wire(payload, _SCHEMA_ID).alias("wire"),
     )
-    damaged = wire.select(
-        F.col("event_type").alias("orig_type"),
-        F.when(
-            F.col("event_id") % 97 == 0,
-            F.substring(F.col("wire"), 1, 5),  # empty Avro body
-        )
-        .when(
-            F.col("event_id") % 89 == 1,
-            F.concat(
-                F.lit(b"\x01"),
-                F.substring(
-                    F.col("wire"), F.lit(2), F.length("wire") - F.lit(1)
-                ),
-            ),
-        )
-        .otherwise(F.col("wire"))
-        .alias("wire"),
-    )
+    # cut to the 5-byte frame: an empty Avro body
+    damaged = _plant_damage(wire, flip_mod=89, cut_mod=97, cut_len=5)
     unframed = damaged.select(
         "orig_type",
         A.wire_payload(F.col("wire"), _SCHEMA_ID).alias("payload"),
@@ -228,29 +270,7 @@ def io_avro_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("payload"), _MSG_SCHEMA, spark, mode="PERMISSIVE"
         ).alias("r"),
     )
-    return (
-        dec.groupBy(F.col("orig_type").alias("event_type"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_msgs"),
-            F.sum(F.when(F.col("frame_null"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_bad_frame"),
-            F.sum(
-                F.when(
-                    ~F.col("frame_null") & F.col("r.event_id").isNull(), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_bad_payload"),
-            F.sum(F.when(F.col("r.event_id").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_ok"),
-            F.sum(F.coalesce(F.col("r.event_id"), F.lit(0)))
-            .cast("bigint")
-            .alias("sum_ok_event_id"),
-        )
-        .orderBy("event_type")
-    )
+    return _quarantine_counts(dec)
 
 
 # ---------------------------------------------------------------------------
@@ -308,12 +328,7 @@ def io_avro_schema_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF), and the union is plan-level. This is how a 100 TB consumer
     handles rolling producer upgrades without a stop-the-world
     re-encode."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        "value",
-        F.unix_micros("ts").alias("ts_us"),
-    )
+    ev = _message_fields(spark, sf_dir)
     topic = _encode_topic(ev, spark)
     dec = _dispatch_decode(topic, spark)
     return (

@@ -15,11 +15,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ibd_pipeline_spark.catalog import load
-from ibd_pipeline_spark.operators.text import STOPWORDS
 from ibd_pipeline_spark.queries import dsum, query
+from ibd_pipeline_spark.queries.text import _QUALITY_SQL
 
 _GAP_US = 6 * 3600 * 1_000_000  # 6-hour inactivity gap, as exact µs
-_STOP_SQL = "['" + "','".join(STOPWORDS) + "']"
 
 
 @query(
@@ -330,19 +329,12 @@ def dedup_pair_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     once and every join an equi-join on doc ids; with candidate pairs
     from LSH (never all-pairs) this is two hash joins over an
     edge-sized relation."""
-    d = (
-        load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 150)
-        .select("doc_id", F.array_distinct(F.split("text", " ")).alias("toks"))
-    )
-    a, b = d.alias("a"), d.alias("b")
-    jac = F.size(F.array_intersect("a.toks", "b.toks")).cast("double") / F.size(
-        F.array_union("a.toks", "b.toks")
-    )
+    from ibd_pipeline_spark.queries.dedup import _token_jaccard_pairs
+
     pairs = (
-        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .filter(jac >= 0.6)
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        _token_jaccard_pairs(spark, sf_dir)
+        .filter(F.col("jaccard") >= 0.6)
+        .select("id_a", "id_b")
     )
     p1, p2, p3 = pairs.alias("p1"), pairs.alias("p2"), pairs.alias("p3")
     tri = p1.join(p2, F.col("p2.id_a") == F.col("p1.id_b")).join(
@@ -426,14 +418,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH scored AS (
   SELECT doc_id, lang,
-         ROUND(GREATEST(LEAST((
-             LEAST(len(string_split(text, ' ')) / 50.0, 1.0)
-           + CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-               / len(string_split(text, ' '))
-           + GREATEST(1.0 - ABS(CAST(len(list_filter(string_split(text, ' '),
-                         t -> list_contains({_STOP_SQL}, t))) AS DOUBLE)
-                     / len(string_split(text, ' ')) - 0.06) * 4, 0.0)
-         ) / 3, 1.0), 0.0), 6) AS quality
+         {_QUALITY_SQL} AS quality
   FROM documents
 ), banded AS (
   SELECT doc_id, lang, quality,

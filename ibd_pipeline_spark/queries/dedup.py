@@ -87,6 +87,26 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _token_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id_a, id_b, jaccard) for every pair id_a < id_b of the first
+    150 documents: the unrounded Jaccard of their distinct
+    whitespace-token sets — all pairs, so bounded by the slice."""
+    d = (
+        load(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 150)
+        .select("doc_id", F.array_distinct(F.split("text", " ")).alias("toks"))
+    )
+    a, b = d.alias("a"), d.alias("b")
+    jac = F.size(F.array_intersect("a.toks", "b.toks")).cast("double") / F.size(
+        F.array_union("a.toks", "b.toks")
+    )
+    return a.join(b, F.col("a.doc_id") < F.col("b.doc_id")).select(
+        F.col("a.doc_id").alias("id_a"),
+        F.col("b.doc_id").alias("id_b"),
+        jac.alias("jaccard"),
+    )
+
+
 @query(
     "dedup_ngram_jaccard",
     oracle="""
@@ -111,22 +131,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: deliberately bounded (doc_id < 150) because all-pairs
     Jaccard is O(n²); the unbounded scale path is minhash_lsh below.
     """
-    d = (
-        load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 150)
-        .select("doc_id", F.array_distinct(F.split("text", " ")).alias("toks"))
-    )
-    a, b = d.alias("a"), d.alias("b")
-    jac = F.size(F.array_intersect("a.toks", "b.toks")).cast("double") / F.size(
-        F.array_union("a.toks", "b.toks")
-    )
     return (
-        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.round(jac, 6).alias("jaccard"),
-        )
+        _token_jaccard_pairs(spark, sf_dir)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.6)
         .orderBy("id_a", "id_b")
     )
@@ -413,22 +420,9 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution cost is negligible next to pair generation."""
     from ibd_pipeline_spark.operators.graph import connected_components
 
-    d = (
-        load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 150)
-        .select("doc_id", F.array_distinct(F.split("text", " ")).alias("toks"))
-    )
-    a, b = d.alias("a"), d.alias("b")
-    jac = F.size(F.array_intersect("a.toks", "b.toks")).cast("double") / F.size(
-        F.array_union("a.toks", "b.toks")
-    )
     pairs = (
-        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("src"),
-            F.col("b.doc_id").alias("dst"),
-            jac.alias("jaccard"),
-        )
+        _token_jaccard_pairs(spark, sf_dir)
+        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "jaccard")
         .filter(F.col("jaccard") >= 0.6)
     )
     comps = connected_components(pairs, "src", "dst")
@@ -1319,51 +1313,9 @@ def _semdedup_oracle() -> str:
     queries/similarity.py:_kmeans_oracle (k=8, 4 iters, FLOOR·1e12
     BIGINT distances, lowest-id init), extended past the final
     assignment with the within-cluster fixed-point cosine pair scan."""
-    from ibd_pipeline_spark.queries.similarity import (
-        _KM_DIM,
-        _KM_ITERS,
-        _KM_K,
-        _km_dist,
-    )
+    from ibd_pipeline_spark.queries.similarity import _KM_DIM, _lloyd_sql
 
-    parts = [f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-c0 AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cent_id,
-         v AS cv
-  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        FROM embeddings ORDER BY vec_id LIMIT {_KM_K})
-)"""]
-    for r in range(1, _KM_ITERS + 1):
-        parts.append(f""",
-a{r} AS (
-  SELECT e.vec_id, e.v, c.cent_id, {_km_dist('e', 'c')} AS d
-  FROM e CROSS JOIN c{r - 1} c
-), b{r} AS (
-  SELECT vec_id, v, cent_id, d,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cent_id) AS rn
-  FROM a{r}
-), m{r} AS (
-  SELECT cent_id, i AS pos,
-         CAST(SUM(CAST(FLOOR(v[i] * 100000000.0) AS BIGINT)) AS DOUBLE)
-           / (100000000.0 * COUNT(*)) AS m
-  FROM b{r}, UNNEST(generate_series(1,{_KM_DIM})) t(i)
-  WHERE rn = 1 GROUP BY cent_id, i
-), c{r} AS (
-  SELECT p.cent_id, COALESCE(n.cv, p.cv) AS cv
-  FROM c{r - 1} p LEFT JOIN (
-    SELECT cent_id, list(m ORDER BY pos) AS cv FROM m{r} GROUP BY cent_id
-  ) n USING (cent_id)
-)""")
-    parts.append(f""",
-fa AS (
-  SELECT e.vec_id, c.cent_id, {_km_dist('e', 'c')} AS d
-  FROM e CROSS JOIN c{_KM_ITERS} c
-), fb AS (
-  SELECT vec_id, cent_id,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cent_id) AS rn
-  FROM fa
-), asg AS (
+    return _lloyd_sql() + f""", asg AS (
   SELECT vec_id, cent_id FROM fb WHERE rn = 1
 ), nf AS (
   SELECT e.vec_id,
@@ -1402,8 +1354,7 @@ SELECT mem.cent_id AS cluster_id, mem.n_members,
        mem.n_members - COALESCE(pc.n_pruned, 0) AS n_kept,
        pc.max_cos
 FROM mem LEFT JOIN pc USING (cent_id)
-ORDER BY cluster_id""")
-    return "".join(parts)
+ORDER BY cluster_id"""
 
 
 @query("dedup_semantic_clusters", oracle=_semdedup_oracle)

@@ -18,6 +18,25 @@ from ibd_pipeline_spark.operators import dedup as D
 from ibd_pipeline_spark.queries import query
 from ibd_pipeline_spark.queries.dedup import _mh_cte, _REPS_SRC
 
+# Exact prefix-filter candidates at τ = 1/2 over `tok(doc_id, h)`: each
+# doc's first n − ⌈n/2⌉ + 1 hashed shingles in ascending corpus
+# frequency (ties by h); two docs sharing one are a `tcand` pair.
+_PREFIX_CAND_SQL = """, tfr AS (
+  SELECT h, CAST(COUNT(*) AS BIGINT) AS freq FROM tok GROUP BY h
+), stp AS (
+  SELECT doc_id, array_agg(h ORDER BY freq, h) AS stoks,
+         CAST(COUNT(*) AS BIGINT) AS n
+  FROM (SELECT tok.doc_id, tok.h, tfr.freq FROM tok JOIN tfr USING (h))
+  GROUP BY doc_id
+), pref AS (
+  SELECT doc_id, u.h
+  FROM stp, unnest(list_slice(stoks, 1,
+         CAST(n - CEIL(n / 2.0) + 1 AS BIGINT))) AS u(h)
+), tcand AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM pref a JOIN pref b ON a.h = b.h AND a.doc_id < b.doc_id
+)"""
+
 # ---------------------------------------------------------------------------
 # LSH recall/precision evaluation against exact same-universe truth (r13)
 # ---------------------------------------------------------------------------
@@ -32,21 +51,9 @@ def _lsh_recall_oracle() -> str:
         + """
 , tok AS (
   SELECT doc_id, u.h FROM state, unnest(hs) AS u(h)
-), tfr AS (
-  SELECT h, CAST(COUNT(*) AS BIGINT) AS freq FROM tok GROUP BY h
-), stp AS (
-  SELECT doc_id, array_agg(h ORDER BY freq, h) AS stoks,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM (SELECT tok.doc_id, tok.h, tfr.freq FROM tok JOIN tfr USING (h))
-  GROUP BY doc_id
-), pref AS (
-  SELECT doc_id, u.h
-  FROM stp, unnest(list_slice(stoks, 1,
-         CAST(n - CEIL(n / 2.0) + 1 AS BIGINT))) AS u(h)
-), tcand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM pref a JOIN pref b ON a.h = b.h AND a.doc_id < b.doc_id
-), truth AS (
+)"""
+        + _PREFIX_CAND_SQL
+        + """, truth AS (
   SELECT t.id_a, t.id_b
   FROM tcand t JOIN state a ON a.doc_id = t.id_a
                JOIN state b ON b.doc_id = t.id_b
@@ -501,21 +508,7 @@ WITH {_REPS_SRC}, tok AS (
 ), sets AS (
   SELECT doc_id, list(h ORDER BY h) AS hs, CAST(COUNT(*) AS BIGINT) AS n
   FROM tok GROUP BY doc_id
-), tfr AS (
-  SELECT h, CAST(COUNT(*) AS BIGINT) AS freq FROM tok GROUP BY h
-), stp AS (
-  SELECT doc_id, array_agg(h ORDER BY freq, h) AS stoks,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM (SELECT tok.doc_id, tok.h, tfr.freq FROM tok JOIN tfr USING (h))
-  GROUP BY doc_id
-), pref AS (
-  SELECT doc_id, u.h
-  FROM stp, unnest(list_slice(stoks, 1,
-         CAST(n - CEIL(n / 2.0) + 1 AS BIGINT))) AS u(h)
-), tcand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM pref a JOIN pref b ON a.h = b.h AND a.doc_id < b.doc_id
-), jp AS (
+)""" + _PREFIX_CAND_SQL + f""", jp AS (
   SELECT CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE)
          / (a.n + b.n - len(list_intersect(a.hs, b.hs))) AS s,
          2 * len(list_intersect(a.hs, b.hs))
@@ -634,21 +627,9 @@ def _lsh_calibration_oracle() -> str:
         + f"""
 , tok AS (
   SELECT doc_id, u.h FROM state, unnest(hs) AS u(h)
-), tfr AS (
-  SELECT h, CAST(COUNT(*) AS BIGINT) AS freq FROM tok GROUP BY h
-), stp AS (
-  SELECT doc_id, array_agg(h ORDER BY freq, h) AS stoks,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM (SELECT tok.doc_id, tok.h, tfr.freq FROM tok JOIN tfr USING (h))
-  GROUP BY doc_id
-), pref AS (
-  SELECT doc_id, u.h
-  FROM stp, unnest(list_slice(stoks, 1,
-         CAST(n - CEIL(n / 2.0) + 1 AS BIGINT))) AS u(h)
-), tcand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM pref a JOIN pref b ON a.h = b.h AND a.doc_id < b.doc_id
-), tp AS (
+)"""
+        + _PREFIX_CAND_SQL
+        + f""", tp AS (
   SELECT CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE)
          / (len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs))) AS s
   FROM tcand t JOIN state a ON a.doc_id = t.id_a

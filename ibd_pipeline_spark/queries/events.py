@@ -22,6 +22,43 @@ from ibd_pipeline_spark.catalog import load
 from ibd_pipeline_spark.queries import davg, query
 
 
+def _daily_value_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(did, tot): per day index (days since 2024-01-01) the exact
+    decimal sum of `value`, rounded at 4 in the decimal domain."""
+    ev = load(spark, sf_dir, "events")
+    return ev.groupBy(
+        F.datediff(
+            F.date_trunc("day", F.col("ts")).cast("date"),
+            F.lit("2024-01-01").cast("date"),
+        )
+        .cast("bigint")
+        .alias("did")
+    ).agg(
+        F.round(F.sum(F.col("value").cast("decimal(28,8)")), 4).alias("tot")
+    )
+
+
+def _asof_inputs(
+    spark: SparkSession, sf_dir: str
+) -> "tuple[DataFrame, DataFrame]":
+    """(probes, events) of the as-of joins: the first 100 orders as
+    (o_orderkey, order_ts, k = o_custkey % 50), and every event as
+    (k = user_id, event_ts)."""
+    probes = (
+        load(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") < 100)
+        .select(
+            "o_orderkey",
+            F.col("o_orderdate").cast("timestamp").alias("order_ts"),
+            (F.col("o_custkey") % 50).alias("k"),
+        )
+    )
+    events = load(spark, sf_dir, "events").select(
+        F.col("user_id").alias("k"), F.col("ts").alias("event_ts")
+    )
+    return probes, events
+
+
 @query(
     "events_tumbling_window",
     oracle="""
@@ -258,18 +295,7 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ibd_pipeline_spark.operators.joins import as_of_join
 
-    probes = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 100)
-        .select(
-            "o_orderkey",
-            F.col("o_orderdate").cast("timestamp").alias("order_ts"),
-            (F.col("o_custkey") % 50).alias("k"),
-        )
-    )
-    events = load(spark, sf_dir, "events").select(
-        F.col("user_id").alias("k"), F.col("ts").alias("event_ts")
-    )
+    probes, events = _asof_inputs(spark, sf_dir)
     return (
         as_of_join(probes, events, key="k", probe_time="order_ts", event_time="event_ts")
         .select(
@@ -513,18 +539,8 @@ def events_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     two metadata-sized equi-joins on day index, two one-row moment
     folds. Nothing is ever proportional to raw event volume except
     the first aggregate scan."""
-    ev = load(spark, sf_dir, "events")
-    d = ev.groupBy(
-        F.datediff(
-            F.date_trunc("day", F.col("ts")).cast("date"),
-            F.lit("2024-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("did")
-    ).agg(
-        F.round(F.sum(F.col("value").cast("decimal(28,8)")), 4)
-        .cast("decimal(28,8)")
-        .alias("sd")
+    d = _daily_value_totals(spark, sf_dir).select(
+        "did", F.col("tot").cast("decimal(28,8)").alias("sd")
     )
     a, b = d.alias("a"), d.alias("b")
 
@@ -642,18 +658,8 @@ def events_seasonal_strength_anova(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: one day-grain aggregate (≤ days rows forever), one
     (period, residue) aggregate over day×3 rows — all metadata-sized
     after the first scan; no windows."""
-    ev = load(spark, sf_dir, "events")
-    d = ev.groupBy(
-        F.datediff(
-            F.date_trunc("day", F.col("ts")).cast("date"),
-            F.lit("2024-01-01").cast("date"),
-        )
-        .cast("bigint")
-        .alias("did")
-    ).agg(
-        F.round(F.sum(F.col("value").cast("decimal(28,8)")), 4)
-        .cast("double")
-        .alias("x")
+    d = _daily_value_totals(spark, sf_dir).select(
+        "did", F.col("tot").cast("double").alias("x")
     )
     tot = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -874,37 +880,14 @@ def events_fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined (type, hour) count — the grain is
     calendar-bounded — then a type-level moment aggregate; no window,
     no join."""
+    from ibd_pipeline_spark.streaming.burstiness import fano_report
+
     ev = load(spark, sf_dir, "events")
     h = ev.groupBy(
         "event_type",
         F.date_trunc("hour", "ts").alias("hour"),
     ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    m = h.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hours"),
-        F.sum("c").cast("bigint").alias("s"),
-        F.sum(F.col("c") * F.col("c")).cast("bigint").alias("q"),
-    )
-    mu = F.col("s").cast("double") / F.col("n_hours")
-    # n_hours == 1 → no sample variance; emit NULL, never NaN
-    # (ADVICE r10; streaming twin streaming/burstiness.py matches)
-    vr = F.when(
-        F.col("n_hours") > 1,
-        (
-            F.col("q").cast("double")
-            - F.col("s").cast("double") * F.col("s") / F.col("n_hours")
-        )
-        / (F.col("n_hours") - 1),
-    )
-    sd = F.sqrt(vr)
-    return m.select(
-        "event_type",
-        "n_hours",
-        F.col("s").alias("n_events"),
-        F.round(mu, 6).alias("mean_per_hour"),
-        F.round(vr / mu, 6).alias("fano_factor"),
-        F.round(vr / (mu * mu), 6).alias("cv_squared"),
-        F.round((sd - mu) / (sd + mu), 6).alias("burstiness"),
-    ).orderBy("event_type")
+    return fano_report(h).orderBy("event_type")
 
 
 # ---------------------------------------------------------------------------

@@ -13,23 +13,119 @@ from ibd_pipeline_spark.catalog import load
 from ibd_pipeline_spark.queries import query
 
 # ---------------------------------------------------------------------------
-# Global transitivity (triangles vs wedges) of the co-activity graph
+# The user co-activity graph every query here reads: an edge joins two
+# users active in the same (event_type, hour) bucket.
 # ---------------------------------------------------------------------------
 
-_TRANS_SQL = """
+
+def _coactivity_pairs(
+    spark: SparkSession, sf_dir: str, max_user: "int | None"
+) -> DataFrame:
+    """(u, v) with u < v, one row per (event_type, hour) bucket the two
+    users share. The `user_id < max_user` slice bounds the bench, not
+    the shape; None keeps every user."""
+    ev = load(spark, sf_dir, "events")
+    if max_user is not None:
+        ev = ev.filter(F.col("user_id") < max_user)
+    b = ev.select(
+        "event_type", F.date_trunc("hour", "ts").alias("h"), "user_id"
+    ).distinct()
+    a, c = b.alias("a"), b.alias("c")
+    return a.join(
+        c,
+        (F.col("a.event_type") == F.col("c.event_type"))
+        & (F.col("a.h") == F.col("c.h"))
+        & (F.col("a.user_id") < F.col("c.user_id")),
+    ).select(F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v"))
+
+
+def _coactivity_edges(
+    spark: SparkSession, sf_dir: str, max_user: "int | None" = 100
+) -> DataFrame:
+    """The distinct edge list (u < v), checkpointed: every caller reads
+    it more than once."""
+    return (
+        _coactivity_pairs(spark, sf_dir, max_user)
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _sym_deg(e: DataFrame) -> "tuple[DataFrame, DataFrame]":
+    """(sym, deg): each edge in both directions, and each node n's
+    degree."""
+    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    deg = sym.groupBy(F.col("u").alias("n")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("deg")
+    )
+    return sym, deg
+
+
+def _triangles(e: DataFrame) -> DataFrame:
+    """Every triangle once, as (a, b, c) with a < b < c: the wedge at
+    the smallest corner closed by the (b, c) edge."""
+    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
+    return (
+        e1.join(
+            e2,
+            (F.col("e1.u") == F.col("e2.u")) & (F.col("e1.v") < F.col("e2.v")),
+        )
+        .join(
+            e3,
+            (F.col("e3.u") == F.col("e1.v")) & (F.col("e3.v") == F.col("e2.v")),
+        )
+        .select(
+            F.col("e1.u").alias("a"),
+            F.col("e1.v").alias("b"),
+            F.col("e2.v").alias("c"),
+        )
+    )
+
+
+def _edge_support(edges: DataFrame) -> DataFrame:
+    """(u, v, support): the number of triangles each edge closes, 0 for
+    an edge in none."""
+    tri = _triangles(edges)
+    edge_tri = (
+        tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
+        .unionAll(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
+        .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
+    )
+    return (
+        edges.join(edge_tri.withColumn("hit", F.lit(1)), ["u", "v"], "left")
+        .groupBy("u", "v")
+        .agg(F.count("hit").cast("bigint").alias("support"))
+    )
+
+
+def _coactivity_sql(
+    max_user: "int | None" = 100, edges: str = "SELECT DISTINCT u, v FROM p"
+) -> str:
+    """The oracle twin of the builders above: `WITH b, p, e, sym, deg`,
+    where `edges` selects the edge list from the bucket pairs `p`."""
+    where = "" if max_user is None else f" WHERE user_id < {max_user}"
+    return f"""
 WITH b AS (
   SELECT DISTINCT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
          user_id
-  FROM events WHERE user_id < 100
-), e AS (
-  SELECT DISTINCT a.user_id AS u, c.user_id AS v
+  FROM events{where}
+), p AS (
+  SELECT a.user_id AS u, c.user_id AS v
   FROM b a JOIN b c
     ON a.event_type = c.event_type AND a.h = c.h AND a.user_id < c.user_id
+), e AS MATERIALIZED (
+  {edges}
 ), sym AS (
   SELECT u, v FROM e UNION ALL SELECT v, u FROM e
 ), deg AS (
   SELECT u AS n, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY u
-), tri AS (
+)"""
+
+# ---------------------------------------------------------------------------
+# Global transitivity (triangles vs wedges) of the co-activity graph
+# ---------------------------------------------------------------------------
+
+_TRANS_SQL = _coactivity_sql() + """, tri AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_tri
   FROM e e1 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
             JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v
@@ -66,38 +162,9 @@ def graph_transitivity_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SCALE.md round-12, the named degradation mode); the triangle
     closure is an edge-list equi-join. user_id < 100 bounds the
     bench, not the shape."""
-    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 100)
-    b = ev.select(
-        "event_type", F.date_trunc("hour", "ts").alias("h"), "user_id"
-    ).distinct()
-    a, c = b.alias("a"), b.alias("c")
-    e = (
-        a.join(
-            c,
-            (F.col("a.event_type") == F.col("c.event_type"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col("a.user_id") < F.col("c.user_id")),
-        )
-        .select(F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)  # reused by degrees + triangles
-    )
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy(F.col("u").alias("n")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(
-            e2,
-            (F.col("e1.u") == F.col("e2.u")) & (F.col("e1.v") < F.col("e2.v")),
-        )
-        .join(
-            e3,
-            (F.col("e3.u") == F.col("e1.v")) & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_tri"))
-    )
+    e = _coactivity_edges(spark, sf_dir)
+    _sym, deg = _sym_deg(e)
+    tri = _triangles(e).agg(F.count(F.lit(1)).cast("bigint").alias("n_tri"))
     wed = deg.agg(
         F.sum(F.expr("(deg * (deg - 1)) DIV 2"))
         .cast("bigint")
@@ -129,19 +196,9 @@ def _lpa_oracle() -> str:
     """DuckDB CTE unroll of 2 synchronous LPA rounds (majority
     neighbor label, ties to the smallest label) over the co-activity
     graph — same unroll technique as the k-means/k-core oracles."""
-    head = """
-WITH b AS (
-  SELECT DISTINCT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         user_id
-  FROM events WHERE user_id < 100
-), e AS (
-  SELECT a.user_id AS u, c.user_id AS v
-  FROM b a JOIN b c
-    ON a.event_type = c.event_type AND a.h = c.h AND a.user_id < c.user_id
-  GROUP BY 1, 2 HAVING COUNT(*) >= 3
-), sym AS (
-  SELECT u, v FROM e UNION ALL SELECT v, u FROM e
-), l0 AS (
+    head = _coactivity_sql(
+        edges="SELECT u, v FROM p GROUP BY u, v HAVING COUNT(*) >= 3"
+    ) + """, l0 AS (
   SELECT DISTINCT u AS node, u AS label FROM sym
 )"""
     rounds = []
@@ -190,21 +247,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round is one (node, label) count shuffle + a
     per-node struct-max — Σ deg work per round, never quadratic;
     labels live on nodes (bounded state)."""
-    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 100)
-    b = ev.select(
-        "event_type", F.date_trunc("hour", "ts").alias("h"), "user_id"
-    ).distinct()
-    a, c = b.alias("a"), b.alias("c")
     e = (
-        a.join(
-            c,
-            (F.col("a.event_type") == F.col("c.event_type"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col("a.user_id") < F.col("c.user_id")),
-        )
-        .groupBy(
-            F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v")
-        )
+        _coactivity_pairs(spark, sf_dir, 100)
+        .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= 3)
         .select("u", "v")
@@ -244,20 +289,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Jaccard link prediction over the co-activity graph (r13)
 # ---------------------------------------------------------------------------
 
-_JACCARD_LP_SQL = """
-WITH b AS (
-  SELECT DISTINCT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         user_id
-  FROM events WHERE user_id < 100
-), e AS (
-  SELECT DISTINCT a.user_id AS u, c.user_id AS v
-  FROM b a JOIN b c
-    ON a.event_type = c.event_type AND a.h = c.h AND a.user_id < c.user_id
-), sym AS (
-  SELECT u, v FROM e UNION ALL SELECT v, u FROM e
-), deg AS (
-  SELECT u AS n, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY u
-), common AS (
+_JACCARD_LP_SQL = _coactivity_sql() + """, common AS (
   SELECT t1.v AS u, t2.v AS v, CAST(COUNT(*) AS BIGINT) AS cn
   FROM sym t1 JOIN sym t2 ON t1.u = t2.u AND t1.v < t2.v
   GROUP BY t1.v, t2.v
@@ -297,26 +329,8 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     (SCALE.md r13 probes: volume-linear, density-quadratic-by-
     construction with the same cap/salt mitigation); the non-adjacency
     check is one anti-join against the edge list."""
-    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 100)
-    b = ev.select(
-        "event_type", F.date_trunc("hour", "ts").alias("h"), "user_id"
-    ).distinct()
-    a, c = b.alias("a"), b.alias("c")
-    e = (
-        a.join(
-            c,
-            (F.col("a.event_type") == F.col("c.event_type"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col("a.user_id") < F.col("c.user_id")),
-        )
-        .select(F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)  # reused: wedges, degrees, anti-join
-    )
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy(F.col("u").alias("n")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    )
+    e = _coactivity_edges(spark, sf_dir)
+    sym, deg = _sym_deg(e)
     t1, t2 = sym.alias("t1"), sym.alias("t2")
     common = (
         t1.join(
@@ -353,20 +367,7 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
 # Rich-club coefficient of the co-activity graph (r13)
 # ---------------------------------------------------------------------------
 
-_RICH_CLUB_SQL = """
-WITH b AS (
-  SELECT DISTINCT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         user_id
-  FROM events WHERE user_id < 100
-), e AS (
-  SELECT DISTINCT a.user_id AS u, c.user_id AS v
-  FROM b a JOIN b c
-    ON a.event_type = c.event_type AND a.h = c.h AND a.user_id < c.user_id
-), sym AS (
-  SELECT u, v FROM e UNION ALL SELECT v, u FROM e
-), deg AS (
-  SELECT u AS n, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY u
-), ks AS (
+_RICH_CLUB_SQL = _coactivity_sql() + """, ks AS (
   SELECT k FROM (VALUES (10), (20), (40)) AS t(k)
 ), club AS (
   SELECT ks.k, CAST(COUNT(*) AS BIGINT) AS nk
@@ -407,26 +408,8 @@ def graph_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list against the (broadcast) degree frame twice and
     aggregates per k — O(|E|·|ks|) with catalog-sized k ladder; same
     co-activity edge bounds as the rest of the family (SCALE.md)."""
-    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 100)
-    b = ev.select(
-        "event_type", F.date_trunc("hour", "ts").alias("h"), "user_id"
-    ).distinct()
-    a, c = b.alias("a"), b.alias("c")
-    e = (
-        a.join(
-            c,
-            (F.col("a.event_type") == F.col("c.event_type"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col("a.user_id") < F.col("c.user_id")),
-        )
-        .select(F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)  # reused by degrees + club edges
-    )
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy(F.col("u").alias("n")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    )
+    e = _coactivity_edges(spark, sf_dir)
+    _sym, deg = _sym_deg(e)
     ks = e.sparkSession.createDataFrame([(10,), (20,), (40,)], "k int")
     club = (
         F.broadcast(ks)
@@ -476,19 +459,9 @@ _KCORE_K, _KCORE_ROUNDS = 3, 4
 
 
 def _kcore_oracle() -> str:
-    head = """
-WITH b AS (
-  SELECT DISTINCT event_type,
-         date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h, user_id
-  FROM events
-), e0 AS MATERIALIZED (
-  SELECT DISTINCT a.user_id AS u, c.user_id AS v
-  FROM b a JOIN b c
-    ON a.event_type = c.event_type AND a.h = c.h
-   AND a.user_id < c.user_id
-)"""
+    head = _coactivity_sql(max_user=None)
     body = ""
-    prev = "e0"
+    prev = "e"
     for r in range(1, _KCORE_ROUNDS + 1):
         body += f""",
 d{r} AS MATERIALIZED (
@@ -540,24 +513,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic, never user-quadratic (the same blocking argument as
     every dedup family); each peel round is one degree aggregate +
     one semi-join, edge-set-sized."""
-    ev = load(spark, sf_dir, "events")
-    b = ev.select(
-        "event_type",
-        F.date_trunc("hour", "ts").alias("h"),
-        "user_id",
-    ).distinct()
-    a, c = b.alias("a"), b.alias("c")
-    e = (
-        a.join(
-            c,
-            (F.col("a.event_type") == F.col("c.event_type"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col("a.user_id") < F.col("c.user_id")),
-        )
-        .select(F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _coactivity_edges(spark, sf_dir, max_user=None)
 
     def degrees(edges: DataFrame) -> DataFrame:
         return (
@@ -605,22 +561,9 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Degree assortativity of the co-activity graph
 # ---------------------------------------------------------------------------
 
-_ASSORT_SQL = """
-WITH b AS (
-  SELECT DISTINCT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         user_id
-  FROM events WHERE user_id < 150
-), e AS (
-  SELECT DISTINCT a.user_id AS u, c.user_id AS v
-  FROM b a JOIN b c
-    ON a.event_type = c.event_type AND a.h = c.h AND a.user_id < c.user_id
-), sym AS (
-  SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e
-), deg AS (
-  SELECT u AS nd, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY u
-), pairs AS (
+_ASSORT_SQL = _coactivity_sql(max_user=150) + """, pairs AS (
   SELECT du.deg AS x, dv.deg AS y
-  FROM sym JOIN deg du ON du.nd = sym.u JOIN deg dv ON dv.nd = sym.v
+  FROM sym JOIN deg du ON du.n = sym.u JOIN deg dv ON dv.n = sym.v
 ), s AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS md,
          CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
@@ -659,29 +602,9 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash joins of the edge list against the (node, degree) table —
     broadcastable, since nodes ≪ edges in any dense graph. The
     user_id < 150 slice bounds the bench, not the shape."""
-    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 150)
-    b = ev.select(
-        "event_type", F.date_trunc("hour", "ts").alias("h"), "user_id"
-    ).distinct()
-    a, c = b.alias("a"), b.alias("c")
-    e = (
-        a.join(
-            c,
-            (F.col("a.event_type") == F.col("c.event_type"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col("a.user_id") < F.col("c.user_id")),
-        )
-        .select(
-            F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v")
-        )
-        .distinct()
-    )
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy(F.col("u").alias("nd")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    )
-    du = deg.select(F.col("nd").alias("nu"), F.col("deg").alias("x"))
-    dv = deg.select(F.col("nd").alias("nv"), F.col("deg").alias("y"))
+    sym, deg = _sym_deg(_coactivity_pairs(spark, sf_dir, 150).distinct())
+    du = deg.select(F.col("n").alias("nu"), F.col("deg").alias("x"))
+    dv = deg.select(F.col("n").alias("nv"), F.col("deg").alias("y"))
     pairs = sym.join(F.broadcast(du), F.col("u") == F.col("nu")).join(
         F.broadcast(dv), F.col("v") == F.col("nv")
     )
@@ -715,20 +638,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Adamic–Adar link prediction over the co-activity graph
 # ---------------------------------------------------------------------------
 
-_AA_SQL = """
-WITH b AS (
-  SELECT DISTINCT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         user_id
-  FROM events WHERE user_id < 150
-), e AS (
-  SELECT DISTINCT a.user_id AS u, c.user_id AS v
-  FROM b a JOIN b c
-    ON a.event_type = c.event_type AND a.h = c.h AND a.user_id < c.user_id
-), sym AS (
-  SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e
-), deg AS (
-  SELECT u AS n, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY u
-), cn AS (
+_AA_SQL = _coactivity_sql(max_user=150) + """, cn AS (
   SELECT t1.v AS u, t2.v AS v, t1.u AS w
   FROM sym t1 JOIN sym t2 ON t1.u = t2.u AND t1.v < t2.v
 ), nonedge AS (
@@ -768,26 +678,8 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CENTER node — fan-out Σ_w deg(w)², the standard triangle/
     wedge bound, never user-quadratic; the user_id < 150 slice
     bounds the bench, not the shape. Top-20 is a TakeOrdered."""
-    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 150)
-    b = ev.select(
-        "event_type", F.date_trunc("hour", "ts").alias("h"), "user_id"
-    ).distinct()
-    a, c = b.alias("a"), b.alias("c")
-    e = (
-        a.join(
-            c,
-            (F.col("a.event_type") == F.col("c.event_type"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col("a.user_id") < F.col("c.user_id")),
-        )
-        .select(F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)  # edge set reused by 3 consumers
-    )
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy(F.col("u").alias("n")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    )
+    e = _coactivity_edges(spark, sf_dir, max_user=150)
+    sym, deg = _sym_deg(e)
     t1, t2 = sym.alias("t1"), sym.alias("t2")
     cn = t1.join(
         t2, (F.col("t1.u") == F.col("t2.u")) & (F.col("t1.v") < F.col("t2.v"))
@@ -823,20 +715,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Local clustering coefficient + global transitivity
 # ---------------------------------------------------------------------------
 
-_CC_SQL = """
-WITH b AS (
-  SELECT DISTINCT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         user_id
-  FROM events WHERE user_id < 100
-), e AS (
-  SELECT DISTINCT a.user_id AS u, c.user_id AS v
-  FROM b a JOIN b c
-    ON a.event_type = c.event_type AND a.h = c.h AND a.user_id < c.user_id
-), sym AS (
-  SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e
-), deg AS (
-  SELECT u AS n, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY u
-), tri AS (
+_CC_SQL = _coactivity_sql() + """, tri AS (
   -- ordered triangles u < v < w: wedge (u<v, u<w with v<w) closed by (v,w)
   SELECT e1.u, e1.v, e2.v AS w
   FROM e e1 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
@@ -877,46 +756,13 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors)² and the closing probe is an equi-join against the
     edge list — the count-triangles-in-MapReduce bound; never
     node-quadratic. user_id < 100 bounds the bench, not the shape."""
-    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 100)
-    b = ev.select(
-        "event_type", F.date_trunc("hour", "ts").alias("h"), "user_id"
-    ).distinct()
-    a, c = b.alias("a"), b.alias("c")
-    e = (
-        a.join(
-            c,
-            (F.col("a.event_type") == F.col("c.event_type"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col("a.user_id") < F.col("c.user_id")),
-        )
-        .select(F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)  # reused by degrees, wedges, closure
-    )
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy(F.col("u").alias("n")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("deg")
-    )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(
-            e2,
-            (F.col("e1.u") == F.col("e2.u")) & (F.col("e1.v") < F.col("e2.v")),
-        )
-        .join(
-            e3,
-            (F.col("e3.u") == F.col("e1.v")) & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .select(
-            F.col("e1.u").alias("u"),
-            F.col("e1.v").alias("v"),
-            F.col("e2.v").alias("w"),
-        )
-    )
+    e = _coactivity_edges(spark, sf_dir)
+    _sym, deg = _sym_deg(e)
+    tri = _triangles(e)
     pertri = (
-        tri.select(F.col("u").alias("n"))
-        .unionAll(tri.select(F.col("v").alias("n")))
-        .unionAll(tri.select(F.col("w").alias("n")))
+        tri.select(F.col("a").alias("n"))
+        .unionAll(tri.select(F.col("b").alias("n")))
+        .unionAll(tri.select(F.col("c").alias("n")))
     )
     tcount = pertri.groupBy("n").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_triangles")
@@ -942,16 +788,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Edge triangle support (the k-truss building block) (r14)
 # ---------------------------------------------------------------------------
 
-_TRI_SUPPORT_SQL = """
-WITH b AS (
-  SELECT DISTINCT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
-         user_id
-  FROM events WHERE user_id < 100
-), e AS (
-  SELECT DISTINCT a.user_id AS u, c.user_id AS v
-  FROM b a JOIN b c
-    ON a.event_type = c.event_type AND a.h = c.h AND a.user_id < c.user_id
-), tri AS (
+_TRI_SUPPORT_SQL = _coactivity_sql() + """, tri AS (
   SELECT e1.u AS a, e1.v AS b, e2.v AS c
   FROM e e1 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
             JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v
@@ -994,58 +831,9 @@ def graph_edge_triangle_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     3·|triangles| rows, and a groupBy on the edge key; the histogram
     is support-domain-sized. The user_id < 100 slice bounds BENCH
     cost exactly like the sibling graph rows."""
-    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 100)
-    b = ev.select(
-        "event_type", F.date_trunc("hour", "ts").alias("h"), "user_id"
-    ).distinct()
-    a, c = b.alias("a"), b.alias("c")
-    e = (
-        a.join(
-            c,
-            (F.col("a.event_type") == F.col("c.event_type"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col("a.user_id") < F.col("c.user_id")),
-        )
-        .select(
-            F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # edge list read 4x below
-    )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(
-            e2,
-            (F.col("e1.u") == F.col("e2.u"))
-            & (F.col("e1.v") < F.col("e2.v")),
-        )
-        .join(
-            e3,
-            (F.col("e3.u") == F.col("e1.v"))
-            & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .select(
-            F.col("e1.u").alias("a"),
-            F.col("e1.v").alias("b"),
-            F.col("e2.v").alias("c"),
-        )
-    )
-    edge_tri = (
-        tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionAll(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
-        .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
-    )
-    sup = (
-        e.join(
-            edge_tri.withColumn("hit", F.lit(1)),
-            ["u", "v"],
-            "left",
-        )
-        .groupBy("u", "v")
-        .agg(F.count("hit").cast("bigint").alias("support"))
-    )
     return (
-        sup.groupBy("support")
+        _edge_support(_coactivity_edges(spark, sf_dir))
+        .groupBy("support")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_edges"),
             F.min("u").cast("bigint").alias("min_u"),
@@ -1064,19 +852,9 @@ _TRUSS_ROUNDS = 3
 
 
 def _ktruss_oracle() -> str:
-    head = """
-WITH b AS (
-  SELECT DISTINCT event_type,
-         date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h, user_id
-  FROM events WHERE user_id < 100
-), e0 AS MATERIALIZED (
-  SELECT DISTINCT a.user_id AS u, c.user_id AS v
-  FROM b a JOIN b c
-    ON a.event_type = c.event_type AND a.h = c.h
-   AND a.user_id < c.user_id
-)"""
+    head = _coactivity_sql()
     body = ""
-    prev = "e0"
+    prev = "e"
     for r in range(1, _TRUSS_ROUNDS + 1):
         body += f""",
 t{r} AS MATERIALIZED (
@@ -1128,65 +906,18 @@ def graph_ktruss_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round localCheckpoint so Catalyst never replays earlier
     rounds; rounds are bounded (3), the production pattern for
     truss/core decompositions on a fixed compute budget."""
-    ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 100)
-    b = ev.select(
-        "event_type", F.date_trunc("hour", "ts").alias("h"), "user_id"
-    ).distinct()
-    a, c = b.alias("a"), b.alias("c")
-    e = (
-        a.join(
-            c,
-            (F.col("a.event_type") == F.col("c.event_type"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col("a.user_id") < F.col("c.user_id")),
-        )
-        .select(
-            F.col("a.user_id").alias("u"), F.col("c.user_id").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _coactivity_edges(spark, sf_dir)
 
-    def support_of(edges: DataFrame) -> DataFrame:
-        e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-        tri = (
-            e1.join(
-                e2,
-                (F.col("e1.u") == F.col("e2.u"))
-                & (F.col("e1.v") < F.col("e2.v")),
-            )
-            .join(
-                e3,
-                (F.col("e3.u") == F.col("e1.v"))
-                & (F.col("e3.v") == F.col("e2.v")),
-            )
-            .select(
-                F.col("e1.u").alias("a"),
-                F.col("e1.v").alias("b"),
-                F.col("e2.v").alias("c"),
-            )
-        )
-        edge_tri = (
-            tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .unionAll(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
-            .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
-        )
-        return (
-            edges.join(edge_tri.withColumn("hit", F.lit(1)), ["u", "v"], "left")
-            .groupBy("u", "v")
-            .agg(F.count("hit").cast("bigint").alias("support"))
-        )
-
-    # r15: fixpoint early-exit (same argument as graph_kcore_peel —
+    # Fixpoint early-exit (same argument as graph_kcore_peel —
     # the survivor set only shrinks, so an unchanged count means the
     # remaining rounds recompute identical support tables; `sup` at
-    # the break is already support_of(final e), so the returned rows
+    # the break is already _edge_support(final e), so the returned rows
     # are bit-identical while the saved rounds skip the expensive
     # per-round triangle join).
     sup = None
     prev = e.count()
     for _ in range(_TRUSS_ROUNDS):
-        sup = support_of(e)
+        sup = _edge_support(e)
         e = (
             sup.filter(F.col("support") >= _TRUSS_K - 2)
             .select("u", "v")

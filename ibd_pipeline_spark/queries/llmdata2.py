@@ -61,19 +61,9 @@ def train_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     20-row broadcast (no window operator anywhere in the plan —
     came off the unpartitioned-window allow-list in r12)."""
     d = load_wide(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    pairs = F.zip_with(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-    )
-    c = (
-        d.select(F.explode(pairs).alias("p"))
-        .groupBy(
-            F.col("p.l").alias("left_tok"), F.col("p.r").alias("right_tok")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    from ibd_pipeline_spark.queries.text import _bigram_counts
+
+    c = _bigram_counts(d, "n")
     # the (-n, left, right) struct sorts exactly the (n DESC, left,
     # right) total order, so rank = count of rows at-or-before — a
     # 20×20 broadcast nested-loop, never a window
@@ -464,10 +454,9 @@ def _near_dup_prune_oracle() -> str:
     stages (shared builders from queries.dedup) + recursive-CTE
     connected components (the dedup_cluster_components precedent) +
     survivor accounting."""
-    from ibd_pipeline_spark.queries.dedup import _mh_bands, _mh_mins
+    from ibd_pipeline_spark.queries.dedup import _mh_cte
 
-    return f"""
-WITH RECURSIVE reps0 AS (
+    reps0 = """reps0 AS (
   SELECT doc_id, text, source FROM (
     SELECT doc_id, text, source,
            ROW_NUMBER() OVER (
@@ -475,39 +464,9 @@ WITH RECURSIVE reps0 AS (
              ORDER BY doc_id, text, source) AS rn
     FROM documents) t
   WHERE rn = 1
-), toksets AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM reps0
-), grams AS (
-  SELECT doc_id, unnest(
-    CASE WHEN len(w) >= 3
-         THEN list_transform(range(0, len(w) - 2),
-                             i -> concat_ws(' ', w[i+1], w[i+2], w[i+3]))
-         ELSE [array_to_string(w, ' ')] END) AS g
-  FROM toksets
-), hashed AS (
-  SELECT doc_id, substring(md5(g), 1, 8) AS h
-  FROM grams
-), state AS (
-  SELECT doc_id,
-         list_distinct(list(h)) AS hs,
-         {_mh_mins()}
-  FROM hashed GROUP BY doc_id
-), banded AS (
-  SELECT doc_id AS id, unnest([{_mh_bands()}]) AS bb FROM state
-), bflat AS (
-  SELECT id, bb.band AS band, bb.bucket AS bucket FROM banded
-), cand AS (
-  SELECT DISTINCT l.id AS id_a, r.id AS id_b
-  FROM bflat l JOIN bflat r
-    ON l.band = r.band AND l.bucket = r.bucket AND l.id < r.id
-), jpairs AS (
-  SELECT c.id_a, c.id_b
-  FROM cand c
-  JOIN state a ON a.doc_id = c.id_a
-  JOIN state b ON b.doc_id = c.id_b
-  WHERE ROUND(len(list_intersect(a.hs, b.hs)) * 1.0
-              / (len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs))),
-              6) >= 0.5
+), src AS (SELECT doc_id, text FROM reps0)"""
+    return _mh_cte(reps0, recursive=True) + """, jpairs AS (
+  SELECT id_a, id_b FROM verified WHERE jaccard >= 0.5
 ), edges AS (
   SELECT id_a AS a, id_b AS b FROM jpairs
   UNION SELECT id_b, id_a FROM jpairs

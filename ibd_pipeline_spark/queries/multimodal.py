@@ -347,8 +347,6 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     edits. Scale notes on operators/multimodal.py:
     phash_near_dup_pairs (simhash-geometry prefix blocking).
     """
-    import pyspark.sql.functions as F
-
     # the session-cached asset frame arrives pre-coalesced and
     # checkpointed (operators/multimodal.py:asset_table)
     base = M.asset_table(spark, M.asset_rows, n=48).select(
@@ -356,7 +354,8 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the 3-byte deterministic perturbation runs in the same Arrow
     # stage style as the decode (byte-exact surgery isn't a JVM
-    # binary-function strength)
+    # binary-function strength); it keeps its own mapInPandas because
+    # it rewrites asset_id and content, which M._map_blobs carries through
     from pyspark.sql.types import (
         BinaryType,
         LongType,

@@ -33,7 +33,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ibd_pipeline_spark.catalog import load
 from ibd_pipeline_spark.queries import dsum_sql, query
-from ibd_pipeline_spark.queries.avro_payload import _vlen_sql, _zz_sql
+from ibd_pipeline_spark.queries.avro_payload import (
+    _message_fields,
+    _plant_damage,
+    _quarantine_counts,
+    _vlen_sql,
+    _zz_sql,
+)
 from ibd_pipeline_spark.sources import proto_codec as P
 
 _SCHEMA_ID = 9
@@ -206,12 +212,7 @@ def io_proto_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same pipeline as io_proto_payload_roundtrip plus two
     codegen CASE branches for the planting."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        "value",
-        F.unix_micros("ts").alias("ts_us"),
-    )
+    ev = _message_fields(spark, sf_dir)
     payload = P.to_protobuf_binary(
         F.struct("event_id", "event_type", "value", "ts_us"),
         _MSG_PROTO,
@@ -222,24 +223,8 @@ def io_proto_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         P.to_confluent_proto_wire(payload, _SCHEMA_ID).alias("wire"),
     )
-    damaged = wire.select(
-        F.col("event_type").alias("orig_type"),
-        F.when(
-            F.col("event_id") % 101 == 0,
-            F.substring(F.col("wire"), 1, 7),  # frame + 1 dangling byte
-        )
-        .when(
-            F.col("event_id") % 83 == 1,
-            F.concat(
-                F.lit(b"\x01"),
-                F.substring(
-                    F.col("wire"), F.lit(2), F.length("wire") - F.lit(1)
-                ),
-            ),
-        )
-        .otherwise(F.col("wire"))
-        .alias("wire"),
-    )
+    # cut to the 6-byte frame + 1 dangling body byte
+    damaged = _plant_damage(wire, flip_mod=83, cut_mod=101, cut_len=7)
     unframed = damaged.select(
         "orig_type",
         P.proto_wire_payload(F.col("wire"), _SCHEMA_ID).alias("payload"),
@@ -251,29 +236,7 @@ def io_proto_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("payload"), _MSG_PROTO, spark, mode="PERMISSIVE"
         ).alias("r"),
     )
-    return (
-        dec.groupBy(F.col("orig_type").alias("event_type"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_msgs"),
-            F.sum(F.when(F.col("frame_null"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_bad_frame"),
-            F.sum(
-                F.when(
-                    ~F.col("frame_null") & F.col("r.event_id").isNull(), 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_bad_payload"),
-            F.sum(F.when(F.col("r.event_id").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_ok"),
-            F.sum(F.coalesce(F.col("r.event_id"), F.lit(0)))
-            .cast("bigint")
-            .alias("sum_ok_event_id"),
-        )
-        .orderBy("event_type")
-    )
+    return _quarantine_counts(dec)
 
 
 # ---------------------------------------------------------------------------

@@ -503,34 +503,25 @@ def agg_min_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "scalar_subquery_above_avg",
-    oracle="""
+_SCALAR_SUBQUERY_ABOVE_AVG_SQL = """
 SELECT o_orderkey, ROUND(o_totalprice, 2) AS o_totalprice
 FROM orders
 WHERE o_totalprice > (SELECT AVG(o_totalprice) * 1.8 FROM orders)
 ORDER BY o_orderkey
-""",
-)
+"""
+
+
+@query("scalar_subquery_above_avg", oracle=_SCALAR_SUBQUERY_ABOVE_AVG_SQL)
 def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery in a predicate: orders 1.8× above mean price.
 
     Scale: the subquery is a 1-row broadcast; the main scan stays a
     single pass with the threshold folded into the filter."""
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
-        SELECT o_orderkey, ROUND(o_totalprice, 2) AS o_totalprice
-        FROM orders
-        WHERE o_totalprice > (SELECT AVG(o_totalprice) * 1.8 FROM orders)
-        ORDER BY o_orderkey
-        """
-    )
+    return spark.sql(_SCALAR_SUBQUERY_ABOVE_AVG_SQL)
 
 
-@query(
-    "correlated_exists_subquery",
-    oracle="""
+_CORRELATED_EXISTS_SUBQUERY_SQL = """
 SELECT s_suppkey, s_name
 FROM supplier s
 WHERE EXISTS (
@@ -538,24 +529,16 @@ WHERE EXISTS (
   WHERE l.l_suppkey = s.s_suppkey AND l.l_quantity > 49
 )
 ORDER BY s_suppkey
-""",
-)
+"""
+
+
+@query("correlated_exists_subquery", oracle=_CORRELATED_EXISTS_SUBQUERY_SQL)
 def correlated_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS — planned as a left-semi join by Catalyst
     (decorrelation is automatic; never hand-roll a per-row loop)."""
     for t in ("supplier", "lineitem"):
         load(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(
-        """
-        SELECT s_suppkey, s_name
-        FROM supplier s
-        WHERE EXISTS (
-          SELECT 1 FROM lineitem l
-          WHERE l.l_suppkey = s.s_suppkey AND l.l_quantity > 49
-        )
-        ORDER BY s_suppkey
-        """
-    )
+    return spark.sql(_CORRELATED_EXISTS_SUBQUERY_SQL)
 
 
 @query(

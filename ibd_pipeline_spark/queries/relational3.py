@@ -300,19 +300,9 @@ def join_asof_nearest_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     earlier per-side second-truncation mis-resolved sub-second
     ties). No range explosion, no second exchange."""
     from ibd_pipeline_spark.operators.joins import asof_nearest_join
+    from ibd_pipeline_spark.queries.events import _asof_inputs
 
-    probes = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") < 100)
-        .select(
-            "o_orderkey",
-            F.col("o_orderdate").cast("timestamp").alias("order_ts"),
-            (F.col("o_custkey") % 50).alias("k"),
-        )
-    )
-    events = load(spark, sf_dir, "events").select(
-        F.col("user_id").alias("k"), F.col("ts").alias("event_ts")
-    )
+    probes, events = _asof_inputs(spark, sf_dir)
     return (
         asof_nearest_join(
             probes,

@@ -78,9 +78,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q4_order_priority_exists",
-    oracle="""
+_Q4_SQL = """
 SELECT o_orderpriority, COUNT(*) AS order_count
 FROM orders o
 WHERE o.o_orderdate >= TIMESTAMP '1997-01-01'
@@ -91,8 +89,10 @@ WHERE o.o_orderdate >= TIMESTAMP '1997-01-01'
       AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
-""",
-)
+"""
+
+
+@query("q4_order_priority_exists", oracle=_Q4_SQL)
 def q4_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: priority counts over orders with a correlated
     EXISTS on lateness (l_shipdate > o_orderdate + 60 days stands in
@@ -100,20 +100,7 @@ def q4_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-semi join on orderkey with the date condition as a join
     predicate — one shuffle, no per-row subquery execution."""
     _views(spark, sf_dir, "orders", "lineitem")
-    return spark.sql(
-        """
-        SELECT o_orderpriority, COUNT(*) AS order_count
-        FROM orders o
-        WHERE o.o_orderdate >= TIMESTAMP '1997-01-01'
-          AND o.o_orderdate < TIMESTAMP '1997-04-01'
-          AND EXISTS (
-            SELECT 1 FROM lineitem l
-            WHERE l.l_orderkey = o.o_orderkey
-              AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-        GROUP BY o_orderpriority
-        ORDER BY o_orderpriority
-        """
-    )
+    return spark.sql(_Q4_SQL)
 
 
 @query(
@@ -263,9 +250,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q11_important_parts",
-    oracle="""
+_Q11_SQL = """
 SELECT l.l_partkey,
        CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(28,8))), 2) AS DOUBLE) AS part_value
 FROM lineitem l
@@ -280,8 +265,10 @@ HAVING SUM(CAST(l.l_extendedprice AS DECIMAL(28,8))) > (
   JOIN nation n2   ON s2.s_nationkey = n2.n_nationkey
   WHERE n2.n_name = 'NATION_3')
 ORDER BY part_value DESC, l_partkey
-""",
-)
+"""
+
+
+@query("q11_important_parts", oracle=_Q11_SQL)
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: per-part value with a HAVING threshold that is
     a scalar subquery over the SAME filtered join (fraction of total).
@@ -290,24 +277,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning. The threshold is a 1-row broadcast; the grouped scan
     runs once (Spark reuses the exchange for the two aggregations)."""
     _views(spark, sf_dir, "lineitem", "supplier", "nation")
-    return spark.sql(
-        """
-        SELECT l.l_partkey,
-               CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(28,8))), 2) AS DOUBLE) AS part_value
-        FROM lineitem l
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation n   ON s.s_nationkey = n.n_nationkey
-        WHERE n.n_name = 'NATION_3'
-        GROUP BY l.l_partkey
-        HAVING SUM(CAST(l.l_extendedprice AS DECIMAL(28,8))) > (
-          SELECT SUM(CAST(l2.l_extendedprice AS DECIMAL(28,8))) * CAST(0.001 AS DECIMAL(10,6))
-          FROM lineitem l2
-          JOIN supplier s2 ON l2.l_suppkey = s2.s_suppkey
-          JOIN nation n2   ON s2.s_nationkey = n2.n_nationkey
-          WHERE n2.n_name = 'NATION_3')
-        ORDER BY part_value DESC, l_partkey
-        """
-    )
+    return spark.sql(_Q11_SQL)
 
 
 @query(
@@ -343,9 +313,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q15_top_supplier",
-    oracle="""
+_Q15_SQL = """
 WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
          SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))) AS total_revenue
@@ -358,8 +326,10 @@ FROM supplier s
 JOIN revenue r ON s.s_suppkey = r.supplier_no
 WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
 ORDER BY s_suppkey
-""",
-)
+"""
+
+
+@query("q15_top_supplier", oracle=_Q15_SQL)
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: supplier(s) achieving the maximum quarterly
     revenue — the view-reused-twice pattern. Revenue accumulates in
@@ -367,27 +337,10 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     and partitionings. Spark plans the CTE once with exchange reuse;
     the MAX is a 1-row broadcast back onto the grouped result."""
     _views(spark, sf_dir, "lineitem", "supplier")
-    return spark.sql(
-        """
-        WITH revenue AS (
-          SELECT l_suppkey AS supplier_no,
-                 SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,8))) AS total_revenue
-          FROM lineitem
-          WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'
-          GROUP BY l_suppkey)
-        SELECT s.s_suppkey, s.s_name,
-               CAST(ROUND(r.total_revenue, 2) AS DOUBLE) AS total_revenue
-        FROM supplier s
-        JOIN revenue r ON s.s_suppkey = r.supplier_no
-        WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-        ORDER BY s_suppkey
-        """
-    )
+    return spark.sql(_Q15_SQL)
 
 
-@query(
-    "q16_supplier_cnt",
-    oracle="""
+_Q16_SQL = """
 SELECT p.p_brand, p.p_type, p.p_size,
        COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
 FROM lineitem l
@@ -397,8 +350,10 @@ WHERE p.p_brand <> 'Brand#45' AND p.p_type <> 'PROMO'
   AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
 GROUP BY p.p_brand, p.p_type, p.p_size
 ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-""",
-)
+"""
+
+
+@query("q16_supplier_cnt", oracle=_Q16_SQL)
 def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct-supplier counts per part attribute
     triple with a NOT IN exclusion subquery (negative-balance
@@ -407,24 +362,10 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclusion list is tiny. COUNT(DISTINCT) expands per group after
     the IN-list prune of part."""
     _views(spark, sf_dir, "lineitem", "part", "supplier")
-    return spark.sql(
-        """
-        SELECT p.p_brand, p.p_type, p.p_size,
-               COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
-        FROM lineitem l
-        JOIN part p ON l.l_partkey = p.p_partkey
-        WHERE p.p_brand <> 'Brand#45' AND p.p_type <> 'PROMO'
-          AND p.p_size IN (1, 4, 7, 10, 13, 16, 19, 22)
-          AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        GROUP BY p.p_brand, p.p_type, p.p_size
-        ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-        """
-    )
+    return spark.sql(_Q16_SQL)
 
 
-@query(
-    "q17_small_qty_revenue",
-    oracle="""
+_Q17_SQL = """
 SELECT ROUND(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) / 7.0, 4) AS avg_yearly
 FROM lineitem l
 JOIN part p ON l.l_partkey = p.p_partkey
@@ -432,8 +373,10 @@ WHERE p.p_brand = 'Brand#23'
   AND l.l_quantity < (
     SELECT 0.2 * AVG(l2.l_quantity)
     FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey)
-""",
-)
+"""
+
+
+@query("q17_small_qty_revenue", oracle=_Q17_SQL)
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17: revenue lost to small-quantity orders — correlated
     AVG threshold per part. Quantities are integral doubles, so the
@@ -442,22 +385,10 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery into an aggregate-then-join on partkey rather than a
     per-row re-scan."""
     _views(spark, sf_dir, "lineitem", "part")
-    return spark.sql(
-        """
-        SELECT ROUND(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) / 7.0, 4) AS avg_yearly
-        FROM lineitem l
-        JOIN part p ON l.l_partkey = p.p_partkey
-        WHERE p.p_brand = 'Brand#23'
-          AND l.l_quantity < (
-            SELECT 0.2 * AVG(l2.l_quantity)
-            FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey)
-        """
-    )
+    return spark.sql(_Q17_SQL)
 
 
-@query(
-    "q20_part_promotion",
-    oracle="""
+_Q20_SQL = """
 SELECT s_suppkey, s_name
 FROM supplier
 WHERE s_suppkey IN (
@@ -466,8 +397,10 @@ WHERE s_suppkey IN (
   GROUP BY l_suppkey, l_partkey
   HAVING SUM(l_quantity) > 80)
 ORDER BY s_suppkey
-""",
-)
+"""
+
+
+@query("q20_part_promotion", oracle=_Q20_SQL)
 def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers with excess shipped volume on some
     part — IN over a grouped HAVING subquery (the 50%-of-availqty
@@ -475,23 +408,10 @@ def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plans as aggregate → semi join; quantity sums are exact integer
     doubles so the HAVING boundary is stable."""
     _views(spark, sf_dir, "supplier", "lineitem")
-    return spark.sql(
-        """
-        SELECT s_suppkey, s_name
-        FROM supplier
-        WHERE s_suppkey IN (
-          SELECT l_suppkey FROM lineitem
-          WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-          GROUP BY l_suppkey, l_partkey
-          HAVING SUM(l_quantity) > 80)
-        ORDER BY s_suppkey
-        """
-    )
+    return spark.sql(_Q20_SQL)
 
 
-@query(
-    "q21_waiting_supplier",
-    oracle="""
+_Q21_SQL = """
 SELECT s.s_name, COUNT(*) AS numwait
 FROM supplier s
 JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
@@ -507,8 +427,10 @@ WHERE o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
 GROUP BY s.s_name
 ORDER BY numwait DESC, s_name
 LIMIT 20
-""",
-)
+"""
+
+
+@query("q21_waiting_supplier", oracle=_Q21_SQL)
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: the sole-blame pattern — suppliers who were
     the ONLY returner on multi-supplier finished orders (l_returnflag
@@ -518,30 +440,10 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exchange. Fully-qualified ORDER BY makes the LIMIT 20
     deterministic (s_name is unique)."""
     _views(spark, sf_dir, "supplier", "lineitem", "orders")
-    return spark.sql(
-        """
-        SELECT s.s_name, COUNT(*) AS numwait
-        FROM supplier s
-        JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-        JOIN orders o    ON o.o_orderkey = l1.l_orderkey
-        WHERE o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-          AND EXISTS (
-            SELECT 1 FROM lineitem l2
-            WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-          AND NOT EXISTS (
-            SELECT 1 FROM lineitem l3
-            WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-              AND l3.l_returnflag = 'R')
-        GROUP BY s.s_name
-        ORDER BY numwait DESC, s_name
-        LIMIT 20
-        """
-    )
+    return spark.sql(_Q21_SQL)
 
 
-@query(
-    "q22_idle_customers",
-    oracle="""
+_Q22_SQL = """
 SELECT c.c_nationkey, COUNT(*) AS numcust,
        CAST(ROUND(SUM(CAST(c.c_acctbal AS DECIMAL(28,8))), 2) AS DOUBLE) AS totacctbal
 FROM customer c
@@ -556,8 +458,10 @@ WHERE c.c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
       AND o.o_orderdate >= TIMESTAMP '2000-01-01')
 GROUP BY c.c_nationkey
 ORDER BY c_nationkey
-""",
-)
+"""
+
+
+@query("q22_idle_customers", oracle=_Q22_SQL)
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: wealthy-but-idle customers — above-average
     balance (scalar subquery; exact decimal sum / count so the
@@ -566,21 +470,4 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     recent orders (anti join). Three different subquery kinds in one
     query: scalar, anti, grouped outer."""
     _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(
-        """
-        SELECT c.c_nationkey, COUNT(*) AS numcust,
-               CAST(ROUND(SUM(CAST(c.c_acctbal AS DECIMAL(28,8))), 2) AS DOUBLE) AS totacctbal
-        FROM customer c
-        WHERE c.c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
-          AND c.c_acctbal > (
-            SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(28,8))) AS DOUBLE) / COUNT(*)
-            FROM customer c2
-            WHERE c2.c_acctbal > 0.0 AND c2.c_nationkey IN (1, 3, 5, 7, 9, 11, 13))
-          AND NOT EXISTS (
-            SELECT 1 FROM orders o
-            WHERE o.o_custkey = c.c_custkey
-              AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-        GROUP BY c.c_nationkey
-        ORDER BY c_nationkey
-        """
-    )
+    return spark.sql(_Q22_SQL)

@@ -15,6 +15,46 @@ from ibd_pipeline_spark.catalog import load
 from ibd_pipeline_spark.operators import similarity as S
 from ibd_pipeline_spark.queries import query
 
+def _embedding_slice(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """(vec_id, label, emb, nrm) for vec_id < n: the embedding cast to
+    a double array and its L2 norm (an element-order fold, the same
+    addition order DuckDB's oracles replay)."""
+    return (
+        load(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") < n)
+        .select(
+            "vec_id",
+            "label",
+            F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
+        )
+        .select(
+            "vec_id",
+            "label",
+            "emb",
+            F.sqrt(
+                F.aggregate(
+                    F.transform("emb", lambda x: x * x),
+                    F.lit(0.0),
+                    lambda a, x: a + x,
+                )
+            ).alias("nrm"),
+        )
+    )
+
+
+# The oracles' shared tail: top-5 of `scored` (qid, cid, cosine_sim)
+# per query, ties to the smaller corpus id.
+_TOP5_SQL = """, ranked AS (
+  SELECT qid AS query_id, cid AS corpus_id, cosine_sim,
+         ROW_NUMBER() OVER (PARTITION BY qid
+                            ORDER BY cosine_sim DESC, cid) AS rank
+  FROM scored
+)
+SELECT query_id, corpus_id, cosine_sim, CAST(rank AS INT) AS rank
+FROM ranked WHERE rank <= 5
+ORDER BY query_id, rank
+"""
+
 
 @query(
     "similarity_bruteforce_topk",
@@ -33,17 +73,8 @@ scored AS (
                / (sqrt(list_dot_product(q.qv, q.qv))
                   * sqrt(list_dot_product(c.cv, c.cv))), 6) AS cosine_sim
   FROM q JOIN c ON q.qid <> c.cid
-),
-ranked AS (
-  SELECT qid AS query_id, cid AS corpus_id, cosine_sim,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY cosine_sim DESC, cid) AS rank
-  FROM scored
-)
-SELECT query_id, corpus_id, cosine_sim, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 5
-ORDER BY query_id, rank
-""",
+)"""
+    + _TOP5_SQL,
 )
 def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for 10 query vectors against the full
@@ -97,16 +128,7 @@ WITH v AS (
   SELECT cand.qid, cand.cid,
          ROUND({_cos_sql("a.v", "b.v")}, 6) AS cosine_sim
   FROM cand JOIN v a ON a.id = cand.qid JOIN v b ON b.id = cand.cid
-), ranked AS (
-  SELECT qid AS query_id, cid AS corpus_id, cosine_sim,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY cosine_sim DESC, cid) AS rank
-  FROM scored
-)
-SELECT query_id, corpus_id, cosine_sim, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 5
-ORDER BY query_id, rank
-"""
+)""" + _TOP5_SQL
 
 
 @query("similarity_ann_lsh", oracle=_ANN_LSH_SQL)
@@ -138,14 +160,20 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("int")).orderBy("query_id", "rank")
 
 
-_ANN_IVF_SQL = f"""
+# IVF over deterministic cells (the _IVF_CELLS lowest ids), shared by
+# similarity_ann_ivf and IVF-PQ: `asgn` puts every vector in its
+# most-similar cell, `probe` sends each of the 10 query vectors to its
+# 4 best cells.
+_IVF_CELLS = 16
+
+_IVF_ASSIGN_SQL = f"""
 WITH v AS (
   SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), cents AS (
-  SELECT id AS cent_id, v AS cent_v FROM v ORDER BY id LIMIT 16
+  SELECT id AS cent_id, v AS cv FROM v ORDER BY id LIMIT {_IVF_CELLS}
 ), sims AS (
   SELECT v.id, v.v, c.cent_id,
-         {_cos_sql("v.v", "c.cent_v")} AS sim
+         {_cos_sql("v.v", "c.cv")} AS sim
   FROM v CROSS JOIN cents c
 ), asgn AS (
   SELECT id AS cid, v AS cv, cent_id AS cell_id
@@ -159,20 +187,14 @@ WITH v AS (
                                      ORDER BY sim DESC, cent_id) AS rn
         FROM sims WHERE id < 10)
   WHERE rn <= 4
-), scored AS (
+)"""
+
+
+_ANN_IVF_SQL = _IVF_ASSIGN_SQL + f""", scored AS (
   SELECT p.qid, a.cid,
          ROUND({_cos_sql("p.qv", "a.cv")}, 6) AS cosine_sim
   FROM probe p JOIN asgn a ON p.cell_id = a.cell_id AND p.qid <> a.cid
-), ranked AS (
-  SELECT qid AS query_id, cid AS corpus_id, cosine_sim,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY cosine_sim DESC, cid) AS rank
-  FROM scored
-)
-SELECT query_id, corpus_id, cosine_sim, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 5
-ORDER BY query_id, rank
-"""
+)""" + _TOP5_SQL
 
 
 @query("similarity_ann_ivf", oracle=_ANN_IVF_SQL)
@@ -197,7 +219,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("vec")),
         emb.select(F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("vec")),
         k=5,
-        n_centroids=16,
+        n_centroids=_IVF_CELLS,
         n_probe=4,
         # |Q| = 10 by construction — skip auto's sizing count job
         broadcast_queries=True,
@@ -346,13 +368,13 @@ def _km_dist(e: str, c: str) -> str:
     )
 
 
-def _kmeans_oracle() -> str:
-    """DuckDB CTE unroll of the attested Lloyd fixpoint: every round
-    is assignment (fixed-point FLOOR(term·1e12) BIGINT distances,
-    row_number tie-break) + fixed-point centroid update, exactly the
-    arithmetic operators/similarity.py:kmeans_attested runs — so
-    sizes AND the distance means replay bit-for-bit."""
-
+def _lloyd_sql() -> str:
+    """DuckDB CTE unroll of the attested Lloyd fixpoint (k=8, 4 iters,
+    lowest-id init): every round is assignment (fixed-point
+    FLOOR(term·1e12) BIGINT distances, row_number tie-break) +
+    fixed-point centroid update, exactly the arithmetic
+    operators/similarity.py:kmeans_attested runs. Ends with `fb`: each
+    vector's distance d to every final centroid, rn = 1 on its own."""
     parts = [f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 c0 AS (
@@ -390,12 +412,18 @@ fa AS (
   SELECT vec_id, cent_id, d,
          ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cent_id) AS rn
   FROM fa
-)
+)""")
+    return "".join(parts)
+
+
+def _kmeans_oracle() -> str:
+    """The Lloyd unroll's cluster sizes AND distance means, replayed
+    bit-for-bit."""
+    return _lloyd_sql() + """
 SELECT cent_id AS cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members,
        ROUND(CAST(SUM(d) AS DOUBLE) / (1000000000000.0 * COUNT(*)), 4)
          AS mean_sq_dist
-FROM fb WHERE rn = 1 GROUP BY cent_id ORDER BY cent_id""")
-    return "".join(parts)
+FROM fb WHERE rn = 1 GROUP BY cent_id ORDER BY cent_id"""
 
 
 @query("similarity_kmeans_clusters", oracle=_kmeans_oracle)
@@ -761,28 +789,7 @@ def _ivfpq_oracle() -> str:
         f"FROM v q CROSS JOIN cents c WHERE q.id < 10"
         for s in range(_PQ_SUBS)
     )
-    return f"""
-WITH v AS (
-  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), cents AS (
-  SELECT id AS cent_id, v AS cv FROM v ORDER BY id LIMIT {_PQ_CENTS}
-), sims AS (
-  SELECT v.id, v.v, c.cent_id,
-         {_cos_sql("v.v", "c.cv")} AS sim
-  FROM v CROSS JOIN cents c
-), asgn AS (
-  SELECT id AS cid, v AS cv, cent_id AS cell_id
-  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY id
-                                     ORDER BY sim DESC, cent_id) AS rn
-        FROM sims)
-  WHERE rn = 1
-), probe AS (
-  SELECT id AS qid, v AS qv, cent_id AS cell_id
-  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY id
-                                     ORDER BY sim DESC, cent_id) AS rn
-        FROM sims WHERE id < 10)
-  WHERE rn <= 4
-), pqd AS (
+    return _IVF_ASSIGN_SQL + f""", pqd AS (
 {pq_dists}
 ), codes AS (
   SELECT id, s, cent_id AS code
@@ -859,7 +866,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_raw = emb.select(
         F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("vec")
     )
-    cents, cells = ivf_cells(c_raw, _PQ_CENTS)
+    cents, cells = ivf_cells(c_raw, _IVF_CELLS)
     # the cell assignment is the PERSISTED INDEX: two consumers below
     # (PQ encoder + candidate join) must not re-run the 16-centroid
     # assignment scan each
@@ -1099,27 +1106,7 @@ def similarity_knn_label_confusion(spark: SparkSession, sf_dir: str) -> DataFram
     confusion aggregate."""
     from pyspark.sql import Window
 
-    v = (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 200)
-        .select(
-            "vec_id",
-            "label",
-            F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-        )
-        .select(
-            "vec_id",
-            "label",
-            "emb",
-            F.sqrt(
-                F.aggregate(
-                    F.transform("emb", lambda x: x * x),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                )
-            ).alias("nrm"),
-        )
-    )
+    v = _embedding_slice(spark, sf_dir, 200)
     a, b = v.alias("a"), v.alias("b")
     dot = F.aggregate(
         F.zip_with("a.emb", "b.emb", lambda x, y: x * y),
@@ -1637,28 +1624,9 @@ def similarity_kcenter_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     The vec_id < 200 slice bounds the attestation, not the shape; at
     100 TB the same loop runs with the candidate argmax computed per
     partition then reduced (TakeOrdered already is that)."""
-    v = (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < _KC_SLICE)
-        .select(
-            "vec_id",
-            "label",
-            F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-        )
-        .select(
-            "vec_id",
-            "label",
-            "emb",
-            F.sqrt(
-                F.aggregate(
-                    F.transform("emb", lambda x: x * x),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                )
-            ).alias("nrm"),
-        )
-        .localCheckpoint(eager=True)  # k tiny rounds re-read this slice
-    )
+    v = _embedding_slice(spark, sf_dir, _KC_SLICE).localCheckpoint(
+        eager=True
+    )  # k tiny rounds re-read this slice
     first = v.orderBy("vec_id").limit(1).select("vec_id", "label").collect()[0]
     ids = [first.vec_id]
     rows = [(1, first.vec_id, first.label, 0.0)]

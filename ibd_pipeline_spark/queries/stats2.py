@@ -11,26 +11,65 @@ rows.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
+
 from ibd_pipeline_spark.catalog import load
-from ibd_pipeline_spark.normal_tail import (
-    _phi_tail_col,
-    _phi_tail_sql,
-)
+from ibd_pipeline_spark.normal_tail import _phi_tail_col, _phi_tail_sql
 from ibd_pipeline_spark.queries import query
 
 # ---------------------------------------------------------------------------
-# Cohen's d / Hedges' g effect size (purchase vs view values)
+# The two arms Cohen's d and Welch's t compare: purchase (a) vs view (b)
+# event values
 # ---------------------------------------------------------------------------
 
-_COHEN_SQL = """
+
+def _arm_moments(ev: DataFrame) -> DataFrame:
+    """(n_a, n_b, m_a, m_b, v_a, v_b): count, mean and sample variance
+    of `value` per arm of `ev`, from exact decimal Σx and Σx² rounded
+    in the decimal domain (the davg rule), then identical double
+    algebra on both engines."""
+    dec = F.col("value").cast("decimal(28,8)")
+    g = ev.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.round(F.sum(dec), 4).cast("double").alias("s1"),
+        F.round(F.sum(dec * dec), 4).cast("double").alias("s2"),
+    )
+    pick = lambda c, t: F.max(F.when(F.col("event_type") == t, F.col(c)))
+    w = g.agg(
+        pick("n", "purchase").alias("n_a"),
+        pick("n", "view").alias("n_b"),
+        pick("s1", "purchase").alias("s1_a"),
+        pick("s1", "view").alias("s1_b"),
+        pick("s2", "purchase").alias("s2_a"),
+        pick("s2", "view").alias("s2_b"),
+    )
+    return w.select(
+        "n_a",
+        "n_b",
+        (F.col("s1_a") / F.col("n_a")).alias("m_a"),
+        (F.col("s1_b") / F.col("n_b")).alias("m_b"),
+        (
+            (F.col("s2_a") - F.col("s1_a") * F.col("s1_a") / F.col("n_a"))
+            / (F.col("n_a") - 1)
+        ).alias("v_a"),
+        (
+            (F.col("s2_b") - F.col("s1_b") * F.col("s1_b") / F.col("n_b"))
+            / (F.col("n_b") - 1)
+        ).alias("v_b"),
+    )
+
+
+def _arm_moments_sql(where: str) -> str:
+    """The oracle twin of _arm_moments over the events `where` keeps:
+    `WITH g, w, v`."""
+    return f"""
 WITH g AS (
   SELECT event_type,
          CAST(COUNT(*) AS BIGINT) AS n,
          CAST(ROUND(SUM(CAST(value AS DECIMAL(28,8))), 4) AS DOUBLE) AS s1,
          CAST(ROUND(SUM(CAST(value AS DECIMAL(28,8))
                         * CAST(value AS DECIMAL(28,8))), 4) AS DOUBLE) AS s2
-  FROM events WHERE event_type IN ('purchase', 'view') AND value IS NOT NULL
+  FROM events WHERE {where}
   GROUP BY event_type
 ), w AS (
   SELECT
@@ -42,11 +81,20 @@ WITH g AS (
     MAX(CASE WHEN event_type = 'view' THEN s2 END) AS s2_b
   FROM g
 ), v AS (
-  SELECT n_a, n_b, s1_a / n_a AS m_a, s1_b / n_b AS m_b,
+  SELECT n_a, n_b,
+         s1_a / n_a AS m_a, s1_b / n_b AS m_b,
          (s2_a - s1_a * s1_a / n_a) / (n_a - 1) AS v_a,
          (s2_b - s1_b * s1_b / n_b) / (n_b - 1) AS v_b
   FROM w
-), d AS (
+)"""
+
+# ---------------------------------------------------------------------------
+# Cohen's d / Hedges' g effect size (purchase vs view values)
+# ---------------------------------------------------------------------------
+
+_COHEN_SQL = _arm_moments_sql(
+    "event_type IN ('purchase', 'view') AND value IS NOT NULL"
+) + """, d AS (
   SELECT n_a, n_b, m_a, m_b,
          (m_a - m_b)
            / sqrt(((n_a - 1) * v_a + (n_b - 1) * v_b) / (n_a + n_b - 2))
@@ -76,44 +124,23 @@ def stats_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical double algebra (pooled variance, d, J·d) both engines.
 
     Scale: one 2-group scan-aggregate with map-side partials."""
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("purchase", "view")
-        & F.col("value").isNotNull()
-    )
-    dec = F.col("value").cast("decimal(28,8)")
-    g = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.sum(dec), 4).cast("double").alias("s1"),
-        F.round(F.sum(dec * dec), 4).cast("double").alias("s2"),
-    )
-    w = g.agg(
-        *[
-            F.max(F.when(F.col("event_type") == t, F.col(c))).alias(
-                f"{c}_{s}"
-            )
-            for t, s in (("purchase", "a"), ("view", "b"))
-            for c in ("n", "s1", "s2")
-        ]
-    )
-    m_a = F.col("s1_a") / F.col("n_a")
-    m_b = F.col("s1_b") / F.col("n_b")
-    v_a = (F.col("s2_a") - F.col("s1_a") * F.col("s1_a") / F.col("n_a")) / (
-        F.col("n_a") - 1
-    )
-    v_b = (F.col("s2_b") - F.col("s1_b") * F.col("s1_b") / F.col("n_b")) / (
-        F.col("n_b") - 1
+    v = _arm_moments(
+        load(spark, sf_dir, "events").filter(
+            F.col("event_type").isin("purchase", "view")
+            & F.col("value").isNotNull()
+        )
     )
     pooled = F.sqrt(
-        ((F.col("n_a") - 1) * v_a + (F.col("n_b") - 1) * v_b)
+        ((F.col("n_a") - 1) * F.col("v_a") + (F.col("n_b") - 1) * F.col("v_b"))
         / (F.col("n_a") + F.col("n_b") - 2)
     )
-    d = (m_a - m_b) / pooled
+    d = (F.col("m_a") - F.col("m_b")) / pooled
     j = 1.0 - 3.0 / (4.0 * (F.col("n_a") + F.col("n_b")) - 9.0)
-    return w.select(
+    return v.select(
         "n_a",
         "n_b",
-        F.round(m_a, 6).alias("mean_a"),
-        F.round(m_b, 6).alias("mean_b"),
+        F.round("m_a", 6).alias("mean_a"),
+        F.round("m_b", 6).alias("mean_b"),
         F.round(d, 6).alias("cohens_d"),
         F.round(j * d, 6).alias("hedges_g"),
     )
@@ -317,31 +344,7 @@ def stats_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Welch's two-sample t-test
 # ---------------------------------------------------------------------------
 
-_WELCH_SQL = f"""
-WITH g AS (
-  SELECT event_type,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(ROUND(SUM(CAST(value AS DECIMAL(28,8))), 4) AS DOUBLE) AS s1,
-         CAST(ROUND(SUM(CAST(value AS DECIMAL(28,8))
-                        * CAST(value AS DECIMAL(28,8))), 4) AS DOUBLE) AS s2
-  FROM events WHERE event_type IN ('purchase', 'view')
-  GROUP BY event_type
-), w AS (
-  SELECT
-    MAX(CASE WHEN event_type = 'purchase' THEN n END) AS n_a,
-    MAX(CASE WHEN event_type = 'view' THEN n END) AS n_b,
-    MAX(CASE WHEN event_type = 'purchase' THEN s1 END) AS s1_a,
-    MAX(CASE WHEN event_type = 'view' THEN s1 END) AS s1_b,
-    MAX(CASE WHEN event_type = 'purchase' THEN s2 END) AS s2_a,
-    MAX(CASE WHEN event_type = 'view' THEN s2 END) AS s2_b
-  FROM g
-), v AS (
-  SELECT n_a, n_b,
-         s1_a / n_a AS m_a, s1_b / n_b AS m_b,
-         (s2_a - s1_a * s1_a / n_a) / (n_a - 1) AS v_a,
-         (s2_b - s1_b * s1_b / n_b) / (n_b - 1) AS v_b
-  FROM w
-), t AS (
+_WELCH_SQL = _arm_moments_sql("event_type IN ('purchase', 'view')") + f""", t AS (
   SELECT n_a, n_b, m_a, m_b, v_a, v_b,
          (m_a - m_b) / sqrt(v_a / n_a + v_b / n_b) AS t_stat,
          (v_a / n_a + v_b / n_b) * (v_a / n_a + v_b / n_b)
@@ -374,37 +377,10 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical inputs. One groupBy = one shuffle of 2 groups
     with map-side partials; scales as a scan.
     """
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("purchase", "view")
-    )
-    dec = F.col("value").cast("decimal(28,8)")
-    g = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.sum(dec), 4).cast("double").alias("s1"),
-        F.round(F.sum(dec * dec), 4).cast("double").alias("s2"),
-    )
-    pick = lambda c, t: F.max(F.when(F.col("event_type") == t, F.col(c)))
-    w = g.agg(
-        pick("n", "purchase").alias("n_a"),
-        pick("n", "view").alias("n_b"),
-        pick("s1", "purchase").alias("s1_a"),
-        pick("s1", "view").alias("s1_b"),
-        pick("s2", "purchase").alias("s2_a"),
-        pick("s2", "view").alias("s2_b"),
-    )
-    v = w.select(
-        "n_a",
-        "n_b",
-        (F.col("s1_a") / F.col("n_a")).alias("m_a"),
-        (F.col("s1_b") / F.col("n_b")).alias("m_b"),
-        (
-            (F.col("s2_a") - F.col("s1_a") * F.col("s1_a") / F.col("n_a"))
-            / (F.col("n_a") - 1)
-        ).alias("v_a"),
-        (
-            (F.col("s2_b") - F.col("s1_b") * F.col("s1_b") / F.col("n_b"))
-            / (F.col("n_b") - 1)
-        ).alias("v_b"),
+    v = _arm_moments(
+        load(spark, sf_dir, "events").filter(
+            F.col("event_type").isin("purchase", "view")
+        )
     )
     se2a = F.col("v_a") / F.col("n_a")
     se2b = F.col("v_b") / F.col("n_b")
@@ -580,18 +556,9 @@ def stats_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-row join), one map-side-combined moment aggregate over z; the
     k-row Σ²/n step ROUND→DECIMAL before summing (the ANOVA
     cancellation guard)."""
-    from ibd_pipeline_spark.operators.ranking import with_grouped_prefix_sum
+    from ibd_pipeline_spark.queries.stats3 import _price_ranks
 
-    li = load(spark, sf_dir, "lineitem").select(
-        F.col("l_returnflag").alias("g"),
-        F.col("l_extendedprice").alias("v"),
-        "l_orderkey",
-        "l_linenumber",
-        F.lit(1).cast("bigint").alias("_one"),
-    )
-    ps = with_grouped_prefix_sum(
-        li, ["g"], ["v", "l_orderkey", "l_linenumber"], "_one"
-    )
+    li, ps = _price_ranks(spark, sf_dir)
     cw, n = F.col("_cw"), F.col("_tw")
     p = F.lit(1.0) + F.lit(0.5) * (n - F.lit(1)).cast("double")
     lo_rank = F.floor(p)

@@ -14,10 +14,55 @@ from ibd_pipeline_spark.normal_tail import _phi_tail_col, _phi_tail_sql
 from ibd_pipeline_spark.queries import query
 
 # ---------------------------------------------------------------------------
-# Durbin–Watson autocorrelation of detrended daily volume
+# The detrended daily-volume series Durbin–Watson and Breusch–Pagan test
 # ---------------------------------------------------------------------------
 
-_DW_SQL = """
+
+def _trend_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(di, e, n): OLS residuals of daily event counts y on the day
+    index di (days since 2024-01-01), with the day count n. The fit's
+    moments are exact BIGINT sums, so α and β are one identical double
+    division each on both engines."""
+    ev = load(spark, sf_dir, "events")
+    dd = ev.groupBy(
+        F.datediff(
+            F.to_date(F.date_trunc("day", "ts")), F.lit("2024-01-01").cast("date")
+        ).alias("di")
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
+    m = dd.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("di").cast("bigint").alias("sx"),
+        F.sum("y").cast("bigint").alias("sy"),
+        F.sum(F.col("di") * F.col("di")).cast("bigint").alias("sxx"),
+        F.sum(F.col("di") * F.col("y")).cast("bigint").alias("sxy"),
+    )
+    beta = (
+        F.col("n").cast("double") * F.col("sxy")
+        - F.col("sx").cast("double") * F.col("sy")
+    ) / (
+        F.col("n").cast("double") * F.col("sxx")
+        - F.col("sx").cast("double") * F.col("sx")
+    )
+    fit = m.select(
+        "n", beta.alias("beta"), "sx", "sy"
+    ).select(
+        "n",
+        "beta",
+        ((F.col("sy").cast("double") - F.col("beta") * F.col("sx")) / F.col("n")).alias(
+            "alpha"
+        ),
+    )
+    return dd.crossJoin(F.broadcast(fit)).select(
+        "di",
+        (F.col("y").cast("double") - (F.col("alpha") + F.col("beta") * F.col("di"))).alias(
+            "e"
+        ),
+        "n",
+    )
+
+
+# The oracle twin of _trend_residuals: `resid`.
+_TREND_RESID_SQL = """
 WITH dd AS (
   SELECT CAST(date_diff('day', DATE '2024-01-01',
                         CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE))
@@ -44,7 +89,13 @@ WITH dd AS (
 ), resid AS (
   SELECT di, CAST(y AS DOUBLE) - (alpha + beta * di) AS e, n
   FROM dd CROSS JOIN fit2
-), dw AS (
+)"""
+
+# ---------------------------------------------------------------------------
+# Durbin–Watson autocorrelation of detrended daily volume
+# ---------------------------------------------------------------------------
+
+_DW_SQL = _TREND_RESID_SQL + """, dw AS (
   SELECT MAX(a.n) AS n_days,
          CAST(ROUND(SUM(CAST((a.e - b.e) * (a.e - b.e)
                              AS DECIMAL(28,8))), 4) AS DOUBLE) AS num
@@ -80,42 +131,7 @@ def stats_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one day-key count shuffle; the fit, residuals, and DW
     fold all run on the days-sized frame with a 1-row broadcast."""
-    ev = load(spark, sf_dir, "events")
-    dd = ev.groupBy(
-        F.datediff(
-            F.to_date(F.date_trunc("day", "ts")), F.lit("2024-01-01").cast("date")
-        ).alias("di")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    m = dd.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("di").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("di") * F.col("di")).cast("bigint").alias("sxx"),
-        F.sum(F.col("di") * F.col("y")).cast("bigint").alias("sxy"),
-    )
-    beta = (
-        F.col("n").cast("double") * F.col("sxy")
-        - F.col("sx").cast("double") * F.col("sy")
-    ) / (
-        F.col("n").cast("double") * F.col("sxx")
-        - F.col("sx").cast("double") * F.col("sx")
-    )
-    fit = m.select(
-        "n", beta.alias("beta"), "sx", "sy"
-    ).select(
-        "n",
-        "beta",
-        ((F.col("sy").cast("double") - F.col("beta") * F.col("sx")) / F.col("n")).alias(
-            "alpha"
-        ),
-    )
-    resid = dd.crossJoin(F.broadcast(fit)).select(
-        "di",
-        (F.col("y").cast("double") - (F.col("alpha") + F.col("beta") * F.col("di"))).alias(
-            "e"
-        ),
-        "n",
-    )
+    resid = _trend_residuals(spark, sf_dir)
     ra = resid.alias("ra")
     rb = resid.select(
         (F.col("di") + 1).alias("dib"), F.col("e").alias("eb")
@@ -154,31 +170,7 @@ def stats_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Breusch–Pagan heteroskedasticity test on the daily-volume trend fit
 # ---------------------------------------------------------------------------
 
-_BP_SQL = f"""
-WITH dd AS (
-  SELECT CAST(date_diff('day', DATE '2024-01-01',
-                        CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE))
-              AS BIGINT) AS di,
-         CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), m AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(di) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-         CAST(SUM(di * di) AS BIGINT) AS sxx,
-         CAST(SUM(di * y) AS BIGINT) AS sxy
-  FROM dd
-), fit AS (
-  SELECT n, sx,
-         (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-           / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) AS beta,
-         sy
-  FROM m
-), fit2 AS (
-  SELECT n, beta, (CAST(sy AS DOUBLE) - beta * sx) / n AS alpha FROM fit
-), resid AS (
-  SELECT di, CAST(y AS DOUBLE) - (alpha + beta * di) AS e FROM dd
-  CROSS JOIN fit2
-), aux AS (
+_BP_SQL = _TREND_RESID_SQL + f""", aux AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(di) AS BIGINT) AS sx,
          CAST(SUM(di * di) AS BIGINT) AS sxx,
@@ -222,39 +214,7 @@ def stats_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one day-key count shuffle; both fits run on the days-sized
     frame with 1-row broadcasts."""
-    ev = load(spark, sf_dir, "events")
-    dd = ev.groupBy(
-        F.datediff(
-            F.to_date(F.date_trunc("day", "ts")), F.lit("2024-01-01").cast("date")
-        ).alias("di")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
-    m = dd.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("di").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("di") * F.col("di")).cast("bigint").alias("sxx"),
-        F.sum(F.col("di") * F.col("y")).cast("bigint").alias("sxy"),
-    )
-    beta = (
-        F.col("n").cast("double") * F.col("sxy")
-        - F.col("sx").cast("double") * F.col("sy")
-    ) / (
-        F.col("n").cast("double") * F.col("sxx")
-        - F.col("sx").cast("double") * F.col("sx")
-    )
-    fit = m.select("n", "sx", beta.alias("beta"), "sy").select(
-        "n",
-        "beta",
-        ((F.col("sy").cast("double") - F.col("beta") * F.col("sx")) / F.col("n")).alias(
-            "alpha"
-        ),
-    )
-    resid = dd.crossJoin(F.broadcast(fit)).select(
-        "di",
-        (F.col("y").cast("double") - (F.col("alpha") + F.col("beta") * F.col("di"))).alias(
-            "e"
-        ),
-    )
+    resid = _trend_residuals(spark, sf_dir)
     e2 = F.col("e") * F.col("e")
     aux = resid.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -436,6 +396,30 @@ def stats_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Trimmed + winsorized mean per group (prefix-sum rank thresholds)
 # ---------------------------------------------------------------------------
 
+def _price_ranks(
+    spark: SparkSession, sf_dir: str
+) -> "tuple[DataFrame, DataFrame]":
+    """(li, ps) over lineitem prices by return flag: li holds (g, v,
+    l_orderkey, l_linenumber, _one); ps adds each row's 1-based rank
+    _cw within its flag under the total order (price, orderkey,
+    linenumber) and the flag size _tw — one weight-1 grouped
+    prefix-sum scan (range exchange + Arrow running count, bounded
+    memory even when a group spans tasks)."""
+    from ibd_pipeline_spark.operators.ranking import with_grouped_prefix_sum
+
+    li = load(spark, sf_dir, "lineitem").select(
+        F.col("l_returnflag").alias("g"),
+        F.col("l_extendedprice").alias("v"),
+        "l_orderkey",
+        "l_linenumber",
+        F.lit(1).cast("bigint").alias("_one"),
+    )
+    ps = with_grouped_prefix_sum(
+        li, ["g"], ["v", "l_orderkey", "l_linenumber"], "_one"
+    )
+    return li, ps
+
+
 _TRIM_SQL = """
 WITH r AS (
   SELECT l_returnflag AS g, l_extendedprice AS v,
@@ -476,18 +460,7 @@ def stats_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one range exchange + Arrow running count (bounded memory
     even when a group spans tasks), conditional aggregates map-side
     combine; no per-group value buffer anywhere."""
-    from ibd_pipeline_spark.operators.ranking import with_grouped_prefix_sum
-
-    li = load(spark, sf_dir, "lineitem").select(
-        F.col("l_returnflag").alias("g"),
-        F.col("l_extendedprice").alias("v"),
-        "l_orderkey",
-        "l_linenumber",
-        F.lit(1).cast("bigint").alias("_one"),
-    )
-    ps = with_grouped_prefix_sum(
-        li, ["g"], ["v", "l_orderkey", "l_linenumber"], "_one"
-    )
+    _li, ps = _price_ranks(spark, sf_dir)
     rn, n = F.col("_cw"), F.col("_tw")
     lo = F.floor(0.1 * n).cast("bigint")
     # decimal-domain sums: price has 2 decimals, so the cast is exact
@@ -605,7 +578,31 @@ def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact weighted median per group (distributed prefix-sum consumer)
 # ---------------------------------------------------------------------------
 
-_WMEDIAN_SQL = """
+def _qty_weighted_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem (l_returnflag, l_extendedprice, ...) with the inclusive
+    running quantity _cw within each flag under the total order
+    (price, orderkey, linenumber) and the flag total _tw. Integral
+    quantities keep both order-independent BIGINTs, so every weighted
+    quantile is an exact integer threshold on them."""
+    from ibd_pipeline_spark.operators.ranking import with_grouped_prefix_sum
+
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_returnflag",
+        "l_extendedprice",
+        "l_orderkey",
+        "l_linenumber",
+        F.col("l_quantity").cast("bigint").alias("w"),
+    )
+    return with_grouped_prefix_sum(
+        li,
+        ["l_returnflag"],
+        ["l_extendedprice", "l_orderkey", "l_linenumber"],
+        "w",
+    )
+
+
+# The oracle twin of _qty_weighted_prefix: `r`, with cw and tw.
+_QTY_PREFIX_SQL = """
 WITH r AS (
   SELECT l_returnflag,
          l_extendedprice,
@@ -616,7 +613,10 @@ WITH r AS (
          SUM(CAST(l_quantity AS BIGINT)) OVER (
            PARTITION BY l_returnflag) AS tw
   FROM lineitem
-)
+)"""
+
+
+_WMEDIAN_SQL = _QTY_PREFIX_SQL + """
 SELECT l_returnflag,
        CAST(MAX(tw) AS BIGINT) AS total_qty,
        ROUND(MIN(CASE WHEN 2 * cw >= tw THEN l_extendedprice END), 2)
@@ -646,21 +646,7 @@ def stats_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     `SUM OVER (PARTITION BY flag ORDER BY …)` the oracle uses, which
     at 100 TB would put each flag's entire history on one task. The
     argmin over qualifying rows is an ordinary aggregate."""
-    from ibd_pipeline_spark.operators.ranking import with_grouped_prefix_sum
-
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        "l_extendedprice",
-        "l_orderkey",
-        "l_linenumber",
-        F.col("l_quantity").cast("bigint").alias("w"),
-    )
-    ps = with_grouped_prefix_sum(
-        li,
-        ["l_returnflag"],
-        ["l_extendedprice", "l_orderkey", "l_linenumber"],
-        "w",
-    )
+    ps = _qty_weighted_prefix(spark, sf_dir)
     return (
         ps.groupBy("l_returnflag")
         .agg(
@@ -683,18 +669,7 @@ def stats_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Weighted quartiles per group (prefix-sum consumer, 3 thresholds)
 # ---------------------------------------------------------------------------
 
-_WQUART_SQL = """
-WITH r AS (
-  SELECT l_returnflag,
-         l_extendedprice,
-         SUM(CAST(l_quantity AS BIGINT)) OVER (
-           PARTITION BY l_returnflag
-           ORDER BY l_extendedprice, l_orderkey, l_linenumber
-           ROWS UNBOUNDED PRECEDING) AS cw,
-         SUM(CAST(l_quantity AS BIGINT)) OVER (
-           PARTITION BY l_returnflag) AS tw
-  FROM lineitem
-)
+_WQUART_SQL = _QTY_PREFIX_SQL + """
 SELECT l_returnflag,
        ROUND(MIN(CASE WHEN 4 * cw >= tw THEN l_extendedprice END), 2) AS w_p25,
        ROUND(MIN(CASE WHEN 2 * cw >= tw THEN l_extendedprice END), 2) AS w_p50,
@@ -725,21 +700,7 @@ def stats_weighted_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow running sum + offset broadcast from
     operators/ranking.py:with_grouped_prefix_sum) — adding quantiles
     adds conditional aggregates, not passes."""
-    from ibd_pipeline_spark.operators.ranking import with_grouped_prefix_sum
-
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        "l_extendedprice",
-        "l_orderkey",
-        "l_linenumber",
-        F.col("l_quantity").cast("bigint").alias("w"),
-    )
-    ps = with_grouped_prefix_sum(
-        li,
-        ["l_returnflag"],
-        ["l_extendedprice", "l_orderkey", "l_linenumber"],
-        "w",
-    )
+    ps = _qty_weighted_prefix(spark, sf_dir)
     price = F.col("l_extendedprice")
     q25 = F.min(F.when(4 * F.col("_cw") >= F.col("_tw"), price))
     q50 = F.min(F.when(2 * F.col("_cw") >= F.col("_tw"), price))

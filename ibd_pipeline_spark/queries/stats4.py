@@ -118,7 +118,39 @@ def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the window), mid-ranks on |d| via the distinct-value prefix scan
 # ---------------------------------------------------------------------------
 
-_WILCOXON_SQL = f"""
+def _window_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, s1, s2): each user's exact-decimal `value` total in
+    the first and the second half of the window, split at the
+    integer-µs midpoint (the McNemar pairing)."""
+    ev = load(spark, sf_dir, "events")
+    mid = ev.agg(
+        F.expr("(unix_micros(MIN(ts)) + unix_micros(MAX(ts))) DIV 2").alias(
+            "mid"
+        )
+    )
+    zero = F.lit(0).cast("decimal(28,8)")
+    return (
+        ev.crossJoin(F.broadcast(mid))
+        .groupBy("user_id")
+        .agg(
+            F.sum(
+                F.when(
+                    F.expr("unix_micros(ts)") < F.col("mid"),
+                    F.col("value").cast("decimal(28,8)"),
+                ).otherwise(zero)
+            ).alias("s1"),
+            F.sum(
+                F.when(
+                    F.expr("unix_micros(ts)") >= F.col("mid"),
+                    F.col("value").cast("decimal(28,8)"),
+                ).otherwise(zero)
+            ).alias("s2"),
+        )
+    )
+
+
+# The oracle twin of _window_halves: `u`.
+_HALVES_SQL = """
 WITH bnd AS (
   SELECT (epoch_us(MIN(CAST(ts AS TIMESTAMP)))
           + epoch_us(MAX(CAST(ts AS TIMESTAMP)))) // 2 AS mid
@@ -132,7 +164,9 @@ WITH bnd AS (
              THEN CAST(value AS DECIMAL(28,8))
              ELSE CAST(0 AS DECIMAL(28,8)) END) AS s2
   FROM events CROSS JOIN bnd GROUP BY user_id
-), d AS (
+)"""
+
+_WILCOXON_SQL = _HALVES_SQL + f""", d AS (
   SELECT s2 - s1 AS d FROM u WHERE s2 <> s1
 ), pv AS (
   SELECT ABS(d) AS ad,
@@ -185,31 +219,7 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ibd_pipeline_spark.operators.ranking import with_global_prefix_sums
 
-    ev = load(spark, sf_dir, "events")
-    mid = ev.agg(
-        F.expr("(unix_micros(MIN(ts)) + unix_micros(MAX(ts))) DIV 2").alias(
-            "mid"
-        )
-    )
-    zero = F.lit(0).cast("decimal(28,8)")
-    u = (
-        ev.crossJoin(F.broadcast(mid))
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.expr("unix_micros(ts)") < F.col("mid"),
-                    F.col("value").cast("decimal(28,8)"),
-                ).otherwise(zero)
-            ).alias("s1"),
-            F.sum(
-                F.when(
-                    F.expr("unix_micros(ts)") >= F.col("mid"),
-                    F.col("value").cast("decimal(28,8)"),
-                ).otherwise(zero)
-            ).alias("s2"),
-        )
-    )
+    u = _window_halves(spark, sf_dir)
     d = u.filter(F.col("s2") != F.col("s1")).select(
         (F.col("s2") - F.col("s1")).alias("d")
     )
@@ -959,7 +969,62 @@ def stats_rayleigh_hour_uniformity(spark: SparkSession, sf_dir: str) -> DataFram
 # Page's L trend test across ordered treatments within dow blocks (r13)
 # ---------------------------------------------------------------------------
 
-_PAGE_SQL = f"""
+def _funnel_cells(
+    spark: SparkSession, sf_dir: str
+) -> "tuple[DataFrame, DataFrame, DataFrame]":
+    """(cell, rk, dims) of the blocked funnel design: `cell` holds the
+    davg mean `m` of each (ISO-dow block `blk`, treatment `trt`:
+    view 1, click 2, purchase 3); `rk` the doubled within-block
+    mid-rank r2 = 2·#{m' < m} + #{m' = m} + 1 from a broadcast
+    triangular join (self included in the equal count); `dims` the
+    block and treatment counts b and k."""
+    ev = load(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("view", "click", "purchase")
+        & F.col("value").isNotNull()
+    )
+    cell = ev.groupBy(
+        (F.weekday("ts") + F.lit(1)).alias("blk"),
+        F.when(F.col("event_type") == "view", 1)
+        .when(F.col("event_type") == "click", 2)
+        .otherwise(3)
+        .alias("trt"),
+    ).agg(
+        (
+            F.round(F.sum(F.col("value").cast("decimal(28,8)")), 6).cast(
+                "double"
+            )
+            / F.count("value")
+        ).alias("m")
+    )
+    b2 = cell.select(
+        F.col("blk").alias("blk2"),
+        F.col("trt").alias("trt2"),
+        F.col("m").alias("m2"),
+    )
+    rk = (
+        cell.join(
+            F.broadcast(b2),
+            (F.col("blk") == F.col("blk2")) & (F.col("m2") <= F.col("m")),
+        )
+        .groupBy("blk", "trt")
+        .agg(
+            (
+                F.sum(F.when(F.col("m2") < F.col("m"), 2).otherwise(1))
+                + F.lit(1)
+            )
+            .cast("bigint")
+            .alias("r2")
+        )
+    )
+    dims = cell.agg(
+        F.countDistinct("blk").cast("bigint").alias("b"),
+        F.countDistinct("trt").cast("bigint").alias("k"),
+    )
+    return cell, rk, dims
+
+
+# The oracle twin of _funnel_cells: `cell`, `rk` and `dims`.
+_FUNNEL_CELLS_SQL = """
 WITH cell AS (
   SELECT CAST(isodow(CAST(ts AS TIMESTAMP)) AS INT) AS blk,
          CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2
@@ -973,15 +1038,17 @@ WITH cell AS (
   SELECT a.blk, a.trt,
          CAST(SUM(CASE WHEN b.m < a.m THEN 2 ELSE 1 END) + 1 AS BIGINT)
            AS r2
-  FROM cell a JOIN cell b
-    ON a.blk = b.blk AND b.m <= a.m
+  FROM cell a JOIN cell b ON a.blk = b.blk AND b.m <= a.m
   GROUP BY a.blk, a.trt
-), rs AS (
-  SELECT trt, CAST(SUM(r2) AS BIGINT) AS rj2 FROM rk GROUP BY trt
 ), dims AS (
   SELECT CAST(COUNT(DISTINCT blk) AS BIGINT) AS b,
          CAST(COUNT(DISTINCT trt) AS BIGINT) AS k
   FROM cell
+)"""
+
+
+_PAGE_SQL = _FUNNEL_CELLS_SQL + f""", rs AS (
+  SELECT trt, CAST(SUM(r2) AS BIGINT) AS rj2 FROM rk GROUP BY trt
 ), l AS (
   SELECT CAST(SUM(trt * rj2) AS BIGINT) AS l2 FROM rs
 ), s AS (
@@ -1023,53 +1090,8 @@ def stats_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one 21-cell aggregate, a 21×21 broadcast triangular join,
     catalog-sized folds — identical shape to stats_friedman_test."""
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "click", "purchase")
-        & F.col("value").isNotNull()
-    )
-    cell = ev.groupBy(
-        (F.weekday("ts") + F.lit(1)).alias("blk"),
-        F.when(F.col("event_type") == "view", 1)
-        .when(F.col("event_type") == "click", 2)
-        .otherwise(3)
-        .alias("trt"),
-    ).agg(
-        (
-            F.round(F.sum(F.col("value").cast("decimal(28,8)")), 6).cast(
-                "double"
-            )
-            / F.count("value")
-        ).alias("m")
-    )
-    a = cell
-    b = cell.select(
-        F.col("blk").alias("blk2"),
-        F.col("trt").alias("trt2"),
-        F.col("m").alias("m2"),
-    )
-    rk = (
-        a.join(
-            F.broadcast(b),
-            (F.col("blk") == F.col("blk2"))
-            & (F.col("m2") <= F.col("m")),
-        )
-        .groupBy("blk", "trt")
-        .agg(
-            (
-                F.sum(
-                    F.when(F.col("m2") < F.col("m"), 2).otherwise(1)
-                )
-                + F.lit(1)
-            )
-            .cast("bigint")
-            .alias("r2")
-        )
-    )
+    _cell, rk, dims = _funnel_cells(spark, sf_dir)
     rs = rk.groupBy("trt").agg(F.sum("r2").cast("bigint").alias("rj2"))
-    dims = cell.agg(
-        F.countDistinct("blk").cast("bigint").alias("b"),
-        F.countDistinct("trt").cast("bigint").alias("k"),
-    )
     lsum = rs.agg(
         F.sum(F.col("trt") * F.col("rj2")).cast("bigint").alias("l2")
     )
@@ -1102,21 +1124,7 @@ def stats_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sign test on the paired window halves (r13)
 # ---------------------------------------------------------------------------
 
-_SIGN_SQL = f"""
-WITH bnd AS (
-  SELECT (epoch_us(MIN(CAST(ts AS TIMESTAMP)))
-          + epoch_us(MAX(CAST(ts AS TIMESTAMP)))) // 2 AS mid
-  FROM events
-), u AS (
-  SELECT user_id,
-    SUM(CASE WHEN epoch_us(CAST(ts AS TIMESTAMP)) < mid
-             THEN CAST(value AS DECIMAL(28,8))
-             ELSE CAST(0 AS DECIMAL(28,8)) END) AS s1,
-    SUM(CASE WHEN epoch_us(CAST(ts AS TIMESTAMP)) >= mid
-             THEN CAST(value AS DECIMAL(28,8))
-             ELSE CAST(0 AS DECIMAL(28,8)) END) AS s2
-  FROM events CROSS JOIN bnd GROUP BY user_id
-), agg AS (
+_SIGN_SQL = _HALVES_SQL + f""", agg AS (
   SELECT CAST(SUM(CASE WHEN s2 > s1 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
          CAST(SUM(CASE WHEN s2 < s1 THEN 1 ELSE 0 END) AS BIGINT) AS n_neg
   FROM u
@@ -1146,31 +1154,7 @@ def stats_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: two integer counts and one double chain; nothing else.
 
     Scale: one groupBy(user) (map-side combined), one-row fold."""
-    ev = load(spark, sf_dir, "events")
-    mid = ev.agg(
-        F.expr("(unix_micros(MIN(ts)) + unix_micros(MAX(ts))) DIV 2").alias(
-            "mid"
-        )
-    )
-    zero = F.lit(0).cast("decimal(28,8)")
-    u = (
-        ev.crossJoin(F.broadcast(mid))
-        .groupBy("user_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.expr("unix_micros(ts)") < F.col("mid"),
-                    F.col("value").cast("decimal(28,8)"),
-                ).otherwise(zero)
-            ).alias("s1"),
-            F.sum(
-                F.when(
-                    F.expr("unix_micros(ts)") >= F.col("mid"),
-                    F.col("value").cast("decimal(28,8)"),
-                ).otherwise(zero)
-            ).alias("s2"),
-        )
-    )
+    u = _window_halves(spark, sf_dir)
     agg = u.agg(
         F.sum(F.when(F.col("s2") > F.col("s1"), 1).otherwise(0))
         .cast("bigint")
@@ -1293,23 +1277,7 @@ def stats_gumbel_return_level(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Quade test: blocked rank test weighting blocks by their range (r14)
 # ---------------------------------------------------------------------------
 
-_QUADE_SQL = """
-WITH cell AS (
-  SELECT CAST(isodow(CAST(ts AS TIMESTAMP)) AS INT) AS blk,
-         CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2
-              ELSE 3 END AS trt,
-         CAST(ROUND(SUM(CAST(value AS DECIMAL(28,8))), 6) AS DOUBLE)
-           / COUNT(value) AS m
-  FROM events WHERE event_type IN ('view', 'click', 'purchase')
-        AND value IS NOT NULL
-  GROUP BY 1, 2
-), rk AS (
-  SELECT a.blk, a.trt,
-         CAST(SUM(CASE WHEN b.m < a.m THEN 2 ELSE 1 END) + 1 AS BIGINT)
-           AS r2
-  FROM cell a JOIN cell b ON a.blk = b.blk AND b.m <= a.m
-  GROUP BY a.blk, a.trt
-), brange AS (
+_QUADE_SQL = _FUNNEL_CELLS_SQL + """, brange AS (
   SELECT blk, MAX(m) - MIN(m) AS rng FROM cell GROUP BY blk
 ), bq AS (
   SELECT a.blk,
@@ -1317,10 +1285,6 @@ WITH cell AS (
            AS q2
   FROM brange a JOIN brange b ON b.rng <= a.rng
   GROUP BY a.blk
-), dims AS (
-  SELECT CAST(COUNT(DISTINCT blk) AS BIGINT) AS b,
-         CAST(COUNT(DISTINCT trt) AS BIGINT) AS k
-  FROM cell
 ), s4 AS (
   SELECT rk.trt, bq.q2 * (rk.r2 - (SELECT k + 1 FROM dims)) AS s4
   FROM rk JOIN bq ON bq.blk = rk.blk
@@ -1371,44 +1335,7 @@ def stats_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one 21-cell aggregate, broadcast triangular joins over the
     21-cell and 7-block frames, catalog-sized folds — the
     stats_friedman_test / stats_page_trend_test shape."""
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "click", "purchase")
-        & F.col("value").isNotNull()
-    )
-    cell = ev.groupBy(
-        (F.weekday("ts") + F.lit(1)).alias("blk"),
-        F.when(F.col("event_type") == "view", 1)
-        .when(F.col("event_type") == "click", 2)
-        .otherwise(3)
-        .alias("trt"),
-    ).agg(
-        (
-            F.round(F.sum(F.col("value").cast("decimal(28,8)")), 6).cast(
-                "double"
-            )
-            / F.count("value")
-        ).alias("m")
-    )
-    b2 = cell.select(
-        F.col("blk").alias("blk2"),
-        F.col("trt").alias("trt2"),
-        F.col("m").alias("m2"),
-    )
-    rk = (
-        cell.join(
-            F.broadcast(b2),
-            (F.col("blk") == F.col("blk2")) & (F.col("m2") <= F.col("m")),
-        )
-        .groupBy("blk", "trt")
-        .agg(
-            (
-                F.sum(F.when(F.col("m2") < F.col("m"), 2).otherwise(1))
-                + F.lit(1)
-            )
-            .cast("bigint")
-            .alias("r2")
-        )
-    )
+    cell, rk, dims = _funnel_cells(spark, sf_dir)
     brange = cell.groupBy("blk").agg(
         (F.max("m") - F.min("m")).alias("rng")
     )
@@ -1426,10 +1353,6 @@ def stats_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("q2")
         )
-    )
-    dims = cell.agg(
-        F.countDistinct("blk").cast("bigint").alias("b"),
-        F.countDistinct("trt").cast("bigint").alias("k"),
     )
     s4 = (
         rk.join(bq.withColumnRenamed("blk", "blkq"), F.col("blkq") == F.col("blk"))

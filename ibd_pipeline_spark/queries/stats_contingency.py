@@ -403,18 +403,9 @@ def stats_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: exact integer counts; the interval is one fixed
     double formula per arm. Scale: one user-grain aggregate."""
-    from ibd_pipeline_spark.operators.sketches import md5_bucket
+    from ibd_pipeline_spark.queries.abtests import _assigned_users
 
-    ev = load(spark, sf_dir, "events")
-    assigned = ev.groupBy(
-        "user_id", md5_bucket(F.col("user_id"), 11, 2).alias("arm")
-    ).agg(
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") > 80), 1
-            ).otherwise(0)
-        ).alias("converted")
-    )
+    assigned = _assigned_users(spark, sf_dir)
     c = assigned.groupBy("arm").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("converted").cast("bigint").alias("conv"),

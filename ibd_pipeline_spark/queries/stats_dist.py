@@ -13,6 +13,19 @@ from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from ibd_pipeline_spark.catalog import load
 from ibd_pipeline_spark.queries import query
 
+
+def _value_sides(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(v, is_a): every non-null purchase (is_a) and view `value`, the
+    two samples the distribution-distance tests compare."""
+    ev = load(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("purchase", "view")
+        & F.col("value").isNotNull()
+    )
+    return ev.select(
+        F.col("value").alias("v"),
+        (F.col("event_type") == "purchase").alias("is_a"),
+    )
+
 # ---------------------------------------------------------------------------
 # Jarque–Bera normality test (events.value)
 # ---------------------------------------------------------------------------
@@ -173,14 +186,7 @@ def stats_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-value frame."""
     from ibd_pipeline_spark.operators.ranking import with_global_prefix_sums
 
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("purchase", "view")
-        & F.col("value").isNotNull()
-    )
-    s = ev.select(
-        F.col("value").alias("v"),
-        (F.col("event_type") == "purchase").alias("is_a"),
-    )
+    s = _value_sides(spark, sf_dir)
     pv = s.groupBy("v").agg(
         F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("c1"),
         F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("c2"),
@@ -272,14 +278,7 @@ def stats_anderson_darling_2samp(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-key shuffle + one range exchange."""
     from ibd_pipeline_spark.operators.ranking import with_global_prefix_sums
 
-    ev = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("purchase", "view")
-        & F.col("value").isNotNull()
-    )
-    s = ev.select(
-        F.col("value").alias("v"),
-        (F.col("event_type") == "purchase").alias("is_a"),
-    )
+    s = _value_sides(spark, sf_dir)
     pv = s.groupBy("v").agg(
         F.count(F.when(F.col("is_a"), 1)).cast("bigint").alias("l1"),
         F.count(F.when(~F.col("is_a"), 1)).cast("bigint").alias("l2"),

@@ -15,16 +15,68 @@ from ibd_pipeline_spark.normal_tail import _phi_tail_col, _phi_tail_sql
 from ibd_pipeline_spark.queries import query
 
 # ---------------------------------------------------------------------------
-# Benjamini–Yekutieli FDR under arbitrary dependence (brand z-tests)
+# The family every query here corrects or combines: one two-sided z-test
+# per part brand, the brand's return rate against the corpus rate.
 # ---------------------------------------------------------------------------
 
-_BY_Q_NUM, _BY_Q_DEN = 1, 10  # q = 0.10, the BH family convention
+
+def _brand_pvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(brand, n, az, p_value): lines per brand, |z| and the two-sided
+    p-value from the Zelen-Severo normal tail, rounded to 8 (identical
+    doubles on both engines)."""
+    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_returnflag")
+    part = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    b = (
+        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .groupBy(F.col("p_brand").alias("brand"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
+            .cast("bigint")
+            .alias("r"),
+        )
+    )
+    tot = b.agg(
+        F.sum("n").cast("bigint").alias("nt"),
+        F.sum("r").cast("bigint").alias("rt"),
+    )
+    p0 = F.col("rt").cast("double") / F.col("nt")
+    az = F.abs(
+        (F.col("r").cast("double") / F.col("n") - p0)
+        / F.sqrt(p0 * (1.0 - p0) / F.col("n"))
+    )
+    zt = b.crossJoin(F.broadcast(tot)).select("brand", "n", az.alias("az"))
+    return zt.select(
+        "brand",
+        "n",
+        "az",
+        F.round(2.0 * _phi_tail_col(F.col("az")), 8).alias("p_value"),
+    )
 
 
-def _by_oracle() -> str:
-    from ibd_pipeline_spark.normal_tail import _phi_tail_sql as pts
+def _pvalue_ranks(pv: DataFrame) -> DataFrame:
+    """pv plus `rank`: ascending p-value, ties by brand, from a
+    triangular self-join over the brand-bounded frame (window-free).
+    One side is broadcast so the non-equi join plans as BNLJ, never a
+    partitioned cartesian."""
+    a, c = pv.alias("a"), pv.alias("c")
+    return (
+        a.join(
+            F.broadcast(c),
+            (F.col("c.p_value") < F.col("a.p_value"))
+            | (
+                (F.col("c.p_value") == F.col("a.p_value"))
+                & (F.col("c.brand") <= F.col("a.brand"))
+            ),
+        )
+        .groupBy("a.brand", "a.n", "a.az", "a.p_value")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("rank"))
+    )
 
-    return f"""
+
+# The oracle twin: `pv` is _brand_pvalues, `rk` is _pvalue_ranks plus
+# the family size m.
+_BRAND_RANKS_SQL = f"""
 WITH b AS (
   SELECT p.p_brand AS brand,
          CAST(COUNT(*) AS BIGINT) AS n,
@@ -41,8 +93,28 @@ WITH b AS (
                     * (1.0 - CAST(rt AS DOUBLE) / nt) / n)) AS az
   FROM b CROSS JOIN tot
 ), pv AS (
-  SELECT brand, n, az, ROUND(2.0 * {pts("az")}, 8) AS p_value FROM zt
-), mc AS (
+  SELECT brand, n, az, ROUND(2.0 * {_phi_tail_sql("az")}, 8) AS p_value
+  FROM zt
+), rk AS (
+  SELECT a.brand, a.n, a.az, a.p_value,
+         CAST(COUNT(*) AS BIGINT) AS rank,
+         CAST(MAX(cnt.m) AS BIGINT) AS m
+  FROM pv a
+  JOIN pv c ON (c.p_value < a.p_value)
+            OR (c.p_value = a.p_value AND c.brand <= a.brand)
+  CROSS JOIN (SELECT COUNT(*) AS m FROM pv) cnt
+  GROUP BY a.brand, a.n, a.az, a.p_value
+)"""
+
+# ---------------------------------------------------------------------------
+# Benjamini–Yekutieli FDR under arbitrary dependence (brand z-tests)
+# ---------------------------------------------------------------------------
+
+_BY_Q_NUM, _BY_Q_DEN = 1, 10  # q = 0.10, the BH family convention
+
+
+def _by_oracle() -> str:
+    return _BRAND_RANKS_SQL + f""", mc AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS m,
          CAST((SELECT CAST(ROUND(SUM(
                  CAST(1.0 / CAST(i AS DOUBLE) AS DECIMAL(28,12))), 10)
@@ -51,17 +123,10 @@ WITH b AS (
                WHERE i <= (SELECT COUNT(*) FROM pv)) AS DOUBLE)
            AS cm
   FROM pv
-), rk AS (
-  SELECT a.brand, a.n, a.az, a.p_value,
-         CAST(COUNT(*) AS BIGINT) AS rank
-  FROM pv a
-  JOIN pv c ON (c.p_value < a.p_value)
-            OR (c.p_value = a.p_value AND c.brand <= a.brand)
-  GROUP BY a.brand, a.n, a.az, a.p_value
 ), kmax AS (
   SELECT COALESCE(MAX(rank), 0) AS kmax
   FROM rk CROSS JOIN mc
-  WHERE p_value * m * cm * {_BY_Q_DEN} <= rank * {_BY_Q_NUM}
+  WHERE p_value * mc.m * cm * {_BY_Q_DEN} <= rank * {_BY_Q_NUM}
 )
 SELECT brand, n, ROUND(az, 6) AS z_stat, p_value,
        CAST(rank AS INT) AS p_rank,
@@ -90,41 +155,7 @@ def stats_benjamini_yekutieli(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical plan shape to BH — one fact-dim join, m-row
     algebra after."""
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_returnflag")
-    part = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    b = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy(F.col("p_brand").alias("brand"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-            .cast("bigint")
-            .alias("r"),
-        )
-    )
-    tot = b.agg(
-        F.sum("n").cast("bigint").alias("nt"),
-        F.sum("r").cast("bigint").alias("rt"),
-    )
-    p0 = F.col("rt").cast("double") / F.col("nt")
-    az = F.abs(
-        (F.col("r").cast("double") / F.col("n") - p0)
-        / F.sqrt(p0 * (1.0 - p0) / F.col("n"))
-    )
-    pv = (
-        b.crossJoin(F.broadcast(tot))
-        .select(
-            "brand",
-            "n",
-            az.alias("az"),
-        )
-        .select(
-            "brand",
-            "n",
-            "az",
-            F.round(2.0 * _phi_tail_col(F.col("az")), 8).alias("p_value"),
-        )
-    )
+    pv = _brand_pvalues(spark, sf_dir)
     mc = pv.agg(F.count(F.lit(1)).cast("bigint").alias("m")).select(
         "m",
         F.round(
@@ -139,20 +170,7 @@ def stats_benjamini_yekutieli(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("cm"),
     )
-    a, c = pv.alias("a"), pv.alias("c")
-    rk = (
-        a.join(
-            F.broadcast(c),
-            (F.col("c.p_value") < F.col("a.p_value"))
-            | (
-                (F.col("c.p_value") == F.col("a.p_value"))
-                & (F.col("c.brand") <= F.col("a.brand"))
-            ),
-        )
-        .groupBy("a.brand", "a.n", "a.az", "a.p_value")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("rank"))
-        .crossJoin(F.broadcast(mc))
-    )
+    rk = _pvalue_ranks(pv).crossJoin(F.broadcast(mc))
     kmax = rk.filter(
         F.col("p_value") * F.col("m") * F.col("cm") * _BY_Q_DEN
         <= F.col("rank") * _BY_Q_NUM
@@ -175,26 +193,7 @@ def stats_benjamini_yekutieli(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Combined p-values: Fisher's method + Stouffer's Z (brand z-tests)
 # ---------------------------------------------------------------------------
 
-_COMBINED_SQL = f"""
-WITH b AS (
-  SELECT p.p_brand AS brand,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END)
-              AS BIGINT) AS r
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-  GROUP BY p.p_brand
-), tot AS (
-  SELECT CAST(SUM(n) AS BIGINT) AS nt, CAST(SUM(r) AS BIGINT) AS rt FROM b
-), zt AS (
-  SELECT brand,
-         ABS((CAST(r AS DOUBLE) / n - CAST(rt AS DOUBLE) / nt)
-             / sqrt((CAST(rt AS DOUBLE) / nt)
-                    * (1.0 - CAST(rt AS DOUBLE) / nt) / n)) AS az
-  FROM b CROSS JOIN tot
-), pv AS (
-  SELECT brand, az, ROUND(2.0 * {_phi_tail_sql('az')}, 8) AS p_value
-  FROM zt
-), agg AS (
+_COMBINED_SQL = _BRAND_RANKS_SQL + f""", agg AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS m,
          CAST(ROUND(SUM(CAST(-2.0 * ln(p_value) AS DECIMAL(28,10))), 6)
               AS DOUBLE) AS fisher_stat,
@@ -235,35 +234,7 @@ def stats_combined_pvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
     p-values (identical doubles both engines by construction).
 
     Scale: one fact-dim join; everything after is m-row algebra."""
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_returnflag")
-    part = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    b = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy(F.col("p_brand").alias("brand"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-            .cast("bigint")
-            .alias("r"),
-        )
-    )
-    tot = b.agg(
-        F.sum("n").cast("bigint").alias("nt"),
-        F.sum("r").cast("bigint").alias("rt"),
-    )
-    p0 = F.col("rt").cast("double") / F.col("nt")
-    az = F.abs(
-        (F.col("r").cast("double") / F.col("n") - p0)
-        / F.sqrt(p0 * (1.0 - p0) / F.col("n"))
-    )
-    pv = b.crossJoin(F.broadcast(tot)).select(
-        "brand",
-        az.alias("az"),
-    ).select(
-        "brand",
-        "az",
-        F.round(2.0 * _phi_tail_col(F.col("az")), 8).alias("p_value"),
-    )
+    pv = _brand_pvalues(spark, sf_dir)
     agg = pv.agg(
         F.count(F.lit(1)).cast("bigint").alias("m"),
         F.round(
@@ -297,36 +268,7 @@ def stats_combined_pvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HOLM_ALPHA_NUM, _HOLM_ALPHA_DEN = 1, 20  # alpha = 0.05, cross-multiplied
 
-_HOLM_SQL = f"""
-WITH b AS (
-  SELECT p.p_brand AS brand,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END)
-              AS BIGINT) AS r
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-  GROUP BY p.p_brand
-), tot AS (
-  SELECT CAST(SUM(n) AS BIGINT) AS nt, CAST(SUM(r) AS BIGINT) AS rt FROM b
-), zt AS (
-  SELECT brand, n, r,
-         ABS((CAST(r AS DOUBLE) / n - CAST(rt AS DOUBLE) / nt)
-             / sqrt((CAST(rt AS DOUBLE) / nt) * (1.0 - CAST(rt AS DOUBLE) / nt)
-                    / n)) AS az
-  FROM b, tot
-), pv AS (
-  SELECT brand, n, az,
-         ROUND(2.0 * {_phi_tail_sql("az")}, 8) AS p_value
-  FROM zt
-), rk AS (
-  SELECT a.brand, a.n, a.az, a.p_value,
-         CAST(COUNT(*) AS BIGINT) AS rank,
-         CAST(MAX(cnt.m) AS BIGINT) AS m
-  FROM pv a
-  JOIN pv c ON (c.p_value < a.p_value)
-            OR (c.p_value = a.p_value AND c.brand <= a.brand)
-  CROSS JOIN (SELECT COUNT(*) AS m FROM pv) cnt
-  GROUP BY a.brand, a.n, a.az, a.p_value
-), holm AS (
+_HOLM_SQL = _BRAND_RANKS_SQL + f""", holm AS (
   SELECT a.brand, a.n, a.az, a.p_value, a.rank, a.m,
          LEAST(1.0, MAX((a.m - c.rank + 1) * c.p_value)) AS holm_p,
          MIN(CASE WHEN c.p_value * (a.m - c.rank + 1) * {_HOLM_ALPHA_DEN}
@@ -360,45 +302,8 @@ def stats_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one fact-dimension join + per-brand counts (map-side
     combined); everything after runs on m rows."""
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_returnflag")
-    part = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    b = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy(F.col("p_brand").alias("brand"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-            .cast("bigint")
-            .alias("r"),
-        )
-    )
-    tot = b.agg(
-        F.sum("n").cast("bigint").alias("nt"),
-        F.sum("r").cast("bigint").alias("rt"),
-    )
-    p0 = F.col("rt").cast("double") / F.col("nt")
-    az = F.abs(
-        (F.col("r").cast("double") / F.col("n") - p0)
-        / F.sqrt(p0 * (1.0 - p0) / F.col("n"))
-    )
-    zt = b.crossJoin(F.broadcast(tot)).select("brand", "n", az.alias("az"))
-    pv = zt.select(
-        "brand", "n", "az",
-        F.round(2.0 * _phi_tail_col(F.col("az")), 8).alias("p_value"),
-    )
-    a, c = pv.alias("a"), pv.alias("c")
-    rk = (
-        a.join(
-            F.broadcast(c),
-            (F.col("c.p_value") < F.col("a.p_value"))
-            | (
-                (F.col("c.p_value") == F.col("a.p_value"))
-                & (F.col("c.brand") <= F.col("a.brand"))
-            ),
-        )
-        .groupBy("a.brand", "a.n", "a.az", "a.p_value")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("rank"))
-    )
+    pv = _brand_pvalues(spark, sf_dir)
+    rk = _pvalue_ranks(pv)
     m = pv.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     rk = rk.crossJoin(F.broadcast(m))
     ra = rk.select(
@@ -444,36 +349,7 @@ def stats_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BH_Q_NUM, _BH_Q_DEN = 1, 10  # q = 0.10
 
 
-_BH_SQL = f"""
-WITH b AS (
-  SELECT p.p_brand AS brand,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END)
-              AS BIGINT) AS r
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-  GROUP BY p.p_brand
-), tot AS (
-  SELECT CAST(SUM(n) AS BIGINT) AS nt, CAST(SUM(r) AS BIGINT) AS rt FROM b
-), zt AS (
-  SELECT brand, n, r,
-         ABS((CAST(r AS DOUBLE) / n - CAST(rt AS DOUBLE) / nt)
-             / sqrt((CAST(rt AS DOUBLE) / nt) * (1.0 - CAST(rt AS DOUBLE) / nt)
-                    / n)) AS az
-  FROM b, tot
-), pv AS (
-  SELECT brand, n, az,
-         ROUND(2.0 * {_phi_tail_sql("az")}, 8) AS p_value
-  FROM zt
-), rk AS (
-  SELECT a.brand, a.n, a.az, a.p_value,
-         CAST(COUNT(*) AS BIGINT) AS rank,
-         CAST(MAX(cnt.m) AS BIGINT) AS m
-  FROM pv a
-  JOIN pv c ON (c.p_value < a.p_value)
-            OR (c.p_value = a.p_value AND c.brand <= a.brand)
-  CROSS JOIN (SELECT COUNT(*) AS m FROM pv) cnt
-  GROUP BY a.brand, a.n, a.az, a.p_value
-), kmax AS (
+_BH_SQL = _BRAND_RANKS_SQL + f""", kmax AS (
   SELECT COALESCE(MAX(rank), 0) AS kmax
   FROM rk WHERE p_value * m * {_BH_Q_DEN} <= rank * {_BH_Q_NUM}
 )
@@ -500,47 +376,8 @@ def stats_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one fact-dimension join + per-brand counts (map-side
     combined); everything after runs on m = |brands| rows."""
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_returnflag")
-    part = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    b = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy(F.col("p_brand").alias("brand"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-            .cast("bigint")
-            .alias("r"),
-        )
-    )
-    tot = b.agg(
-        F.sum("n").cast("bigint").alias("nt"),
-        F.sum("r").cast("bigint").alias("rt"),
-    )
-    p0 = F.col("rt").cast("double") / F.col("nt")
-    az = F.abs(
-        (F.col("r").cast("double") / F.col("n") - p0)
-        / F.sqrt(p0 * (1.0 - p0) / F.col("n"))
-    )
-    zt = b.crossJoin(F.broadcast(tot)).select("brand", "n", az.alias("az"))
-    tail = _phi_tail_col(F.col("az"))
-    pv = zt.select(
-        "brand", "n", "az", F.round(2.0 * tail, 8).alias("p_value")
-    )
-    a, c = pv.alias("a"), pv.alias("c")
-    rk = (
-        # brand-bounded frame: broadcast one side so the non-equi
-        # rank join plans as BNLJ, never a partitioned cartesian
-        a.join(
-            F.broadcast(c),
-            (F.col("c.p_value") < F.col("a.p_value"))
-            | (
-                (F.col("c.p_value") == F.col("a.p_value"))
-                & (F.col("c.brand") <= F.col("a.brand"))
-            ),
-        )
-        .groupBy("a.brand", "a.n", "a.az", "a.p_value")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("rank"))
-    )
+    pv = _brand_pvalues(spark, sf_dir)
+    rk = _pvalue_ranks(pv)
     m = pv.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     rk = rk.crossJoin(F.broadcast(m))
     kmax = rk.filter(

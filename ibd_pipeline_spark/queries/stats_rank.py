@@ -11,12 +11,10 @@ SURVEY §2.2 north-star rows.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
+
 from ibd_pipeline_spark.catalog import load
-from ibd_pipeline_spark.normal_tail import (
-    _phi_tail_col,
-    _phi_tail_sql,
-)
+from ibd_pipeline_spark.normal_tail import _phi_tail_col, _phi_tail_sql
 from ibd_pipeline_spark.queries import query
 
 # ---------------------------------------------------------------------------
@@ -394,7 +392,83 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Kruskal-Wallis H (k-group rank ANOVA over event-type values)
 # ---------------------------------------------------------------------------
 
-_KW_SQL = """
+def _group_rank_sums(
+    spark: SparkSession, sf_dir: str
+) -> "tuple[DataFrame, list[tuple[str, str]]]":
+    """(agg, groups): the rank machine of Kruskal–Wallis and Dunn over
+    non-null `value` by event type. `agg` is ONE row holding, per
+    group column c, its count n__c and doubled rank sum r2__c, plus
+    the tie term Σ(t³−t); `groups` pairs each c with its group value.
+
+    Rank sums are exact integers via rank-from-prefix-sum
+    (2·avg_rank(v) = 2·cum(v)−t(v)+1, one multi-weight distributed
+    scan, no global RANK window)."""
+    from ibd_pipeline_spark.operators.ranking import with_global_prefix_sums
+
+    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    s = ev.select(F.col("value").alias("v"), F.col("event_type").alias("g"))
+    # group list is k = 5 catalog values — one metadata-sized collect
+    # (what pivot() does internally, minus pivot's extra agg pass:
+    # measured 3.2 s -> 0.4 s for the per-value frame at sf0.1)
+    gvals = sorted(r["g"] for r in s.select("g").distinct().collect())
+    # Sanitized positional aliases (g__0..g__{k-1}) so a group value
+    # colliding with internal column names ('v', 't', 'n', 'k') or
+    # containing a quote can't corrupt the plan; the value itself
+    # travels only inside F.lit, never an f-string expr.
+    gcols = [f"g__{i}" for i in range(len(gvals))]
+    per_value = s.groupBy("v").agg(
+        *[
+            F.count(F.when(F.col("g") == F.lit(v), 1))
+            .cast("bigint")
+            .alias(c)
+            for c, v in zip(gcols, gvals)
+        ]
+    )
+    per_value = per_value.withColumn(
+        "t", sum(F.col(c) for c in gcols).cast("bigint")
+    )
+    cum = with_global_prefix_sums(per_value, ["v"], ["t"])
+    two_avg_rank = 2 * F.col("_cum_t") - F.col("t") + F.lit(1)
+    grp_aggs = []
+    for c in gcols:
+        grp_aggs.append(F.sum(F.col(c)).cast("bigint").alias(f"n__{c}"))
+        grp_aggs.append(
+            F.sum(F.col(c) * two_avg_rank).cast("bigint").alias(f"r2__{c}")
+        )
+    agg = cum.agg(
+        *grp_aggs,
+        F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
+        .cast("bigint")
+        .alias("tie_term"),
+    )
+    return agg, list(zip(gcols, gvals))
+
+
+def _per_group(
+    agg: DataFrame, groups: "list[tuple[str, str]]", *keep: str
+) -> DataFrame:
+    """Unpivot _group_rank_sums' row to (*keep, g, n_g, r2_g), one row
+    per group, via an explode of struct literals — group names enter
+    as F.lit only."""
+    return agg.select(
+        *keep,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(v).alias("g"),
+                        F.col(f"n__{c}").alias("n_g"),
+                        F.col(f"r2__{c}").alias("r2_g"),
+                    )
+                    for c, v in groups
+                ]
+            )
+        ).alias("_s"),
+    ).select(*keep, "_s.g", "_s.n_g", "_s.r2_g")
+
+
+# The oracle twin of _group_rank_sums, with `grp` one row per group.
+_GROUP_RANKS_SQL = """
 WITH s AS (
   SELECT value AS v, event_type AS g FROM events WHERE value IS NOT NULL
 ), r AS (
@@ -413,7 +487,9 @@ WITH s AS (
 ), ties AS (
   SELECT CAST(SUM(t * t * t - t) AS BIGINT) AS tie_term
   FROM (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM s GROUP BY v)
-), dev AS (
+)"""
+
+_KW_SQL = _GROUP_RANKS_SQL + """, dev AS (
   SELECT SUM(CAST(ROUND(
            n_g * (CAST(r2_g AS DOUBLE) / (2 * n_g) - (n + 1) / 2.0)
                * (CAST(r2_g AS DOUBLE) / (2 * n_g) - (n + 1) / 2.0), 6)
@@ -455,60 +531,8 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one value-key shuffle for tie groups, one range exchange
     for the prefix scan; everything after runs on k = 5 rows."""
-    from ibd_pipeline_spark.operators.ranking import with_global_prefix_sums
-
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    s = ev.select(F.col("value").alias("v"), F.col("event_type").alias("g"))
-    # group list is k = 5 catalog values — one metadata-sized collect
-    # (what pivot() does internally, minus pivot's extra agg pass:
-    # measured 3.2 s -> 0.4 s for the per-value frame at sf0.1)
-    gvals = sorted(r["g"] for r in s.select("g").distinct().collect())
-    # Sanitized positional aliases (g__0..g__{k-1}) so a group value
-    # colliding with internal column names ('v', 't', 'n', 'k') or
-    # containing a quote can't corrupt the plan (ADVICE r11); the
-    # value itself travels only inside F.lit, never an f-string expr.
-    gcols = [f"g__{i}" for i in range(len(gvals))]
-    per_value = s.groupBy("v").agg(
-        *[
-            F.count(F.when(F.col("g") == F.lit(v), 1))
-            .cast("bigint")
-            .alias(c)
-            for c, v in zip(gcols, gvals)
-        ]
-    )
-    per_value = per_value.withColumn(
-        "t", sum(F.col(c) for c in gcols).cast("bigint")
-    )
-    cum = with_global_prefix_sums(per_value, ["v"], ["t"])
-    two_avg_rank = 2 * F.col("_cum_t") - F.col("t") + F.lit(1)
-    grp_aggs = []
-    for c in gcols:
-        grp_aggs.append(F.sum(F.col(c)).cast("bigint").alias(f"n__{c}"))
-        grp_aggs.append(
-            F.sum(F.col(c) * two_avg_rank).cast("bigint").alias(f"r2__{c}")
-        )
-    agg = cum.agg(
-        *grp_aggs,
-        F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
-        .cast("bigint")
-        .alias("tie_term"),
-    )
-    # unpivot the k per-group (n, 2R) pairs back to rows via an
-    # explode of struct literals — group names enter as F.lit only
-    grp = agg.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(v).alias("g"),
-                        F.col(f"n__{c}").alias("n_g"),
-                        F.col(f"r2__{c}").alias("r2_g"),
-                    )
-                    for c, v in zip(gcols, gvals)
-                ]
-            )
-        ).alias("_s")
-    ).select("_s.g", "_s.n_g", "_s.r2_g")
+    agg, groups = _group_rank_sums(spark, sf_dir)
+    grp = _per_group(agg, groups)
     nn = grp.agg(
         F.sum("n_g").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
@@ -538,11 +562,11 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Even df has the exact closed form exp(-x/2)·Σ_{j<df/2}(x/2)^j/j!;
     # odd df would need the erf branch, which this corpus never takes —
     # fail loudly instead of silently mis-stating p.
-    df = len(gvals) - 1
+    df = len(groups) - 1
     if df < 2 or df % 2 != 0:
         raise ValueError(
             "stats_kruskal_wallis closed-form p-value requires even "
-            f"df >= 2; got k={len(gvals)} groups (df={df}). Use the "
+            f"df >= 2; got k={len(groups)} groups (df={df}). Use the "
             "regularized-gamma survival for odd df."
         )
     fact = 1.0
@@ -909,25 +933,7 @@ def stats_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Dunn's post-hoc pairwise test after Kruskal-Wallis (r14)
 # ---------------------------------------------------------------------------
 
-_DUNN_SQL = f"""
-WITH s AS (
-  SELECT value AS v, event_type AS g FROM events WHERE value IS NOT NULL
-), r AS (
-  SELECT g,
-         RANK() OVER (ORDER BY v) + (COUNT(*) OVER (PARTITION BY v) - 1) / 2.0
-           AS avg_rank
-  FROM s
-), grp AS (
-  SELECT g, CAST(COUNT(*) AS BIGINT) AS n_g,
-         CAST(SUM(2 * avg_rank) AS BIGINT) AS r2_g
-  FROM r GROUP BY g
-), nn AS (
-  SELECT CAST(SUM(n_g) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS k
-  FROM grp
-), ties AS (
-  SELECT CAST(SUM(t * t * t - t) AS BIGINT) AS tie_term
-  FROM (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM s GROUP BY v)
-), pairs AS (
+_DUNN_SQL = _GROUP_RANKS_SQL + f""", pairs AS (
   SELECT a.g AS group_a, b.g AS group_b, a.n_g AS n_a, b.n_g AS n_b,
          CAST(a.r2_g AS DOUBLE) / (2 * a.n_g) AS rbar_a,
          CAST(b.r2_g AS DOUBLE) / (2 * b.n_g) AS rbar_b,
@@ -972,55 +978,11 @@ def stats_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to stats_kruskal_wallis plus a k²/2-row
     broadcast pair join (k = 5)."""
-    from ibd_pipeline_spark.operators.ranking import with_global_prefix_sums
-
-    ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    s = ev.select(F.col("value").alias("v"), F.col("event_type").alias("g"))
-    gvals = sorted(r["g"] for r in s.select("g").distinct().collect())
-    gcols = [f"g__{i}" for i in range(len(gvals))]
-    per_value = s.groupBy("v").agg(
-        *[
-            F.count(F.when(F.col("g") == F.lit(v), 1))
-            .cast("bigint")
-            .alias(c)
-            for c, v in zip(gcols, gvals)
-        ]
-    )
-    per_value = per_value.withColumn(
-        "t", sum(F.col(c) for c in gcols).cast("bigint")
-    )
-    cum = with_global_prefix_sums(per_value, ["v"], ["t"])
-    two_avg_rank = 2 * F.col("_cum_t") - F.col("t") + F.lit(1)
-    grp_aggs = []
-    for c in gcols:
-        grp_aggs.append(F.sum(F.col(c)).cast("bigint").alias(f"n__{c}"))
-        grp_aggs.append(
-            F.sum(F.col(c) * two_avg_rank).cast("bigint").alias(f"r2__{c}")
-        )
-    agg = cum.agg(
-        *grp_aggs,
-        F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
-        .cast("bigint")
-        .alias("tie_term"),
+    agg, groups = _group_rank_sums(spark, sf_dir)
     # ONE row; its explode fans out to THREE consumers below (totals +
     # both pair sides), each of which otherwise re-runs the cumsum
-    # pass and the multi-weight aggregate (r16: measured 2.3 -> 1.2 s)
-    ).localCheckpoint(eager=True)
-    grp = agg.select(
-        "tie_term",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(v).alias("g"),
-                        F.col(f"n__{c}").alias("n_g"),
-                        F.col(f"r2__{c}").alias("r2_g"),
-                    )
-                    for c, v in zip(gcols, gvals)
-                ]
-            )
-        ).alias("_s"),
-    ).select("tie_term", "_s.g", "_s.n_g", "_s.r2_g")
+    # pass and the multi-weight aggregate (measured 2.3 -> 1.2 s)
+    grp = _per_group(agg.localCheckpoint(eager=True), groups, "tie_term")
     nn = grp.agg(
         F.sum("n_g").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("k"),

@@ -19,17 +19,45 @@ from ibd_pipeline_spark.normal_tail import (  # noqa: F401
 )
 from ibd_pipeline_spark.queries import query
 
-
 # ---------------------------------------------------------------------------
-# (moved from round11c.py in the r14 chronological->topic split;
-# registry names, semantics, and oracles unchanged)
+# The right-censored conversion lifetimes all three estimators read
 # ---------------------------------------------------------------------------
 
-# ---------------------------------------------------------------------------
-# Log-rank test (payers vs non-payers user-lifetime survival)
-# ---------------------------------------------------------------------------
 
-_LOGRANK_SQL = f"""
+def _lifetimes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(grp1, dur, censored), one row per user: death is the user's
+    first purchase, `dur` the days from first activity to it, and a
+    never-purchaser is censored at their last activity. `grp1` marks
+    users whose first event is a 'view' (the log-rank cohort; the MIN
+    over (ts, event_id, event_type) is unique per user and orders the
+    same on both engines). Callers that drop `grp1` drop its
+    aggregate from the plan too.
+
+    Scale: one user_id shuffle for lifetimes; everything after runs
+    on the day-span-bounded duration frame."""
+    ev = load(spark, sf_dir, "events")
+    u = ev.groupBy("user_id").agg(
+        F.min("ts").alias("first_ts"),
+        F.max("ts").alias("last_ts"),
+        F.min(
+            F.when(F.col("event_type") == "purchase", F.col("ts"))
+        ).alias("conv_ts"),
+        F.min(F.struct("ts", "event_id", "event_type")).alias("frow"),
+    )
+    return u.select(
+        (F.col("frow.event_type") == "view").alias("grp1"),
+        F.datediff(
+            F.to_date(F.coalesce("conv_ts", "last_ts")),
+            F.to_date("first_ts"),
+        )
+        .cast("bigint")
+        .alias("dur"),
+        F.col("conv_ts").isNull().alias("censored"),
+    )
+
+
+# The oracle twin of _lifetimes: `lif`.
+_LIFETIMES_SQL = """
 WITH u AS (
   SELECT user_id,
          MIN(CAST(ts AS TIMESTAMP)) AS first_ts,
@@ -46,7 +74,19 @@ WITH u AS (
               AS BIGINT) AS dur,
          conv_ts IS NULL AS censored
   FROM u
-), d AS (
+)"""
+
+
+# ---------------------------------------------------------------------------
+# (moved from round11c.py in the r14 chronological->topic split;
+# registry names, semantics, and oracles unchanged)
+# ---------------------------------------------------------------------------
+
+# ---------------------------------------------------------------------------
+# Log-rank test (payers vs non-payers user-lifetime survival)
+# ---------------------------------------------------------------------------
+
+_LOGRANK_SQL = _LIFETIMES_SQL + f""", d AS (
   SELECT dur,
          CAST(COUNT(*) FILTER (grp1 AND NOT censored) AS BIGINT) AS d1,
          CAST(COUNT(*) FILTER (NOT grp1 AND NOT censored) AS BIGINT) AS d2,
@@ -120,29 +160,10 @@ def stats_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the order-independent sum; z, chi2 and the Zelen-Severo
     p-value are identical double chains on both engines.
 
-    Scale: one user_id shuffle for lifetimes; everything after runs
-    on the day-span-bounded duration frame."""
+    Scale: as _lifetimes."""
     from ibd_pipeline_spark.operators.calendar import month_stitched_cumsum
 
-    ev = load(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("conv_ts"),
-        F.min(F.struct("ts", "event_id", "event_type")).alias("frow"),
-    )
-    lif = u.select(
-        (F.col("frow.event_type") == "view").alias("grp1"),
-        F.datediff(
-            F.to_date(F.coalesce("conv_ts", "last_ts")),
-            F.to_date("first_ts"),
-        )
-        .cast("bigint")
-        .alias("dur"),
-        F.col("conv_ts").isNull().alias("censored"),
-    )
+    lif = _lifetimes(spark, sf_dir)
     d = lif.groupBy("dur").agg(
         F.count(F.when(F.col("grp1") & ~F.col("censored"), 1))
         .cast("bigint")
@@ -241,21 +262,7 @@ def stats_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Nelson–Aalen cumulative hazard
 # ---------------------------------------------------------------------------
 
-_NA_SQL = """
-WITH u AS (
-  SELECT user_id,
-         MIN(CAST(ts AS TIMESTAMP)) AS first_ts,
-         MAX(CAST(ts AS TIMESTAMP)) AS last_ts,
-         MIN(CASE WHEN event_type = 'purchase' THEN CAST(ts AS TIMESTAMP) END)
-           AS conv_ts
-  FROM events GROUP BY user_id
-), lif AS (
-  SELECT CAST(datediff('day', CAST(first_ts AS DATE),
-                       CAST(COALESCE(conv_ts, last_ts) AS DATE))
-              AS BIGINT) AS dur,
-         conv_ts IS NULL AS censored
-  FROM u
-), d AS (
+_NA_SQL = _LIFETIMES_SQL + """, d AS (
   SELECT dur,
          CAST(COUNT(*) FILTER (NOT censored) AS BIGINT) AS d_events,
          CAST(COUNT(*) FILTER (censored) AS BIGINT) AS c_censored
@@ -305,27 +312,10 @@ def stats_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     block-stitched cumsum (blocks of 32 duration days — the r11
     calendar helper with an integer spine), no unpartitioned window.
 
-    Scale: one user_id shuffle for lifetimes; everything after runs
-    on the day-span-bounded duration frame."""
+    Scale: as _lifetimes."""
     from ibd_pipeline_spark.operators.calendar import month_stitched_cumsum
 
-    ev = load(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("conv_ts"),
-    )
-    lif = u.select(
-        F.datediff(
-            F.to_date(F.coalesce("conv_ts", "last_ts")),
-            F.to_date("first_ts"),
-        )
-        .cast("bigint")
-        .alias("dur"),
-        F.col("conv_ts").isNull().alias("censored"),
-    )
+    lif = _lifetimes(spark, sf_dir)
     d = lif.groupBy("dur").agg(
         F.count(F.when(~F.col("censored"), 1)).cast("bigint").alias("d_events"),
         F.count(F.when(F.col("censored"), 1)).cast("bigint").alias("c_censored"),
@@ -388,21 +378,7 @@ def stats_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Kaplan–Meier survival estimator (user lifetime with right-censoring)
 # ---------------------------------------------------------------------------
 
-_KM_SQL = """
-WITH u AS (
-  SELECT user_id,
-         MIN(CAST(ts AS TIMESTAMP)) AS first_ts,
-         MAX(CAST(ts AS TIMESTAMP)) AS last_ts,
-         MIN(CASE WHEN event_type = 'purchase' THEN CAST(ts AS TIMESTAMP) END)
-           AS conv_ts
-  FROM events GROUP BY user_id
-), lif AS (
-  SELECT CAST(datediff('day', CAST(first_ts AS DATE),
-                       CAST(COALESCE(conv_ts, last_ts) AS DATE))
-              AS BIGINT) AS dur,
-         conv_ts IS NULL AS censored
-  FROM u
-), d AS (
+_KM_SQL = _LIFETIMES_SQL + """, d AS (
   SELECT dur,
          CAST(COUNT(*) FILTER (NOT censored) AS BIGINT) AS d_events,
          CAST(COUNT(*) FILTER (censored) AS BIGINT) AS c_censored
@@ -460,25 +436,7 @@ def stats_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     duration frame is DAY-SPAN-bounded (≤ dataset days — the
     plan-audit allow-list bound), so its cumulative windows run over
     ≤ ~10³ rows of aggregate, never data."""
-    from pyspark.sql import Window
-
-    ev = load(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("conv_ts"),
-    )
-    lif = u.select(
-        F.datediff(
-            F.to_date(F.coalesce("conv_ts", "last_ts")),
-            F.to_date("first_ts"),
-        )
-        .cast("bigint")
-        .alias("dur"),
-        F.col("conv_ts").isNull().alias("censored"),
-    )
+    lif = _lifetimes(spark, sf_dir)
     d = lif.groupBy("dur").agg(
         F.count(F.when(~F.col("censored"), 1)).alias("d_events"),
         F.count(F.when(F.col("censored"), 1)).alias("c_censored"),

@@ -18,6 +18,37 @@ from ibd_pipeline_spark.queries import query
 
 _STOP_SQL = "['" + "','".join(T.STOPWORDS) + "']"
 
+# The oracle twin of the quality score (length, lexical-diversity and
+# stopword-ratio terms averaged, clamped to [0, 1], rounded to 6).
+_QUALITY_SQL = f"""ROUND(GREATEST(LEAST((
+             LEAST(len(string_split(text, ' ')) / 50.0, 1.0)
+           + CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
+               / len(string_split(text, ' '))
+           + GREATEST(1.0 - ABS(CAST(len(list_filter(string_split(text, ' '),
+                         t -> list_contains({_STOP_SQL}, t))) AS DOUBLE)
+                     / len(string_split(text, ' ')) - 0.06) * 4, 0.0)
+         ) / 3, 1.0), 0.0), 6)"""
+
+
+
+def _bigram_counts(d: DataFrame, n: str) -> DataFrame:
+    """(left_tok, right_tok, n): how often each adjacent pair of
+    whitespace tokens occurs in d.text (a map-side-combined hash
+    aggregate; shuffle = distinct pair space)."""
+    toks = F.split("text", " ")
+    pairs = F.zip_with(
+        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
+        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
+        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
+    )
+    return (
+        d.select(F.explode(pairs).alias("p"))
+        .groupBy(
+            F.col("p.l").alias("left_tok"), F.col("p.r").alias("right_tok")
+        )
+        .agg(F.count(F.lit(1)).alias(n))
+    )
+
 
 @query(
     "text_token_stats",
@@ -70,14 +101,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH scored AS (
   SELECT doc_id, lang,
          len(string_split(text, ' ')) AS nt,
-         ROUND(GREATEST(LEAST((
-             LEAST(len(string_split(text, ' ')) / 50.0, 1.0)
-           + CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-               / len(string_split(text, ' '))
-           + GREATEST(1.0 - ABS(CAST(len(list_filter(string_split(text, ' '),
-                         t -> list_contains({_STOP_SQL}, t))) AS DOUBLE)
-                     / len(string_split(text, ' ')) - 0.06) * 4, 0.0)
-         ) / 3, 1.0), 0.0), 6) AS quality
+         {_QUALITY_SQL} AS quality
   FROM documents
 )
 SELECT doc_id, lang, nt AS n_tokens, quality
@@ -1277,19 +1301,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-frame windows PARTITIONED by token (vocab-sized groups) plus
     a broadcast total."""
     d = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    pairs = F.zip_with(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-    )
-    c = (
-        d.select(F.explode(pairs).alias("p"))
-        .groupBy(
-            F.col("p.l").alias("left_tok"), F.col("p.r").alias("right_tok")
-        )
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-    )
+    c = _bigram_counts(d, "n_pair")
     nl = c.groupBy("left_tok").agg(F.sum("n_pair").alias("n_left"))
     nr = c.groupBy("right_tok").agg(F.sum("n_pair").alias("n_right"))
     nt = c.agg(F.sum("n_pair").alias("n_total"))

@@ -20,19 +20,65 @@ from ibd_pipeline_spark.normal_tail import (  # noqa: F401
 )
 from ibd_pipeline_spark.queries import query
 
-
 # ---------------------------------------------------------------------------
-# (moved from round11c.py in the r14 chronological->topic split;
-# registry names, semantics, and oracles unchanged)
+# The daily-volume lag products the ACF and Ljung–Box read
 # ---------------------------------------------------------------------------
 
-# ---------------------------------------------------------------------------
-# Ljung-Box portmanteau test (daily volume, lags 1..8)
-# ---------------------------------------------------------------------------
 
-_LB_H = 8
+def _lag_products(
+    spark: SparkSession, sf_dir: str, max_lag: int
+) -> "tuple[DataFrame, DataFrame]":
+    """(num, den) of the daily-volume autocorrelation at lags
+    1..max_lag: num holds per lag_k the deviation-product sum `num`,
+    its pair count n_pairs and the day count n_days; den is the one
+    row Σ(x_t−x̄)². Pairs come from a LAG SPINE JOIN (explode k,
+    equi-join on day+k) — no unpartitioned window, and gap days pair
+    by CALENDAR distance. Every deviation product is decimal-cast
+    before the order-independent sums."""
+    ev = load(spark, sf_dir, "events")
+    d = ev.groupBy(
+        F.unix_date(F.to_date(F.date_trunc("day", "ts"))).alias("di")
+    ).agg(F.count(F.lit(1)).alias("x"))
+    mu = d.agg(
+        (F.sum("x").cast("double") / F.count(F.lit(1))).alias("mu"),
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+    )
+    dm = d.crossJoin(F.broadcast(mu))
+    den = dm.agg(
+        F.sum(
+            (
+                (F.col("x").cast("double") - F.col("mu"))
+                * (F.col("x").cast("double") - F.col("mu"))
+            ).cast("decimal(28,8)")
+        )
+        .cast("double")
+        .alias("den")
+    )
+    ks = ev.sparkSession.range(1, max_lag + 1).select(
+        F.col("id").alias("lag_k")
+    )
+    b = d.select(F.col("di").alias("dib"), F.col("x").alias("xb"))
+    pairs = dm.crossJoin(F.broadcast(ks)).join(
+        b, F.col("dib") == F.col("di") + F.col("lag_k")
+    )
+    num = pairs.groupBy("lag_k").agg(
+        F.sum(
+            (
+                (F.col("x").cast("double") - F.col("mu"))
+                * (F.col("xb").cast("double") - F.col("mu"))
+            ).cast("decimal(28,8)")
+        )
+        .cast("double")
+        .alias("num"),
+        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+        F.max("n_days").alias("n_days"),
+    )
+    return num, den
 
-_LB_SQL = f"""
+
+def _lag_products_sql(max_lag: int) -> str:
+    """The oracle twin of _lag_products: `muc`, `denc` and `numc`."""
+    return f"""
 WITH dd AS (
   SELECT CAST(date_diff('day', DATE '2024-01-01',
                         CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE))
@@ -52,11 +98,26 @@ WITH dd AS (
   SELECT t.k AS lag_k,
          CAST(SUM(CAST((CAST(a.x AS DOUBLE) - muc.mu)
                        * (CAST(b.x AS DOUBLE) - muc.mu) AS DECIMAL(28,8)))
-              AS DOUBLE) AS num
-  FROM UNNEST(range(1, {_LB_H + 1})) t(k)
+              AS DOUBLE) AS num,
+         CAST(COUNT(*) AS BIGINT) AS n_pairs
+  FROM UNNEST(range(1, {max_lag + 1})) t(k)
   JOIN dd a ON TRUE JOIN dd b ON b.di = a.di + t.k CROSS JOIN muc
   GROUP BY t.k
-), terms AS (
+)"""
+
+
+# ---------------------------------------------------------------------------
+# (moved from round11c.py in the r14 chronological->topic split;
+# registry names, semantics, and oracles unchanged)
+# ---------------------------------------------------------------------------
+
+# ---------------------------------------------------------------------------
+# Ljung-Box portmanteau test (daily volume, lags 1..8)
+# ---------------------------------------------------------------------------
+
+_LB_H = 8
+
+_LB_SQL = _lag_products_sql(_LB_H) + f""", terms AS (
   SELECT SUM(CAST(ROUND(
            (numc.num / denc.den) * (numc.num / denc.den)
            / ((SELECT n_days FROM muc) - numc.lag_k), 12)
@@ -95,43 +156,7 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one day-grain count aggregate; the spine join runs on
     (days × 8) rows; the statistic folds on one row."""
-    ev = load(spark, sf_dir, "events")
-    d = ev.groupBy(
-        F.unix_date(F.to_date(F.date_trunc("day", "ts"))).alias("di")
-    ).agg(F.count(F.lit(1)).alias("x"))
-    mu = d.agg(
-        (F.sum("x").cast("double") / F.count(F.lit(1))).alias("mu"),
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-    )
-    dm = d.crossJoin(F.broadcast(mu))
-    den = dm.agg(
-        F.sum(
-            (
-                (F.col("x").cast("double") - F.col("mu"))
-                * (F.col("x").cast("double") - F.col("mu"))
-            ).cast("decimal(28,8)")
-        )
-        .cast("double")
-        .alias("den")
-    )
-    ks = ev.sparkSession.range(1, _LB_H + 1).select(
-        F.col("id").alias("lag_k")
-    )
-    b = d.select(F.col("di").alias("dib"), F.col("x").alias("xb"))
-    pairs = dm.crossJoin(F.broadcast(ks)).join(
-        b, F.col("dib") == F.col("di") + F.col("lag_k")
-    )
-    num = pairs.groupBy("lag_k").agg(
-        F.sum(
-            (
-                (F.col("x").cast("double") - F.col("mu"))
-                * (F.col("xb").cast("double") - F.col("mu"))
-            ).cast("decimal(28,8)")
-        )
-        .cast("double")
-        .alias("num"),
-        F.max("n_days").alias("n_days"),
-    )
+    num, den = _lag_products(spark, sf_dir, _LB_H)
     rho = F.col("num") / F.col("den")
     terms = (
         num.crossJoin(F.broadcast(den))
@@ -345,10 +370,7 @@ def stats_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one day-grain aggregate, then day-frame stitches; argmax
     is a LIMIT-1 TakeOrdered."""
-    from ibd_pipeline_spark.operators.calendar import (
-        month_stitched_cumsum,
-        month_stitched_running_extreme,
-    )
+    from ibd_pipeline_spark.streaming.ph import ph_running
 
     ev = load(spark, sf_dir, "events")
     d = ev.groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day")).agg(
@@ -357,28 +379,9 @@ def stats_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count("value")
         ).alias("day_avg")
     )
-    g = d.agg(
-        (
-            F.round(F.sum(F.col("day_avg").cast("decimal(28,8)")), 8).cast(
-                "double"
-            )
-            / F.count(F.lit(1))
-        ).alias("gmean")
-    )
-    t = d.crossJoin(F.broadcast(g)).select(
-        "day",
-        "day_avg",
-        F.round(
-            F.col("day_avg") - F.col("gmean") - F.lit(_PH_DELTA), 8
-        )
-        .cast("decimal(28,8)")
-        .alias("dev"),
-    )
-    c = month_stitched_cumsum(t, "day", ["dev"])
-    c = month_stitched_running_extreme(c, "day", "cum_dev", "runmin", kind="min")
-    ph = F.col("cum_dev") - F.col("runmin")
     return (
-        c.select("day", "day_avg", ph.alias("ph"))
+        ph_running(d, _PH_DELTA)
+        .select("day", "day_avg", "ph")
         .orderBy(F.col("ph").desc(), "day")
         .limit(1)
         .select(
@@ -399,32 +402,7 @@ def stats_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Autocorrelation function of daily volume (seasonality fingerprint)
 # ---------------------------------------------------------------------------
 
-_ACF_SQL = """
-WITH dd AS (
-  SELECT CAST(date_diff('day', DATE '2024-01-01',
-                        CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE))
-              AS BIGINT) AS di,
-         CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), muc AS (
-  SELECT CAST(SUM(x) AS DOUBLE) / COUNT(*) AS mu,
-         CAST(COUNT(*) AS BIGINT) AS n_days
-  FROM dd
-), denc AS (
-  SELECT CAST(SUM(CAST((CAST(dd.x AS DOUBLE) - muc.mu)
-                       * (CAST(dd.x AS DOUBLE) - muc.mu) AS DECIMAL(28,8)))
-              AS DOUBLE) AS den
-  FROM dd CROSS JOIN muc
-), numc AS (
-  SELECT t.k AS lag_k,
-         CAST(SUM(CAST((CAST(a.x AS DOUBLE) - muc.mu)
-                       * (CAST(b.x AS DOUBLE) - muc.mu) AS DECIMAL(28,8)))
-              AS DOUBLE) AS num,
-         CAST(COUNT(*) AS BIGINT) AS n_pairs
-  FROM UNNEST(range(1, 8)) t(k)
-  JOIN dd a ON TRUE JOIN dd b ON b.di = a.di + t.k CROSS JOIN muc
-  GROUP BY t.k
-)
+_ACF_SQL = _lag_products_sql(7) + """
 SELECT CAST(numc.lag_k AS BIGINT) AS lag_k, numc.n_pairs,
        (SELECT n_days FROM muc) AS n_days,
        ROUND(numc.num / (SELECT den FROM denc), 6) AS acf
@@ -451,42 +429,7 @@ def stats_autocorrelation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the corpus-sized work is one day-grain count aggregate;
     the spine join runs on (days × 7) rows."""
-    ev = load(spark, sf_dir, "events")
-    d = ev.groupBy(
-        F.unix_date(F.to_date(F.date_trunc("day", "ts"))).alias("di")
-    ).agg(F.count(F.lit(1)).alias("x"))
-    mu = d.agg(
-        (F.sum("x").cast("double") / F.count(F.lit(1))).alias("mu"),
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-    )
-    dm = d.crossJoin(F.broadcast(mu))
-    den = dm.agg(
-        F.sum(
-            (
-                (F.col("x").cast("double") - F.col("mu"))
-                * (F.col("x").cast("double") - F.col("mu"))
-            ).cast("decimal(28,8)")
-        )
-        .cast("double")
-        .alias("den")
-    )
-    ks = ev.sparkSession.range(1, 8).select(F.col("id").alias("lag_k"))
-    b = d.select(F.col("di").alias("dib"), F.col("x").alias("xb"))
-    pairs = dm.crossJoin(F.broadcast(ks)).join(
-        b, F.col("dib") == F.col("di") + F.col("lag_k")
-    )
-    num = pairs.groupBy("lag_k").agg(
-        F.sum(
-            (
-                (F.col("x").cast("double") - F.col("mu"))
-                * (F.col("xb").cast("double") - F.col("mu"))
-            ).cast("decimal(28,8)")
-        )
-        .cast("double")
-        .alias("num"),
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.max("n_days").alias("n_days"),
-    )
+    num, den = _lag_products(spark, sf_dir, 7)
     return (
         num.crossJoin(F.broadcast(den))
         .select(

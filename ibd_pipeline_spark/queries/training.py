@@ -19,8 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ibd_pipeline_spark.catalog import load
 from ibd_pipeline_spark.operators import text as T
 from ibd_pipeline_spark.queries import davg, query
-
-_STOP_SQL = "['" + "','".join(T.STOPWORDS) + "']"
+from ibd_pipeline_spark.queries.text import _QUALITY_SQL
 
 _N_SHARDS = 32
 _TOKEN_BUDGET = 2048
@@ -176,14 +175,7 @@ def train_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH scored AS (
   SELECT doc_id, lang,
-         ROUND(GREATEST(LEAST((
-             LEAST(len(string_split(text, ' ')) / 50.0, 1.0)
-           + CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-               / len(string_split(text, ' '))
-           + GREATEST(1.0 - ABS(CAST(len(list_filter(string_split(text, ' '),
-                         t -> list_contains({_STOP_SQL}, t))) AS DOUBLE)
-                     / len(string_split(text, ' ')) - 0.06) * 4, 0.0)
-         ) / 3, 1.0), 0.0), 6) AS quality
+         {_QUALITY_SQL} AS quality
   FROM documents
 ), ranked AS (
   SELECT lang, quality,

@@ -566,11 +566,21 @@ def from_avro_binary(
         return from_avro(data, schema_json, opts)
 
     codec = RecordCodec(schema_json)
-    out_schema = codec.spark_schema()
+    return struct_decoder(
+        lambda b: codec.decode(b)[0], codec, mode, ValueError, "Avro"
+    )(data)
+
+
+def struct_decoder(decode, codec, mode: str, errors, what: str):
+    """The Arrow pandas-UDF fallback decoder of from_avro_binary and
+    from_protobuf_binary: `decode(bytes)` yields one row of
+    `codec.fields`; a null input is a null row. A payload raising
+    `errors` is a null row under PERMISSIVE and a ValueError naming
+    `what` under FAILFAST."""
     names = [f.name for f in codec.fields]
     permissive = mode == "PERMISSIVE"
 
-    @F.pandas_udf(out_schema)
+    @F.pandas_udf(codec.spark_schema())
     def _dec(s: pd.Series) -> pd.DataFrame:
         rows = []
         for b in s:
@@ -578,19 +588,18 @@ def from_avro_binary(
                 rows.append([None] * len(names))
                 continue
             try:
-                vals, _ = codec.decode(bytes(b))
-                rows.append(vals)
-            except ValueError as e:
+                rows.append(decode(bytes(b)))
+            except errors as e:
                 if permissive:
                     rows.append([None] * len(names))
                 else:
                     raise ValueError(
-                        f"malformed Avro payload ({e}); rerun with "
+                        f"malformed {what} payload ({e}); rerun with "
                         "mode='PERMISSIVE' to quarantine"
                     ) from e
         return pd.DataFrame(rows, columns=names, dtype=object)
 
-    return _dec(data)
+    return _dec
 
 
 # ---------------------------------------------------------------------------

@@ -79,6 +79,7 @@ from pyspark.sql.types import (
 )
 
 from ibd_pipeline_spark.sources.avro_codec import (
+    struct_decoder,
     struct_encoder,
     zigzag_decode,
     zigzag_encode,
@@ -689,30 +690,9 @@ def from_protobuf_binary(
         )
 
     codec = MessageCodec(proto_src)
-    out_schema = codec.spark_schema()
-    names = [f.name for f in codec.fields]
-    permissive = mode == "PERMISSIVE"
-
-    @F.pandas_udf(out_schema)
-    def _dec(s: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in s:
-            if b is None:
-                rows.append([None] * len(names))
-                continue
-            try:
-                rows.append(codec.decode(bytes(b)))
-            except _DECODE_ERRORS as e:
-                if permissive:
-                    rows.append([None] * len(names))
-                else:
-                    raise ValueError(
-                        f"malformed protobuf payload ({e}); rerun with "
-                        "mode='PERMISSIVE' to quarantine"
-                    ) from e
-        return pd.DataFrame(rows, columns=names, dtype=object)
-
-    return _dec(data)
+    return struct_decoder(
+        codec.decode, codec, mode, _DECODE_ERRORS, "protobuf"
+    )(data)
 
 
 # ---------------------------------------------------------------------------

@@ -14,10 +14,9 @@ demonstrate both of Structured Streaming's bounded-state idioms.
 The burstiness score is computed READ-SIDE from the emitted hourly
 counts (the same counts-only state / derived-score separation as
 PSI): Fano = var/mean of hourly counts (1 = Poisson, >1 = bursty),
-CV² = var/mean², B = (σ−μ)/(σ+μ). The moment algebra is identical to
-the hash-attested batch twin (queries/round10.py:
-events_fano_burstiness), so stream-equals-batch holds by
-construction; tests/test_streaming_burstiness.py pins the streaming
+CV² = var/mean², B = (σ−μ)/(σ+μ). The hash-attested batch query
+(queries/events.py:events_fano_burstiness) calls the same fano_report,
+so stream-equals-batch holds by construction; tests/test_streaming_burstiness.py pins the streaming
 runtime and the watermark eviction.
 
 Reference parity note: the reference pipeline aggregates fixed 5-min
@@ -53,10 +52,11 @@ def hourly_counts(
 
 
 def fano_report(hourly: DataFrame) -> DataFrame:
-    """Read-side burstiness from (event_type, w, c) hourly counts —
-    the same integer-moment algebra as the batch twin
-    (queries/round10.py:events_fano_burstiness): one row per type
-    with n_hours, n_events, mean, Fano, CV², and Goh–Barabási B."""
+    """Read-side burstiness from (event_type, ..., c) hourly counts,
+    shared with the batch query events_fano_burstiness: one row per
+    type with n_hours, n_events, mean, Fano, CV², and Goh–Barabási B.
+    The (n, Σc, Σc²) moments are integers, so every statistic is
+    fixed double algebra."""
     m = hourly.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_hours"),
         F.sum("c").cast("bigint").alias("s"),

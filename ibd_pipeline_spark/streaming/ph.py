@@ -15,8 +15,8 @@ counts-only state / derived-score separation every monitor here
 uses): mₜ = Σ(x̄ᵢ − μ − δ) over decimal-quantized deviations,
 PHₜ = mₜ − min_{k≤t} mₖ, alarm when PHₜ > λ. The algebra is
 identical to the hash-attested batch twin
-(queries/round11.py:stats_page_hinkley) — both ride the r11
-month-stitch helpers — so stream-equals-batch holds by construction;
+(queries/timeseries.py:stats_page_hinkley) — both call ph_running —
+so stream-equals-batch holds by construction;
 tests/test_streaming_ph.py pins the runtime and a planted drift.
 
 Reference parity note: the reference pipeline has no drift alarm at
@@ -57,25 +57,17 @@ def daily_value_means(
     )
 
 
-def ph_report(
-    daily: DataFrame, delta: float = 0.1, lam: float = 5.0
-) -> DataFrame:
-    """Read-side Page–Hinkley over (day, day_avg) rows — one row per
-    day with the running statistic and alarm verdict; the same
-    decimal-quantized deviations, stitched cumulative sum and
-    stitched running minimum as the batch twin
-    (queries/round11.py:stats_page_hinkley), which reports only the
-    argmax row. Input may carry either a `day` date column or the
-    streaming `w` window struct."""
+def ph_running(d: DataFrame, delta: float) -> DataFrame:
+    """(day, day_avg, gmean, ph) over (day, day_avg) rows: the grand
+    mean of the day means, and PH = m − running min(m), where m is the
+    stitched cumulative sum of the decimal-quantized deviations
+    day_avg − gmean − delta. Shared by ph_report and the batch
+    query stats_page_hinkley, which reports only the argmax row."""
     from ibd_pipeline_spark.operators.calendar import (
         month_stitched_cumsum,
         month_stitched_running_extreme,
     )
 
-    d = daily
-    if "day" not in d.columns:
-        d = d.withColumn("day", F.to_date(F.col("w.start")))
-    d = d.select("day", "day_avg")
     g = d.agg(
         (
             F.round(F.sum(F.col("day_avg").cast("decimal(28,8)")), 8).cast(
@@ -94,11 +86,26 @@ def ph_report(
     )
     c = month_stitched_cumsum(t, "day", ["dev"])
     c = month_stitched_running_extreme(c, "day", "cum_dev", "runmin", kind="min")
-    ph = F.col("cum_dev") - F.col("runmin")
+    return c.select(
+        "day", "day_avg", "gmean", (F.col("cum_dev") - F.col("runmin")).alias("ph")
+    )
+
+
+def ph_report(
+    daily: DataFrame, delta: float = 0.1, lam: float = 5.0
+) -> DataFrame:
+    """Read-side Page–Hinkley over (day, day_avg) rows — one row per
+    day with the running statistic and alarm verdict (ph_running).
+    Input may carry either a `day` date column or the streaming `w`
+    window struct."""
+    d = daily
+    if "day" not in d.columns:
+        d = d.withColumn("day", F.to_date(F.col("w.start")))
+    c = ph_running(d.select("day", "day_avg"), delta)
     return c.select(
         "day",
         "day_avg",
         F.round("gmean", 6).alias("gmean"),
-        F.round(ph, 6).cast("double").alias("ph_stat"),
-        (ph > F.lit(lam)).alias("alarm"),
+        F.round("ph", 6).cast("double").alias("ph_stat"),
+        (F.col("ph") > F.lit(lam)).alias("alarm"),
     )

@@ -335,3 +335,48 @@ def test_session_state_cache_evicts_least_recently_used(spark, monkeypatch):
     assert len(D._SESSION_STATE_CACHE) == 2
     assert state("a") is a
     assert state("b") is not b
+
+
+def test_semdedup_prune_counts_consistent(spark, sf_dir):
+    """SemDeDup structural invariants: kept + pruned = members per
+    cluster; a cluster with zero dup pairs prunes nothing; pruned
+    can never exceed members − 1 (the lowest id always survives)."""
+    from ibd_pipeline_spark.queries.dedup import dedup_semantic_clusters
+
+    rows = dedup_semantic_clusters(spark, sf_dir).collect()
+    assert rows, "kmeans must produce clusters"
+    assert sum(r["n_members"] for r in rows) > 0
+    for r in rows:
+        assert r["n_kept"] + r["n_pruned"] == r["n_members"]
+        if r["n_dup_pairs"] == 0:
+            assert r["n_pruned"] == 0
+        assert r["n_pruned"] <= r["n_dup_pairs"]  # each prune needs a pair
+        if r["n_members"] > 0:
+            assert r["n_pruned"] <= r["n_members"] - 1
+
+
+def test_semdedup_derived_k_default(spark, sf_dir):
+    """semdedup_pairs' DEFAULT must be the k ∝ n
+    contract — k=None derives max(k_min, ceil(n/target_cluster_size))
+    and produces the identical pair set as passing that k explicitly
+    (kmeans_attested is RNG-free, so the derivation is replayable)."""
+    import math
+
+    from ibd_pipeline_spark.catalog import load
+    from ibd_pipeline_spark.operators.dedup import semdedup_pairs
+
+    emb = load(spark, sf_dir, "embeddings")
+    n = emb.count()
+    tcs, kmin = 100, 2
+    k_expected = max(kmin, math.ceil(n / tcs))
+    assert k_expected > kmin  # the derivation, not the floor, decides
+
+    auto = semdedup_pairs(
+        emb, k=None, iters=1, target_cluster_size=tcs, k_min=kmin
+    )
+    explicit = semdedup_pairs(emb, k=k_expected, iters=1)
+    got_k = auto._assigned.select("cluster_id").distinct().count()
+    assert got_k <= k_expected
+    a = {tuple(r) for r in auto.collect()}
+    b = {tuple(r) for r in explicit.collect()}
+    assert a == b and len(a) > 0

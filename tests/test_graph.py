@@ -393,3 +393,14 @@ def test_driver_solve_matches_distributed(spark, case):
     distributed loop: same rows, values within double noise."""
     driver = case(spark)
     assert driver == pytest.approx(case(spark, max_driver_edges=0), abs=1e-9)
+
+
+def test_assortativity_in_range(spark, sf_dir):
+    """Assortativity is a correlation: must land in [-1, 1]."""
+    from ibd_pipeline_spark.queries.graph2 import (
+        graph_degree_assortativity,
+    )
+
+    r = graph_degree_assortativity(spark, sf_dir).collect()[0]
+    assert -1.0 <= r["assortativity"] <= 1.0
+    assert r["n_nodes"] > 0 and r["n_edges"] > 0

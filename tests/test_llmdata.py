@@ -160,3 +160,20 @@ def test_chunking_covers_and_reconstructs(spark, tmp_path):
     for c in chunks:
         toks = c["chunk_text"].split(" ")
         assert toks == orig[25 * c["chunk_idx"] : 25 * c["chunk_idx"] + 50]
+
+
+def test_dsir_target_language_ranks_first(spark, sf_dir):
+    """DSIR self-consistency: the target domain (lang='en') must have
+    the highest mean importance weight — by construction its docs
+    look most like the target distribution."""
+    from ibd_pipeline_spark.queries.training2 import train_dsir_importance
+
+    rows = train_dsir_importance(spark, sf_dir).collect()
+    by_lang = {r["lang"]: r for r in rows}
+    assert "en" in by_lang
+    best = max(rows, key=lambda r: r["mean_logw"])
+    assert best["lang"] == "en"
+    # a majority of target docs should score positive (the corpus is
+    # tiny and synthetic, so demand majority, not near-totality)
+    en = by_lang["en"]
+    assert en["n_selected"] >= en["n_docs"] * 0.5

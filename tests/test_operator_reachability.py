@@ -13,7 +13,11 @@ kept on purpose, each with its reason.
 
 The same parse also finds copy-paste: two functions anywhere in the
 package (nested ones included) whose bodies, docstrings excluded, are
-identical and span MIN_BODY_LINES lines or more.
+identical and span MIN_BODY_LINES lines or more. A plain text scan
+finds the copies that check cannot see, inside larger functions or in
+SQL strings: MIN_TEXT_RUN consecutive non-blank lines that, stripped,
+appear twice in the package. KEPT_COPIES names the few kept on
+purpose, each with its reason.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ from pathlib import Path
 PKG = Path(__file__).resolve().parent.parent / "ibd_pipeline_spark"
 ROOT_DIRS = ("queries", "streaming", "sources")
 MIN_BODY_LINES = 5
+MIN_TEXT_RUN = 10
 
 REFERENCE = {
     "winnowing_fingerprints": (
@@ -37,6 +42,10 @@ REFERENCE = {
         "unrounded loadings; pca_power_attested rounds them to 6 decimals"
     ),
 }
+
+# (file, first line of the run) → why the copy stays. A run that could
+# only be shared by branching on its caller may be kept; none is today.
+KEPT_COPIES: dict[tuple[str, int], str] = {}
 
 
 def _module_name(path: Path) -> str:
@@ -173,3 +182,48 @@ def test_no_duplicate_function_bodies():
         "functions with identical bodies (keep one and call it): "
         f"{copies}"
     )
+
+
+def _text_runs():
+    """{window of MIN_TEXT_RUN stripped non-blank lines: [(file, line
+    number of its first line)]} over every source file."""
+    runs = {}
+    for path, _mod, _tree in _parsed():
+        rel = str(path.relative_to(PKG.parent))
+        lines = [
+            (i, s)
+            for i, s in enumerate(
+                (raw.strip() for raw in path.read_text().splitlines()), 1
+            )
+            if s
+        ]
+        for k in range(len(lines) - MIN_TEXT_RUN + 1):
+            window = tuple(s for _i, s in lines[k : k + MIN_TEXT_RUN])
+            runs.setdefault(window, []).append((rel, lines[k][0]))
+    return runs
+
+
+def test_no_duplicate_text_runs():
+    unkept = (
+        [w for w in locs if w not in KEPT_COPIES]
+        for locs in _text_runs().values()
+    )
+    copies = sorted(locs for locs in unkept if len(locs) > 1)
+    assert not copies, (
+        f"runs of {MIN_TEXT_RUN}+ identical lines (code, SQL or "
+        "docstring) in more than one place (share one builder or CTE, "
+        f"or name the copy in KEPT_COPIES with a reason): {copies[:20]}"
+    )
+
+
+def test_kept_copies_are_few_and_still_copies():
+    assert len(KEPT_COPIES) <= 3
+    copied = {
+        where
+        for locs in _text_runs().values()
+        if len(locs) > 1
+        for where in locs
+    }
+    for where, reason in KEPT_COPIES.items():
+        assert reason, f"{where} needs a reason"
+        assert where in copied, f"{where} is no longer a copy; drop it"

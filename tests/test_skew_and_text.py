@@ -85,3 +85,18 @@ def test_winnowing_rows_equals_column_form(spark):
         (r["doc_id"], r["fp"]) for r in winnowing_fingerprint_rows(df).collect()
     }
     assert row_form == col_form
+
+
+def test_good_turing_identities(spark, sf_dir):
+    """Good-Turing internal identities: N_r sums and the coverage/
+    Chao1 bounds (coverage in (0,1); Chao1 >= observed vocabulary)."""
+    from ibd_pipeline_spark.queries.text import text_good_turing_vocab
+
+    rows = text_good_turing_vocab(spark, sf_dir).collect()
+    assert [r["r"] for r in rows] == [1, 2, 3, 4, 5]
+    r0 = rows[0]
+    # sf0.001 has no hapax terms at all -> coverage exactly 1.0
+    assert 0.0 < r0["gt_coverage"] <= 1.0
+    assert r0["chao1_richness"] >= r0["vocab_size"]
+    for a, b in zip(rows, rows[1:]):
+        assert a["n_r_next"] == b["n_r"]
